@@ -23,7 +23,11 @@ grows sub-linearly with the corpus (it is a function of the language, not the
 doc count), so when the edge list is under ``driver_edge_limit`` the component
 computation runs as a driver-side union-find on the collected edge list — one
 job instead of ~10, with identical (lexicographic-min) component ids. The
-entity-scale graph takes the distributed path automatically.
+same ``_driver_union_find`` serves the pipeline's driver-side topic and
+entity canonicalization (plans/pipeline.py), which skip this module's Spark
+entry point altogether for driver-sized vocabularies; past their bounds
+(``DRIVER_EDGE_LIMIT`` caps the entity stage's delete-1 candidate pairs) the
+graph comes here and takes the distributed path when it is large.
 
 Component id = lexicographic min node id on both paths, matching the golden
 union-find (fixtures/golden.py) exactly.

@@ -28,6 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import spec
 from ..catalog import BUCKET_COL, Catalog, with_bucket
@@ -147,7 +148,7 @@ def topic_map_driver(phrase_list: list[str]) -> pd.DataFrame:
 
 DRIVER_VOCAB_LIMIT = 100_000
 # byte gate for the driver-side vocabulary scan below: a column-pruned local
-# pyarrow read of `topics` is ~30x faster than a 3-stage Spark
+# pyarrow read of `topics` / `entities` is ~30x faster than a 3-stage Spark
 # explode+distinct at benchmark scale, but it reads on ONE machine — so it is
 # allowed only when the MEASURED source bytes are driver-trivial; past the
 # gate the distributed distinct (whose cost is what a real cluster would pay)
@@ -157,14 +158,17 @@ DRIVER_VOCAB_SCAN_BYTES = int(
 )
 
 
-def _phrase_vocab_driver(enriched: DataFrame, limit: int) -> list[str] | None:
-    """The distinct normalized topic phrases via a column-pruned DRIVER
-    pyarrow read — only when ``enriched`` is a BARE parquet relation (no
-    filters/projections that a local re-read would silently ignore) whose
-    total file bytes are under ``DRIVER_VOCAB_SCAN_BYTES``. Returns None
-    whenever any guard fails → the caller runs the distributed distinct.
-    Semantics match the Spark branch exactly: lower → trim(' ') → drop
-    null/empty → distinct."""
+def _vocab_texts_driver(enriched: DataFrame, column: str):
+    """The lower/trimmed, non-null, non-empty ``text`` fields of the
+    struct-array ``column`` (``topics`` or ``entities``) as one pyarrow
+    array, via a column-pruned DRIVER read (zero Spark jobs) — only when
+    ``enriched`` is a BARE parquet relation (no filters/projections that a
+    local re-read would silently ignore) whose files all exist and total
+    under ``DRIVER_VOCAB_SCAN_BYTES``. Returns None whenever any guard fails
+    → the caller runs its distributed plan. Semantics match the Spark
+    branches exactly: explode → lower → trim(' ') → drop null/empty.
+    pyarrow ``utf8_lower`` differs from Spark ``lower`` only on non-ASCII
+    ('İ', final 'Σ'), which the enrichment cleaner strips first."""
     try:
         plan = enriched._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -182,13 +186,10 @@ def _phrase_vocab_driver(enriched: DataFrame, limit: int) -> list[str] | None:
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    tb = pads.dataset(paths, format="parquet").to_table(columns=["topics"])
-    texts = pc.struct_field(pc.list_flatten(tb["topics"].combine_chunks()), "text")
+    tb = pads.dataset(paths, format="parquet").to_table(columns=[column])
+    texts = pc.struct_field(pc.list_flatten(tb[column].combine_chunks()), "text")
     texts = pc.utf8_trim(pc.utf8_lower(texts.drop_null()), characters=" ")
-    vocab = [t for t in pc.unique(texts).to_pylist() if t]
-    if len(vocab) > limit:
-        return None  # beyond the driver canonicalization bound — distribute
-    return vocab
+    return texts.filter(pc.not_equal(texts, ""))
 
 
 def build_topic_map(
@@ -204,7 +205,10 @@ def build_topic_map(
     commit); the distributed plan below remains the fallback for
     beyond-vocabulary scales."""
     if not cat.exists("topic_map"):
-        vocab = _phrase_vocab_driver(enriched, driver_vocab_limit)
+        texts = _vocab_texts_driver(enriched, "topics")
+        vocab = None if texts is None else texts.unique().to_pylist()
+        if vocab is not None and len(vocab) > driver_vocab_limit:
+            vocab = None  # beyond the driver canonicalization bound — distribute
         if vocab is None:
             distinct_phrases = (
                 enriched.select(F.explode("topics").alias("t"))
@@ -216,8 +220,6 @@ def build_topic_map(
             if len(head) <= driver_vocab_limit:
                 vocab = [r["phrase_norm"] for r in head]
         if vocab is not None:
-            from pyspark.sql import types as T
-
             pdf = topic_map_driver(vocab)
             # the table was computed ON the driver — commit it from the
             # driver (zero Spark jobs; round 8): one bucket by the same
@@ -414,17 +416,89 @@ def build_graph(
 
 
 # --------------------------------------------------------------------- stage 2b
+def _within_one_edit(a: str, b: str) -> bool:
+    """levenshtein(a, b) <= 1 without the DP table."""
+    if len(a) > len(b):
+        a, b = b, a
+    if len(b) - len(a) > 1:
+        return False
+    i = 0
+    while i < len(a) and a[i] == b[i]:
+        i += 1
+    return a[i + 1 :] == b[i + 1 :] if len(a) == len(b) else a[i:] == b[i + 1 :]
+
+
+def entity_map_driver(names: list[str], n_docs: list[int]) -> list[tuple] | None:
+    """Driver twin of the distributed entity canonicalization — the SAME
+    delete-1 neighbourhood blocks as linking.fuzzy_candidate_edges (the name
+    plus every one-character deletion), the same src < dst, levenshtein <= 1
+    verify, and the SAME union-find the distributed CC's own fast path uses
+    (lexicographic-min component ids). Returns (name, canonical, n_docs,
+    bucket 0) rows, or None when the candidate-pair count Σ C(block size, 2)
+    exceeds ``components.DRIVER_EDGE_LIMIT`` → the caller distributes."""
+    from ..operators import components
+
+    rows = sorted(zip(names, n_docs))
+    blocks: dict[str, list[str]] = {}
+    for n, _ in rows:  # sorted, so every block's members ascend: a < b below
+        for key in {n, *(n[:i] + n[i + 1 :] for i in range(len(n)))}:
+            blocks.setdefault(key, []).append(n)
+    if sum(len(b) * (len(b) - 1) // 2 for b in blocks.values()) > components.DRIVER_EDGE_LIMIT:
+        return None
+    edges = {
+        (a, b)
+        for members in blocks.values()
+        for i, a in enumerate(members)
+        for b in members[i + 1 :]
+        if _within_one_edit(a, b)
+    }
+    mapping = components._driver_union_find(edges)
+    return [(n, mapping.get(n, n), c, 0) for n, c in rows]
+
+
+# the distributed branch's df.schema: count(*) is the one non-nullable column
+# (the manifest pins the schema JSON across commits)
+_ENTITY_MAP_SCHEMA = T.StructType(
+    [
+        T.StructField("name", T.StringType()),
+        T.StructField("canonical", T.StringType()),
+        T.StructField("n_docs", T.LongType(), nullable=False),
+        T.StructField(BUCKET_COL, T.IntegerType()),
+    ]
+)
+
+
 def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> DataFrame:
     """Canonicalize ENTITIES: candidate links by string similarity within
-    salted prefix blocks → connected components → canonical id = lexicographic
-    min member (north_star: 'scores candidate entity links ... canonicalizes
-    entities via connected-components over a similarity edge list').
+    delete-1 neighbourhood blocks → connected components → canonical id =
+    lexicographic min member (north_star: 'scores candidate entity links ...
+    canonicalizes entities via connected-components over a similarity edge
+    list').
+
+    Like build_topic_map, the entity vocabulary is driver-sized at corpus
+    scale, so when ``enriched`` passes the driver vocabulary read's guards,
+    the distinct names number at most ``DRIVER_VOCAB_LIMIT`` and the
+    candidate pairs at most ``components.DRIVER_EDGE_LIMIT``, the whole
+    stage runs on the DRIVER (entity_map_driver + a local commit, zero Spark
+    jobs); otherwise the distributed blocked join → CC plan below runs.
 
     Kept separate from the triple set: MENTIONS triples carry the surface form
     (matching the reference fixture semantics); the entity_map table provides
     the canonical id per surface form plus its corpus frequency for downstream
     graph consolidation."""
     if not cat.exists("entity_map"):
+        rows = None
+        texts = _vocab_texts_driver(enriched, "entities")
+        if texts is not None:
+            counts = texts.value_counts()
+            if len(counts) <= DRIVER_VOCAB_LIMIT:
+                rows = entity_map_driver(
+                    counts.field("values").to_pylist(), counts.field("counts").to_pylist()
+                )
+        if rows is not None:
+            # one bucket by the pmod(xxhash,1)=0 rule with_bucket applies
+            cat.commit_partitions_local(rows, _ENTITY_MAP_SCHEMA, "entity_map", stage="entity_link")
+            return cat.read(spark, "entity_map")
         from ..operators.linking import fuzzy_candidate_edges
 
         ents = (

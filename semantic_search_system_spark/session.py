@@ -11,9 +11,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (32 cores / 125 GiB). On a real cluster the
-# same builder is used with master/memory supplied by spark-submit.
-_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local-mode core count: SPARK_GRAFT_CPUS, else the CPUs this process may use
+# (sched_getaffinity is Linux-only; elsewhere every CPU of the host). On a real
+# cluster the same builder is used with master/memory supplied by spark-submit.
+_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
+    len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+)
 
 
 def get_spark(
@@ -25,9 +28,11 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's standard configuration.
 
     ``master=None`` defers to spark-submit / an existing session; tests pass
-    ``local[32]`` explicitly. ``shuffle_partitions`` defaults to the core count
-    in local mode — at cluster scale it should be ~2-3x total executor cores
-    (or left to AQE coalescing, which is enabled).
+    ``local[_DEF_CPUS]`` explicitly. ``shuffle_partitions`` defaults to the
+    core count in local mode. Under spark-submit the driver host's CPUs say
+    nothing about the executors, so it defaults to SPARK_GRAFT_CPUS or 32 —
+    at cluster scale it should be ~2-3x total executor cores (AQE coalescing,
+    which is enabled, can merge partitions but not add them).
     """
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -38,7 +43,7 @@ def get_spark(
         if shuffle_partitions is None:
             shuffle_partitions = max(int(cores), 4)
     if shuffle_partitions is None:
-        shuffle_partitions = int(_DEF_CPUS)
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),

@@ -5,7 +5,7 @@ import tempfile
 
 import pytest
 
-from semantic_search_system_spark.session import get_spark
+from semantic_search_system_spark.session import _DEF_CPUS, get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
@@ -13,7 +13,7 @@ SF_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sss-tests", master="local[32]")
+    s = get_spark("sss-tests", master=f"local[{_DEF_CPUS}]")
     yield s
 
 

@@ -4,6 +4,7 @@ import shutil
 import pandas as pd
 import pytest
 
+from semantic_search_system_spark import spec
 from semantic_search_system_spark.fixtures.golden import golden_triples, precision_recall
 from semantic_search_system_spark.fixtures.interleave import interleaved_path
 from semantic_search_system_spark.plans.pipeline import run_pipeline
@@ -184,15 +185,134 @@ def test_entity_map_canonicalization(spark, tmp_root):
 
 def test_entity_map_on_corpus(built):
     spark, cat, _ = built
-    from semantic_search_system_spark.plans.pipeline import build_entity_map
-
-    em = build_entity_map(spark, cat.read(spark, "enriched"), cat) if False else cat.read(spark, "entity_map")
-    rows = em.collect()
+    rows = cat.read(spark, "entity_map").collect()
     assert len(rows) > 0
     # every surface form has a canonical form; canonical is a member name
     names = {r["name"] for r in rows}
     assert all(r["canonical"] in names for r in rows)
-    assert all(r["n_docs"] > 0 for r in rows)
+    # n_docs is the name's corpus frequency: entity arrays are per-doc
+    # distinct, so it equals the number of MENTIONS triples with that obj
+    mentions = {
+        r["obj"]: r["count"]
+        for r in cat.read(spark, "triples")
+        .where(f"pred = '{spec.PRED_MENTIONS}'")
+        .groupBy("obj")
+        .count()
+        .collect()
+    }
+    assert {r["name"]: r["n_docs"] for r in rows} == mentions
+
+
+def _with_job_count(spark, fn):
+    """(fn(), number of Spark jobs fn submitted) — the delta of the
+    statusTracker's job ids."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(st.getJobIdsForGroup(None)) - before)
+
+
+def _entity_map(spark, root, enriched):
+    """(sorted rows, manifest schema, Spark jobs) of build_entity_map into a
+    fresh Catalog at ``root``."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans.pipeline import build_entity_map
+
+    cat = Catalog(root)
+    table, jobs = _with_job_count(spark, lambda: build_entity_map(spark, cat, enriched))
+    return sorted(map(tuple, table.collect())), cat.manifest("entity_map")["schema"], jobs
+
+
+# entity surface forms whose delete-1 neighbourhoods link into non-trivial
+# components (every bench/testdata corpus has only singletons); delta/detla
+# share delete-1 keys at edit distance 2, so the levenshtein verify must
+# keep them apart; the padding, case, null and empty texts exercise the
+# lower/trim/drop normalization
+_COMPONENT_DOCS = [
+    ["spark", "Flink", " zebra", "delta"],
+    ["sparks", "blink", "zebr", "spark "],
+    ["park", "link", "aebra", "", None],
+    ["spork", "SMARK", "qpark", "flink"],
+    ["spark", "delta", "detla"],
+]
+_COMPONENT_CANONICAL = {
+    **dict.fromkeys(["park", "qpark", "smark", "spark", "sparks", "spork"], "park"),
+    **dict.fromkeys(["blink", "flink", "link"], "blink"),
+    **dict.fromkeys(["aebra", "zebr", "zebra"], "aebra"),
+    "delta": "delta",
+    "detla": "detla",
+}
+
+
+def _component_frame(spark):
+    return spark.createDataFrame(
+        [([(t, "ENTITY") for t in doc],) for doc in _COMPONENT_DOCS],
+        "entities array<struct<text:string,label:string>>",
+    )
+
+
+def _component_relation(spark, root):
+    """_COMPONENT_DOCS as a bare parquet relation (driver-readable)."""
+    path = os.path.join(root, "src.parquet")
+    _component_frame(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("corpus", ["sf_small", "components"])
+def test_entity_map_driver_matches_distributed(spark, tmp_root, monkeypatch, corpus):
+    """The driver branch (zero Spark jobs) writes the EXACT rows and manifest
+    schema of the distributed blocked-join → CC plan, which
+    ``DRIVER_VOCAB_LIMIT = 0`` forces."""
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.catalog import Catalog
+
+    if corpus == "sf_small":
+        enriched = P.build_enriched(spark, SF_SMALL, Catalog(os.path.join(tmp_root, "src")))
+    else:
+        enriched = _component_relation(spark, tmp_root)
+    fast, fast_schema, fast_jobs = _entity_map(spark, os.path.join(tmp_root, "a"), enriched)
+    monkeypatch.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
+    slow, slow_schema, slow_jobs = _entity_map(spark, os.path.join(tmp_root, "b"), enriched)
+    assert fast_jobs == 0 and slow_jobs > 0
+    assert fast == slow and fast_schema == slow_schema
+    if corpus == "sf_small":
+        assert len(fast) > 10
+    else:
+        assert {n: c for n, c, _, _ in fast} == _COMPONENT_CANONICAL
+        assert {n: d for n, _, d, _ in fast}["spark"] == 3
+
+
+def test_entity_map_driver_bounds(spark, tmp_root, monkeypatch):
+    """Past any driver bound — distinct names over ``DRIVER_VOCAB_LIMIT``,
+    delete-1 candidate pairs over ``components.DRIVER_EDGE_LIMIT``, source
+    bytes over ``DRIVER_VOCAB_SCAN_BYTES`` — and for a Spark-built frame (not
+    a bare relation the driver can re-read), the distributed plan runs and
+    writes the same table."""
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.operators import components
+
+    enriched = _component_relation(spark, tmp_root)
+
+    def run(tag, module=None, bound=None, value=None):
+        with monkeypatch.context() as m:
+            if module is not None:
+                m.setattr(module, bound, value)
+            rows, _, jobs = _entity_map(spark, os.path.join(tmp_root, tag), enriched)
+        return rows, jobs
+
+    # at the vocabulary bound, under the default edge bound: the driver branch
+    n_names = len(_COMPONENT_CANONICAL)
+    ref, jobs = run("at_vocab_limit", P, "DRIVER_VOCAB_LIMIT", n_names)
+    assert jobs == 0
+    rows, jobs = run("over_vocab_limit", P, "DRIVER_VOCAB_LIMIT", n_names - 1)
+    assert rows == ref and jobs > 0
+    # spark/sparks share a delete-1 block, so the corpus has candidate pairs
+    rows, jobs = run("over_edge_limit", components, "DRIVER_EDGE_LIMIT", 0)
+    assert rows == ref and jobs > 0
+    rows, jobs = run("over_scan_bytes", P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    assert rows == ref and jobs > 0
+    rows, _, jobs = _entity_map(spark, os.path.join(tmp_root, "built"), _component_frame(spark))
+    assert rows == ref and jobs > 0
 
 
 def test_topic_map_driver_matches_distributed(spark, tmp_root):
@@ -219,3 +339,45 @@ def test_topic_map_driver_matches_distributed(spark, tmp_root):
         for r in build_topic_map(spark, cat2, enriched2, driver_vocab_limit=0).collect()
     }
     assert fast == slow and len(fast) > 100
+
+
+def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
+    spark, tmp_root, monkeypatch
+):
+    """The driver vocabulary reads lower-case with pyarrow ``utf8_lower``,
+    which differs from Spark ``lower`` on 'İ' and a final 'Σ'. The driver
+    branches stay exact only because the enrichment cleaner strips non-ASCII
+    first: content carrying both characters must still give driver-branch
+    topic_map and entity_map equal to their distributed twins."""
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.catalog import Catalog
+
+    texts = [
+        "İstanbul spark İstanbul sparks ΟΔΟΣ park ΣPARKΣ spark",
+        "İZMİR flink blink ΘΕΟΣ İzmir flink link ΛΟΓΟΣ",
+        "zebra zebr ΚΟΣΜΟΣ aebra İstanbul zebra spark",
+    ]
+    src = os.path.join(tmp_root, "docs.parquet")
+    spark.createDataFrame(
+        [(str(i), [("text", t, None, 0)]) for i, t in enumerate(texts)],
+        "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
+    ).write.parquet(src)
+    monkeypatch.setattr(P, "read_interleaved", lambda s, _sf: s.read.parquet(src))
+    enriched = P.build_enriched(spark, "ignored", Catalog(os.path.join(tmp_root, "src")))
+    for col in ("entities", "topics"):
+        vocab = [e["text"] for r in enriched.select(col).collect() for e in r[col]]
+        assert vocab and all(t.isascii() for t in vocab), vocab
+
+    # the distributed twins: topic_map takes its bound as an argument,
+    # entity_map reads DRIVER_VOCAB_LIMIT per call
+    for build, force in ((P.build_topic_map, {"driver_vocab_limit": 0}), (P.build_entity_map, {})):
+        name = build.__name__
+        fast, fast_jobs = _with_job_count(
+            spark, lambda: build(spark, Catalog(os.path.join(tmp_root, f"{name}_a")), enriched)
+        )
+        with monkeypatch.context() as m:
+            m.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
+            slow = build(spark, Catalog(os.path.join(tmp_root, f"{name}_b")), enriched, **force)
+        assert fast_jobs == 0
+        fast, slow = (sorted(map(tuple, t.collect())) for t in (fast, slow))
+        assert fast and fast == slow, name
