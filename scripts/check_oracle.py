@@ -15,14 +15,14 @@ from oracle_utils import compare, duck_con  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from semantic_search_system_spark.fixtures.interleave import build_interleaved  # noqa: E402
-from semantic_search_system_spark.session import get_spark  # noqa: E402
+from semantic_search_system_spark.session import _DEF_CPUS, get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
 
 def main() -> int:
     build_interleaved(SF)
-    spark = get_spark("oracle-check", master="local[32]")
+    spark = get_spark("oracle-check", master=f"local[{_DEF_CPUS}]")
     con = duck_con(SF)
     registry = entry_mod.queries()
     names = sys.argv[1:] or sorted(registry)

@@ -55,12 +55,15 @@ COMPACT_COMMIT_BYTES = int(
 
 def compact_small_dir(d: str, max_bytes: int = COMPACT_COMMIT_BYTES) -> bool:
     """Rewrite a multi-file parquet partition dir into one file when its total
-    size is under ``max_bytes``; returns whether it compacted. Atomic: the
-    merged file lands under a temp name and replaces the originals only after
-    a successful write (a crash mid-compaction leaves either layout, both
-    valid). Values are preserved exactly — pyarrow reads the union of the
-    files and writes one table; row order (sorted file order) is
-    deterministic, and no committed table's semantics depend on row order."""
+    size is under ``max_bytes``; returns whether it compacted. The merged
+    file lands under a temp name and is renamed in only after the originals
+    are removed, but a crash DURING that removal leaves the complete merged
+    file beside a subset of the originals — doubled rows if the dir were
+    read. So it must run before the manifest publish that makes the dir
+    visible: an unpublished dir is re-staged or swept on the next commit.
+    Values are preserved exactly — pyarrow reads the union of the files and
+    writes one table; row order (sorted file order) is deterministic, and no
+    committed table's semantics depend on row order."""
     import pyarrow.parquet as pq
 
     files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))

@@ -14,6 +14,18 @@ Reference parity (utils/search_service.py):
 - search_kb            (:299-390) + thresholds: normalized score >= 70
                                    (:380-382), semantic_k <= 10 (:329-330)
 
+Candidate generation is a seam (the filter-then-verify split): the semantic
+kNN branch of every strategy is a HIT SOURCE ``(qvec, semantic_k) ->
+(doc_id, sim)`` that the strategy body receives, and scoring is written once
+per strategy. The reference serves every strategy from one kNN index call
+(:92-390); here two sources plug in:
+- ``_exact_hits``   — the recall-1.0 cosine top-k over the corpus (the
+                      plain ``advanced_search``/``pro_search``/... names);
+- ``_doc_ivf_hits`` — the probe of the materialized doc-IVF index (the
+                      ``*_ann`` names).
+The SQL twins mirror it: the body takes an ``ann(doc_id, ann_sim)`` CTE from
+``_exact_ann_sql`` or from ``_doc_ivf_ann_sql`` (which replays the index).
+
 Every strategy takes the user's (query_text, k, fuzziness, dates) at runtime —
 the reference reads them from the Streamlit sidebar (main_app.py:80-126,
 utils/utils.py:41-57); the module constants below are only the benchmark
@@ -27,14 +39,16 @@ token-overlap + cosine.
 
 from __future__ import annotations
 
-import json
 import math
 import os
+import warnings
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
+from ..catalog import Catalog
 
 # Benchmark defaults — vocabulary of the synthetic corpus.
 QUERY_TEXT = "spark join table"
@@ -61,10 +75,6 @@ def _terms_arr(terms: list[str]):
     return F.array(*[F.lit(t) for t in terms])
 
 
-def _qvec_arr(qvec: list[float]):
-    return F.array(*[F.lit(x) for x in qvec])
-
-
 # --------------------------------------------------------------- shared scoring
 def _cos_to_query(qvec: list[float]):
     """round(cosine(embedding, query), 6) — Arrow-vectorized (one numpy
@@ -80,12 +90,9 @@ def _cos_to_query(qvec: list[float]):
     return cosine_to_const_udf(qvec)(F.col("embedding").cast("array<double>"))
 
 
-def _with_scores(
-    enriched: DataFrame, terms: list[str], qvec: list[float], fuzziness: int
-) -> DataFrame:
-    """Attach all rounded score components used by the strategies."""
-    cos = _cos_to_query(qvec)
-
+def _with_scores(enriched: DataFrame, terms: list[str], fuzziness: int) -> DataFrame:
+    """Attach the rounded lexical score components used by the strategies
+    (the semantic component comes from the hit source)."""
     t_arr = _terms_arr(terms)
     title_toks = F.split(F.lower(F.col("title")), " ")
     summary_toks = F.split(F.lower(F.col("summary")), " ")
@@ -106,8 +113,7 @@ def _with_scores(
     ).cast("double")
 
     return (
-        enriched.withColumn("sem_score", cos)
-        .withColumn("title_ov", overlap(title_toks))
+        enriched.withColumn("title_ov", overlap(title_toks))
         .withColumn("summary_ov", overlap(summary_toks))
         .withColumn("content_ov", overlap(content_toks))
         .withColumn("ent_ov", F.size(F.array_intersect(ent_texts, t_arr)).cast("double"))
@@ -145,8 +151,8 @@ def simple_search(
     date_lo: str = DATE_LO,
     date_hi: str = DATE_HI,
 ) -> DataFrame:
-    terms, qvec = _params(query_text)
-    s = _with_scores(enriched, terms, qvec, fuzziness)
+    terms = spec.clean_tokens(query_text)
+    s = _with_scores(enriched, terms, fuzziness)
     return (
         s.where(
             (F.col("doc_date") >= F.lit(date_lo).cast("date"))
@@ -176,37 +182,52 @@ def simple_search_sql(
     """
 
 
-# ---------------------------------------------------------------- scale helpers
-def _semantic_topk_flag(s: DataFrame, semantic_k: int, flag: str) -> DataFrame:
-    """Mark the semantic top-k rows WITHOUT a global window: a global
-    ``row_number()`` (WindowExec with no partition) funnels every row through
-    one task; ``orderBy().limit()`` compiles to TakeOrderedAndProject (partial
-    top-k on every partition, merge on the driver) and the tiny result is
-    broadcast-joined back. The (sem_score desc, doc_id asc) ordering is total,
-    so the selected set is identical to the rank formulation."""
-    topk = (
-        s.orderBy(F.desc("sem_score"), F.asc("doc_id"))
+# ---------------------------------------------------------------- hit sources
+# A hit source maps (qvec, semantic_k) to the semantic top-k as (doc_id, sim).
+# The strategy bodies below take one and are otherwise source-agnostic; the
+# exact names pass ``partial(_exact_hits, enriched)``, the ``_ann`` names pass
+# ``partial(_doc_ivf_hits, spark, cat, enriched, ...)``.
+def _exact_hits(enriched: DataFrame, qvec: list[float], semantic_k: int) -> DataFrame:
+    """The recall-1.0 source: rounded cosine top-``semantic_k`` over the
+    whole corpus. ``orderBy().limit()`` compiles to TakeOrderedAndProject
+    (partial top-k on every partition, merge on the driver) instead of a
+    global ``row_number()`` that funnels every row through one task, and the
+    (sim desc, doc_id asc) order is total, so the selected set equals the
+    rank formulation. This is the only per-row cosine a strategy runs over
+    the corpus: the bodies join the tiny hit set back, never a cosine column."""
+    return (
+        enriched.select("doc_id", _cos_to_query(qvec).alias("sim"))
+        .orderBy(F.desc("sim"), F.asc("doc_id"))
         .limit(semantic_k)
-        .select("doc_id", F.lit(True).alias(flag))
     )
-    return s.join(F.broadcast(topk), "doc_id", "left").withColumn(
-        flag, F.coalesce(F.col(flag), F.lit(False))
+
+
+def _with_hits(s: DataFrame, hits: DataFrame) -> DataFrame:
+    """Broadcast-join the hit set in as ``_sim`` (NULL for non-hits)."""
+    return s.join(
+        F.broadcast(hits.select("doc_id", F.col("sim").alias("_sim"))), "doc_id", "left"
+    )
+
+
+def _exact_ann_sql(enriched_glob: str, qvec: list[float], semantic_k: int) -> str:
+    """``_exact_hits`` as the ``ann(doc_id, ann_sim)`` CTE over ``scored``
+    (same signature as ``_doc_ivf_ann_sql``; the query vector is already in
+    ``scored.sem_score``). ORDER BY ... LIMIT picks the same set as
+    ``row_number() <= semantic_k`` because the order is total."""
+    return (
+        f"ann AS (SELECT doc_id, sem_score AS ann_sim FROM scored "
+        f"ORDER BY sem_score DESC, doc_id ASC LIMIT {semantic_k})"
     )
 
 
 # ================================================================ Q2 advanced
-def advanced_search(
-    enriched: DataFrame,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-) -> DataFrame:
+def _advanced(enriched: DataFrame, query_text: str, k: int, fuzziness: int, hits) -> DataFrame:
     terms, qvec = _params(query_text)
-    s = _semantic_topk_flag(_with_scores(enriched, terms, qvec, fuzziness), k * 3, "_sem_top")
+    s = _with_hits(_with_scores(enriched, terms, fuzziness), hits(qvec, k * 3))
     score = F.round(
         F.col("title_ov") * 3.0
         + F.col("summary_ov") * 2.0
-        + F.when(F.col("_sem_top"), F.col("sem_score")).otherwise(0.0),
+        + F.coalesce(F.col("_sim"), F.lit(0.0)),
         6,
     )
     return (
@@ -216,6 +237,15 @@ def advanced_search(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
+
+
+def advanced_search(
+    enriched: DataFrame,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+) -> DataFrame:
+    return _advanced(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
 
 
 def advanced_search_ann(
@@ -230,44 +260,17 @@ def advanced_search_ann(
 ) -> DataFrame:
     """advanced_search with the kNN(k*3) branch served by the materialized
     doc-IVF index (the reference serves it from the same HNSW index as every
-    other strategy, search_service.py:92-124): the tiny ANN hit set is
-    broadcast-joined in and ``sem_score`` is never referenced, so Catalyst
-    prunes the per-row cosine out of the corpus scan — only the lexical
-    overlap expressions touch every row. With simple_search having no
-    semantic branch, all four semantic strategies now have an index-served
-    variant; the exact ``advanced_search`` stays as the recall-1.0 twin."""
-    terms, qvec = _params(query_text)
-    sem_hits = _doc_ivf_hits(
-        spark, cat, enriched, qvec, k * 3, n_probe, source_table=source_table
-    )
-    s = _with_scores(enriched, terms, qvec, fuzziness)
-    hits = sem_hits.select("doc_id", F.col("sim").alias("_ann_sim"))
-    s = s.join(F.broadcast(hits), "doc_id", "left")
-    score = F.round(
-        F.col("title_ov") * 3.0
-        + F.col("summary_ov") * 2.0
-        + F.coalesce(F.col("_ann_sim"), F.lit(0.0)),
-        6,
-    )
-    return (
-        s.withColumn("score", score)
-        .where(F.col("score") > 0)
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    other strategy, search_service.py:92-124): only the lexical overlap
+    expressions touch every corpus row."""
+    hits = partial(_doc_ivf_hits, spark, cat, enriched, n_probe=n_probe, source_table=source_table)
+    return _advanced(enriched, query_text, k, fuzziness, hits)
 
 
-def advanced_search_ann_sql(
-    enriched_glob: str,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-) -> str:
+def _advanced_sql(enriched_glob: str, query_text: str, k: int, fuzziness: int, ann) -> str:
     terms, qvec = _params(query_text)
     return f"""
     {_docs_cte(enriched_glob, terms, qvec, fuzziness)},
-    {_doc_ivf_ann_sql(enriched_glob, qvec, k * 3)}
+    {ann(enriched_glob, qvec, k * 3)}
     SELECT doc_id, score FROM (
       SELECT s.doc_id,
              round(s.title_ov * 3.0 + s.summary_ov * 2.0 + coalesce(ann.ann_sim, 0.0), 6) AS score
@@ -282,55 +285,31 @@ def advanced_search_sql(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> str:
-    terms, qvec = _params(query_text)
-    return f"""
-    {_docs_cte(enriched_glob, terms, qvec, fuzziness)},
-    ranked AS (
-      SELECT *, row_number() OVER (ORDER BY sem_score DESC, doc_id ASC) AS sem_rank FROM scored)
-    SELECT doc_id, score FROM (
-      SELECT doc_id,
-             round(title_ov * 3.0 + summary_ov * 2.0 +
-                   CASE WHEN sem_rank <= {k * 3} THEN sem_score ELSE 0.0 END, 6) AS score
-      FROM ranked)
-    WHERE score > 0 ORDER BY score DESC, doc_id ASC LIMIT {k}
-    """
+    return _advanced_sql(enriched_glob, query_text, k, fuzziness, _exact_ann_sql)
+
+
+def advanced_search_ann_sql(
+    enriched_glob: str,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+) -> str:
+    return _advanced_sql(enriched_glob, query_text, k, fuzziness, _doc_ivf_ann_sql)
 
 
 # ================================================================ Q3 pro (hybrid fusion)
-def _hybrid(
+def _candidates(
     enriched: DataFrame,
-    semantic_k: int,
     terms: list[str],
-    qvec: list[float],
     fuzziness: int,
-    sem_hits: DataFrame | None = None,
+    hits: DataFrame,
     carry: tuple[str, ...] = (),
-    checkpoint: bool = True,
 ) -> DataFrame:
-    """Candidates = lexical(min_should_match=2) ∪ semantic top-semantic_k;
-    per-branch min-max to [0,1] over candidates, arithmetic-mean fusion.
-
-    ``sem_hits`` (doc_id, sim — e.g. an IVF probe from
-    ``similarity.ivf_topk_indexed``) replaces the exact full-corpus semantic
-    top-k: the tiny hit set is broadcast-joined in, flagged rows score their
-    pre-computed ANN sim, and Catalyst PRUNES the per-row cosine out of the
-    scan entirely (sem_score is never referenced) — the 256-d dot product is
-    then evaluated only inside the probed index buckets, not per corpus row.
-
-    The candidate set is MATERIALIZED once (projected to doc_id/lex_b/sem_b
-    + ``carry``, then eager localCheckpoint) before the min-max statistics:
-    the stats aggregate is broadcast back over the candidates, and without
-    the materialization that diamond made Catalyst execute the whole
-    upstream lineage TWICE per query — two full enriched scans + two index
-    probes for pro_search_ann, and the nested diamonds of search_kb /
-    pro_search_enhanced multiplied it to 4× (measured in the round-8 before
-    plans: operators (1)-(11) duplicated as (12)-(25)). Candidates ≤ corpus
-    by construction, so one candidate-sized materialization is never worse
-    than a second corpus pass — and the checkpoint carries only the fusion
-    columns, not the document payload (optimization guide §8: decide on
-    small rows). ``carry`` lets pro_search_enhanced keep the two payload
-    columns its boost/rerank tail needs."""
-    s = _with_scores(enriched, terms, qvec, fuzziness)
+    """Candidates = lexical(min_should_match=2) ∪ the hit set, projected to
+    (doc_id, lex_b, sem_b, *carry): lex_b is the lexical score of lexical
+    matches, sem_b the hit's sim, each 0.0 where its branch did not match.
+    ``carry`` keeps payload columns a strategy's tail needs."""
+    s = _with_hits(_with_scores(enriched, terms, fuzziness), hits)
     lex = F.round(
         F.col("summary_ov") * 2.0
         + F.col("content_ov") * 3.0
@@ -338,32 +317,25 @@ def _hybrid(
         + F.col("topic_ov") * 1.5,
         6,
     )
-    should = (
+    lex_ok = (
         (F.col("summary_ov") > 0).cast("int")
         + (F.col("content_ov") > 0).cast("int")
         + (F.col("ent_ov") > 0).cast("int")
         + (F.col("topic_ov") > 0).cast("int")
-    )
-    s = s.withColumn("lex_score", lex).withColumn("lex_ok", should >= 2)
-    if sem_hits is None:
-        s = _semantic_topk_flag(s, semantic_k, "_sem_top")
-        sem_val = F.col("sem_score")
-    else:
-        hits = sem_hits.select("doc_id", F.col("sim").alias("_ann_sim"))
-        s = s.join(F.broadcast(hits), "doc_id", "left").withColumn(
-            "_sem_top", F.col("_ann_sim").isNotNull()
-        )
-        sem_val = F.col("_ann_sim")
-    cand = s.where(F.col("lex_ok") | F.col("_sem_top")).select(
+    ) >= 2
+    return s.where(lex_ok | F.col("_sim").isNotNull()).select(
         "doc_id",
-        F.when(F.col("lex_ok"), F.col("lex_score")).otherwise(0.0).alias("lex_b"),
-        F.when(F.col("_sem_top"), sem_val).otherwise(0.0).alias("sem_b"),
+        F.when(lex_ok, lex).otherwise(0.0).alias("lex_b"),
+        F.coalesce(F.col("_sim"), F.lit(0.0)).alias("sem_b"),
         *carry,
     )
-    if checkpoint:  # False keeps the full lineage for plan tests (the
-        cand = cand.localCheckpoint(eager=True)  # dedup-family pattern)
-    # branch min/max as ONE aggregate broadcast back — a partition-less window
-    # would single-task the whole candidate set at scale
+
+
+def _fuse(cand: DataFrame) -> DataFrame:
+    """Per-branch min-max to [0,1] over the candidates, arithmetic-mean
+    fusion into ``score``. The branch min/max are ONE aggregate broadcast
+    back — a partition-less window would single-task the whole candidate
+    set at scale."""
     stats = cand.agg(
         F.min("lex_b").alias("_lmn"), F.max("lex_b").alias("_lmx"),
         F.min("sem_b").alias("_smn"), F.max("sem_b").alias("_smx"),
@@ -384,43 +356,91 @@ def _hybrid(
     return cand.withColumn("score", F.round((F.col("lex_n") + F.col("sem_n")) / 2.0, 6))
 
 
-def pro_search(
+def _hybrid(
     enriched: DataFrame,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
+    terms: list[str],
+    fuzziness: int,
+    hits: DataFrame,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
+    """``_fuse`` over ``_candidates``, with the candidate set MATERIALIZED
+    once (eager localCheckpoint) in between: the stats aggregate is
+    broadcast back over the candidates, and without the materialization
+    that diamond made Catalyst execute the whole upstream lineage TWICE per
+    query — two full enriched scans + two index probes for pro_search_ann,
+    and the nested diamonds of search_kb / pro_search_enhanced multiplied it
+    to 4× (measured in the round-8 before plans: operators (1)-(11)
+    duplicated as (12)-(25)). Candidates ≤ corpus by construction, so one
+    candidate-sized materialization is never worse than a second corpus
+    pass — and the checkpoint carries only the fusion columns and ``carry``,
+    not the document payload (optimization guide §8: decide on small rows)."""
+    return _fuse(_candidates(enriched, terms, fuzziness, hits, carry).localCheckpoint(eager=True))
+
+
+def _pro(enriched: DataFrame, query_text: str, k: int, fuzziness: int, hits) -> DataFrame:
     terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
     return (
-        _hybrid(enriched, semantic_k, terms, qvec, fuzziness)
+        _hybrid(enriched, terms, fuzziness, hits(qvec, max(5 * k, 50)))
         .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
 
 
+def pro_search(
+    enriched: DataFrame,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+) -> DataFrame:
+    return _pro(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
+
+
+def pro_search_ann(
+    spark: SparkSession,
+    cat,
+    enriched: DataFrame,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+    n_probe: int | None = None,
+    source_table: str = "enriched",
+) -> DataFrame:
+    """pro_search with the semantic branch served by the MATERIALIZED doc-IVF
+    index instead of an exact full-corpus cosine scan (round-3 VERDICT
+    'What's missing' #1): the probe reads only ``n_probe`` of the
+    corpus-derived ``n_centroids`` bucket directories (``doc_ivf_params``),
+    so per-row 256-d dot products are evaluated over ~n_probe/n_centroids of
+    the corpus. Fusion math is unchanged; the semantic candidate set is the
+    ANN top-semantic_k (recall contract: whatever the probed buckets contain
+    — standard IVF semantics, and exactly reproduced by the DuckDB oracle,
+    which replays the same index)."""
+    hits = partial(_doc_ivf_hits, spark, cat, enriched, n_probe=n_probe, source_table=source_table)
+    return _pro(enriched, query_text, k, fuzziness, hits)
+
+
 def _hybrid_sql(
     enriched_glob: str,
-    semantic_k: int,
     terms: list[str],
     qvec: list[float],
     fuzziness: int,
+    ann: str,
 ) -> str:
+    """The fusion of ``_hybrid`` over the ``ann`` hit CTE — ends with ``fused``."""
     return f"""
     {_docs_cte(enriched_glob, terms, qvec, fuzziness)},
+    {ann},
     ranked AS (
-      SELECT *,
+      SELECT s.*, ann.ann_sim,
         round(summary_ov * 2.0 + content_ov * 3.0 + ent_ov * 1.5 + topic_ov * 1.5, 6) AS lex_score,
         (CAST(summary_ov > 0 AS INT) + CAST(content_ov > 0 AS INT) +
-         CAST(ent_ov > 0 AS INT) + CAST(topic_ov > 0 AS INT)) >= 2 AS lex_ok,
-        row_number() OVER (ORDER BY sem_score DESC, doc_id ASC) AS sem_rank
-      FROM scored),
+         CAST(ent_ov > 0 AS INT) + CAST(topic_ov > 0 AS INT)) >= 2 AS lex_ok
+      FROM scored s LEFT JOIN ann USING (doc_id)),
     cand AS (
       SELECT *,
         CASE WHEN lex_ok THEN lex_score ELSE 0.0 END AS lex_b,
-        CASE WHEN sem_rank <= {semantic_k} THEN sem_score ELSE 0.0 END AS sem_b
-      FROM ranked WHERE lex_ok OR sem_rank <= {semantic_k}),
+        coalesce(ann_sim, 0.0) AS sem_b
+      FROM ranked WHERE lex_ok OR ann_sim IS NOT NULL),
     normed AS (
       SELECT *,
         round(CASE WHEN max(lex_b) OVER () = min(lex_b) OVER () THEN 1.0
@@ -432,21 +452,36 @@ def _hybrid_sql(
     """
 
 
+def _pro_sql(enriched_glob: str, query_text: str, k: int, fuzziness: int, ann) -> str:
+    terms, qvec = _params(query_text)
+    return f"""
+    {_hybrid_sql(enriched_glob, terms, qvec, fuzziness, ann(enriched_glob, qvec, max(5 * k, 50)))}
+    SELECT doc_id, score FROM fused ORDER BY score DESC, doc_id ASC LIMIT {k}
+    """
+
+
 def pro_search_sql(
     enriched_glob: str,
     query_text: str = QUERY_TEXT,
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> str:
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    return f"""
-    {_hybrid_sql(enriched_glob, semantic_k, terms, qvec, fuzziness)}
-    SELECT doc_id, score FROM fused ORDER BY score DESC, doc_id ASC LIMIT {k}
-    """
+    return _pro_sql(enriched_glob, query_text, k, fuzziness, _exact_ann_sql)
 
 
-# ================================================================ Q3b pro + ANN
+def pro_search_ann_sql(
+    enriched_glob: str,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+    fit_source_sql: str | None = None,
+    base_n_docs: int | None = None,
+) -> str:
+    ann = partial(_doc_ivf_ann_sql, fit_source_sql=fit_source_sql, base_n_docs=base_n_docs)
+    return _pro_sql(enriched_glob, query_text, k, fuzziness, ann)
+
+
+# ================================================================ doc-IVF index (served source)
 # Doc-embedding IVF index parameters (materialized next to the enriched
 # table; separate from the embeddings-table index so the two never collide).
 DOC_IVF_CENT = "doc_ivf_centroids"
@@ -488,29 +523,14 @@ def doc_ivf_params(n_docs: int) -> tuple[int, int]:
     return n_centroids, n_probe
 
 
-def _manifest_n_docs(table_dir: str) -> int | None:
-    """Document count from the catalog manifest (pure JSON, no table scan) —
-    the same per-partition lineage the pipeline already records."""
-    p = os.path.join(table_dir, "_manifest.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        parts = json.load(f)["partitions"]
-    return sum(e["rows_written"] for e in parts.values()) if parts else None
-
-
-def _manifest_lineage(table_dir: str) -> str | None:
-    """Input-identity string from the source table's manifest: md5 over the
+def _manifest_lineage(man: dict) -> str | None:
+    """Input-identity string from a source table's manifest: md5 over the
     sorted (partition, snapshot_id, rows_written) triplets. Any recommit of
     any partition changes a snapshot id, so a stale index is still detected —
     WITHOUT the per-query corpus scan `_input_fingerprint` would cost."""
     import hashlib
 
-    p = os.path.join(table_dir, "_manifest.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        parts = json.load(f)["partitions"]
+    parts = man["partitions"]
     if not parts:
         return None
     ident = ";".join(
@@ -520,7 +540,7 @@ def _manifest_lineage(table_dir: str) -> str | None:
 
 
 def _oracle_n_docs(enriched_glob: str) -> int:
-    """Corpus size for oracle-SQL generation, from the manifest next to the
+    """Corpus size for oracle-SQL generation, from the manifest of the
     glob's table directory (falling back to parquet footer metadata). Raises
     when NEITHER exists: silently returning 0 would bake the floor params
     (8, 3) into the oracle while the Spark path derives them from the
@@ -528,9 +548,9 @@ def _oracle_n_docs(enriched_glob: str) -> int:
     generate this SQL lazily (entrypoints.oracles()), after the enriched
     table has been materialized."""
     table_dir = enriched_glob.split("/bucket=")[0]
-    n = _manifest_n_docs(table_dir)
-    if n is not None:
-        return n
+    parts = Catalog(os.path.dirname(table_dir)).manifest(os.path.basename(table_dir))["partitions"]
+    if parts:
+        return sum(e["rows_written"] for e in parts.values())
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -548,7 +568,7 @@ def _oracle_n_docs(enriched_glob: str) -> int:
 def _assert_canonical_ids(df: DataFrame) -> None:
     """Non-canonical ids (non-numeric, or '007'-style strings that don't
     round-trip the cast) would silently vanish in the string rejoin inside
-    ``_hybrid``, so index builds/appends FAIL FAST on the first such id
+    ``_with_hits``, so index builds/appends FAIL FAST on the first such id
     instead of degrading recall with no error; a corpus with non-numeric ids
     would first materialize a (doc_id, doc_key) map."""
     key = F.col("doc_id").try_cast("long")  # plain cast THROWS under ANSI
@@ -566,14 +586,6 @@ def _doc_keyed_vecs(df: DataFrame) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_key"),
         F.col("embedding").cast("array<double>").alias("embedding"),
     )
-
-
-def _read_manifest(table_dir: str) -> dict | None:
-    p = os.path.join(table_dir, "_manifest.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
 
 
 def _coverage_state(key: str, covers: dict, snaps: list[dict], _seen: frozenset = frozenset()):
@@ -652,11 +664,11 @@ def ensure_doc_ivf(
 
     from ..operators.similarity import append_ivf_assignments, build_ivf_index
 
-    src_dir = cat.path(source_table)
-    man = _read_manifest(src_dir)
-    parts = man["partitions"] if man is not None else None
-    snaps = man.get("snapshots", []) if man is not None else []
-    cur = {k: e["snapshot_id"] for k, e in parts.items()} if parts is not None else None
+    man = cat.manifest(source_table)  # an empty skeleton when not committed
+    parts, snaps = man["partitions"], man["snapshots"]
+    cur = (
+        {k: e["snapshot_id"] for k, e in parts.items()} if cat.exists(source_table) else None
+    )
 
     if cat.exists(DOC_IVF_CENT) and cat.exists(DOC_IVF_ASSIGN) and cur is not None:
         covers = cat.get_property(DOC_IVF_CENT, "covers")
@@ -664,10 +676,12 @@ def ensure_doc_ivf(
         fit_rows = cat.get_property(DOC_IVF_CENT, "fit_rows")
         if covers is not None and params is not None:
             compacted = {k for s in snaps for k in s.get("compacted_from", [])}
-            intact = all(
-                cur.get(k) == v or (k not in cur and k in compacted)
+            broken = sorted(
+                k
                 for k, v in covers.items()
+                if not (cur.get(k) == v or (k not in cur and k in compacted))
             )
+            intact = not broken
             state = (
                 {k: _coverage_state(k, covers, snaps) for k in cur if k not in covers}
                 if intact
@@ -698,6 +712,11 @@ def ensure_doc_ivf(
                 # (rebuilt consistently below), never fresh centroids paired
                 # with a stale corpus's assignments — and rmtree failures
                 # must surface, not leave half an index behind silently.
+                if broken:  # a rewrite is an event; drift/compaction refits are routine
+                    warnings.warn(
+                        f"doc-IVF index refit: covered partitions of "
+                        f"'{source_table}' were recommitted or removed: {', '.join(broken)}"
+                    )
                 shutil.rmtree(cat.path(DOC_IVF_ASSIGN))
                 shutil.rmtree(cat.path(DOC_IVF_CENT))
             else:
@@ -716,7 +735,7 @@ def ensure_doc_ivf(
                     id_col="doc_key",
                     cent_table=DOC_IVF_CENT,
                     assign_table=DOC_IVF_ASSIGN,
-                    stage=f"ivf_append tag={tag} fp={_manifest_lineage(src_dir)}",
+                    stage=f"ivf_append tag={tag} fp={_manifest_lineage(man)}",
                 )
                 cat.set_property(DOC_IVF_CENT, "covers", cur)
                 return tuple(params)
@@ -739,7 +758,7 @@ def ensure_doc_ivf(
         assign_table=DOC_IVF_ASSIGN,
         # identity from the source manifest's snapshot ids: the
         # index-freshness check on the SERVING path must not scan the corpus
-        lineage=_manifest_lineage(src_dir),
+        lineage=_manifest_lineage(man),
     )
     if cur is not None:
         # ONE atomic manifest save: a partial triple would disable the
@@ -760,10 +779,10 @@ def _doc_ivf_hits(
     n_probe: int | None = None,
     source_table: str = "enriched",
 ) -> DataFrame:
-    """(doc_id, sim) = ANN top-``semantic_k`` from the materialized doc-IVF
-    index, building it first if absent (appending streamed epochs to it if
-    the source grew — ensure_doc_ivf); ``n_probe`` defaults to the
-    corpus-derived recall-contract value."""
+    """The served hit source: (doc_id, sim) = ANN top-``semantic_k`` from the
+    materialized doc-IVF index, building it first if absent (appending
+    streamed epochs to it if the source grew — ensure_doc_ivf); ``n_probe``
+    defaults to the corpus-derived recall-contract value."""
     from ..operators.similarity import ivf_topk_indexed
 
     _, default_probe = ensure_doc_ivf(spark, cat, enriched, source_table=source_table)
@@ -778,43 +797,6 @@ def _doc_ivf_hits(
         assign_table=DOC_IVF_ASSIGN,
         signal_min=spec.DOC_IVF_SIGNAL_MIN,
     ).select(F.col("doc_key").cast("string").alias("doc_id"), "sim")
-
-
-def pro_search_ann(
-    spark: SparkSession,
-    cat,
-    enriched: DataFrame,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-    n_probe: int | None = None,
-    source_table: str = "enriched",
-    checkpoint: bool = True,
-) -> DataFrame:
-    """pro_search with the semantic branch served by the MATERIALIZED doc-IVF
-    index instead of an exact full-corpus cosine scan (round-3 VERDICT
-    'What's missing' #1): the probe reads only ``n_probe`` of the
-    corpus-derived ``n_centroids`` bucket directories (``doc_ivf_params``),
-    so per-row 256-d dot products are evaluated over ~n_probe/n_centroids of
-    the corpus — the exact ``pro_search`` stays as the recall-1.0 twin.
-    Fusion math is unchanged; the semantic candidate set is the ANN
-    top-semantic_k (recall contract: whatever the probed buckets contain —
-    standard IVF semantics, and exactly reproduced by the DuckDB oracle,
-    which replays the same index)."""
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    sem_hits = _doc_ivf_hits(
-        spark, cat, enriched, qvec, semantic_k, n_probe, source_table=source_table
-    )
-    return (
-        _hybrid(
-            enriched, semantic_k, terms, qvec, fuzziness, sem_hits=sem_hits,
-            checkpoint=checkpoint,
-        )
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
 
 
 def _cos_nan0_sql(a: str, b: str) -> str:
@@ -832,9 +814,10 @@ def _doc_ivf_ann_sql(
     fit_source_sql: str | None = None,
     base_n_docs: int | None = None,
 ) -> str:
-    """CTE chain replaying the doc-IVF index + probe in DuckDB (the
-    entrypoints._ivf_oracle_sql pattern over the enriched table): ends with
-    ``ann(doc_id, sim)`` = the ANN top-semantic_k. (n_centroids, n_probe)
+    """The served source's SQL twin: a CTE chain replaying the doc-IVF index
+    + probe in DuckDB (the entrypoints._ivf_oracle_sql pattern over the
+    enriched table), ending with ``ann(doc_id, ann_sim)`` = the ANN
+    top-semantic_k. (n_centroids, n_probe)
     are derived from the SAME manifest count the Spark build uses
     (doc_ivf_params), so the replay is bit-identical at any corpus size.
 
@@ -907,78 +890,6 @@ def _doc_ivf_ann_sql(
     return ",\n    ".join(ctes)
 
 
-def _hybrid_ann_sql(
-    enriched_glob: str,
-    semantic_k: int,
-    terms: list[str],
-    qvec: list[float],
-    fuzziness: int,
-    fit_source_sql: str | None = None,
-    base_n_docs: int | None = None,
-) -> str:
-    """_hybrid_sql with the semantic branch from the replayed doc-IVF probe
-    (ann CTE) instead of the exact full-corpus rank — ends with ``fused``."""
-    return f"""
-    {_docs_cte(enriched_glob, terms, qvec, fuzziness)},
-    {_doc_ivf_ann_sql(enriched_glob, qvec, semantic_k, fit_source_sql, base_n_docs)},
-    ranked AS (
-      SELECT s.*, ann.ann_sim,
-        round(summary_ov * 2.0 + content_ov * 3.0 + ent_ov * 1.5 + topic_ov * 1.5, 6) AS lex_score,
-        (CAST(summary_ov > 0 AS INT) + CAST(content_ov > 0 AS INT) +
-         CAST(ent_ov > 0 AS INT) + CAST(topic_ov > 0 AS INT)) >= 2 AS lex_ok
-      FROM scored s LEFT JOIN ann USING (doc_id)),
-    cand AS (
-      SELECT *,
-        CASE WHEN lex_ok THEN lex_score ELSE 0.0 END AS lex_b,
-        CASE WHEN ann_sim IS NOT NULL THEN ann_sim ELSE 0.0 END AS sem_b
-      FROM ranked WHERE lex_ok OR ann_sim IS NOT NULL),
-    normed AS (
-      SELECT *,
-        round(CASE WHEN max(lex_b) OVER () = min(lex_b) OVER () THEN 1.0
-              ELSE (lex_b - min(lex_b) OVER ()) / (max(lex_b) OVER () - min(lex_b) OVER ()) END, 6) AS lex_n,
-        round(CASE WHEN max(sem_b) OVER () = min(sem_b) OVER () THEN 1.0
-              ELSE (sem_b - min(sem_b) OVER ()) / (max(sem_b) OVER () - min(sem_b) OVER ()) END, 6) AS sem_n
-      FROM cand),
-    fused AS (SELECT *, round((lex_n + sem_n) / 2.0, 6) AS score FROM normed)
-    """
-
-
-def pro_search_ann_sql(
-    enriched_glob: str,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-    fit_source_sql: str | None = None,
-    base_n_docs: int | None = None,
-) -> str:
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    return f"""
-    {_hybrid_ann_sql(enriched_glob, semantic_k, terms, qvec, fuzziness, fit_source_sql, base_n_docs)}
-    SELECT doc_id, score FROM fused ORDER BY score DESC, doc_id ASC LIMIT {k}
-    """
-
-
-def search_kb_ann_sql(
-    enriched_glob: str,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-) -> str:
-    terms, qvec = _params(query_text)
-    semantic_k = min(max(1, k), 10)
-    return f"""
-    {_hybrid_ann_sql(enriched_glob, semantic_k, terms, qvec, fuzziness)},
-    n100 AS (
-      SELECT *, round(CASE WHEN max(score) OVER () = min(score) OVER () THEN 100.0
-             ELSE greatest(1.0, least(100.0,
-                  1.0 + (score - min(score) OVER ()) / (max(score) OVER () - min(score) OVER ()) * 99.0)) END, 6) AS norm_score
-      FROM fused)
-    SELECT doc_id, norm_score AS score FROM n100
-    WHERE norm_score >= 70.0 ORDER BY score DESC, doc_id ASC LIMIT {k}
-    """
-
-
 # ================================================================ Q4 enhanced
 def _expansion_terms(enriched: DataFrame, terms: list[str]) -> DataFrame:
     """Deterministic query expansion (N11): the top-3 corpus-frequent entity
@@ -1035,7 +946,7 @@ def ensure_entity_freq(
     served lookup stays bit-identical to the in-plan derivation (whose
     ``~isin`` predicate drops NULLs) even under malformed extractions."""
     tbl = _entity_freq_table(source_table)
-    lineage = _manifest_lineage(cat.path(source_table))
+    lineage = _manifest_lineage(cat.manifest(source_table))
     stage = f"entity_freq k={ENTITY_FREQ_K} fp={lineage}"
     if cat.exists(tbl):
         prior = {m["stage"] for m in cat.metrics(tbl)}
@@ -1086,23 +997,26 @@ def _expansion_terms_served(
     return out[:3]
 
 
-def _enhanced_tail(
-    fused: DataFrame,
+def _pro_enhanced(
     enriched: DataFrame,
-    terms: list[str],
-    qvec: list[float],
+    query_text: str,
     k: int,
+    fuzziness: int,
+    hits,
     exp_terms: list[str] | None = None,
 ) -> DataFrame:
-    """pro_search_enhanced's boost → window → rerank tail, shared by the
-    exact and ANN-served variants. The rerank cosine is (re)computed from the
-    embedding column ON THE k*5 WINDOW ROWS ONLY — referencing the pre-window
-    ``sem_score`` column instead would drag the per-row cosine back onto the
-    full corpus scan in the ANN variant, undoing the index probe.
+    """pro_search's fusion, then boost → window → rerank. The candidates
+    carry no cosine column, so the rerank cosine is computed from the
+    embedding column ON THE k*5 WINDOW ROWS ONLY — a corpus-wide cosine
+    would undo the index probe of the served source.
 
     ``exp_terms``: pre-resolved expansion terms (the served path —
     ``_expansion_terms_served``); None derives them from the corpus in-plan
     (the exact twin's self-contained derivation)."""
+    terms, qvec = _params(query_text)
+    fused = _hybrid(
+        enriched, terms, fuzziness, hits(qvec, max(5 * k, 50)), carry=("content", "embedding")
+    )
     if exp_terms is None:
         exp = _expansion_terms(enriched, terms).select(
             F.collect_list("term").alias("exp_terms")
@@ -1142,12 +1056,7 @@ def pro_search_enhanced(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    fused = _hybrid(
-        enriched, semantic_k, terms, qvec, fuzziness, carry=("content", "embedding")
-    )
-    return _enhanced_tail(fused, enriched, terms, qvec, k)
+    return _pro_enhanced(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
 
 
 def pro_search_enhanced_ann(
@@ -1159,40 +1068,31 @@ def pro_search_enhanced_ann(
     fuzziness: int = FUZZINESS,
     n_probe: int | None = None,
     source_table: str = "enriched",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The reference's FLAGSHIP strategy (main_app.py:42-48 default,
     HNSW-served at search_service.py:259-261) with the semantic branch probing
-    the materialized doc-IVF index — the last exact-scan interactive path
-    (round-4 VERDICT #2). Expansion, boost, rerank are semantically
-    unchanged; the semantic candidate set comes from the index probe, the
-    rerank cosine runs on the k*5 window rows, and the expansion terms come
-    from the materialized ``entity_freq_topk`` statistic (one 100-row
-    driver lookup instead of a full-corpus explode + aggregate PER QUERY —
-    bit-identical to the in-plan derivation, which the DuckDB oracle still
-    performs). The exact ``pro_search_enhanced`` stays as the recall-1.0,
-    self-derived twin."""
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    sem_hits = _doc_ivf_hits(
-        spark, cat, enriched, qvec, semantic_k, n_probe, source_table=source_table
-    )
+    the materialized doc-IVF index. Expansion, boost, rerank are semantically
+    unchanged; the expansion terms come from the materialized
+    ``entity_freq_topk`` statistic (one 100-row driver lookup instead of a
+    full-corpus explode + aggregate PER QUERY — bit-identical to the in-plan
+    derivation, which the DuckDB oracle still performs)."""
     ensure_entity_freq(spark, cat, enriched, source_table=source_table)
-    exp_terms = _expansion_terms_served(cat, terms, table=_entity_freq_table(source_table))
-    fused = _hybrid(
-        enriched, semantic_k, terms, qvec, fuzziness, sem_hits=sem_hits,
-        carry=("content", "embedding"), checkpoint=checkpoint,
+    exp_terms = _expansion_terms_served(
+        cat, spec.clean_tokens(query_text), table=_entity_freq_table(source_table)
     )
-    return _enhanced_tail(fused, enriched, terms, qvec, k, exp_terms=exp_terms)
+    hits = partial(_doc_ivf_hits, spark, cat, enriched, n_probe=n_probe, source_table=source_table)
+    return _pro_enhanced(enriched, query_text, k, fuzziness, hits, exp_terms)
 
 
-def _enhanced_tail_sql(terms: list[str], k: int) -> str:
-    """exp → boost → window → rerank CTE tail appended to a ``fused`` CTE
-    (the rerank's sem_score carries _docs_cte's NaN→0 guard, matching the
-    window-row recomputation on the Spark side)."""
+def _pro_enhanced_sql(enriched_glob: str, query_text: str, k: int, fuzziness: int, ann) -> str:
+    """exp → boost → window → rerank over the fused candidates (the rerank's
+    sem_score carries _docs_cte's NaN→0 guard, matching the window-row
+    recomputation on the Spark side)."""
+    terms, qvec = _params(query_text)
     qn = float(len(terms))
     ts = _terms_sql(terms)
     return f"""
+    {_hybrid_sql(enriched_glob, terms, qvec, fuzziness, ann(enriched_glob, qvec, max(5 * k, 50)))},
     exp AS (
       SELECT list(term ORDER BY n DESC, term ASC) AS exp_terms FROM (
         SELECT term, count(*) AS n FROM (
@@ -1219,12 +1119,7 @@ def pro_search_enhanced_sql(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> str:
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    return f"""
-    {_hybrid_sql(enriched_glob, semantic_k, terms, qvec, fuzziness)},
-    {_enhanced_tail_sql(terms, k)}
-    """
+    return _pro_enhanced_sql(enriched_glob, query_text, k, fuzziness, _exact_ann_sql)
 
 
 def pro_search_enhanced_ann_sql(
@@ -1233,18 +1128,16 @@ def pro_search_enhanced_ann_sql(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> str:
-    terms, qvec = _params(query_text)
-    semantic_k = max(5 * k, 50)
-    return f"""
-    {_hybrid_ann_sql(enriched_glob, semantic_k, terms, qvec, fuzziness)},
-    {_enhanced_tail_sql(terms, k)}
-    """
+    return _pro_enhanced_sql(enriched_glob, query_text, k, fuzziness, _doc_ivf_ann_sql)
 
 
 # ================================================================ Q5 search_kb
-def _kb_normalize_threshold(fused: DataFrame, k: int) -> DataFrame:
-    """search_kb's tail: normalize fused score to [1,100], threshold >= 70
-    (search_service.py:380-382), top-k."""
+def _kb(enriched: DataFrame, query_text: str, k: int, fuzziness: int, hits) -> DataFrame:
+    """pro_search's fusion with semantic_k capped at 10
+    (search_service.py:329-330), then the fused score normalized to [1,100],
+    threshold >= 70 (:380-382), top-k."""
+    terms, qvec = _params(query_text)
+    fused = _hybrid(enriched, terms, fuzziness, hits(qvec, min(max(1, k), 10)))
     stats = fused.agg(F.min("score").alias("_mn"), F.max("score").alias("_mx"))
     fused = fused.crossJoin(F.broadcast(stats))
     mn, mx = F.col("_mn"), F.col("_mx")
@@ -1269,11 +1162,7 @@ def search_kb(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    terms, qvec = _params(query_text)
-    semantic_k = min(max(1, k), 10)  # capped (search_service.py:329-330)
-    return _kb_normalize_threshold(
-        _hybrid(enriched, semantic_k, terms, qvec, fuzziness), k
-    )
+    return _kb(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
 
 
 def search_kb_ann(
@@ -1287,28 +1176,15 @@ def search_kb_ann(
     source_table: str = "enriched",
 ) -> DataFrame:
     """search_kb with the semantic branch served by the materialized doc-IVF
-    index (pro_search_ann pattern) — the exact search_kb stays as the
-    recall-1.0 twin, and the DuckDB oracle replays the same index."""
-    terms, qvec = _params(query_text)
-    semantic_k = min(max(1, k), 10)
-    sem_hits = _doc_ivf_hits(
-        spark, cat, enriched, qvec, semantic_k, n_probe, source_table=source_table
-    )
-    return _kb_normalize_threshold(
-        _hybrid(enriched, semantic_k, terms, qvec, fuzziness, sem_hits=sem_hits), k
-    )
+    index; the DuckDB oracle replays the same index."""
+    hits = partial(_doc_ivf_hits, spark, cat, enriched, n_probe=n_probe, source_table=source_table)
+    return _kb(enriched, query_text, k, fuzziness, hits)
 
 
-def search_kb_sql(
-    enriched_glob: str,
-    query_text: str = QUERY_TEXT,
-    k: int = K,
-    fuzziness: int = FUZZINESS,
-) -> str:
+def _kb_sql(enriched_glob: str, query_text: str, k: int, fuzziness: int, ann) -> str:
     terms, qvec = _params(query_text)
-    semantic_k = min(max(1, k), 10)
     return f"""
-    {_hybrid_sql(enriched_glob, semantic_k, terms, qvec, fuzziness)},
+    {_hybrid_sql(enriched_glob, terms, qvec, fuzziness, ann(enriched_glob, qvec, min(max(1, k), 10)))},
     n100 AS (
       SELECT *, round(CASE WHEN max(score) OVER () = min(score) OVER () THEN 100.0
              ELSE greatest(1.0, least(100.0,
@@ -1319,7 +1195,19 @@ def search_kb_sql(
     """
 
 
-def ensure_enriched_for_search(spark: SparkSession, sf_dir: str, out_root: str) -> DataFrame:
-    from .pipeline import ensure_enriched
+def search_kb_sql(
+    enriched_glob: str,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+) -> str:
+    return _kb_sql(enriched_glob, query_text, k, fuzziness, _exact_ann_sql)
 
-    return ensure_enriched(spark, sf_dir, out_root)
+
+def search_kb_ann_sql(
+    enriched_glob: str,
+    query_text: str = QUERY_TEXT,
+    k: int = K,
+    fuzziness: int = FUZZINESS,
+) -> str:
+    return _kb_sql(enriched_glob, query_text, k, fuzziness, _doc_ivf_ann_sql)

@@ -1,4 +1,5 @@
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from semantic_search_system_spark.operators.dedup import (
@@ -170,6 +171,51 @@ def test_minhash_store_idempotent_and_rebuilds(spark, tmp_root):
     stages = {m["stage"] for m in cat.metrics(E.MINHASH_STORE_TABLE)}
     assert len(stages) == 1 and "fp=" in next(iter(stages))
     assert next(iter(stages)) != f"minhash_store v{E.spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={corpus.count()}"
+
+
+def test_minhash_store_rebuilds_on_same_size_rewrite(spark, tmp_root):
+    """A rewrite that keeps the source file's size must still change the
+    file-metadata fingerprint (basename:size alone kept serving the old
+    signatures) and rebuild the store from the new content."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semantic_search_system_spark import entrypoints as E
+    from semantic_search_system_spark.catalog import Catalog
+
+    sf = os.path.join(tmp_root, "sf")
+    os.makedirs(sf)
+    path = os.path.join(sf, "documents.parquet")
+    cat = Catalog(os.path.join(tmp_root, "out"))
+
+    def write(word):
+        texts = [f"{word} beta gamma delta epsilon zeta eta theta {i}" for i in range(10)]
+        # no compression, dictionary or statistics: the size depends only on
+        # the string lengths, so both versions are the same number of bytes
+        pq.write_table(
+            pa.table({"doc_id": list(range(10)), "text": texts}), path,
+            compression="none", use_dictionary=False, write_statistics=False,
+        )
+
+    def store():
+        fp = E._source_file_fingerprint(sf)
+        E.ensure_minhash_store(spark, cat, E._dup_corpus(spark, sf), fingerprint=fp)
+        rows = cat.read(spark, E.MINHASH_STORE_TABLE).collect()
+        return fp, sorted((r["doc_id"], tuple(r["minhash"])) for r in rows)
+
+    write("alpha")
+    size = os.path.getsize(path)
+    fp1, sigs1 = store()
+    write("omega")
+    # pin the rewrite a second later so a coarse filesystem clock can't tie
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.path.getsize(path) == size
+    fp2, sigs2 = store()
+    assert fp2 != fp1
+    assert sigs2 != sigs1, "same-size rewrite served the stale signature store"
 
 
 def test_ivf_index_materialized(spark, tmp_root):
@@ -479,6 +525,7 @@ def test_doc_ivf_drift_refit_and_rewrite_guard(spark, tmp_root):
     import json
     import os
     import shutil
+    import warnings
 
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans import search as S
@@ -503,7 +550,10 @@ def test_doc_ivf_drift_refit_and_rewrite_guard(spark, tmp_root):
     n_full = enr2.count()
     assert n_full - n_base > spec.DOC_IVF_DRIFT_REFIT_FRAC * n_base
 
-    params = S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream")
+    with warnings.catch_warnings(record=True) as caught:  # drift refits are routine
+        warnings.simplefilter("always")
+        params = S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream")
+    assert not [w for w in caught if "doc-IVF" in str(w.message)]
     assert params == S.doc_ivf_params(n_full)  # refit sized to the grown corpus
     assert cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"] != cent_snap
     assert not any(
@@ -521,9 +571,11 @@ def test_doc_ivf_drift_refit_and_rewrite_guard(spark, tmp_root):
     man["partitions"][k0]["snapshot_id"] = "deadbeefdeadbeef"
     with open(man_path, "w") as f:
         json.dump(man, f)
-    assert (
-        S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream") == params
-    )
+    # ... and says so, naming the non-intact partition
+    with pytest.warns(UserWarning, match=f"recommitted or removed: {k0}$"):
+        assert (
+            S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream") == params
+        )
     assert cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"] != refit_snap
     covers = cat.get_property(S.DOC_IVF_CENT, "covers")
     assert covers[k0] == "deadbeefdeadbeef"

@@ -294,10 +294,17 @@ def test_entity_freq_auto_rebuild_on_lineage_change(spark, tmp_root):
 
 
 def test_ann_search_plan_prunes_cosine_and_buckets(spark):
-    """search_pro_ann's scale contract: the full-corpus enriched scan must
-    carry NO per-row cosine (Catalyst prunes sem_score once the ANN hits are
-    joined in), every vector dot product must sit on the bucket-pruned
-    doc_ivf_assign scans, and no partition-less window may appear."""
+    """The hit-source seam's scale contract, per strategy. The served (_ann)
+    plans: the full-corpus enriched scan carries NO per-row cosine, every
+    vector dot product sits on the bucket-pruned doc_ivf_assign scans, and
+    no partition-less window appears. The exact plans: the cosine UDF runs
+    in exactly ONE pass over the enriched scan (the exact hit source), never
+    a second time on the fusion side."""
+    import re
+    from functools import partial
+
+    from pyspark.sql import functions as F
+
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans import search as S
     from semantic_search_system_spark.plans.pipeline import ensure_enriched
@@ -308,48 +315,77 @@ def test_ann_search_plan_prunes_cosine_and_buckets(spark):
     cat = Catalog(ep.out_root(SF_SMALL))
     n_centroids, n_probe = S.ensure_doc_ivf(spark, cat, enr)
     assert n_probe < n_centroids  # the probe must actually prune buckets
-    # checkpoint=False keeps the candidate lineage in one inspectable plan
-    # (the shipped default materializes candidates once so the min-max stats
-    # diamond doesn't execute the corpus scan + probe twice — see below).
-    # Expected Python-UDF stages: pro_ann has ZERO (sem_score is pruned from
-    # the corpus scan, the probe cosine is the JVM HOF); enhanced_ann has
-    # exactly ONE — the rerank cosine applied ABOVE the k*5 TakeOrdered
-    for df, n_arrow in (
-        (S.pro_search_ann(spark, cat, enr, checkpoint=False), 0),
-        (S.advanced_search_ann(spark, cat, enr), 0),
-        (S.pro_search_enhanced_ann(spark, cat, enr, checkpoint=False), 1),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan
-        # bucket-pruned probe: only n_probe of the doc_ivf_assign bucket dirs
-        import re
+    terms, qvec = S._params(S.QUERY_TEXT)
+    exact = partial(S._exact_hits, enr)
+    served = partial(S._doc_ivf_hits, spark, cat, enr)
 
+    def arrow_nodes(plan):
+        return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+
+    # the un-materialized candidate plans of pro / pro_enhanced / kb (the
+    # shipped path checkpoints them before fusion — see below), and the
+    # advanced plans, which have no fusion. Expected ArrowEvalPython nodes:
+    # exact ONE (the hit source over the enriched scan), served ZERO (the
+    # probe cosine is the JVM HOF on the index, and the rerank cosine of
+    # pro_enhanced sits above the checkpoint, outside the candidate plan)
+    plans = [
+        (
+            f"{name}[{src_name}]",
+            S._candidates(enr, terms, S.FUZZINESS, src(qvec, semantic_k), carry),
+            n_arrow,
+        )
+        for name, semantic_k, carry in (
+            ("pro", 50, ()),
+            ("pro_enhanced", 50, ("content", "embedding")),
+            ("kb", 10, ()),
+        )
+        for src_name, src, n_arrow in (("exact", exact, 1), ("served", served, 0))
+    ] + [
+        ("advanced[exact]", S.advanced_search(enr), 1),
+        ("advanced[served]", S.advanced_search_ann(spark, cat, enr), 0),
+    ]
+    for name, df, n_arrow in plans:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, name
+        assert len(arrow_nodes(plan)) == n_arrow, (name, arrow_nodes(plan))
+        if n_arrow:
+            # the one UDF pass reads the enriched scan: no index in the plan
+            assert "enriched" in plan and "doc_ivf_assign" not in plan, name
+            continue
+        # bucket-pruned probe: only n_probe of the doc_ivf_assign bucket dirs
         buckets = set(re.findall(r"doc_ivf_assign/bucket=\d+", plan))
-        assert 0 < len(buckets) <= n_probe, buckets
+        assert 0 < len(buckets) <= n_probe, (name, buckets)
         # the cosine HOF (zip_with) appears only on lines that project the
         # probed index's _v column — never on the enriched-table corpus scan
         for line in plan.splitlines():
             if "zip_with" in line.lower():
                 assert "_v#" in line, (
-                    f"cosine computed outside the index probe: {line[:160]}"
+                    f"{name}: cosine computed outside the index probe: {line[:160]}"
                 )
-        # and no hidden vectorized-UDF cosine on the corpus scan either
-        assert plan.count("ArrowEvalPython") == n_arrow, plan.count("ArrowEvalPython")
-        if n_arrow == 1:  # enhanced_ann: expansion is SERVED from the
-            # materialized entity_freq_topk statistic — no explode+aggregate
-            # over the corpus per query (Generate = Spark's explode node)
-            assert "Generate" not in plan
-        assert df.count() == len(df.take(100)) <= 10
+    # pro_enhanced_ann's expansion is SERVED from the materialized
+    # entity_freq_topk statistic — no explode+aggregate over the corpus per
+    # query (Generate = Spark's explode node); its one Python UDF is the
+    # rerank cosine applied ABOVE the k*5 window
+    plan = S.pro_search_enhanced_ann(spark, cat, enr)._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan and len(arrow_nodes(plan)) == 1
     # the SHIPPED path materializes candidates once: the final plan reads the
     # checkpointed candidate rows (no parquet scan of the corpus above the
     # stats diamond — round 8: the diamond used to re-execute the whole
-    # lineage, two enriched scans + two index probes per query), and the
-    # checkpointed twin returns bit-identical rows
-    df_ck = S.pro_search_ann(spark, cat, enr)
-    plan_ck = df_ck._jdf.queryExecution().executedPlan().toString()
-    assert "enriched" not in plan_ck, "corpus rescan above the candidate ckpt"
-    assert "doc_ivf_assign" not in plan_ck, "probe re-executed above the ckpt"
-    assert df_ck.collect() == S.pro_search_ann(spark, cat, enr, checkpoint=False).collect()
+    # lineage, two enriched scans + two index probes per query), and it
+    # returns the rows of fusing the un-checkpointed candidates
+    for shipped, src in ((S.pro_search_ann(spark, cat, enr), served), (S.pro_search(enr), exact)):
+        plan_ck = shipped._jdf.queryExecution().executedPlan().toString()
+        assert "enriched" not in plan_ck, "corpus rescan above the candidate ckpt"
+        assert "doc_ivf_assign" not in plan_ck, "probe re-executed above the ckpt"
+        fused = (
+            S._fuse(S._candidates(enr, terms, S.FUZZINESS, src(qvec, 50)))
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(S.K)
+        )
+        rows = shipped.collect()
+        assert 0 < len(rows) <= S.K
+        assert rows == fused.collect()
 
 
 def test_entity_freq_per_source_tables_do_not_thrash(spark, tmp_root):
