@@ -19,7 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from semantic_search_system_spark import entrypoints as _ep  # noqa: E402
-from semantic_search_system_spark import spec as _spec  # noqa: E402
 from semantic_search_system_spark.fixtures.interleave import build_interleaved  # noqa: E402
 
 # The oracle runs at sf0.01: make sure the interleaved corpus parquet exists
@@ -30,11 +29,6 @@ for _sf in ("sf0.001", "sf0.01"):
         build_interleaved(_d)
 
 
-def _out_root(sf_dir: str) -> str:
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    return f"/root/repo/data/out/v{_spec.SPEC_VERSION}/{sf}"
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG construction (enrich → canonicalize → triples → graph)
     at sf0.001; returns the (subj, pred, obj) triple table. Checkpointed —
@@ -42,7 +36,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from semantic_search_system_spark.plans.pipeline import run_pipeline
 
     sf_dir = "/root/testdata/sf0.001"
-    cat = run_pipeline(spark, sf_dir, _out_root(sf_dir))
+    cat = run_pipeline(spark, sf_dir, _ep.out_root(sf_dir))
     return cat.read(spark, "triples").select("subj", "pred", "obj")
 
 
@@ -50,7 +44,7 @@ def _pipeline_query(table: str) -> Callable[[SparkSession, str], DataFrame]:
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from semantic_search_system_spark.plans.pipeline import run_pipeline
 
-        cat = run_pipeline(spark, sf_dir, _out_root(sf_dir))
+        cat = run_pipeline(spark, sf_dir, _ep.out_root(sf_dir))
         cols = {
             "triples": ["subj", "pred", "obj"],
             "nodes": ["node_id", "kind", "name", "url", "title"],
@@ -255,7 +249,7 @@ def _partition_metrics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    cat = run_pipeline(spark, sf_dir, _out_root(sf_dir))
+    cat = run_pipeline(spark, sf_dir, _ep.out_root(sf_dir))
     rows = []
     for table in (
         "enriched", "topic_map", "entity_map", "triples", "nodes", "edges", "failed_rows",

@@ -5,11 +5,13 @@ Usage: python scripts/check_oracle.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _CHECKOUT)
+sys.path.insert(0, os.path.join(_CHECKOUT, "tests"))
 
 from oracle_utils import compare, duck_con  # noqa: E402
 

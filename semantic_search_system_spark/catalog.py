@@ -30,6 +30,7 @@ import re
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
@@ -295,50 +296,74 @@ class Catalog:
 
     def commit_partitions_local(self, rows, schema, table: str, stage: str) -> dict:
         """Driver-side twin of ``commit_partitions`` for DRIVER-SIZED tables
-        (vocabulary / centroid / statistic scale — data that was computed on
-        the driver in the first place): identical manifest, tombstone and
+        (vocabulary / centroid / statistic scale, or a doc-IVF assignment
+        under the driver read's byte gate — data that was computed on the
+        driver in the first place): identical manifest, tombstone and
         idempotence semantics, but the parquet is written with pyarrow
-        in-process, so the commit costs zero Spark jobs (round 8 — the
-        1-task staging write was ~0.3s of every topic_map / IVF-centroid
-        commit inside the benched pipeline). ``rows``: sequence of tuples in
-        ``schema`` (a pyspark StructType INCLUDING ``BUCKET_COL``) field
-        order."""
+        in-process, one file per partition, so the commit costs zero Spark
+        jobs and needs no compaction. ``rows``: a ``pyarrow.Table`` with the
+        ``schema`` columns, or a sequence of tuples in ``schema`` (a pyspark
+        StructType INCLUDING ``BUCKET_COL``) field order. The recorded
+        schema is ``schema.json()`` — pass the StructType the Spark branch
+        of the same table writes, or the other branch's first commit raises
+        schema drift."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         t0 = time.time()
-        staging = self._fresh_staging(table)
-        names = [f.name for f in schema.fields]
-        bi = names.index(BUCKET_COL)
-        data_fields = [(i, f) for i, f in enumerate(schema.fields) if i != bi]
-        pa_schema = pa.schema(
-            [(f.name, _arrow_type(f.dataType)) for _, f in data_fields]
-        )
-        groups: dict = {}
-        for r in rows:
-            groups.setdefault(r[bi], []).append(r)
-        for b, rs in groups.items():
-            d = os.path.join(staging, f"{BUCKET_COL}={b}")
-            os.makedirs(d)
+        pa_schema = pa.schema([(f.name, _arrow_type(f.dataType)) for f in schema.fields])
+        if isinstance(rows, pa.Table):
+            tb = rows.select(pa_schema.names).cast(pa_schema)
+        else:
+            rows = list(rows)
             tb = pa.Table.from_arrays(
                 [
-                    pa.array([r[i] for r in rs], type=pa_schema.field(j).type)
-                    for j, (i, _) in enumerate(data_fields)
+                    pa.array([r[i] for r in rows], type=f.type)
+                    for i, f in enumerate(pa_schema)
                 ],
                 schema=pa_schema,
             )
+        staging = self._fresh_staging(table)
+        os.makedirs(staging)
+        tb = tb.sort_by(BUCKET_COL)  # stable: one contiguous run per partition
+        keys = np.asarray(tb[BUCKET_COL].to_pylist(), dtype=object)
+        cuts = (np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()
+        starts = [0, *cuts, len(keys)] if len(keys) else []
+        data = tb.drop_columns([BUCKET_COL])
+        rows_by_bucket = {str(keys[lo]): hi - lo for lo, hi in zip(starts, starts[1:])}
+
+        def _write(lo: int, hi: int) -> None:
+            d = os.path.join(staging, f"{BUCKET_COL}={keys[lo]}")
+            os.makedirs(d)
             pq.write_table(
-                tb,
+                data.slice(lo, hi - lo),
                 os.path.join(d, "part-00000-local.snappy.parquet"),
                 compression="snappy",
             )
-        if not groups:
-            os.makedirs(staging, exist_ok=True)
-        return self._publish_staging(staging, table, stage, schema.json(), t0)
+
+        # per-partition files are independent; pyarrow releases the GIL
+        with ThreadPoolExecutor(max_workers=min(8, max(1, len(rows_by_bucket)))) as pool:
+            list(pool.map(_write, starts[:-1], starts[1:]))
+        return self._publish_staging(
+            staging, table, stage, schema.json(), t0, rows_by_bucket
+        )
 
     def _publish_staging(
-        self, staging: str, table: str, stage: str, schema_json: str, t0: float
+        self,
+        staging: str,
+        table: str,
+        stage: str,
+        schema_json: str,
+        t0: float,
+        local_rows: dict[str, int] | None = None,
     ) -> dict:
+        """Publish the staged ``bucket=`` dirs. ``local_rows``: the per-
+        partition row counts of a driver-side write (one file per dir —
+        nothing to compact or count); None for a Spark write, whose dirs are
+        compacted and counted here. Each snapshot records its ``writer``
+        ('local' | 'spark'), so which branch produced a table is visible
+        after the fact."""
         table_dir = self.path(table)
         man = self.manifest(table)
         # record the read-back schema ONCE (zero-partition tables need it); a
@@ -388,13 +413,13 @@ class Catalog:
         # compact-on-commit + row count, parallel across partition dirs (both
         # are per-dir local I/O; sequential driver loops were the graph
         # stage's measured commit floor)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _finish(dst: str) -> int:
             compact_small_dir(dst)
             return pads.dataset(dst, format="parquet").count_rows()
 
-        if committed:
+        if local_rows is not None:
+            rows_by_bucket = local_rows
+        elif committed:
             with ThreadPoolExecutor(max_workers=min(8, len(committed))) as pool:
                 rows_by_bucket = dict(
                     zip(committed, pool.map(_finish, committed.values()))
@@ -421,6 +446,7 @@ class Catalog:
                 {
                     "snapshot_id": snapshot_id,
                     "stage": stage,
+                    "writer": "spark" if local_rows is None else "local",
                     "partitions": sorted(committed),
                     "total_rows": sum(e["rows_written"] for e in committed.values()),
                 }

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import spec
+from .fixtures import interleave
 from .fixtures.interleave import interleaved_path
 from .functions.text import clean_text_col
 from .functions.vectors import dot, l2_norm
@@ -34,14 +35,17 @@ from .operators.extraction import entities_native, topics_native
 # sf the driver's oracle runs at — repo-generated parquet paths in oracle SQL
 # are pinned to this scale.
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
-ORACLE_INTERLEAVED = "/root/repo/data/interleaved/sf0.01/documents_interleaved.parquet"
+ORACLE_INTERLEAVED = os.path.join(
+    interleave.REPO_DATA, "interleaved", "sf0.01", "documents_interleaved.parquet"
+)
 
 
 def out_root(sf_dir: str) -> str:
-    """Catalog root for pipeline outputs of one sf, versioned by the spec so a
-    spec change invalidates cached tables."""
+    """Catalog root for pipeline outputs of one sf under the data dir
+    (``SSS_SPARK_DATA_DIR``, see fixtures.interleave.REPO_DATA), versioned by
+    the spec so a spec change invalidates cached tables."""
     sf = os.path.basename(os.path.normpath(sf_dir))
-    return f"/root/repo/data/out/v{spec.SPEC_VERSION}/{sf}"
+    return os.path.join(interleave.REPO_DATA, "out", f"v{spec.SPEC_VERSION}", sf)
 
 
 ORACLE_ENRICHED_GLOB = f"{out_root(ORACLE_SF_DIR)}/enriched/bucket=*/*.parquet"

@@ -16,11 +16,21 @@ index, so:
   A probe reads ONLY the ``n_probe`` matching ``bucket=<centroid>`` partition
   directories (true partition pruning) — the index is built once and reused
   across queries instead of being recomputed per query (round-1 'weak').
+  ``build_ivf_index`` and ``append_ivf_assignments`` take either a DataFrame
+  (the distributed branch: Arrow-UDF assignment + ``commit_partitions``) or
+  driver-held ``(keys int64[n], vecs float64[n, d])`` (the driver branch:
+  the same fit and assignment in numpy + ``commit_partitions_local``, zero
+  Spark jobs) — plans/search.ensure_doc_ivf hands over driver-held vectors
+  when the source passes the guarded driver read (a bare parquet relation
+  under ``plans.pipeline.DRIVER_VOCAB_SCAN_BYTES``). One numpy kernel,
+  ``nearest_centroid``, does every assignment, so both branches write the
+  same rows.
 - ``ivf_topk``: the index-free inline form (ad-hoc / tests).
 """
 
 from __future__ import annotations
 
+import hashlib
 import threading
 
 import numpy as np
@@ -61,27 +71,39 @@ def reset_probe_stats() -> None:
         _PROBE_STATS.update(queries=0, escalations=0)
 
 
-def _nearest_centroid_udf(cent_rows: list[tuple[int, list[float]]]):
-    """Arrow-vectorized nearest-centroid assignment: one matmul per batch
-    against the broadcast centroid matrix — embarrassingly parallel, zero
-    shuffle, no per-(vector, centroid) row blowup (the cross-join + HOF-cosine
-    form was interpreted per element and 8x the rows). Ties after 6-dp
-    rounding break to the LOWEST centroid id (matching the SQL oracle's
-    min(-csim, centroid_id)): centroids are sorted by id and np.argmax takes
-    the first maximum."""
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    n = np.linalg.norm(M, axis=1)
+    return M / np.where(n == 0, 1.0, n)[:, None]
+
+
+def nearest_centroid(M: np.ndarray, cids: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """The nearest-centroid kernel behind every assignment (the Arrow UDF,
+    each driver Lloyd iteration, the driver-held index build/append): the
+    centroid id (``cids``, ascending, rows of ``C``) of the highest cosine
+    for each row of ``M``, cosines rounded half-away to 6 dp so the choice
+    is engine-agnostic; ties break to the LOWEST centroid id (np.argmax
+    takes the first maximum — the SQL oracle's min(-csim, centroid_id))."""
+    sims = _round_half_away(_unit_rows(M) @ _unit_rows(C).T, 6)
+    return cids[np.argmax(sims, axis=1)]
+
+
+def _centroid_arrays(cent_rows) -> tuple[np.ndarray, np.ndarray]:
+    """[(centroid_id, cvec)] → (ids ascending, matrix) for nearest_centroid."""
     cent_rows = sorted(cent_rows)
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    C = np.stack([np.asarray(v, dtype=np.float64) for _, v in cent_rows])
-    cn = np.linalg.norm(C, axis=1)
-    Cn = C / np.where(cn == 0, 1.0, cn)[:, None]
+    return cids, np.array([v for _, v in cent_rows], dtype=np.float64)
+
+
+def _nearest_centroid_udf(cids: np.ndarray, C: np.ndarray):
+    """Arrow-vectorized nearest-centroid assignment: one kernel call per
+    batch against the broadcast centroid matrix — embarrassingly parallel,
+    zero shuffle, no per-(vector, centroid) row blowup (the cross-join +
+    HOF-cosine form was interpreted per element and 8x the rows)."""
 
     @F.pandas_udf("long")
     def assign(vs: pd.Series) -> pd.Series:
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        n = np.linalg.norm(M, axis=1)
-        Mn = M / np.where(n == 0, 1.0, n)[:, None]
-        sims = _round_half_away(Mn @ Cn.T, 6)
-        return pd.Series(cids[np.argmax(sims, axis=1)])
+        return pd.Series(nearest_centroid(M, cids, C))
 
     return assign
 
@@ -106,10 +128,10 @@ def brute_force_topk(
     )
 
 
-def _assignments(d: DataFrame, cent_rows: list[tuple[int, list[float]]], id_col: str) -> DataFrame:
+def _assignments(d: DataFrame, cids: np.ndarray, C: np.ndarray, id_col: str) -> DataFrame:
     """(id, _v) + driver-held centroids → (id, centroid_id, _v); a single
     narrow map (see _nearest_centroid_udf), no join, no shuffle."""
-    assign = _nearest_centroid_udf(cent_rows)
+    assign = _nearest_centroid_udf(cids, C)
     return d.select(id_col, assign(F.col("_v")).alias("centroid_id"), "_v")
 
 
@@ -120,30 +142,30 @@ def fit_sample_pred(id_col: str, sample_hex: str):
     return F.substring(F.md5(F.col(id_col).cast("string")), 1, 2) < sample_hex
 
 
+def _fit_sample_mask(keys: np.ndarray, sample_hex: str) -> np.ndarray:
+    """``fit_sample_pred`` over driver-held integer ids."""
+    return np.array(
+        [hashlib.md5(str(k).encode()).hexdigest()[:2] < sample_hex for k in keys.tolist()],
+        dtype=bool,
+    )
+
+
 def _kmeans_driver(
-    rows, n_centroids: int, n_iter: int, id_col: str
+    ids: np.ndarray, M: np.ndarray, n_centroids: int, n_iter: int
 ) -> list[tuple[int, list[float]]]:
     """Driver-side Lloyd over a (sample-bounded) fit set — bit-for-bit the
     same fixpoint as the distributed loop and the DuckDB oracle: first-m-by-id
-    seeding, 6-dp half-away-rounded cosine assignment with lowest-centroid-id
-    tie-break, 6-dp half-away-rounded per-component means, empty clusters
-    dropped. One numpy matmul per iteration instead of a Spark job."""
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    seeding, ``nearest_centroid`` assignment, 6-dp half-away-rounded
+    per-component means, empty clusters dropped. One numpy matmul per
+    iteration instead of a Spark job."""
     order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    M = np.stack([np.asarray(rows[i]["_v"], dtype=np.float64) for i in order])
-    nrm = np.linalg.norm(M, axis=1)
-    Mn = M / np.where(nrm == 0, 1.0, nrm)[:, None]
+    ids, M = ids[order], M[order]
     cents: list[tuple[int, np.ndarray]] = [
         (int(ids[i]), M[i]) for i in range(min(n_centroids, len(ids)))
     ]
     for _ in range(n_iter):
         cids = np.array([c for c, _ in cents], dtype=np.int64)  # ascending
-        C = np.stack([v for _, v in cents])
-        cn = np.linalg.norm(C, axis=1)
-        Cn = C / np.where(cn == 0, 1.0, cn)[:, None]
-        sims = _round_half_away(Mn @ Cn.T, 6)
-        lab = cids[np.argmax(sims, axis=1)]  # first max → lowest cid
+        lab = nearest_centroid(M, cids, np.stack([v for _, v in cents]))
         cents = [
             (int(cid), _round_half_away(M[lab == cid].mean(axis=0), 6))
             for cid in np.unique(lab)  # sorted; empty clusters drop out
@@ -152,7 +174,7 @@ def _kmeans_driver(
 
 
 def kmeans_centroids(
-    vectors: DataFrame,
+    vectors: DataFrame | tuple[np.ndarray, np.ndarray],
     n_centroids: int = 8,
     n_iter: int = 2,
     id_col: str = "vec_id",
@@ -184,32 +206,46 @@ def kmeans_centroids(
     a properly-sampled fit at any corpus scale), the Lloyd loop runs ON THE
     DRIVER over the collected sample (_kmeans_driver): identical fixpoint, one
     collect instead of 2×n_iter Spark jobs. The distributed loop below remains
-    the fallback for an unsampled full-corpus fit."""
-    d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-    if fit_sample_hex is not None:
-        d = d.where(fit_sample_pred(id_col, fit_sample_hex))
-    # ONE limit-collect decides the path AND feeds the driver fit (round 8):
-    # the previous eager-checkpoint → count → collect sequence ran three
-    # Spark jobs before any k-means work, and the checkpoint materialized the
-    # fit vectors only to be collected right back off it on the common
-    # (driver-sized) path. The distributed fallback below still checkpoints —
-    # it is the only consumer that re-reads the fit set per iteration.
-    head = d.limit(max_driver_fit + 1).collect()
-    if not head:
+    the fallback for an unsampled full-corpus fit. Driver-held ``(keys,
+    vecs)`` (see build_ivf_index) are sampled and fit on the driver, zero
+    Spark jobs."""
+    if isinstance(vectors, tuple):  # driver-held (keys, vecs): fit in place
+        keys, M = vectors
+        if fit_sample_hex is not None:
+            keep = _fit_sample_mask(keys, fit_sample_hex)
+            keys, M = keys[keep], M[keep]
+    else:
+        d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
+        if fit_sample_hex is not None:
+            d = d.where(fit_sample_pred(id_col, fit_sample_hex))
+        # ONE limit-collect decides the path AND feeds the driver fit (round
+        # 8): the previous eager-checkpoint → count → collect sequence ran
+        # three Spark jobs before any k-means work
+        head = d.limit(max_driver_fit + 1).collect()
+        if len(head) > max_driver_fit:
+            return _kmeans_spark(d, n_centroids, n_iter, id_col)
+        keys = np.array([r[id_col] for r in head], dtype=np.int64)
+        M = np.array([r["_v"] for r in head], dtype=np.float64)
+    if not len(keys):
         raise ValueError(
             "empty k-means fit set — no vectors matched "
             f"fit_sample_hex={fit_sample_hex!r} (or the vectors table is empty)"
         )
-    if len(head) <= max_driver_fit:
-        return _kmeans_driver(head, n_centroids, n_iter, id_col)
-    # beyond-driver fit: materialize once for the per-iteration re-reads
+    return _kmeans_driver(keys, M, n_centroids, n_iter)
+
+
+def _kmeans_spark(
+    d: DataFrame, n_centroids: int, n_iter: int, id_col: str
+) -> list[tuple[int, list[float]]]:
+    """The distributed Lloyd loop over a beyond-driver (id, _v) fit set."""
+    # materialize once for the per-iteration re-reads
     d = d.localCheckpoint(eager=True)
     cent_rows = [
         (int(r[id_col]), list(r["_v"]))
         for r in d.orderBy(F.asc(id_col)).limit(n_centroids).collect()
     ]
     for _ in range(n_iter):
-        assigned = _assignments(d, cent_rows, id_col)
+        assigned = _assignments(d, *_centroid_arrays(cent_rows), id_col)
         upd = (
             assigned.select("centroid_id", F.posexplode("_v").alias("pos", "x"))
             .groupBy("centroid_id", "pos")
@@ -239,9 +275,66 @@ def _input_fingerprint(vectors: DataFrame, id_col: str, vec_col: str) -> str:
     return f"{n}:{(x or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
+def _commit_assignments(
+    spark: SparkSession, cat, vectors, cids: np.ndarray, C: np.ndarray, prefix: str,
+    id_col: str, vec_col: str, assign_table: str, stage: str,
+) -> None:
+    """Assign ``vectors`` to the centroids ``(cids, C)`` and commit
+    (id, centroid_id, _v) under STRING partition keys ``<prefix><cid>``: the
+    base build owns "<cid>", frozen-centroid appends add "a<tag>_<cid>"
+    beside them under the same recorded schema. A DataFrame goes through the
+    Arrow UDF and ``commit_partitions``; driver-held (keys, vecs) through
+    the same kernel and ``commit_partitions_local`` under the schema the
+    Spark branch records — the two branches write identical rows, and
+    either may append to an index the other built. The driver feeds the
+    kernel the row batches the UDF would get
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``), so its similarity
+    matrix stays batch-sized at the byte gate."""
+    from pyspark.sql import types as T
+
+    if not isinstance(vectors, tuple):
+        d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
+        assigned = _assignments(d, cids, C, id_col)
+        cat.commit_partitions(
+            assigned.withColumn(
+                "bucket", F.concat(F.lit(prefix), F.col("centroid_id").cast("string"))
+            ),
+            assign_table,
+            stage=stage,
+        )
+        return
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, M = vectors
+    n, dim = M.shape
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    batch = batch if batch > 0 else max(n, 1)  # zero or negative: no limit
+    lab = np.zeros(n, dtype=np.int64)
+    for lo in range(0, n, batch):
+        lab[lo : lo + batch] = nearest_centroid(M[lo : lo + batch], cids, C)
+    vecs = pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int32) * dim), pa.array(M.reshape(-1))
+    )
+    bucket = pc.binary_join_element_wise(prefix, pc.cast(pa.array(lab), pa.string()), "")
+    cat.commit_partitions_local(
+        pa.table({id_col: keys, "centroid_id": lab, "_v": vecs, "bucket": bucket}),
+        T.StructType(
+            [
+                T.StructField(id_col, T.LongType()),
+                T.StructField("centroid_id", T.LongType()),
+                T.StructField("_v", T.ArrayType(T.DoubleType())),
+                T.StructField("bucket", T.StringType()),
+            ]
+        ),
+        assign_table,
+        stage=stage,
+    )
+
+
 def build_ivf_index(
     spark: SparkSession,
-    vectors: DataFrame,
+    vectors: DataFrame | tuple[np.ndarray, np.ndarray],
     cat,
     n_centroids: int = 8,
     n_iter: int = 2,
@@ -261,11 +354,19 @@ def build_ivf_index(
     existing index built with different parameters OR a different input
     raises instead of being silently reused.
 
+    ``vectors``: a DataFrame (distributed branch) or driver-held ``(keys
+    int64[n], vecs float64[n, d])`` (driver branch: fit, assignment and
+    both commits on the driver, zero Spark jobs). The stage string, the
+    guards and the resume read-back are the same for both.
+
     ``lineage``: an input-identity string from the SOURCE TABLE'S OWN
     manifest (snapshot ids — the Iceberg way). When given, the every-call
     staleness check is a string compare; when None, the identity falls back
     to ``_input_fingerprint``, which SCANS the input — fine for one-off
-    builds over raw files, wrong to pay per serving-path query at scale."""
+    builds over raw files, wrong to pay per serving-path query at scale.
+    Driver-held vectors require a lineage."""
+    if lineage is None and isinstance(vectors, tuple):
+        raise ValueError("build_ivf_index: driver-held vectors need a source lineage")
     stage = (
         f"ivf_build k={n_centroids} iter={n_iter} "
         f"sample={fit_sample_hex or 'full'} "
@@ -301,10 +402,7 @@ def build_ivf_index(
         if cat.exists(assign_table):
             return
         tb = cat.read_arrow(cent_table)
-        cent_rows = sorted(
-            (int(c), [float(x) for x in v])
-            for c, v in zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist())
-        )
+        cent_rows = list(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
     else:
         cent_rows = kmeans_centroids(
             vectors, n_centroids, n_iter, id_col, vec_col, fit_sample_hex
@@ -327,22 +425,16 @@ def build_ivf_index(
             stage=stage,
         )
     if not cat.exists(assign_table):
-        d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-        assigned = _assignments(d, cent_rows, id_col)
-        cat.commit_partitions(
-            # STRING partition keys: the base build owns "<cid>"; frozen-
-            # centroid appends (append_ivf_assignments) later add
-            # "a<tag>_<cid>" keys beside them under the same recorded schema
-            assigned.withColumn("bucket", F.col("centroid_id").cast("string")),
-            assign_table,
-            stage=stage,
+        _commit_assignments(
+            spark, cat, vectors, *_centroid_arrays(cent_rows), "",
+            id_col, vec_col, assign_table, stage,
         )
 
 
 def append_ivf_assignments(
     spark: SparkSession,
     cat,
-    vectors: DataFrame,
+    vectors: DataFrame | tuple[np.ndarray, np.ndarray],
     append_tag: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -360,17 +452,12 @@ def append_ivf_assignments(
     triggers a refit upstream — plans/search.ensure_doc_ivf). The tag must be
     deterministic in the appended input (e.g. a hash of the appended
     partition keys) so a replayed append hits the same partition keys and is
-    skipped by the manifest — the same idempotence as every other commit."""
+    skipped by the manifest — the same idempotence as every other commit.
+    ``vectors``: a DataFrame or driver-held ``(keys, vecs)``, as in
+    build_ivf_index."""
     cids, C = _centroids_cached(cat, cent_table)
-    cent_rows = [(int(c), [float(x) for x in v]) for c, v in zip(cids, C)]
-    d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-    assigned = _assignments(d, cent_rows, id_col)
-    cat.commit_partitions(
-        assigned.withColumn(
-            "bucket", F.concat(F.lit(f"a{append_tag}_"), F.col("centroid_id").cast("string"))
-        ),
-        assign_table,
-        stage=stage,
+    _commit_assignments(
+        spark, cat, vectors, cids, C, f"a{append_tag}_", id_col, vec_col, assign_table, stage
     )
 
 
@@ -397,8 +484,8 @@ def _centroids_cached(cat, cent_table: str) -> tuple[np.ndarray, np.ndarray]:
             f"{tb.num_rows} centroids is beyond the driver-side ranking bound; "
             "rank centroids distributively (orderBy(qsim).limit(n_probe)) instead"
         )
-    cids = np.asarray(tb["centroid_id"].to_pylist(), dtype=np.int64)
-    C = np.stack([np.asarray(v, dtype=np.float64) for v in tb["cvec"].to_pylist()])
+    # ascending ids, as nearest_centroid's tie-break needs
+    cids, C = _centroid_arrays(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
     _CENTROID_CACHE[key] = (ident, cids, C)
     return cids, C
 
@@ -495,7 +582,7 @@ def ivf_topk(
     cent_rows = kmeans_centroids(vectors, n_centroids, n_iter, id_col, vec_col, fit_sample_hex)
     cent = local_df(vectors.sparkSession, cent_rows, "centroid_id long, cvec array<double>")
     d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-    assignments = _assignments(d, cent_rows, id_col)
+    assignments = _assignments(d, *_centroid_arrays(cent_rows), id_col)
     probed = (
         cent.select("centroid_id", F.round(cosine_sim(F.col("cvec"), qv), 6).alias("qsim"))
         .orderBy(F.desc("qsim"), F.asc("centroid_id"))

@@ -147,33 +147,30 @@ def topic_map_driver(phrase_list: list[str]) -> pd.DataFrame:
 
 
 DRIVER_VOCAB_LIMIT = 100_000
-# byte gate for the driver-side vocabulary scan below: a column-pruned local
-# pyarrow read of `topics` / `entities` is ~30x faster than a 3-stage Spark
-# explode+distinct at benchmark scale, but it reads on ONE machine — so it is
-# allowed only when the MEASURED source bytes are driver-trivial; past the
-# gate the distributed distinct (whose cost is what a real cluster would pay)
-# takes over
+# byte gate for the driver-side reads below: a column-pruned local pyarrow
+# read is ~30x faster than a 3-stage Spark explode+distinct at benchmark
+# scale (and removes the per-job overhead of a doc-IVF append or refit), but
+# it reads on ONE machine — so it is allowed only when the MEASURED source
+# bytes are driver-trivial; past the gate the distributed plan (whose cost
+# is what a real cluster would pay) takes over
 DRIVER_VOCAB_SCAN_BYTES = int(
     os.environ.get("SPARK_GRAFT_DRIVER_VOCAB_SCAN_BYTES", str(256 * 1024 * 1024))
 )
 
 
-def _vocab_texts_driver(enriched: DataFrame, column: str):
-    """The lower/trimmed, non-null, non-empty ``text`` fields of the
-    struct-array ``column`` (``topics`` or ``entities``) as one pyarrow
-    array, via a column-pruned DRIVER read (zero Spark jobs) — only when
-    ``enriched`` is a BARE parquet relation (no filters/projections that a
-    local re-read would silently ignore) whose files all exist and total
-    under ``DRIVER_VOCAB_SCAN_BYTES``. Returns None whenever any guard fails
-    → the caller runs its distributed plan. Semantics match the Spark
-    branches exactly: explode → lower → trim(' ') → drop null/empty.
-    pyarrow ``utf8_lower`` differs from Spark ``lower`` only on non-ASCII
-    ('İ', final 'Σ'), which the enrichment cleaner strips first."""
+def driver_read(df: DataFrame, columns: list[str]):
+    """``columns`` of ``df`` as one pyarrow Table via a column-pruned DRIVER
+    read (zero Spark jobs) — only when ``df`` is a BARE parquet relation (no
+    filters/projections that a local re-read would silently ignore) whose
+    files all exist and total under ``DRIVER_VOCAB_SCAN_BYTES``. Returns
+    None whenever any guard fails → the caller runs its distributed plan.
+    The one guarded reader behind topic_map, entity_map and the doc-IVF
+    build/append (plans.search.ensure_doc_ivf)."""
     try:
-        plan = enriched._jdf.queryExecution().analyzed()
+        plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
             return None
-        files = enriched.inputFiles()
+        files = df.inputFiles()
     except Exception:  # noqa: BLE001 — any introspection failure → fallback
         return None
     if not files:
@@ -183,10 +180,23 @@ def _vocab_texts_driver(enriched: DataFrame, column: str):
         return None
     if sum(os.path.getsize(p) for p in paths) > DRIVER_VOCAB_SCAN_BYTES:
         return None
-    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    tb = pads.dataset(paths, format="parquet").to_table(columns=[column])
+    return pads.dataset(paths, format="parquet").to_table(columns=columns)
+
+
+def _vocab_texts_driver(enriched: DataFrame, column: str):
+    """The lower/trimmed, non-null, non-empty ``text`` fields of the
+    struct-array ``column`` (``topics`` or ``entities``) as one pyarrow
+    array, read by ``driver_read`` (None past its guards). Semantics match
+    the Spark branches exactly: explode → lower → trim(' ') → drop
+    null/empty. pyarrow ``utf8_lower`` differs from Spark ``lower`` only on
+    non-ASCII ('İ', final 'Σ'), which the enrichment cleaner strips first."""
+    tb = driver_read(enriched, [column])
+    if tb is None:
+        return None
+    import pyarrow.compute as pc
+
     texts = pc.struct_field(pc.list_flatten(tb[column].combine_chunks()), "text")
     texts = pc.utf8_trim(pc.utf8_lower(texts.drop_null()), characters=" ")
     return texts.filter(pc.not_equal(texts, ""))

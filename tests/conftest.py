@@ -22,3 +22,12 @@ def tmp_root():
     d = tempfile.mkdtemp(prefix="sss_cat_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def with_job_count(spark, fn):
+    """(fn(), number of Spark jobs fn submitted) — the delta of the
+    statusTracker's job ids."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(st.getJobIdsForGroup(None)) - before)

@@ -11,7 +11,7 @@ from semantic_search_system_spark.operators.dedup import (
 from semantic_search_system_spark import spec
 from semantic_search_system_spark.operators.similarity import brute_force_topk, ivf_topk
 
-from conftest import SF_SMALL
+from conftest import SF_MED, SF_SMALL, with_job_count
 
 
 def _dup_docs(spark):
@@ -706,6 +706,289 @@ def test_doc_ivf_orphan_assign_swept_on_rebuild(spark, tmp_root):
         if m["stage"].startswith("ivf_build")
     }
     assert assign_build_stages == cent_stages
+
+
+def _ivf_index(spark, cat):
+    """(rows, recorded schema, per-snapshot writers) of both doc-IVF tables."""
+    from semantic_search_system_spark.plans import search as S
+
+    return {
+        t: (
+            sorted(map(tuple, cat.read(spark, t).collect())),
+            cat.manifest(t)["schema"],
+            [s["writer"] for s in cat.manifest(t)["snapshots"]],
+        )
+        for t in (S.DOC_IVF_CENT, S.DOC_IVF_ASSIGN)
+    }
+
+
+def _ensure_on(spark, cat, source_table, monkeypatch, driver, enriched=None):
+    """(params, Spark jobs) of one ensure_doc_ivf call; ``driver=False``
+    forces the distributed branch through the driver read's byte gate."""
+    from semantic_search_system_spark.plans import pipeline as P
+    from semantic_search_system_spark.plans import search as S
+
+    enr = cat.read(spark, source_table) if enriched is None else enriched
+    with monkeypatch.context() as m:
+        if not driver:
+            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+        return with_job_count(
+            spark, lambda: S.ensure_doc_ivf(spark, cat, enr, source_table=source_table)
+        )
+
+
+@pytest.fixture(scope="module")
+def sf_med_enriched(spark, tmp_path_factory):
+    """Catalog root holding a freshly built sf0.01 ``enriched`` table."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans.pipeline import build_enriched
+
+    root = str(tmp_path_factory.mktemp("sf_med"))
+    build_enriched(spark, SF_MED, Catalog(root))
+    return root
+
+
+def _enriched_copy(src_root, root):
+    """A Catalog at ``root`` holding a copy of the ``enriched`` table at
+    ``src_root``."""
+    import shutil
+
+    from semantic_search_system_spark.catalog import Catalog
+
+    cat = Catalog(root)
+    shutil.copytree(Catalog(src_root).path("enriched"), cat.path("enriched"))
+    return cat
+
+
+def _keep_partitions(cat, table, parts):
+    """Rewrite ``table``'s manifest to list only the partitions ``parts`` —
+    a source that grows by whole partitions between calls (the files stay
+    in place)."""
+    import json
+    import os
+
+    path = os.path.join(cat.path(table), "_manifest.json")
+    with open(path) as f:
+        man = json.load(f)
+    man["partitions"] = parts
+    with open(path, "w") as f:
+        json.dump(man, f)
+
+
+def test_doc_ivf_driver_matches_distributed_on_sf_med(
+    spark, tmp_root, monkeypatch, sf_med_enriched
+):
+    """On the sf0.01 enriched table grown by whole partitions — a build over
+    4 buckets, an append of a 5th (under the drift bound), a drift refit
+    over all 8 — the driver branch (zero Spark jobs, snapshots
+    ``writer: local``) writes the same doc_ivf_centroids and doc_ivf_assign
+    rows and schemas as the distributed branch (``DRIVER_VOCAB_SCAN_BYTES =
+    0``)."""
+    import os
+
+    from semantic_search_system_spark.plans import search as S
+
+    cats = {
+        d: _enriched_copy(sf_med_enriched, os.path.join(tmp_root, str(d))) for d in (True, False)
+    }
+    full = cats[True].manifest("enriched")["partitions"]
+    for n_keys, branch in ((4, "build"), (5, "append"), (8, "refit")):
+        parts = {k: full[k] for k in sorted(full)[:n_keys]}
+        for driver, cat in cats.items():
+            _keep_partitions(cat, "enriched", parts)
+            params, jobs = _ensure_on(spark, cat, "enriched", monkeypatch, driver)
+            assert (jobs == 0) == driver, (branch, driver, jobs)
+        n_docs = sum(e["rows_written"] for e in parts.values())
+        got = {d: _ivf_index(spark, cat) for d, cat in cats.items()}
+        for t in (S.DOC_IVF_CENT, S.DOC_IVF_ASSIGN):
+            assert got[True][t][:2] == got[False][t][:2], (branch, t)
+        assign = got[True][S.DOC_IVF_ASSIGN]
+        assert set(assign[2]) == {"local"}
+        assert set(got[False][S.DOC_IVF_ASSIGN][2]) == {"spark"}
+        assert len(assign[0]) == n_docs
+        appends = [r for r in assign[0] if r[-1].startswith("a")]
+        assert bool(appends) == (branch == "append"), branch
+        if branch != "append":
+            assert params == S.doc_ivf_params(n_docs)
+
+
+def test_doc_ivf_branches_mix_on_streamed_epochs(spark, tmp_root, monkeypatch):
+    """On a streamed epoch split, the driver and distributed branches agree
+    for the build, a frozen-centroid append and a drift refit, and either
+    branch appends to an index the other built — a distributed base with a
+    driver append and a driver base with a distributed append record the
+    same schema (no 'schema drift'), write the same rows and serve the same
+    probe as single-branch indexes; the snapshots' ``writer`` shows which
+    branch wrote each commit."""
+    import os
+    import shutil
+
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans import search as S
+    from semantic_search_system_spark.streaming.incremental import enrich_stream
+
+    src, later, held = _split_corpus_files(spark, tmp_root, 4)
+    out, ckpt = tmp_root + "/out", tmp_root + "/ckpt"
+    stream = Catalog(out)
+    # per catalog: the branch (True = driver) of the build, the append, the refit
+    plans = {
+        "driver": (True, True, True),
+        "spark": (False, False, False),
+        "spark_then_driver": (False, True),
+        "driver_then_spark": (True, False),
+    }
+    cats = {name: Catalog(os.path.join(tmp_root, name)) for name in plans}
+    _, qvec = S._params(S.QUERY_TEXT)
+    for step, moved in enumerate((held[:1], held[1:])):
+        enrich_stream(spark, src, out, ckpt).awaitTermination(180)
+        for name, cat in cats.items():
+            if step >= len(plans[name]):
+                continue
+            shutil.rmtree(cat.path("enriched_stream"), ignore_errors=True)
+            shutil.copytree(stream.path("enriched_stream"), cat.path("enriched_stream"))
+            _, jobs = _ensure_on(spark, cat, "enriched_stream", monkeypatch, plans[name][step])
+            assert (jobs == 0) == plans[name][step], (name, step, jobs)
+        for f in moved:
+            shutil.move(os.path.join(later, f), os.path.join(src, f))
+    # after the build and the append: all four indexes agree
+    got = {name: _ivf_index(spark, cat) for name, cat in cats.items()}
+    for name in plans:
+        for t in (S.DOC_IVF_CENT, S.DOC_IVF_ASSIGN):
+            assert got[name][t][:2] == got["driver"][t][:2], (name, t)
+    assert any(r[-1].startswith("a") for r in got["driver"][S.DOC_IVF_ASSIGN][0])
+    writers = {name: got[name][S.DOC_IVF_ASSIGN][2] for name in plans}
+    assert writers == {
+        "driver": ["local", "local"],
+        "spark": ["spark", "spark"],
+        "spark_then_driver": ["spark", "local"],
+        "driver_then_spark": ["local", "spark"],
+    }
+    probes = {
+        name: sorted(
+            map(tuple, S._doc_ivf_hits(
+                spark, cat, cat.read(spark, "enriched_stream"), qvec, 20,
+                source_table="enriched_stream",
+            ).collect())
+        )
+        for name, cat in cats.items()
+    }
+    assert all(p == probes["driver"] for p in probes.values()) and probes["driver"]
+
+    # the rest lands: drift refit on both single-branch indexes
+    enrich_stream(spark, src, out, ckpt).awaitTermination(180)
+    n_full = stream.read(spark, "enriched_stream").count()
+    for name in ("driver", "spark"):
+        cat = cats[name]
+        shutil.rmtree(cat.path("enriched_stream"))
+        shutil.copytree(stream.path("enriched_stream"), cat.path("enriched_stream"))
+        params, jobs = _ensure_on(spark, cat, "enriched_stream", monkeypatch, plans[name][2])
+        assert (jobs == 0) == plans[name][2] and params == S.doc_ivf_params(n_full)
+    refit = {name: _ivf_index(spark, cats[name]) for name in ("driver", "spark")}
+    for t in (S.DOC_IVF_CENT, S.DOC_IVF_ASSIGN):
+        assert refit["driver"][t][:2] == refit["spark"][t][:2], t
+    assert len(refit["driver"][S.DOC_IVF_ASSIGN][0]) == n_full
+    assert refit["driver"][S.DOC_IVF_ASSIGN][2] == ["local"]
+    assert refit["spark"][S.DOC_IVF_ASSIGN][2] == ["spark"]
+
+
+def test_doc_ivf_driver_bounds(spark, tmp_root, monkeypatch, sf_med_enriched):
+    """The driver branch runs up to the byte gate inclusive; one byte under
+    the source's size, or for a frame that is not a bare relation, the
+    distributed branch runs — and writes the same index."""
+    import os
+
+    from semantic_search_system_spark.plans import pipeline as P
+    from semantic_search_system_spark.plans import search as S
+
+    def build(tag, gate=None, frame=lambda df: df):
+        cat = _enriched_copy(sf_med_enriched, os.path.join(tmp_root, tag))
+        enr = frame(cat.read(spark, "enriched"))
+        with monkeypatch.context() as m:
+            if gate is not None:
+                m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gate)
+            _, jobs = _ensure_on(spark, cat, "enriched", monkeypatch, True, enriched=enr)
+        idx = _ivf_index(spark, cat)
+        return idx[S.DOC_IVF_ASSIGN][:2], idx[S.DOC_IVF_ASSIGN][2], jobs
+
+    size = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(os.path.join(sf_med_enriched, "enriched"))
+        for f in files
+        if f.endswith(".parquet")
+    )
+    ref, writers, jobs = build("at_gate", gate=size)
+    assert jobs == 0 and writers == ["local"]
+    rows, writers, jobs = build("over_gate", gate=size - 1)
+    assert rows == ref and writers == ["spark"] and jobs > 0
+    rows, writers, jobs = build("not_bare", frame=lambda df: df.select("*"))
+    assert rows == ref and writers == ["spark"] and jobs > 0
+
+
+def _tiny_source(spark, cat, docs, bucket):
+    """Commit ``docs`` [(doc_id, embedding)] as partition ``bucket`` of a
+    2-d ``enriched`` table."""
+    from pyspark.sql import types as T
+
+    cat.commit_partitions_local(
+        [(d, v, bucket) for d, v in docs],
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType()),
+                T.StructField("embedding", T.ArrayType(T.DoubleType())),
+                T.StructField("bucket", T.IntegerType()),
+            ]
+        ),
+        "enriched",
+        stage=f"test {bucket}",
+    )
+
+
+_TINY_BASE = [(str(i), [float(i % 5), float(i % 3) + 1.0]) for i in range(1, 41)]
+
+
+@pytest.mark.parametrize("driver", [True, False], ids=["driver", "spark"])
+def test_doc_ivf_append_rejects_non_canonical_doc_ids(spark, tmp_root, monkeypatch, driver):
+    """The append path checks ids like a fresh build, on both branches: an
+    epoch carrying a doc_id that does not round-trip CAST AS LONG raises
+    before anything is committed."""
+    import os
+    import shutil
+
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans import search as S
+
+    base = Catalog(os.path.join(tmp_root, "base"))
+    _tiny_source(spark, base, _TINY_BASE, 0)
+    _ensure_on(spark, base, "enriched", monkeypatch, True)
+    for i, bad_id in enumerate(["007", "abc", "+7", " 7", "9223372036854775808"]):
+        cat = Catalog(os.path.join(tmp_root, f"case{i}"))
+        shutil.copytree(base.root, cat.root, dirs_exist_ok=True)
+        _tiny_source(spark, cat, [("41", [1.0, 2.0]), (bad_id, [2.0, 1.0])], 1)
+        snaps = cat.manifest(S.DOC_IVF_ASSIGN)["snapshots"]
+        with pytest.raises(ValueError, match="canonical"):
+            _ensure_on(spark, cat, "enriched", monkeypatch, driver)
+        assert cat.manifest(S.DOC_IVF_ASSIGN)["snapshots"] == snaps, bad_id
+
+
+def test_doc_ivf_serve_reads_centroid_manifest_once(spark, tmp_root, monkeypatch):
+    """The serve path of ensure_doc_ivf (every _ann request) reads the
+    centroid manifest once per call, and launches no Spark job."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans import search as S
+
+    cat = Catalog(tmp_root)
+    _tiny_source(spark, cat, _TINY_BASE, 0)
+    params, _ = _ensure_on(spark, cat, "enriched", monkeypatch, True)
+    reads = []
+    orig = Catalog.manifest
+
+    def counting(self, table):
+        reads.append(table)
+        return orig(self, table)
+
+    monkeypatch.setattr(Catalog, "manifest", counting)
+    assert _ensure_on(spark, cat, "enriched", monkeypatch, True) == (params, 0)
+    assert reads.count(S.DOC_IVF_CENT) == 1
 
 
 def test_incremental_minhash_edge_cases(spark):

@@ -9,7 +9,7 @@ from semantic_search_system_spark.fixtures.golden import golden_triples, precisi
 from semantic_search_system_spark.fixtures.interleave import interleaved_path
 from semantic_search_system_spark.plans.pipeline import run_pipeline
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, with_job_count
 
 
 @pytest.fixture(scope="module")
@@ -203,15 +203,6 @@ def test_entity_map_on_corpus(built):
     assert {r["name"]: r["n_docs"] for r in rows} == mentions
 
 
-def _with_job_count(spark, fn):
-    """(fn(), number of Spark jobs fn submitted) — the delta of the
-    statusTracker's job ids."""
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup(None))
-    out = fn()
-    return out, len(set(st.getJobIdsForGroup(None)) - before)
-
-
 def _entity_map(spark, root, enriched):
     """(sorted rows, manifest schema, Spark jobs) of build_entity_map into a
     fresh Catalog at ``root``."""
@@ -219,7 +210,7 @@ def _entity_map(spark, root, enriched):
     from semantic_search_system_spark.plans.pipeline import build_entity_map
 
     cat = Catalog(root)
-    table, jobs = _with_job_count(spark, lambda: build_entity_map(spark, cat, enriched))
+    table, jobs = with_job_count(spark, lambda: build_entity_map(spark, cat, enriched))
     return sorted(map(tuple, table.collect())), cat.manifest("entity_map")["schema"], jobs
 
 
@@ -372,7 +363,7 @@ def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
     # entity_map reads DRIVER_VOCAB_LIMIT per call
     for build, force in ((P.build_topic_map, {"driver_vocab_limit": 0}), (P.build_entity_map, {})):
         name = build.__name__
-        fast, fast_jobs = _with_job_count(
+        fast, fast_jobs = with_job_count(
             spark, lambda: build(spark, Catalog(os.path.join(tmp_root, f"{name}_a")), enriched)
         )
         with monkeypatch.context() as m:
