@@ -293,7 +293,7 @@ def default_bench(sf_dir: str, cpus: int) -> None:
     # ann_ivf_top10 amortizes its index across queries (the point of a real
     # index); time the one-off build separately and honestly into a fresh
     # catalog so the probe number below is labeled, not hidden
-    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.catalog import Catalog, file_lineage
     from semantic_search_system_spark.operators.similarity import build_ivf_index
 
     emb = ep.load(spark, sf_dir, "embeddings")
@@ -301,8 +301,9 @@ def default_bench(sf_dir: str, cpus: int) -> None:
     try:
         t0 = time.time()
         build_ivf_index(
-            spark, emb, Catalog(build_dir), n_centroids=8, n_iter=2,
-            fit_sample_hex=ep.IVF_FIT_SAMPLE_HEX,
+            spark, emb, Catalog(build_dir),
+            file_lineage(os.path.join(sf_dir, "embeddings.parquet")),
+            n_centroids=8, n_iter=2, fit_sample_hex=ep.IVF_FIT_SAMPLE_HEX,
         )
         queries["ann_ivf_index_build"] = round(time.time() - t0, 3)
     finally:

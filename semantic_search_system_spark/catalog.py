@@ -13,7 +13,11 @@ emulates the subset of Iceberg semantics the north rule requires:
 - resume = set difference: a stage asks ``pending_buckets`` and processes only
   partitions absent from the manifest — re-running a completed pipeline is a
   no-op and produces byte-identical tables (north_star: "resumes mid-run
-  without recomputing completed partitions").
+  without recomputing completed partitions");
+- input identity, the one staleness rule every derived table and driver memo
+  keys on: ``Catalog.lineage`` for a Catalog table (its manifest snapshot
+  ids) and ``file_lineage`` for raw files (name, size and mtime). Neither
+  reads data or submits a Spark job.
 
 Replaces the reference's ad-hoc work-queue protocol — the ``processed``
 boolean flag flipped after bulk writes (ingest/pr_meta_store.py:55-139) and the
@@ -24,6 +28,7 @@ switch to ``df.writeTo(...).using('iceberg')``.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -49,14 +54,32 @@ BUCKET_COL = "bucket"
 # 2.9× slower than one file per bucket). The guard is MEASURED bytes, not an
 # estimate, so at production scale (buckets ≫ 64 MB) commits are untouched —
 # no constant tuned to local mode.
-COMPACT_COMMIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_COMPACT_COMMIT_BYTES", str(64 * 1024 * 1024))
-)
+COMPACT_COMMIT_BYTES = 64 * 1024 * 1024
 
 
-def compact_small_dir(d: str, max_bytes: int = COMPACT_COMMIT_BYTES) -> bool:
+def file_lineage(path: str) -> str:
+    """Input identity of a raw parquet source — one file, or a directory of
+    ``.parquet`` files — from file metadata alone: the sorted
+    basename:size:mtime_ns of each file. No scan, no Spark job; the mtime
+    catches a rewrite that keeps every size, so a copy of the same bytes
+    with a new mtime (a fresh checkout of the source) reads as changed."""
+    paths = (
+        [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+        if os.path.isdir(path)
+        else [path]
+    )
+    stats = sorted((os.path.basename(f), os.stat(f)) for f in paths)
+    return ";".join(f"{n}:{st.st_size}:{st.st_mtime_ns}" for n, st in stats)
+
+
+# process-wide memo of parsed driver-side table reads (Catalog.read_arrow_memo):
+# (root, table) -> (the table's lineage when read, the parsed value)
+_ARROW_MEMO: dict[tuple[str, str], tuple[str | None, object]] = {}
+
+
+def compact_small_dir(d: str) -> bool:
     """Rewrite a multi-file parquet partition dir into one file when its total
-    size is under ``max_bytes``; returns whether it compacted. The merged
+    size is under ``COMPACT_COMMIT_BYTES``; returns whether it compacted. The merged
     file lands under a temp name and is renamed in only after the originals
     are removed, but a crash DURING that removal leaves the complete merged
     file beside a subset of the originals — doubled rows if the dir were
@@ -71,7 +94,7 @@ def compact_small_dir(d: str, max_bytes: int = COMPACT_COMMIT_BYTES) -> bool:
     if len(files) <= 1:
         return False
     paths = [os.path.join(d, f) for f in files]
-    if sum(os.path.getsize(p) for p in paths) > max_bytes:
+    if sum(os.path.getsize(p) for p in paths) > COMPACT_COMMIT_BYTES:
         return False
     tb = pads.dataset(paths, format="parquet").to_table()
     tmp = os.path.join(d, "part-00000-compacted.snappy.parquet.tmp")
@@ -155,6 +178,24 @@ class Catalog:
     def get_property(self, table: str, key: str, default=None):
         return self.manifest(table).get("properties", {}).get(key, default)
 
+    # ------------------------------------------------------------- lineage
+    def lineage(self, table: str, keys=None) -> str | None:
+        """Input identity of a committed table (or of its partitions
+        ``keys``): md5 over the sorted (partition, snapshot_id, rows_written)
+        triples of its manifest; None when it has no partitions. Any
+        recommit of any partition changes a snapshot id, so a derived table
+        whose stage records this string sees the change — from one manifest
+        read, without scanning the data."""
+        parts = self.manifest(table)["partitions"]
+        if keys is not None:
+            parts = {k: parts[k] for k in keys}
+        if not parts:
+            return None
+        ident = ";".join(
+            f"{pid}:{e['snapshot_id']}:{e['rows_written']}" for pid, e in sorted(parts.items())
+        )
+        return hashlib.md5(ident.encode()).hexdigest()[:16]
+
     # ------------------------------------------------------------- reads
     def exists(self, table: str) -> bool:
         return os.path.exists(self._manifest_path(table))
@@ -215,6 +256,19 @@ class Catalog:
             if f.endswith(".parquet")
         ]
         return pads.dataset(files, format="parquet").to_table()
+
+    def read_arrow_memo(self, table: str, parse):
+        """``parse(self.read_arrow(table))``, memoized per process by (root,
+        table, lineage): steady-state calls cost one manifest read, and a
+        recommitted table is re-read on the next call. One ``parse`` per
+        table — the serving paths' centroid matrix and expansion statistic."""
+        lineage = self.lineage(table)
+        hit = _ARROW_MEMO.get((self.root, table))
+        if hit is not None and hit[0] == lineage:
+            return hit[1]
+        value = parse(self.read_arrow(table))
+        _ARROW_MEMO[(self.root, table)] = (lineage, value)
+        return value
 
     def read_buckets(
         self, spark: SparkSession, table: str, buckets, partitions: dict | None = None

@@ -18,7 +18,6 @@ deterministic across engines:
 
 from __future__ import annotations
 
-import functools
 import os
 from collections.abc import Callable
 
@@ -56,12 +55,7 @@ _CLEAN_SQL = "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 \\t\\n\\
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _REGISTRY: dict[str, QueryFn] = {}
-# values are SQL strings, or zero-arg callables producing one for oracles
-# whose text depends on materialized pipeline state (the doc-IVF replays
-# derive (n_centroids, n_probe) from the enriched table's manifest count —
-# baking that at import time on a fresh out_root would silently diverge
-# from the Spark path, which derives it post-build)
-_ORACLES: dict[str, str | Callable[[], str]] = {}
+_ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
@@ -79,9 +73,9 @@ def registry() -> dict[str, QueryFn]:
 
 
 def oracles() -> dict[str, str]:
-    """Materialize the oracle SQL map — lazy entries are generated HERE, at
-    verification time, when the pipeline outputs they parameterize on exist."""
-    return {k: (v() if callable(v) else v) for k, v in _ORACLES.items()}
+    """The oracle SQL map. No entry reads a derived table to be generated,
+    so it is complete on a fresh data dir."""
+    return dict(_ORACLES)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1628,26 +1622,8 @@ def _incr_is_new(col: F.Column) -> F.Column:
 MINHASH_STORE_TABLE = "minhash_sigs"
 
 
-def _source_file_fingerprint(sf_dir: str, table: str = "documents") -> str:
-    """Input-identity string from the source parquet's FILE METADATA
-    (basename:size:mtime_ns triples) — no scan, no Spark job. Stronger than
-    the former row-count fingerprint (round-7 ADVICE #1: a content change
-    that preserves cardinality served stale signatures silently) and cheaper
-    (the count was a per-query job); the mtime catches a rewrite that keeps
-    every file size. A copy of the same bytes with a new mtime (a fresh
-    checkout or copy of the source) therefore rebuilds the store once."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    paths = (
-        [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
-        if os.path.isdir(p)
-        else [p]
-    )
-    stats = sorted((os.path.basename(f), os.stat(f)) for f in paths)
-    return ";".join(f"{n}:{st.st_size}:{st.st_mtime_ns}" for n, st in stats)
-
-
 def ensure_minhash_store(
-    spark: SparkSession, cat, corpus: DataFrame, fingerprint: str | None = None
+    spark: SparkSession, cat, corpus: DataFrame, fingerprint: str
 ) -> None:
     """Materialize (idempotently) the MinHash signature store for the
     accumulated (non-new) corpus — ``doc_id, minhash`` (n_perm longs per
@@ -1656,16 +1632,14 @@ def ensure_minhash_store(
     corpus triggers an automatic rebuild (the entity_freq_topk pattern);
     in a streaming deployment new epochs' signatures are APPENDED via the
     same epoch-scoped ``commit_partitions`` keys the doc-IVF assign path
-    uses, so the store grows without rewrites. ``fingerprint``: an
-    input-identity string from the caller (file metadata / manifest
-    lineage — see ``_source_file_fingerprint``); when None, falls back to
-    the corpus row count (ad-hoc frames in tests). ``dedup_stream`` (whose
-    corpus DOES change) never consults this fingerprint — its store is
-    epoch-scoped."""
+    uses, so the store grows without rewrites. ``fingerprint``: the
+    corpus's identity by the catalog rule (``catalog.file_lineage`` of the
+    source files, ``Catalog.lineage`` of a source table). ``dedup_stream``
+    (whose corpus DOES change) never consults this fingerprint — its store
+    is epoch-scoped."""
     from .operators.dedup import with_minhash, with_shingles
 
-    fp = fingerprint if fingerprint is not None else corpus.count()
-    stage = f"minhash_store v{spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={fp}"
+    stage = f"minhash_store v{spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={fingerprint}"
     if cat.exists(MINHASH_STORE_TABLE):
         prior = {m["stage"] for m in cat.metrics(MINHASH_STORE_TABLE)}
         if not prior or prior == {stage}:
@@ -1718,14 +1692,13 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: the processed-flag work queue (`ingest/
     pr_meta_store.py:55-63`) — upgraded so the "already processed" state is
     a queryable signature table instead of a boolean."""
-    from .catalog import Catalog
+    from .catalog import Catalog, file_lineage
     from .operators.dedup import incremental_minhash_near_dups
 
     corpus = _dup_corpus(spark, sf_dir)
     cat = Catalog(out_root(sf_dir))
-    ensure_minhash_store(
-        spark, cat, corpus, fingerprint=_source_file_fingerprint(sf_dir)
-    )
+    lineage = file_lineage(os.path.join(sf_dir, "documents.parquet"))
+    ensure_minhash_store(spark, cat, corpus, lineage)
     old_sigs = cat.read(spark, MINHASH_STORE_TABLE).select("doc_id", "minhash")
     return incremental_minhash_near_dups(
         corpus, _incr_is_new(F.col("doc_id")), old_sigs, jaccard_threshold=0.5
@@ -1780,14 +1753,13 @@ def epoch_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Membership is a pure function of the doc id, so blocker classification
     needs no join back to the corpus — the predicate is applied directly to
     the partner id in both engines."""
-    from .catalog import Catalog
+    from .catalog import Catalog, file_lineage
     from .operators.dedup import incremental_minhash_near_dups
 
     corpus = _dup_corpus(spark, sf_dir)
     cat = Catalog(out_root(sf_dir))
-    ensure_minhash_store(
-        spark, cat, corpus, fingerprint=_source_file_fingerprint(sf_dir)
-    )
+    lineage = file_lineage(os.path.join(sf_dir, "documents.parquet"))
+    ensure_minhash_store(spark, cat, corpus, lineage)
     old_sigs = cat.read(spark, MINHASH_STORE_TABLE).select("doc_id", "minhash")
     pairs = incremental_minhash_near_dups(
         corpus, _incr_is_new(F.col("doc_id")), old_sigs, jaccard_threshold=0.5
@@ -1983,21 +1955,29 @@ def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus — the one full scan is the final assignment pass),
     assignments persisted through the Catalog partitioned by centroid id
     (built once, reused across queries — the probe reads only the 2 matching
-    bucket directories of 8)."""
-    from .catalog import Catalog
-    from .operators.similarity import build_ivf_index, ivf_topk_indexed
-
-    e = load(spark, sf_dir, "embeddings")
-    cat = Catalog(out_root(sf_dir))
-    build_ivf_index(spark, e, cat, n_centroids=8, n_iter=2, fit_sample_hex=IVF_FIT_SAMPLE_HEX)
-    # the query vector is ONE row of a driver-local parquet: read it with
-    # pyarrow instead of a Spark collect job per call (round 8 — same value,
-    # no job; the probe itself stays distributed)
+    bucket directories of 8). The index is keyed on the file lineage of
+    ``embeddings.parquet``: when the file moved, it is dropped and refit,
+    as ensure_doc_ivf refits a rewritten corpus."""
     import pyarrow.dataset as pads
 
-    tb = pads.dataset(
-        os.path.join(sf_dir, "embeddings.parquet"), format="parquet"
-    ).to_table(columns=["vec_id", "embedding"], filter=pads.field("vec_id") == 0)
+    from .catalog import Catalog, file_lineage
+    from .operators.similarity import build_ivf_index, drop_ivf_index, ivf_topk_indexed
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    lineage = file_lineage(path)
+    cat = Catalog(out_root(sf_dir))
+    if any(not m["stage"].endswith(f" fp={lineage}") for m in cat.metrics("ivf_centroids")):
+        drop_ivf_index(cat, "ivf_centroids", "ivf_assign")
+    build_ivf_index(
+        spark, load(spark, sf_dir, "embeddings"), cat, lineage,
+        n_centroids=8, n_iter=2, fit_sample_hex=IVF_FIT_SAMPLE_HEX,
+    )
+    # the query vector is ONE row of a driver-local parquet: read it with
+    # pyarrow instead of a Spark collect job per call (same value, no job;
+    # the probe itself stays distributed)
+    tb = pads.dataset(path, format="parquet").to_table(
+        columns=["vec_id", "embedding"], filter=pads.field("vec_id") == 0
+    )
     qvec = [float(x) for x in tb["embedding"][0].as_py()]
     return ivf_topk_indexed(spark, cat, qvec, k=10, n_probe=2)
 
@@ -2740,8 +2720,7 @@ def _register_search() -> None:
             return fn(enriched, **kw)
 
         _REGISTRY[name] = q
-        # lazy: the served twins size the index from the built table's manifest
-        _ORACLES[name] = functools.partial(sql_fn, ORACLE_ENRICHED_GLOB, **kw)
+        _ORACLES[name] = sql_fn(ORACLE_ENRICHED_GLOB, **kw)
 
 
 _register_search()

@@ -12,8 +12,9 @@ span a media span is interleaved (kind cycling image/video/audio,
 ``media_ref = 'media://' + md5(doc_id:offset)``); ~10% of docs get a hot-entity
 tail span to exercise skew handling (FIXTURES.md §1).
 
-The generated parquet is written under ``/root/repo/data/interleaved/<sf>/`` so
-the DuckDB oracle can read the exact same rows via ``read_parquet``.
+The generated parquet is written under ``<REPO_DATA>/interleaved/<sf>/``
+(``SSS_SPARK_DATA_DIR``) so the DuckDB oracle can read the exact same rows via
+``read_parquet``.
 """
 
 from __future__ import annotations

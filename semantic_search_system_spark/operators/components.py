@@ -20,7 +20,7 @@ skew-join splitting is on session-wide, and callers pre-salt hot keys
 
 Small-graph fast path (strategy='auto', the default): the phrase vocabulary
 grows sub-linearly with the corpus (it is a function of the language, not the
-doc count), so when the edge list is under ``driver_edge_limit`` the component
+doc count), so when the edge list is under ``DRIVER_EDGE_LIMIT`` the component
 computation runs as a driver-side union-find on the collected edge list — one
 job instead of ~10, with identical (lexicographic-min) component ids. The
 same ``_driver_union_find`` serves the pipeline's driver-side topic and
@@ -110,7 +110,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     strategy: str = "auto",
-    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
 ) -> DataFrame:
     """Returns (node string, component string). Edges are treated undirected;
     isolated nodes must appear as self-edges or be unioned by the caller."""
@@ -123,8 +122,8 @@ def connected_components(
     )
 
     if strategy == "auto":
-        n_edges = e.limit(driver_edge_limit + 1).count()
-        strategy = "driver" if n_edges <= driver_edge_limit else "distributed"
+        n_edges = e.limit(DRIVER_EDGE_LIMIT + 1).count()
+        strategy = "driver" if n_edges <= DRIVER_EDGE_LIMIT else "distributed"
 
     if strategy == "driver":
         from ..session import local_df

@@ -31,6 +31,7 @@ index, so:
 from __future__ import annotations
 
 import hashlib
+import os
 import threading
 
 import numpy as np
@@ -173,6 +174,10 @@ def _kmeans_driver(
     return [(cid, [float(x) for x in v]) for cid, v in cents]
 
 
+# the largest fit set kmeans_centroids collects for the driver Lloyd loop
+MAX_DRIVER_FIT = 200_000
+
+
 def kmeans_centroids(
     vectors: DataFrame | tuple[np.ndarray, np.ndarray],
     n_centroids: int = 8,
@@ -180,7 +185,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fit_sample_hex: str | None = None,
-    max_driver_fit: int = 200_000,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's k-means → driver-held [(centroid_id, cvec)].
 
@@ -202,7 +206,7 @@ def kmeans_centroids(
     scan). Sampling is by id hash, so the fit set — and therefore the
     centroids — is identical in Spark and the DuckDB oracle.
 
-    When the fit set is driver-sized (≤ max_driver_fit rows — always true for
+    When the fit set is driver-sized (≤ MAX_DRIVER_FIT rows — always true for
     a properly-sampled fit at any corpus scale), the Lloyd loop runs ON THE
     DRIVER over the collected sample (_kmeans_driver): identical fixpoint, one
     collect instead of 2×n_iter Spark jobs. The distributed loop below remains
@@ -221,8 +225,8 @@ def kmeans_centroids(
         # ONE limit-collect decides the path AND feeds the driver fit (round
         # 8): the previous eager-checkpoint → count → collect sequence ran
         # three Spark jobs before any k-means work
-        head = d.limit(max_driver_fit + 1).collect()
-        if len(head) > max_driver_fit:
+        head = d.limit(MAX_DRIVER_FIT + 1).collect()
+        if len(head) > MAX_DRIVER_FIT:
             return _kmeans_spark(d, n_centroids, n_iter, id_col)
         keys = np.array([r[id_col] for r in head], dtype=np.int64)
         M = np.array([r["_v"] for r in head], dtype=np.float64)
@@ -259,20 +263,6 @@ def _kmeans_spark(
         )
         cent_rows = sorted((int(r["centroid_id"]), list(r["cvec"])) for r in upd.collect())
     return cent_rows
-
-
-def _input_fingerprint(vectors: DataFrame, id_col: str, vec_col: str) -> str:
-    """Cheap order-insensitive fingerprint of the indexed input: row count +
-    bit_xor of xxhash64(id, first embedding component). Recorded in the index
-    stage string so a changed input raises instead of silently serving stale
-    assignments (sum() would overflow under ANSI; bit_xor is exact and
-    commutative). One column-pruned scan — at true scale, swap for the source
-    table's snapshot id from its own manifest."""
-    n, x = vectors.agg(
-        F.count("*"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.element_at(F.col(vec_col), 1))),
-    ).first()
-    return f"{n}:{(x or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
 def _commit_assignments(
@@ -336,6 +326,7 @@ def build_ivf_index(
     spark: SparkSession,
     vectors: DataFrame | tuple[np.ndarray, np.ndarray],
     cat,
+    lineage: str,
     n_centroids: int = 8,
     n_iter: int = 2,
     id_col: str = "vec_id",
@@ -343,7 +334,6 @@ def build_ivf_index(
     fit_sample_hex: str | None = None,
     cent_table: str = "ivf_centroids",
     assign_table: str = "ivf_assign",
-    lineage: str | None = None,
 ) -> None:
     """Materialize the IVF index through the Catalog: ``ivf_centroids`` (tiny)
     and ``ivf_assign`` PARTITIONED BY centroid id — probes read only matching
@@ -359,18 +349,14 @@ def build_ivf_index(
     both commits on the driver, zero Spark jobs). The stage string, the
     guards and the resume read-back are the same for both.
 
-    ``lineage``: an input-identity string from the SOURCE TABLE'S OWN
-    manifest (snapshot ids — the Iceberg way). When given, the every-call
-    staleness check is a string compare; when None, the identity falls back
-    to ``_input_fingerprint``, which SCANS the input — fine for one-off
-    builds over raw files, wrong to pay per serving-path query at scale.
-    Driver-held vectors require a lineage."""
-    if lineage is None and isinstance(vectors, tuple):
-        raise ValueError("build_ivf_index: driver-held vectors need a source lineage")
+    ``lineage``: the input's identity by the catalog rule —
+    ``Catalog.lineage`` of a source table, ``catalog.file_lineage`` of raw
+    files. It lands in the stage string, so the every-call staleness check
+    is a string compare: an existing index reused under the same stage
+    submits no Spark job."""
     stage = (
         f"ivf_build k={n_centroids} iter={n_iter} "
-        f"sample={fit_sample_hex or 'full'} "
-        f"fp={lineage or _input_fingerprint(vectors, id_col, vec_col)}"
+        f"sample={fit_sample_hex or 'full'} fp={lineage}"
     )
 
     def _sweep_orphan_assign() -> None:
@@ -461,33 +447,34 @@ def append_ivf_assignments(
     )
 
 
-# interactive-QPS serving cache: (catalog root, centroid table) → the parsed
-# (manifest identity, centroid ids, centroid matrix). Invalidation is by the
-# centroid table's OWN manifest snapshot ids (re-read per query — a tiny local
-# JSON, microseconds), so a rebuilt index is picked up on the next query while
-# steady-state queries never re-read the centroid parquet from disk.
-_CENTROID_CACHE: dict[tuple[str, str], tuple[str, np.ndarray, np.ndarray]] = {}
+def drop_ivf_index(cat, cent_table: str, assign_table: str) -> None:
+    """Delete a stale index so the next ``build_ivf_index`` refits it. The
+    assign table goes FIRST: a crash between the two deletes leaves
+    centroids without assignments (rebuilt consistently by the next build),
+    never fresh centroids paired with a stale corpus's assignments; and a
+    failed delete raises rather than leave half an index behind."""
+    import shutil
+
+    for table in (assign_table, cent_table):
+        if os.path.exists(cat.path(table)):
+            shutil.rmtree(cat.path(table))
 
 
-def _centroids_cached(cat, cent_table: str) -> tuple[np.ndarray, np.ndarray]:
-    man = cat.manifest(cent_table)
-    ident = ";".join(
-        f"{pid}:{e['snapshot_id']}" for pid, e in sorted(man["partitions"].items())
-    )
-    key = (cat.root, cent_table)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None and hit[0] == ident:
-        return hit[1], hit[2]
-    tb = cat.read_arrow(cent_table)
+def _centroid_matrix(tb) -> tuple[np.ndarray, np.ndarray]:
     if tb.num_rows > 1_000_000:
         raise ValueError(
             f"{tb.num_rows} centroids is beyond the driver-side ranking bound; "
             "rank centroids distributively (orderBy(qsim).limit(n_probe)) instead"
         )
     # ascending ids, as nearest_centroid's tie-break needs
-    cids, C = _centroid_arrays(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
-    _CENTROID_CACHE[key] = (ident, cids, C)
-    return cids, C
+    return _centroid_arrays(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
+
+
+def _centroids_cached(cat, cent_table: str) -> tuple[np.ndarray, np.ndarray]:
+    """The centroid ids and matrix, parsed once per index generation
+    (``Catalog.read_arrow_memo``): interactive QPS re-reads only the
+    centroid manifest, and a rebuilt index is picked up on the next query."""
+    return cat.read_arrow_memo(cent_table, _centroid_matrix)
 
 
 def ivf_topk_indexed(
@@ -507,12 +494,12 @@ def ivf_topk_indexed(
 
     Centroid ranking happens ON THE DRIVER via a pyarrow read of the (tiny)
     centroid table — one numpy matmul, no Spark job per query, and the parsed
-    centroid matrix is MEMOIZED per (catalog, table, manifest snapshot ids)
-    so interactive QPS doesn't re-read the parquet per query (the manifest
+    centroid matrix is MEMOIZED per (catalog, table, lineage) so
+    interactive QPS doesn't re-read the parquet per query (the manifest
     JSON re-read per query is the staleness check). Scale bound:
     n_centroids ≈ √N, so even a 10^12-vector corpus ranks only ~10^6
     centroids (≈ a few hundred MB of 256-d doubles — near the driver's
-    comfort limit, hence the guard in _centroids_cached). Past that, swap
+    comfort limit, hence the guard in _centroid_matrix). Past that, swap
     this step for a TakeOrderedAndProject over the centroid table; the probe
     is unchanged. The 6-dp half-away rounding matches the SQL oracle
     bit-for-bit (the same fixpoint the k-means itself uses).

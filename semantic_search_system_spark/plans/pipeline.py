@@ -36,7 +36,7 @@ from ..fixtures.interleave import interleaved_path
 from ..operators.components import connected_components
 from ..operators.embedding import embed_udf
 from ..operators.enrichment import enrich_content
-from ..operators.extraction import assemble_content
+from ..operators.extraction import assemble_content, has_usable_text
 from ..operators.linking import candidate_edges
 
 N_BUCKETS = 8
@@ -47,6 +47,23 @@ def read_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------- stage 1
+def enrich_docs(docs: DataFrame) -> DataFrame:
+    """The one enrich body behind the batch stage and both streams
+    (streaming/incremental.enrich_stream, triples_stream): admission (docs
+    with a usable text span — the §2.11 rule whose rejects the callers
+    quarantine) → ``assemble_content`` → the fused enrich UDF, projected to
+    the enriched table's columns. ``docs``: interleaved rows carrying
+    BUCKET_COL. clean=False: the fused UDF cleans batch-wise via Arrow RE2
+    (the JVM regexp pair was the enrich stage's most expensive expression).
+    A filter or explode over this frame still evaluates the UDF once
+    (tests/test_plans.py::test_enrich_body_evaluates_udf_once)."""
+    admitted = docs.where(has_usable_text("spans"))
+    return enrich_content(assemble_content(admitted, clean=False)).select(
+        BUCKET_COL, "doc_id", "url", "title", "doc_date", "content", "summary",
+        "entities", "topics", "embedding", "media_refs",
+    )
+
+
 def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: int = N_BUCKETS) -> DataFrame:
     pending = cat.pending_buckets("enriched", n_buckets)
     if pending:
@@ -63,24 +80,14 @@ def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: in
         # failed_rows table (the pr_aws_nlp.py:296-310 failure-list analog) —
         # committed per-bucket like every stage, so the resume sweep re-checks
         # only pending buckets and never re-quarantines completed ones
-        from ..operators.extraction import has_usable_text
-
-        usable = has_usable_text("spans")
-        bad = docs.where(~usable).select(
+        bad = docs.where(~has_usable_text("spans")).select(
             BUCKET_COL,
             "doc_id",
             F.lit("enrich").alias("stage"),
             F.lit("no_text_spans").alias("reason"),
         )
         cat.commit_partitions(bad, "failed_rows", stage="quarantine")
-        # clean=False: the fused UDF cleans batch-wise via Arrow RE2 (the JVM
-        # regexp pair was the enrich stage's most expensive expression)
-        enriched = enrich_content(assemble_content(docs.where(usable), clean=False))
-        enriched = enriched.select(
-            BUCKET_COL, "doc_id", "url", "title", "doc_date", "content", "summary",
-            "entities", "topics", "embedding", "media_refs",
-        )
-        cat.commit_partitions(enriched, "enriched", stage="enrich")
+        cat.commit_partitions(enrich_docs(docs), "enriched", stage="enrich")
     return cat.read(spark, "enriched")
 
 
@@ -153,9 +160,7 @@ DRIVER_VOCAB_LIMIT = 100_000
 # it reads on ONE machine — so it is allowed only when the MEASURED source
 # bytes are driver-trivial; past the gate the distributed plan (whose cost
 # is what a real cluster would pay) takes over
-DRIVER_VOCAB_SCAN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_VOCAB_SCAN_BYTES", str(256 * 1024 * 1024))
-)
+DRIVER_VOCAB_SCAN_BYTES = 256 * 1024 * 1024
 
 
 def driver_read(df: DataFrame, columns: list[str]):
@@ -202,22 +207,19 @@ def _vocab_texts_driver(enriched: DataFrame, column: str):
     return texts.filter(pc.not_equal(texts, ""))
 
 
-def build_topic_map(
-    spark: SparkSession, cat: Catalog, enriched: DataFrame,
-    driver_vocab_limit: int = DRIVER_VOCAB_LIMIT,
-) -> DataFrame:
+def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> DataFrame:
     """Canonicalize topic phrases: embed → blocked similarity join → connected
     components → centroid labels. The topic_mapping.json analog.
 
     The phrase vocabulary grows sub-linearly with the corpus (it is a function
     of the language), so the whole stage runs on the DRIVER when the distinct
-    phrase count is under ``driver_vocab_limit`` (one distinct-collect + one
+    phrase count is under ``DRIVER_VOCAB_LIMIT`` (one distinct-collect + one
     commit); the distributed plan below remains the fallback for
     beyond-vocabulary scales."""
     if not cat.exists("topic_map"):
         texts = _vocab_texts_driver(enriched, "topics")
         vocab = None if texts is None else texts.unique().to_pylist()
-        if vocab is not None and len(vocab) > driver_vocab_limit:
+        if vocab is not None and len(vocab) > DRIVER_VOCAB_LIMIT:
             vocab = None  # beyond the driver canonicalization bound — distribute
         if vocab is None:
             distinct_phrases = (
@@ -226,8 +228,8 @@ def build_topic_map(
                 .where(F.col("phrase_norm") != "")
                 .distinct()
             )
-            head = distinct_phrases.limit(driver_vocab_limit + 1).collect()
-            if len(head) <= driver_vocab_limit:
+            head = distinct_phrases.limit(DRIVER_VOCAB_LIMIT + 1).collect()
+            if len(head) <= DRIVER_VOCAB_LIMIT:
                 vocab = [r["phrase_norm"] for r in head]
         if vocab is not None:
             pdf = topic_map_driver(vocab)

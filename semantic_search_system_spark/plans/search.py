@@ -40,7 +40,6 @@ token-overlap + cosine.
 from __future__ import annotations
 
 import math
-import os
 import warnings
 from functools import partial
 
@@ -48,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
-from ..catalog import Catalog
 
 # Benchmark defaults — vocabulary of the synthetic corpus.
 QUERY_TEXT = "spark join table"
@@ -475,9 +473,8 @@ def pro_search_ann_sql(
     k: int = K,
     fuzziness: int = FUZZINESS,
     fit_source_sql: str | None = None,
-    base_n_docs: int | None = None,
 ) -> str:
-    ann = partial(_doc_ivf_ann_sql, fit_source_sql=fit_source_sql, base_n_docs=base_n_docs)
+    ann = partial(_doc_ivf_ann_sql, fit_source_sql=fit_source_sql)
     return _pro_sql(enriched_glob, query_text, k, fuzziness, ann)
 
 
@@ -515,54 +512,14 @@ DOC_IVF_PROBE_FRAC = spec.DOC_IVF_PROBE_FRAC
 
 def doc_ivf_params(n_docs: int) -> tuple[int, int]:
     """(n_centroids, n_probe) for a corpus of ``n_docs`` documents — a pure
-    function both engines evaluate on the SAME manifest-derived count, so the
-    Spark index and the DuckDB replay are always built identically."""
+    function of the fit corpus size, which the Spark build takes from the
+    source manifest and the DuckDB replay evaluates as the same rule over
+    ``count(*)`` of its fit relation (``_doc_ivf_ann_sql``), so both engines
+    size the index identically."""
     n_centroids = max(DOC_IVF_MIN_CENTROIDS, math.isqrt(max(0, n_docs)))
     num, den = DOC_IVF_PROBE_FRAC
     n_probe = min(n_centroids, max(DOC_IVF_MIN_PROBE, (n_centroids * num + den - 1) // den))
     return n_centroids, n_probe
-
-
-def _manifest_lineage(man: dict) -> str | None:
-    """Input-identity string from a source table's manifest: md5 over the
-    sorted (partition, snapshot_id, rows_written) triplets. Any recommit of
-    any partition changes a snapshot id, so a stale index is still detected —
-    WITHOUT the per-query corpus scan `_input_fingerprint` would cost."""
-    import hashlib
-
-    parts = man["partitions"]
-    if not parts:
-        return None
-    ident = ";".join(
-        f"{pid}:{e['snapshot_id']}:{e['rows_written']}" for pid, e in sorted(parts.items())
-    )
-    return "man:" + hashlib.md5(ident.encode()).hexdigest()[:16]
-
-
-def _oracle_n_docs(enriched_glob: str) -> int:
-    """Corpus size for oracle-SQL generation, from the manifest of the
-    glob's table directory (falling back to parquet footer metadata). Raises
-    when NEITHER exists: silently returning 0 would bake the floor params
-    (8, 3) into the oracle while the Spark path derives them from the
-    post-build manifest — a silent divergence once isqrt(N) > 8. Callers
-    generate this SQL lazily (entrypoints.oracles()), after the enriched
-    table has been materialized."""
-    table_dir = enriched_glob.split("/bucket=")[0]
-    parts = Catalog(os.path.dirname(table_dir)).manifest(os.path.basename(table_dir))["partitions"]
-    if parts:
-        return sum(e["rows_written"] for e in parts.values())
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    files = _glob.glob(enriched_glob)
-    if not files:
-        raise FileNotFoundError(
-            f"doc-IVF oracle SQL needs the enriched corpus size, but neither "
-            f"a manifest nor parquet files exist under {table_dir} — build "
-            f"the enriched table first (plans.pipeline.ensure_enriched)"
-        )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def _non_canonical() -> ValueError:
@@ -707,32 +664,41 @@ def ensure_doc_ivf(
     append the ``read_buckets`` frame of the new partitions, each through
     ``_index_input`` — when that frame passes the guarded driver read (a
     bare parquet relation of at most ``plans.pipeline.
-    DRIVER_VOCAB_SCAN_BYTES``, 256 MB by default), the ids are checked, the
-    k-means fit, the assignment and both commits run ON THE DRIVER (zero
-    Spark jobs, one parquet file per partition, nothing to compact; the
-    snapshots record ``writer: local``). Past the gate, for a frame that is
-    not a bare relation, or for an ad-hoc source with no manifest lineage,
-    the distributed plan runs. Both branches share build_ivf_index /
-    append_ivf_assignments (stage string, guards, orphan sweep, resume) and
-    one nearest-centroid kernel, so they write the same rows.
+    DRIVER_VOCAB_SCAN_BYTES``, 256 MB), the ids are checked, the k-means
+    fit, the assignment and both commits run ON THE DRIVER (zero Spark
+    jobs, one parquet file per partition, nothing to compact; the snapshots
+    record ``writer: local``). Past the gate, or for a frame that is not a
+    bare relation, the distributed plan runs. Both branches share
+    build_ivf_index / append_ivf_assignments (stage string, guards, orphan
+    sweep, resume) and one nearest-centroid kernel, so they write the same
+    rows.
+
+    The source must be a committed, non-empty Catalog table: its manifest
+    gives the index its size, its ``covers`` and its lineage
+    (``Catalog.lineage``), so an uncommitted or empty one raises.
     """
-    import shutil
-
-    from ..operators.similarity import append_ivf_assignments, build_ivf_index
-
-    man = cat.manifest(source_table)  # an empty skeleton when not committed
-    parts, snaps = man["partitions"], man["snapshots"]
-    cur = (
-        {k: e["snapshot_id"] for k, e in parts.items()} if cat.exists(source_table) else None
+    from ..operators.similarity import (
+        append_ivf_assignments,
+        build_ivf_index,
+        drop_ivf_index,
     )
+
+    man = cat.manifest(source_table)
+    parts, snaps = man["partitions"], man["snapshots"]
+    if not parts:
+        raise ValueError(
+            f"doc-IVF source '{source_table}' has no committed rows under {cat.root} — "
+            f"commit it through the Catalog first"
+        )
+    cur = {k: e["snapshot_id"] for k, e in parts.items()}
+    n_docs = sum(e["rows_written"] for e in parts.values())
 
     # ONE centroid-manifest read per call (this is every _ann request's
     # path): the covers/params/fit_rows triple is saved atomically after the
     # centroids commit, so its presence implies the centroid table exists
     props = cat.manifest(DOC_IVF_CENT).get("properties", {})
     covers, params, fit_rows = (props.get(k) for k in ("covers", "params", "fit_rows"))
-    indexed = covers is not None and params is not None and cat.exists(DOC_IVF_ASSIGN)
-    if cur is not None and indexed:
+    if covers is not None and params is not None and cat.exists(DOC_IVF_ASSIGN):
         compacted = {k for s in snaps for k in s.get("compacted_from", [])}
         broken = sorted(
             k
@@ -753,11 +719,7 @@ def ensure_doc_ivf(
             if covers != cur:
                 cat.set_property(DOC_IVF_CENT, "covers", cur)
             return tuple(params)
-        total_rows = sum(e["rows_written"] for e in parts.values())
-        drifted = (
-            fit_rows
-            and total_rows - fit_rows > spec.DOC_IVF_DRIFT_REFIT_FRAC * fit_rows
-        )
+        drifted = fit_rows and n_docs - fit_rows > spec.DOC_IVF_DRIFT_REFIT_FRAC * fit_rows
         if not intact or mixed or drifted:
             # covered partitions recommitted/removed (a rewritten corpus —
             # the stored assignments describe data that no longer exists;
@@ -765,72 +727,53 @@ def ensure_doc_ivf(
             # the serving path behind a manual delete), measured drift
             # beyond the contract, or a compaction that swallowed
             # never-indexed epochs → full refit over the current corpus
-            # (delete + rebuild below). Assign table FIRST: a crash
-            # between the two leaves centroids without assignments
-            # (rebuilt consistently below), never fresh centroids paired
-            # with a stale corpus's assignments — and rmtree failures
-            # must surface, not leave half an index behind silently.
+            # (delete + rebuild below)
             if broken:  # a rewrite is an event; drift/compaction refits are routine
                 warnings.warn(
                     f"doc-IVF index refit: covered partitions of "
                     f"'{source_table}' were recommitted or removed: {', '.join(broken)}"
                 )
-            shutil.rmtree(cat.path(DOC_IVF_ASSIGN))
-            shutil.rmtree(cat.path(DOC_IVF_CENT))
+            drop_ivf_index(cat, DOC_IVF_CENT, DOC_IVF_ASSIGN)
         else:
-            import hashlib
-
-            appended = cat.read_buckets(spark, source_table, new_keys, partitions=parts)
-            vectors = _index_input(appended)
-            tag = hashlib.md5(
-                ";".join(f"{k}:{cur[k]}" for k in new_keys).encode()
-            ).hexdigest()[:8]
+            # the tag is the new partitions' own lineage: a replayed append
+            # hits the same partition keys and is skipped by the manifest
+            tag = cat.lineage(source_table, new_keys)[:8]
             append_ivf_assignments(
                 spark,
                 cat,
-                vectors,
+                _index_input(cat.read_buckets(spark, source_table, new_keys, partitions=parts)),
                 tag,
                 id_col="doc_key",
                 cent_table=DOC_IVF_CENT,
                 assign_table=DOC_IVF_ASSIGN,
-                stage=f"ivf_append tag={tag} fp={_manifest_lineage(man)}",
+                stage=f"ivf_append tag={tag} fp={cat.lineage(source_table)}",
             )
             cat.set_property(DOC_IVF_CENT, "covers", cur)
             return tuple(params)
 
-    n_docs = sum(e["rows_written"] for e in parts.values()) if parts else None
-    if n_docs is None:  # source not catalog-committed (ad-hoc frame)
-        n_docs = enriched.count()
     n_centroids, n_probe = doc_ivf_params(n_docs)
-    lineage = _manifest_lineage(man)
-    if cat.exists(DOC_IVF_CENT) and cat.exists(DOC_IVF_ASSIGN):
-        vectors = _doc_keyed_vecs(enriched)  # built: only the stage is compared
-    elif lineage is None:  # an ad-hoc frame: its identity needs the Spark scan
-        _assert_canonical_ids(enriched)
-        vectors = _doc_keyed_vecs(enriched)
-    else:
-        vectors = _index_input(enriched)
+    built = cat.exists(DOC_IVF_CENT) and cat.exists(DOC_IVF_ASSIGN)
     build_ivf_index(
         spark,
-        vectors,
+        # built: only the stage is compared, so the frame is never read
+        _doc_keyed_vecs(enriched) if built else _index_input(enriched),
         cat,
+        # identity from the source manifest's snapshot ids: the
+        # index-freshness check on the SERVING path must not scan the corpus
+        cat.lineage(source_table),
         n_centroids=n_centroids,
         n_iter=DOC_IVF_ITER,
         id_col="doc_key",
         fit_sample_hex=DOC_IVF_FIT_HEX,
         cent_table=DOC_IVF_CENT,
         assign_table=DOC_IVF_ASSIGN,
-        # identity from the source manifest's snapshot ids: the
-        # index-freshness check on the SERVING path must not scan the corpus
-        lineage=lineage,
     )
-    if cur is not None:
-        # ONE atomic manifest save: a partial triple would disable the
-        # serve/append fast path on the next call (catalog.set_properties)
-        cat.set_properties(
-            DOC_IVF_CENT,
-            {"covers": cur, "params": [n_centroids, n_probe], "fit_rows": n_docs},
-        )
+    # ONE atomic manifest save: a partial triple would disable the
+    # serve/append fast path on the next call (catalog.set_properties)
+    cat.set_properties(
+        DOC_IVF_CENT,
+        {"covers": cur, "params": [n_centroids, n_probe], "fit_rows": n_docs},
+    )
     return n_centroids, n_probe
 
 
@@ -876,26 +819,25 @@ def _doc_ivf_ann_sql(
     qvec: list[float],
     semantic_k: int,
     fit_source_sql: str | None = None,
-    base_n_docs: int | None = None,
 ) -> str:
     """The served source's SQL twin: a CTE chain replaying the doc-IVF index
     + probe in DuckDB (the entrypoints._ivf_oracle_sql pattern over the
     enriched table), ending with ``ann(doc_id, ann_sim)`` = the ANN
-    top-semantic_k. (n_centroids, n_probe)
-    are derived from the SAME manifest count the Spark build uses
-    (doc_ivf_params), so the replay is bit-identical at any corpus size.
+    top-semantic_k. The ``params`` CTE sizes the index by the
+    ``doc_ivf_params`` rule over ``count(*)`` of the fit relation — the
+    corpus the Spark build counted in its source manifest — so the replay
+    is bit-identical at any corpus size and needs no built table to be
+    generated (floor(sqrt(n)) is the exact isqrt for n < 2^52).
 
-    ``fit_source_sql`` / ``base_n_docs``: frozen-centroid replay for an
-    APPENDED corpus (ensure_doc_ivf's streamed-epoch append path) — the
-    k-means fit sample, seeds, and index params come from the BASE corpus
-    relation while the final assignment pass covers the full (appended)
-    ``enriched_glob``, exactly as the Spark index assigns new epochs to the
-    frozen centroids. Defaults replay the no-append case (fit = full glob)."""
+    ``fit_source_sql``: frozen-centroid replay for an APPENDED corpus
+    (ensure_doc_ivf's streamed-epoch append path) — the k-means fit sample,
+    seeds, and index params come from the BASE corpus relation while the
+    final assignment pass covers the full (appended) ``enriched_glob``,
+    exactly as the Spark index assigns new epochs to the frozen centroids.
+    The default replays the no-append case (fit = full glob)."""
     dim = len(qvec)
     qs = _qvec_sql(qvec)
-    n_centroids, n_probe = doc_ivf_params(
-        base_n_docs if base_n_docs is not None else _oracle_n_docs(enriched_glob)
-    )
+    num, den = DOC_IVF_PROBE_FRAC
 
     def assign(cent: str, name: str, src: str) -> str:
         return (
@@ -920,8 +862,15 @@ def _doc_ivf_ann_sql(
     ctes = [
         f"ev AS (SELECT CAST(doc_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v "
         f"FROM read_parquet('{enriched_glob}'))",
+        f"params AS (SELECT n_centroids, n_probe, "
+        f"least(n_centroids, {spec.DOC_IVF_ESCALATE_FACTOR} * n_probe) AS n_escalated FROM ("
+        f"SELECT n_centroids, least(n_centroids, greatest({DOC_IVF_MIN_PROBE}, "
+        f"(n_centroids * {num} + {den - 1}) // {den})) AS n_probe FROM ("
+        f"SELECT greatest({DOC_IVF_MIN_CENTROIDS}, CAST(floor(sqrt(count(*))) AS BIGINT)) "
+        f"AS n_centroids FROM {fit_rel})))",
         f"fs AS (SELECT * FROM {fit_rel} WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{DOC_IVF_FIT_HEX}')",
-        f"c0 AS (SELECT vec_id AS centroid_id, v AS cvec FROM fs ORDER BY vec_id ASC LIMIT {n_centroids})",
+        f"c0 AS (SELECT vec_id AS centroid_id, v AS cvec FROM fs ORDER BY vec_id ASC "
+        f"LIMIT (SELECT n_centroids FROM params))",
     ]
     for t in range(DOC_IVF_ITER):
         ctes.append(assign(f"c{t}", f"fa{t}", "fs"))
@@ -934,7 +883,6 @@ def _doc_ivf_ann_sql(
     # query; at the contract 3/8 fraction the tier equals the full scan).
     # max() is order-insensitive, so qmax is exact across engines; rn and
     # the comparison run on the same rounded doubles.
-    esc_probe = min(n_centroids, spec.DOC_IVF_ESCALATE_FACTOR * n_probe)
     ctes.append(
         f"csim AS (SELECT c.centroid_id, {_cos_nan0_sql('c.cvec', qs)} AS qsim "
         f"FROM c{DOC_IVF_ITER} c)"
@@ -942,8 +890,8 @@ def _doc_ivf_ann_sql(
     ctes.append(
         f"probed AS (SELECT centroid_id FROM ("
         f"SELECT centroid_id, row_number() OVER (ORDER BY qsim DESC, centroid_id ASC) AS rn, "
-        f"max(qsim) OVER () AS qmax FROM csim) "
-        f"WHERE rn <= {n_probe} OR (qmax < {spec.DOC_IVF_SIGNAL_MIN!r} AND rn <= {esc_probe}))"
+        f"max(qsim) OVER () AS qmax FROM csim), params "
+        f"WHERE rn <= n_probe OR (qmax < {spec.DOC_IVF_SIGNAL_MIN!r} AND rn <= n_escalated))"
     )
     ctes.append(
         f"ann AS (SELECT CAST(a.vec_id AS VARCHAR) AS doc_id, "
@@ -978,7 +926,6 @@ def _expansion_terms(enriched: DataFrame, terms: list[str]) -> DataFrame:
 # read driver-side (vocabulary-truncated: K rows at ANY corpus scale).
 ENTITY_FREQ_TABLE = "entity_freq_topk"
 ENTITY_FREQ_K = 100
-_EXP_CACHE: dict[tuple[str, str], tuple[str, list[tuple[str, int]]]] = {}
 
 
 def _entity_freq_table(source_table: str) -> str:
@@ -1002,7 +949,7 @@ def ensure_entity_freq(
     entity tokens — ONE aggregation at build time instead of a full-corpus
     explode + groupBy per pro_search_enhanced_ann query (at 10^12 docs the
     per-query aggregate is a corpus scan; this is a 100-row table). The
-    stage string carries the enriched manifest's snapshot lineage; a
+    stage string carries the source's ``Catalog.lineage``; a
     recommitted corpus triggers an automatic REBUILD (the table is K rows at
     any corpus scale, so refreshing it is far cheaper than paging an
     operator — unlike the doc-IVF index, whose rebuild is corpus-sized and
@@ -1010,8 +957,7 @@ def ensure_entity_freq(
     served lookup stays bit-identical to the in-plan derivation (whose
     ``~isin`` predicate drops NULLs) even under malformed extractions."""
     tbl = _entity_freq_table(source_table)
-    lineage = _manifest_lineage(cat.manifest(source_table))
-    stage = f"entity_freq k={ENTITY_FREQ_K} fp={lineage}"
+    stage = f"entity_freq k={ENTITY_FREQ_K} fp={cat.lineage(source_table)}"
     if cat.exists(tbl):
         prior = {m["stage"] for m in cat.metrics(tbl)}
         if not prior or prior == {stage}:
@@ -1034,31 +980,23 @@ def _expansion_terms_served(
     cat, terms: list[str], table: str = ENTITY_FREQ_TABLE
 ) -> list[str]:
     """Top-3 expansion terms from the materialized frequency table — a
-    driver-side lookup memoized by manifest snapshot ids (the centroid-cache
-    pattern), bit-identical to ``_expansion_terms`` over the same corpus
-    because the (n desc, term asc) global order is total and exclusion can
-    only consume |terms| of the K materialized rows."""
+    driver-side lookup memoized by lineage (``Catalog.read_arrow_memo``, as
+    the centroid matrix), bit-identical to ``_expansion_terms`` over the
+    same corpus because the (n desc, term asc) global order is total and
+    exclusion can only consume |terms| of the K materialized rows."""
     if len(terms) + 3 > ENTITY_FREQ_K:
         raise ValueError(f"query has too many terms for the {ENTITY_FREQ_K}-row stats")
-    man = cat.manifest(table)
-    ident = ";".join(
-        f"{pid}:{e['snapshot_id']}" for pid, e in sorted(man["partitions"].items())
-    )
-    key = (cat.root, table)
-    hit = _EXP_CACHE.get(key)
-    if hit is not None and hit[0] == ident:
-        rows = hit[1]
-    else:
-        tb = cat.read_arrow(table)
+
+    def ranked(tb) -> list[str]:
         rows = sorted(
             # drop NULL terms defensively (a pre-guard table could hold one;
             # None also breaks the (-n, term) sort key on a count tie)
             ((t, n) for t, n in zip(tb["term"].to_pylist(), tb["n"].to_pylist()) if t is not None),
             key=lambda r: (-r[1], r[0]),
         )
-        _EXP_CACHE[key] = (ident, rows)
-    out = [t for t, _ in rows if t not in set(terms)]
-    return out[:3]
+        return [t for t, _ in rows]
+
+    return [t for t in cat.read_arrow_memo(table, ranked) if t not in set(terms)][:3]
 
 
 def _pro_enhanced(

@@ -72,8 +72,8 @@ def enrich_stream(
     """Stream the interleaved corpus through the enrichment stages into the
     Catalog. Returns the started StreamingQuery (caller awaits/stops)."""
     from ..catalog import Catalog, with_bucket
-    from ..operators.enrichment import enrich_content
-    from ..operators.extraction import assemble_content, has_usable_text
+    from ..operators.extraction import has_usable_text
+    from ..plans.pipeline import enrich_docs
 
     stream = (
         spark.readStream.schema(SPANS_SCHEMA)
@@ -90,30 +90,23 @@ def enrich_stream(
         # docs with no usable text span go to the failed-rows table instead
         # of silently producing empty enrichments — stream and batch must
         # admit the SAME corpus or the reconciled graph diverges
-        usable = has_usable_text("spans")
         cat.commit_partitions(
-            batch_df.where(~usable).select(
+            batch_df.where(~has_usable_text("spans")).select(
                 epoch_key.alias("bucket"), "doc_id",
                 F.lit("enrich").alias("stage"), F.lit("no_text_spans").alias("reason"),
             ),
             "failed_rows_stream",
             stage=stage,
         )
-        # the SAME fused enrich stage as the batch plan (one logical plan,
-        # two execution modes) — Arrow-RE2 clean + shared token stream
-        enriched = enrich_content(assemble_content(batch_df.where(usable), clean=False))
-        # Epoch-scope the partition key: each micro-batch owns its own
-        # `<epoch>_<bucket>` partitions. A replayed epoch (foreachBatch may
-        # re-deliver after a failure) hits already-manifested keys and is
-        # skipped (exactly-once effective); a NEW epoch always lands in fresh
-        # partitions — without this, epoch 1 claims all n_buckets keys and
-        # every later micro-batch would be silently dropped.
-        enriched = enriched.withColumn(
-            "bucket", F.concat_ws("_", F.lit(int(epoch_id)), F.col("bucket"))
-        ).select(
-            "bucket", "doc_id", "url", "title", "doc_date", "content", "summary",
-            "entities", "topics", "embedding", "media_refs",
-        )
+        # the SAME enrich body as the batch plan (one logical plan, two
+        # execution modes). Epoch-scope the partition key: each micro-batch
+        # owns its own `<epoch>_<bucket>` partitions. A replayed epoch
+        # (foreachBatch may re-deliver after a failure) hits already-
+        # manifested keys and is skipped (exactly-once effective); a NEW
+        # epoch always lands in fresh partitions — without this, epoch 1
+        # claims all n_buckets keys and every later micro-batch would be
+        # silently dropped.
+        enriched = enrich_docs(batch_df).withColumn("bucket", epoch_key)
         cat.commit_partitions(enriched, "enriched_stream", stage=stage)
 
     return (
@@ -148,9 +141,7 @@ def triples_stream(
     over the accumulated ``enriched_stream`` corpus and ``serving_triples``
     exposes the converged three-predicate set."""
     from ..catalog import Catalog, with_bucket
-    from ..operators.enrichment import enrich_content
-    from ..operators.extraction import assemble_content, has_usable_text
-    from ..plans.pipeline import mention_topic_triples
+    from ..plans.pipeline import enrich_docs, mention_topic_triples
 
     stream = (
         spark.readStream.schema(SPANS_SCHEMA)
@@ -161,11 +152,8 @@ def triples_stream(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        # same admission rule as the batch stage (see enrich_stream)
-        enriched = enrich_content(
-            assemble_content(batch_df.where(has_usable_text("spans")), clean=False)
-        )
-        enriched = with_bucket(enriched, "doc_id", n_buckets)
+        # the SAME enrich body (and admission rule) as the batch stage
+        enriched = enrich_docs(with_bucket(batch_df, "doc_id", n_buckets))
         triples = mention_topic_triples(enriched)
         triples = triples.withColumn(
             "bucket", F.concat_ws("_", F.lit(int(epoch_id)), F.col("bucket"))

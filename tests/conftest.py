@@ -1,11 +1,21 @@
 from __future__ import annotations
 
+import atexit
+import os
 import shutil
 import tempfile
 
 import pytest
 
-from semantic_search_system_spark.session import _DEF_CPUS, get_spark
+# Every table the suite derives (interleaved corpora, pipeline outputs,
+# indexes, stores) lands in one session temp root, never in the checkout:
+# set before the package is imported, because fixtures.interleave reads it
+# at import time.
+DATA_ROOT = tempfile.mkdtemp(prefix="sss_data_")
+os.environ["SSS_SPARK_DATA_DIR"] = DATA_ROOT
+atexit.register(shutil.rmtree, DATA_ROOT, True)
+
+from semantic_search_system_spark.session import _DEF_CPUS, get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"

@@ -151,12 +151,12 @@ def test_minhash_store_idempotent_and_rebuilds(spark, tmp_root):
 
     cat = Catalog(tmp_root)
     corpus = E._dup_corpus(spark, SF_SMALL)
-    E.ensure_minhash_store(spark, cat, corpus)
+    E.ensure_minhash_store(spark, cat, corpus, "corpus-v1")
     snap1 = {
         pid: e["snapshot_id"]
         for pid, e in cat.manifest(E.MINHASH_STORE_TABLE)["partitions"].items()
     }
-    E.ensure_minhash_store(spark, cat, corpus)
+    E.ensure_minhash_store(spark, cat, corpus, "corpus-v1")
     snap2 = {
         pid: e["snapshot_id"]
         for pid, e in cat.manifest(E.MINHASH_STORE_TABLE)["partitions"].items()
@@ -167,10 +167,14 @@ def test_minhash_store_idempotent_and_rebuilds(spark, tmp_root):
             F.concat(F.lit("extra_"), F.col("doc_id")).alias("doc_id"), "text"
         )
     )
-    E.ensure_minhash_store(spark, cat, grown)
+    E.ensure_minhash_store(spark, cat, grown, "corpus-v2")
     stages = {m["stage"] for m in cat.metrics(E.MINHASH_STORE_TABLE)}
-    assert len(stages) == 1 and "fp=" in next(iter(stages))
-    assert next(iter(stages)) != f"minhash_store v{E.spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={corpus.count()}"
+    assert stages == {f"minhash_store v{E.spec.SPEC_VERSION} n_perm=16 split=md5p5 fp=corpus-v2"}
+    snap3 = {
+        pid: e["snapshot_id"]
+        for pid, e in cat.manifest(E.MINHASH_STORE_TABLE)["partitions"].items()
+    }
+    assert not set(snap3.values()) & set(snap1.values()), "changed fingerprint must rebuild"
 
 
 def test_minhash_store_rebuilds_on_same_size_rewrite(spark, tmp_root):
@@ -183,7 +187,7 @@ def test_minhash_store_rebuilds_on_same_size_rewrite(spark, tmp_root):
     import pyarrow.parquet as pq
 
     from semantic_search_system_spark import entrypoints as E
-    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.catalog import Catalog, file_lineage
 
     sf = os.path.join(tmp_root, "sf")
     os.makedirs(sf)
@@ -200,8 +204,8 @@ def test_minhash_store_rebuilds_on_same_size_rewrite(spark, tmp_root):
         )
 
     def store():
-        fp = E._source_file_fingerprint(sf)
-        E.ensure_minhash_store(spark, cat, E._dup_corpus(spark, sf), fingerprint=fp)
+        fp = file_lineage(path)
+        E.ensure_minhash_store(spark, cat, E._dup_corpus(spark, sf), fp)
         rows = cat.read(spark, E.MINHASH_STORE_TABLE).collect()
         return fp, sorted((r["doc_id"], tuple(r["minhash"])) for r in rows)
 
@@ -232,9 +236,9 @@ def test_ivf_index_materialized(spark, tmp_root):
 
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cat = Catalog(tmp_root)
-    build_ivf_index(spark, e, cat, n_centroids=8, n_iter=2)
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=8, n_iter=2)
     snaps = len(cat.manifest("ivf_assign")["snapshots"])
-    build_ivf_index(spark, e, cat, n_centroids=8, n_iter=2)  # no-op resume
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=8, n_iter=2)  # no-op resume
     assert len(cat.manifest("ivf_assign")["snapshots"]) == snaps
     # partitioned by centroid id on disk
     bucket_dirs = [d for d in os.listdir(cat.path("ivf_assign")) if d.startswith("bucket=")]
@@ -255,12 +259,13 @@ def test_ivf_centroid_read_memoized(spark, tmp_root, monkeypatch):
     re-read on the next query."""
     import shutil
 
+    from semantic_search_system_spark import catalog
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.operators import similarity as sim
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cat = Catalog(tmp_root)
-    sim.build_ivf_index(spark, e, cat, n_centroids=4, n_iter=1)
+    sim.build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
     q = e.where(F.col("vec_id") == 1).select("embedding").collect()[0][0]
 
     reads = {"n": 0}
@@ -271,14 +276,14 @@ def test_ivf_centroid_read_memoized(spark, tmp_root, monkeypatch):
         return orig(self, table)
 
     monkeypatch.setattr(Catalog, "read_arrow", counting)
-    sim._CENTROID_CACHE.clear()
+    catalog._ARROW_MEMO.clear()
     sim.ivf_topk_indexed(spark, cat, q, k=5, n_probe=2).collect()
     sim.ivf_topk_indexed(spark, cat, q, k=5, n_probe=2).collect()
     assert reads["n"] == 1
     # rebuild → new snapshot ids → the cache must invalidate
     shutil.rmtree(cat.path("ivf_centroids"))
     shutil.rmtree(cat.path("ivf_assign"))
-    sim.build_ivf_index(spark, e, cat, n_centroids=4, n_iter=1)
+    sim.build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
     sim.ivf_topk_indexed(spark, cat, q, k=5, n_probe=2).collect()
     assert reads["n"] >= 2
 
@@ -296,7 +301,7 @@ def test_ivf_recall_vs_bruteforce(spark):
 
 
 def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
-    """A changed input (row set or embeddings) must raise on index reuse, not
+    """A changed input (a different lineage) must raise on index reuse, not
     silently serve stale assignments (round-2 ADVICE #1)."""
     import pytest
 
@@ -305,23 +310,84 @@ def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cat = Catalog(tmp_root)
-    build_ivf_index(spark, e, cat, n_centroids=4, n_iter=1)
-    build_ivf_index(spark, e, cat, n_centroids=4, n_iter=1)  # same input → no-op
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)  # same input → no-op
     with pytest.raises(ValueError, match="built with"):
-        build_ivf_index(spark, e.where("vec_id <> 3"), cat, n_centroids=4, n_iter=1)
+        build_ivf_index(spark, e.where("vec_id <> 3"), cat, "emb-v2", n_centroids=4, n_iter=1)
 
 
-def test_kmeans_driver_fit_matches_distributed(spark):
+def test_ivf_index_resume_submits_no_spark_job(spark, tmp_root):
+    """Reusing an index under the same lineage is a manifest string compare:
+    zero Spark jobs (the former input fingerprint scanned the input on every
+    call)."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.operators.similarity import build_ivf_index
+
+    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    cat = Catalog(tmp_root)
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
+    snaps = {t: cat.manifest(t)["snapshots"] for t in ("ivf_centroids", "ivf_assign")}
+    _, jobs = with_job_count(
+        spark, lambda: build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
+    )
+    assert jobs == 0
+    assert {t: cat.manifest(t)["snapshots"] for t in snaps} == snaps
+
+
+def test_ann_ivf_top10_rebuilds_on_rewritten_embeddings(spark, tmp_root, monkeypatch):
+    """ann_ivf_top10 keys its index on the file lineage of embeddings.parquet:
+    after the file is rewritten it drops and refits the index (no raise),
+    and the probe serves the new vectors."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semantic_search_system_spark import entrypoints as E
+    from semantic_search_system_spark.catalog import Catalog
+
+    sf = os.path.join(tmp_root, "sf")
+    os.makedirs(sf)
+    path = os.path.join(sf, "embeddings.parquet")
+    shutil.copy(f"{SF_SMALL}/embeddings.parquet", path)
+    monkeypatch.setattr(E, "out_root", lambda sf_dir: os.path.join(tmp_root, "out"))
+    cat = Catalog(os.path.join(tmp_root, "out"))
+
+    first = E.ann_ivf_top10(spark, sf).collect()
+    cent = cat.manifest("ivf_centroids")["snapshots"]
+    # rewrite: every embedding negated (same size, new content and mtime)
+    tb = pq.read_table(path)
+    i = tb.schema.get_field_index("embedding")
+    neg = [[-x for x in v] for v in tb["embedding"].to_pylist()]
+    neg = pa.array(neg, type=tb.schema.field(i).type)
+    pq.write_table(tb.set_column(i, tb.schema.field(i), neg), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+    second = E.ann_ivf_top10(spark, sf).collect()
+    assert cat.manifest("ivf_centroids")["snapshots"] != cent, "index was not refit"
+    stages = {m["stage"] for t in ("ivf_centroids", "ivf_assign") for m in cat.metrics(t)}
+    assert len(stages) == 1
+    assert first and second
+    # the query is row 0 of the file, so its own cosine is 1.0 either way,
+    # and the negated corpus re-indexed from scratch serves the same ids
+    assert [r["vec_id"] for r in second] == [r["vec_id"] for r in first]
+
+
+def test_kmeans_driver_fit_matches_distributed(spark, monkeypatch):
     """The driver-side Lloyd over the collected sample must reach bit-for-bit
     the same centroids as the distributed loop (same seeding, rounding, and
     tie-breaks) — the committed IVF artifacts and the DuckDB oracle depend on
     this fixpoint being path-independent."""
-    from semantic_search_system_spark.operators.similarity import kmeans_centroids
+    from semantic_search_system_spark.operators import similarity as sim
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     for hex_ in (None, "80"):
-        driver = kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
-        dist = kmeans_centroids(e, 8, 2, fit_sample_hex=hex_, max_driver_fit=0)
+        driver = sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
+        with monkeypatch.context() as m:
+            m.setattr(sim, "MAX_DRIVER_FIT", 0)
+            dist = sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
         assert driver == dist
 
 
@@ -331,18 +397,38 @@ def test_doc_ivf_rejects_non_canonical_doc_ids(spark, tmp_path):
     rejoin inside _hybrid (recall degrades with no error, round-4 ADVICE)."""
     import pytest
 
-    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.catalog import Catalog, with_bucket
     from semantic_search_system_spark.plans import search as S
     from semantic_search_system_spark.session import local_df
 
     cat = Catalog(str(tmp_path))
     for bad_id in ("007", "abc"):
-        enr = local_df(
+        frame = local_df(
             spark, [(bad_id, [1.0, 0.0]), ("12", [0.0, 1.0])],
             "doc_id string, embedding array<double>",
         )
+        cat.overwrite(with_bucket(frame, "doc_id", 2), "enriched", stage="enrich")
         with pytest.raises(ValueError, match="canonical"):
-            S.ensure_doc_ivf(spark, cat, enr)
+            S.ensure_doc_ivf(spark, cat, cat.read(spark, "enriched"))
+
+
+def test_doc_ivf_rejects_uncommitted_source(spark, tmp_path):
+    """The doc-IVF index takes its size, covers and lineage from the source
+    manifest, so an ad-hoc frame or an empty table raises one clear error
+    instead of being counted and fingerprinted by Spark scans."""
+    import pytest
+
+    from semantic_search_system_spark.catalog import Catalog, with_bucket
+    from semantic_search_system_spark.plans import search as S
+    from semantic_search_system_spark.session import local_df
+
+    cat = Catalog(str(tmp_path))
+    frame = local_df(spark, [("12", [0.0, 1.0])], "doc_id string, embedding array<double>")
+    with pytest.raises(ValueError, match="no committed rows"):
+        S.ensure_doc_ivf(spark, cat, frame)
+    cat.overwrite(with_bucket(frame.limit(0), "doc_id", 2), "enriched", stage="enrich")
+    with pytest.raises(ValueError, match="no committed rows"):
+        S.ensure_doc_ivf(spark, cat, cat.read(spark, "enriched"))
 
 
 def test_doc_ivf_params_scaling():
@@ -504,7 +590,7 @@ def test_doc_ivf_append_serves_streamed_epochs(spark, tmp_root):
     # cross-engine proof: DuckDB replays the frozen-centroid assignment
     full_glob = f"{cat.path('enriched_stream')}/bucket=*/*.parquet"
     fit_src = "read_parquet([" + ", ".join(f"'{p}'" for p in base_files) + "])"
-    sql = S.pro_search_ann_sql(full_glob, fit_source_sql=fit_src, base_n_docs=n_base)
+    sql = S.pro_search_ann_sql(full_glob, fit_source_sql=fit_src)
     r = compare(res, sql, duck_con(SF_SMALL))
     assert r["rows_match"] and r["schema_match"] and r["values_match"], r
 

@@ -306,11 +306,12 @@ def test_entity_map_driver_bounds(spark, tmp_root, monkeypatch):
     assert rows == ref and jobs > 0
 
 
-def test_topic_map_driver_matches_distributed(spark, tmp_root):
+def test_topic_map_driver_matches_distributed(spark, tmp_root, monkeypatch):
     """The driver fast path must produce the EXACT (phrase_norm, broad_topic)
     table the distributed embed→blocked-join→CC→label plan produces."""
     import os
 
+    import semantic_search_system_spark.plans.pipeline as P
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans.pipeline import (
         build_enriched,
@@ -325,9 +326,10 @@ def test_topic_map_driver_matches_distributed(spark, tmp_root):
     }
     cat2 = Catalog(os.path.join(tmp_root, "b"))
     enriched2 = build_enriched(spark, SF_SMALL, cat2)
+    monkeypatch.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
     slow = {
         (r["phrase_norm"], r["broad_topic"])
-        for r in build_topic_map(spark, cat2, enriched2, driver_vocab_limit=0).collect()
+        for r in build_topic_map(spark, cat2, enriched2).collect()
     }
     assert fast == slow and len(fast) > 100
 
@@ -359,16 +361,15 @@ def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
         vocab = [e["text"] for r in enriched.select(col).collect() for e in r[col]]
         assert vocab and all(t.isascii() for t in vocab), vocab
 
-    # the distributed twins: topic_map takes its bound as an argument,
-    # entity_map reads DRIVER_VOCAB_LIMIT per call
-    for build, force in ((P.build_topic_map, {"driver_vocab_limit": 0}), (P.build_entity_map, {})):
+    # the distributed twins: both stages read DRIVER_VOCAB_LIMIT per call
+    for build in (P.build_topic_map, P.build_entity_map):
         name = build.__name__
         fast, fast_jobs = with_job_count(
             spark, lambda: build(spark, Catalog(os.path.join(tmp_root, f"{name}_a")), enriched)
         )
         with monkeypatch.context() as m:
             m.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
-            slow = build(spark, Catalog(os.path.join(tmp_root, f"{name}_b")), enriched, **force)
+            slow = build(spark, Catalog(os.path.join(tmp_root, f"{name}_b")), enriched)
         assert fast_jobs == 0
         fast, slow = (sorted(map(tuple, t.collect())) for t in (fast, slow))
         assert fast and fast == slow, name

@@ -165,18 +165,19 @@ def test_incremental_dedup_reads_signature_store(spark):
     the operator would silently degrade to re-hashing the full corpus per
     epoch (correct output, 100-TB regression). Built with checkpoint=False
     so the eager localCheckpoints don't truncate the visible lineage."""
-    from semantic_search_system_spark.catalog import Catalog
+    import os
+
+    from semantic_search_system_spark.catalog import Catalog, file_lineage
     from semantic_search_system_spark.operators.dedup import (
         incremental_minhash_near_dups,
     )
 
     corpus = ep._dup_corpus(spark, SF_MED)
     cat = Catalog(ep.out_root(SF_MED))
-    # the registry fingerprint, NOT the count fallback: this ensure targets
-    # the shared registry store, and a different stage string would rebuild
-    # the committed table on every test run (round 8)
+    # the registry's fingerprint: this ensure targets the shared registry
+    # store, and a different stage string would rebuild it
     ep.ensure_minhash_store(
-        spark, cat, corpus, fingerprint=ep._source_file_fingerprint(SF_MED)
+        spark, cat, corpus, file_lineage(os.path.join(SF_MED, "documents.parquet"))
     )
     old_sigs = cat.read(spark, ep.MINHASH_STORE_TABLE).select("doc_id", "minhash")
     df = incremental_minhash_near_dups(
@@ -195,7 +196,7 @@ def test_ivf_probe_scans_only_probed_partitions(spark, tmp_root):
 
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cat = Catalog(tmp_root)
-    build_ivf_index(spark, e, cat, n_centroids=8, n_iter=2)
+    build_ivf_index(spark, e, cat, "emb-v1", n_centroids=8, n_iter=2)
     n_total = cat.read(spark, "ivf_assign").count()
     hits = cat.read_buckets(
         spark, "ivf_assign", sorted(cat.read(spark, "ivf_assign")
@@ -247,6 +248,7 @@ def test_served_expansion_matches_derived(spark):
     deriving them from docs, so any divergence would hash-fail
     search_pro_enhanced_ann): exclusion consumes at most |terms| of the K
     materialized rows, and the (n desc, term asc) order is total."""
+    from semantic_search_system_spark import catalog
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans import search as S
     from semantic_search_system_spark.plans.pipeline import ensure_enriched
@@ -258,9 +260,10 @@ def test_served_expansion_matches_derived(spark):
         terms, _ = S._params(qt)
         derived = [r["term"] for r in S._expansion_terms(enr, terms).collect()]
         assert S._expansion_terms_served(cat, terms) == derived, qt
-    # second lookup is memoized (no parquet re-read): drop the cache entry
-    # guard by checking the cache is populated with the manifest identity
-    assert (cat.root, S.ENTITY_FREQ_TABLE) in S._EXP_CACHE
+    # lookups are memoized (no parquet re-read per query): the shared memo
+    # holds the statistic under its current lineage
+    hit = catalog._ARROW_MEMO[(cat.root, S.ENTITY_FREQ_TABLE)]
+    assert hit[0] == cat.lineage(S.ENTITY_FREQ_TABLE)
 
 
 def test_entity_freq_auto_rebuild_on_lineage_change(spark, tmp_root):
@@ -419,3 +422,21 @@ def test_entity_freq_per_source_tables_do_not_thrash(spark, tmp_root):
     assert stream_tbl != S.ENTITY_FREQ_TABLE and cat.exists(stream_tbl)
     assert S._expansion_terms_served(cat, ["zzz"]) == ["alpha"]
     assert S._expansion_terms_served(cat, ["zzz"], table=stream_tbl) == ["beta"]
+
+
+def test_enrich_body_evaluates_udf_once(spark):
+    """The fused enrich UDF runs ONCE per consumer of the shared enrich body
+    (plans.pipeline.enrich_docs): in the enriched projection the batch stage
+    and enrich_stream commit, and in the mention_topic_triples explode that
+    triples_stream runs over it. A filter or explode that Spark infers over
+    an un-materialized UDF output could otherwise evaluate the UDF twice (two
+    ArrowEvalPython nodes)."""
+    from semantic_search_system_spark.catalog import with_bucket
+    from semantic_search_system_spark.plans import pipeline as P
+
+    docs = with_bucket(P.read_interleaved(spark, SF_SMALL), "doc_id", P.N_BUCKETS)
+    enriched = P.enrich_docs(docs)
+    for name, df in (("enriched", enriched), ("triples", P.mention_topic_triples(enriched))):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        assert len(nodes) == 1, (name, plan)

@@ -9,11 +9,11 @@ import shutil
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from conftest import SF_SMALL  # noqa: E402
 
-REPO = "/root/repo"
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 
