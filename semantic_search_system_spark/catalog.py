@@ -37,6 +37,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,6 +112,95 @@ def with_bucket(df: DataFrame, key: str = "doc_id", n_buckets: int = 8) -> DataF
     """Deterministic hash-bucketing — the table's partition spec
     (Iceberg ``bucket(n, doc_id)`` transform equivalent)."""
     return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+
+
+# XXH64's primes (the algorithm's own constants, as in Spark's XXH64.java)
+_P1, _P2, _P3, _P4, _P5 = map(
+    np.uint64,
+    (
+        0x9E3779B185EBCA87,
+        0xC2B2AE3D27D4EB4F,
+        0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63,
+        0x27D4EB2F165667C5,
+    ),
+)
+
+
+def _xxh64_fixed(B: np.ndarray, seed: int) -> np.ndarray:
+    """XXH64 of each row of ``B`` (m × L uint8, every row L bytes long), as
+    uint64 — Spark's ``XXH64.hashUnsafeBytes``, one numpy op per step over
+    all m rows. uint64 arithmetic wraps mod 2^64 like Java's long."""
+    m, L = B.shape
+
+    def word(i, width=8):
+        return np.ascontiguousarray(B[:, i : i + width]).view(f"<u{width}")[:, 0].astype(np.uint64)
+
+    def rotl(x, r):
+        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+    def round_(acc, lane):
+        return rotl(acc + lane * _P2, 31) * _P1
+
+    def lanes(*starts):  # the seed-derived start values, wrapped to uint64
+        return [np.full(m, s % (1 << 64), dtype=np.uint64) for s in starts]
+
+    off = 0
+    if L >= 32:
+        v = lanes(seed + int(_P1) + int(_P2), seed + int(_P2), seed, seed - int(_P1))
+        while off + 32 <= L:
+            v = [round_(v[i], word(off + 8 * i)) for i in range(4)]
+            off += 32
+        h = rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)
+        for x in v:
+            h = (h ^ round_(np.uint64(0), x)) * _P1 + _P4
+    else:
+        (h,) = lanes(seed + int(_P5))
+    h = h + np.uint64(L)
+    while off + 8 <= L:
+        h = rotl(h ^ round_(np.uint64(0), word(off)), 27) * _P1 + _P4
+        off += 8
+    if off + 4 <= L:
+        h = rotl(h ^ word(off, 4) * _P1, 23) * _P2 + _P3
+        off += 4
+    for i in range(off, L):
+        h = rotl(h ^ B[:, i].astype(np.uint64) * _P5, 11) * _P1
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def arrow_bucket(values, n_buckets: int) -> np.ndarray:
+    """The bucket ``with_bucket`` assigns — ``pmod(xxhash64(col), n)`` —
+    computed on the driver for a pyarrow string array, as int32. Spark hashes
+    a string's UTF-8 bytes with XXH64 and seed 42, and a null hashes to the
+    seed itself (bucket ``42 mod n``). Each DISTINCT value is hashed once;
+    values are grouped by byte length, so every group is one vectorized pass."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if not (pa.types.is_string(values.type) or pa.types.is_large_string(values.type)):
+        raise TypeError(f"arrow_bucket hashes strings, not {values.type}")
+    enc = pc.dictionary_encode(values)
+    uniq = pc.cast(enc.dictionary, pa.large_string())
+    offs = np.frombuffer(uniq.buffers()[1], dtype=np.int64)[uniq.offset : uniq.offset + len(uniq) + 1]
+    data = np.frombuffer(uniq.buffers()[2] or b"", dtype=np.uint8)
+    lens = np.diff(offs)
+    hashes = np.empty(len(uniq), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for L in np.unique(lens):
+            rows = np.flatnonzero(lens == L)
+            hashes[rows] = _xxh64_fixed(data[offs[rows, None] + np.arange(L)], 42)
+    # numpy's % takes the divisor's sign, which is Spark's pmod for n > 0
+    per_value = (hashes.view(np.int64) % n_buckets).astype(np.int32)
+    out = np.full(len(values), 42 % n_buckets, dtype=np.int32)
+    valid = enc.indices.is_valid().to_numpy(zero_copy_only=False)
+    out[valid] = per_value[enc.indices.drop_null().to_numpy()]
+    return out
 
 
 def _arrow_type(dt):
@@ -361,8 +451,8 @@ class Catalog:
         schema is ``schema.json()`` — pass the StructType the Spark branch
         of the same table writes, or the other branch's first commit raises
         schema drift."""
-        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         t0 = time.time()
@@ -381,14 +471,15 @@ class Catalog:
         staging = self._fresh_staging(table)
         os.makedirs(staging)
         tb = tb.sort_by(BUCKET_COL)  # stable: one contiguous run per partition
-        keys = np.asarray(tb[BUCKET_COL].to_pylist(), dtype=object)
-        cuts = (np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()
-        starts = [0, *cuts, len(keys)] if len(keys) else []
+        # run boundaries of the sorted key column: one run per partition
+        runs = pc.run_end_encode(tb[BUCKET_COL].combine_chunks())
+        keys = [str(k) for k in runs.values.to_pylist()]
+        starts = [0, *runs.run_ends.to_pylist()]
         data = tb.drop_columns([BUCKET_COL])
-        rows_by_bucket = {str(keys[lo]): hi - lo for lo, hi in zip(starts, starts[1:])}
+        rows_by_bucket = {k: hi - lo for k, lo, hi in zip(keys, starts, starts[1:])}
 
-        def _write(lo: int, hi: int) -> None:
-            d = os.path.join(staging, f"{BUCKET_COL}={keys[lo]}")
+        def _write(key: str, lo: int, hi: int) -> None:
+            d = os.path.join(staging, f"{BUCKET_COL}={key}")
             os.makedirs(d)
             pq.write_table(
                 data.slice(lo, hi - lo),
@@ -398,7 +489,7 @@ class Catalog:
 
         # per-partition files are independent; pyarrow releases the GIL
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(rows_by_bucket)))) as pool:
-            list(pool.map(_write, starts[:-1], starts[1:]))
+            list(pool.map(_write, keys, starts[:-1], starts[1:]))
         return self._publish_staging(
             staging, table, stage, schema.json(), t0, rows_by_bucket
         )

@@ -206,3 +206,112 @@ def test_set_properties_single_save(tmp_root):
     assert fresh.get_property("t", "covers") == {"0_1": "s"}
     assert fresh.get_property("t", "params") == [8, 3]
     assert fresh.get_property("t", "fit_rows") == 10
+
+
+def _hash_inputs() -> list:
+    """~10k strings for the XXH64 kernel: the case-mapping outliers ('İ', a
+    final 'Σ'), CJK, the 31/32/33-byte boundaries of the 32-byte stripe
+    loop, longer strings, empties and nulls, plus random mixed-script text
+    of 0-80 characters."""
+    import random
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ 0189_-.İıΣσςéß中文字😀"
+    fixed = ["", "İ", "ΟΔΟΣ", "Σ", "中文字", "知识图谱", None, None, "x" * 31, "y" * 32,
+             "z" * 33, "é" * 16, "w" * 63, "v" * 64, "u" * 65, "t" * 200]
+    return fixed + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 80))) for _ in range(10_000)
+    ]
+
+
+@pytest.mark.parametrize("n", [8, 1, 7])
+def test_arrow_bucket_matches_spark(spark, n):
+    """``arrow_bucket`` (numpy XXH64, seed 42) gives every string the bucket
+    ``with_bucket`` gives it — ``pmod(xxhash64(col), n)``, including the
+    null bucket ``42 mod n`` and, for n = 7, the pmod of negative hashes."""
+    import pyarrow as pa
+
+    from semantic_search_system_spark.catalog import arrow_bucket
+
+    values = _hash_inputs()
+    df = with_bucket(spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, s string"), "s", n)
+    expected = [r[BUCKET_COL] for r in df.orderBy("i").collect()]
+    got = arrow_bucket(pa.array(values, pa.string()), n)
+    assert got.dtype.name == "int32"
+    assert got.tolist() == expected
+    assert got.tolist() == arrow_bucket(pa.chunked_array([values[:5], values[5:]], pa.large_string()), n).tolist()
+
+
+def test_arrow_bucket_rejects_non_strings():
+    import pyarrow as pa
+
+    from semantic_search_system_spark.catalog import arrow_bucket
+
+    with pytest.raises(TypeError, match="strings"):
+        arrow_bucket(pa.array([1, 2, 3]), 8)
+
+
+def _part_files(cat, table):
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(cat.path(table), d)) if f.endswith(".parquet"))
+        for d in os.listdir(cat.path(table))
+        if d.startswith(f"{BUCKET_COL}=")
+    }
+
+
+@pytest.mark.parametrize("compact", [True, False])
+def test_spark_commit_compacts_small_partitions(spark, tmp_root, sample, monkeypatch, compact):
+    """Compact-on-commit: a Spark write whose partitions are split across
+    several task files ends as ONE file per partition while the partition
+    is under ``COMPACT_COMMIT_BYTES``; with the constant at 0 the task files
+    stay. Rows and ``rows_written`` are the same either way."""
+    from semantic_search_system_spark import catalog
+
+    if not compact:
+        monkeypatch.setattr(catalog, "COMPACT_COMMIT_BYTES", 0)
+    cat = Catalog(tmp_root)
+    cat.commit_partitions(sample.repartition(5), "t", stage="s1")
+    files = _part_files(cat, "t")
+    assert len(files) == 4
+    if compact:
+        assert all(fs == ["part-00000-compacted.snappy.parquet"] for fs in files.values())
+    else:
+        assert all(len(fs) > 1 for fs in files.values())
+    back = cat.read(spark, "t")
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, sample.collect()))
+    per_bucket = {str(r[BUCKET_COL]): r["count"] for r in back.groupBy(BUCKET_COL).count().collect()}
+    assert {k: e["rows_written"] for k, e in cat.manifest("t")["partitions"].items()} == per_bucket
+
+
+def test_local_commit_splits_keys_and_is_never_compacted(tmp_root, monkeypatch):
+    """``commit_partitions_local`` finds one run per partition key in the
+    sorted key column — integer batch buckets and '<epoch>_<bucket>' string
+    keys alike — writes one file per partition, records ``writer: local``,
+    and never passes its partitions through compaction."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    from pyspark.sql import types as T
+
+    from semantic_search_system_spark import catalog
+
+    compacted = []
+    monkeypatch.setattr(catalog, "compact_small_dir", compacted.append)
+    cat = Catalog(tmp_root)
+    for table, keys, ktype in [
+        ("ints", [3, 0, 3, 1, 0, 3], T.IntegerType()),
+        ("epochs", ["1_3", "0_1", "1_3", "0_10", "0_1", "1_3"], T.StringType()),
+    ]:
+        schema = T.StructType([T.StructField("v", T.LongType()), T.StructField(BUCKET_COL, ktype)])
+        rows = pa.table({"v": list(range(6)), BUCKET_COL: keys})
+        committed = cat.commit_partitions_local(rows, schema, table, stage="s1")
+        expected = {}
+        for v, k in zip(range(6), keys):
+            expected.setdefault(str(k), []).append(v)
+        assert {k: e["rows_written"] for k, e in committed.items()} == {k: len(v) for k, v in expected.items()}
+        assert [s["writer"] for s in cat.manifest(table)["snapshots"]] == ["local"]
+        files = _part_files(cat, table)
+        assert all(fs == ["part-00000-local.snappy.parquet"] for fs in files.values())
+        for k, vs in expected.items():
+            d = os.path.join(cat.path(table), f"{BUCKET_COL}={k}")
+            assert sorted(pads.dataset(d, format="parquet").to_table()["v"].to_pylist()) == vs
+    assert compacted == []

@@ -373,3 +373,123 @@ def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
         assert fast_jobs == 0
         fast, slow = (sorted(map(tuple, t.collect())) for t in (fast, slow))
         assert fast and fast == slow, name
+
+
+_KG_TABLES = ("triples", "nodes", "edges")
+
+
+@pytest.fixture(scope="module", params=["sf_small", "generated_4k"])
+def kg_inputs(request, spark, tmp_path_factory):
+    """(enriched, topic_map) committed in their own Catalog: SF_SMALL, or a
+    generated 4,000-doc corpus (random texts over a 30-word vocabulary)."""
+    import numpy as np
+
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.fixtures.interleave import build_interleaved
+
+    root = str(tmp_path_factory.mktemp(f"kg_{request.param}"))
+    sf_dir = SF_SMALL
+    if request.param == "generated_4k":
+        rng = np.random.default_rng(5)
+        vocab = np.asarray(
+            "a agg batch big column customer data fast filter group hash join key line merge "
+            "order part query row scan slow small sort spark stream table the value vector window".split()
+        )
+        sf_dir = os.path.join(root, "gen_4k")
+        os.makedirs(sf_dir)
+        pd.DataFrame(
+            {
+                "doc_id": np.arange(4000),
+                "text": [" ".join(rng.choice(vocab, rng.integers(10, 100))) for _ in range(4000)],
+            }
+        ).to_parquet(os.path.join(sf_dir, "documents.parquet"), index=False)
+        build_interleaved(sf_dir, force=True)
+    cat = Catalog(os.path.join(root, "src"))
+    enriched = P.build_enriched(spark, sf_dir, cat)
+    yield enriched, P.build_topic_map(spark, cat, enriched)
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def _kg_build(spark, root, enriched, topic_map, n_buckets=None):
+    """(rows per table, manifest schema per table, Spark jobs, writer per
+    snapshot) of build_triples + build_graph into the Catalog at ``root``;
+    ``n_buckets`` limits triples to its first buckets and skips the graph."""
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.catalog import Catalog
+
+    cat = Catalog(root)
+
+    def build():
+        if n_buckets is not None:
+            return P.build_triples(spark, cat, enriched, topic_map, n_buckets)
+        return P.build_graph(spark, cat, enriched, P.build_triples(spark, cat, enriched, topic_map))
+
+    _, jobs = with_job_count(spark, build)
+    tables = [t for t in _KG_TABLES if cat.exists(t)]
+    rows = {t: sorted(map(tuple, cat.read(spark, t).collect()), key=repr) for t in tables}
+    schemas = {t: cat.manifest(t)["schema"] for t in tables}
+    writers = {t: [s["writer"] for s in cat.manifest(t)["snapshots"]] for t in tables}
+    return rows, schemas, jobs, writers
+
+
+def test_triples_graph_driver_matches_distributed(spark, tmp_root, monkeypatch, kg_inputs):
+    """The driver branch of build_triples + build_graph (pyarrow, zero Spark
+    jobs) writes the EXACT rows — bucket included — and manifest schemas of
+    the distributed plans, which ``DRIVER_VOCAB_SCAN_BYTES = 0`` forces."""
+    import semantic_search_system_spark.plans.pipeline as P
+
+    enriched, topic_map = kg_inputs
+    fast, fast_schemas, fast_jobs, fast_writers = _kg_build(spark, os.path.join(tmp_root, "a"), *kg_inputs)
+    monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    slow, slow_schemas, slow_jobs, slow_writers = _kg_build(spark, os.path.join(tmp_root, "b"), *kg_inputs)
+    assert fast_jobs == 0 and slow_jobs > 0
+    assert fast_writers == {t: ["local"] for t in _KG_TABLES}
+    assert slow_writers == {t: ["spark"] for t in _KG_TABLES}
+    assert fast_schemas == slow_schemas
+    for t in _KG_TABLES:
+        assert fast[t] == slow[t], t
+    assert len(fast["triples"]) == len(fast["edges"]) > 1000
+    assert {b for *_, b in fast["triples"]} == set(range(P.N_BUCKETS))
+    kinds = {r[1] for r in fast["nodes"]}
+    assert kinds == {"Document", "Entity", "BroadTopic"}
+
+
+def test_triples_graph_driver_gate(spark, tmp_root, monkeypatch, kg_inputs):
+    """At ``DRIVER_VOCAB_SCAN_BYTES`` equal to the enriched source's bytes
+    the driver branch runs; one byte less and both stages run distributed —
+    the same tables either way."""
+    import semantic_search_system_spark.plans.pipeline as P
+
+    enriched, _ = kg_inputs
+    paths = [f[5:] if f.startswith("file:") else f for f in enriched.inputFiles()]
+    source_bytes = sum(os.path.getsize(p) for p in paths)
+    runs = {}
+    for tag, gate in (("at", source_bytes), ("under", source_bytes - 1)):
+        monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gate)
+        runs[tag] = _kg_build(spark, os.path.join(tmp_root, tag), *kg_inputs)
+    assert runs["at"][2] == 0 and runs["under"][2] > 0
+    assert runs["at"][3] == {t: ["local"] for t in _KG_TABLES}
+    assert runs["under"][3] == {t: ["spark"] for t in _KG_TABLES}
+    assert runs["at"][:2] == runs["under"][:2]
+
+
+def test_triples_mixed_branch_resume(spark, tmp_root, monkeypatch, kg_inputs):
+    """A resume may switch branches: one branch commits the first four
+    triples buckets, the other completes the rest (and the graph) — no
+    schema-drift error, and the same tables as a one-branch build."""
+    import semantic_search_system_spark.plans.pipeline as P
+
+    ref, ref_schemas, _, _ = _kg_build(spark, os.path.join(tmp_root, "ref"), *kg_inputs)
+    for first, second in (("spark", "local"), ("local", "spark")):
+        root = os.path.join(tmp_root, first)
+        gates = {"spark": 0, "local": P.DRIVER_VOCAB_SCAN_BYTES}
+        with monkeypatch.context() as m:
+            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[first])
+            part, _, _, _ = _kg_build(spark, root, *kg_inputs, n_buckets=4)
+        assert {b for *_, b in part["triples"]} == {0, 1, 2, 3}
+        with monkeypatch.context() as m:
+            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[second])
+            rows, schemas, _, writers = _kg_build(spark, root, *kg_inputs)
+        assert writers["triples"] == [first, second]
+        assert rows == ref and schemas == ref_schemas
