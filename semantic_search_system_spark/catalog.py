@@ -217,8 +217,14 @@ def _arrow_type(dt):
         return pa.int32()
     if isinstance(dt, T.DoubleType):
         return pa.float64()
+    if isinstance(dt, T.FloatType):
+        return pa.float32()
+    if isinstance(dt, T.DateType):
+        return pa.date32()
     if isinstance(dt, T.ArrayType):
         return pa.list_(_arrow_type(dt.elementType))
+    if isinstance(dt, T.StructType):
+        return pa.struct([(f.name, _arrow_type(f.dataType)) for f in dt.fields])
     raise TypeError(f"commit_partitions_local: unsupported Spark type {dt}")
 
 

@@ -1,4 +1,4 @@
-"""Fused enrichment UDF: clean + entities + topics + embedding in ONE Arrow stage.
+"""Fused enrichment kernel: clean + entities + topics + embedding in ONE Arrow pass.
 
 ``extract_udf`` and ``embed_udf`` are kept as standalone operators, but the
 pipeline uses this fused form on the hot path: cleaning, both extractors and
@@ -6,6 +6,13 @@ the embedder share one tokenization/factorization of the same content, so the
 batch is cleaned once, tokenized once, and transferred over Arrow once. At
 10^12 docs the enrichment stage is the dominant compute — this is the single
 biggest constant-factor lever.
+
+There is one kernel, ``enrich_arrow`` (a string array in, a struct array
+out), with two callers: ``enrich_udf`` wraps it for the Spark plans (the
+batch stage past the driver bound and both stream sinks), and the driver
+twin of the batch stage (plans/pipeline._assemble_arrow) calls it in-process
+on batches of the same size the UDF receives
+(``spark.sql.execution.arrow.maxRecordsPerBatch``).
 
 The text cleaning itself runs HERE (pyarrow compute, RE2) rather than as JVM
 ``regexp_replace``: profiling showed the two Java regex passes were the most
@@ -75,15 +82,11 @@ def clean_batch(contents: pd.Series) -> pd.Series:
     return clean_arrow(contents).to_pandas()
 
 
-@F.arrow_udf(ENRICH_RESULT)
-def enrich_udf(contents: pa.Array) -> pa.Array:
-    """Arrow-NATIVE fused UDF (pyspark 4.1 arrow_udf): pa.Array in, struct
-    pa.Array out — no pandas materialization on either side of the boundary.
-    The pandas_udf form paid an Arrow→pandas conversion of every content
-    string on input and (before round 4) a per-element from_pandas walk on
-    output; measured 23.3 s → 9.0 s per 320k docs at local[1] for the same
-    kernel. The token stream is built ONCE from the cleaned array (C split +
-    dictionary_encode) and shared by extract and embed."""
+def enrich_arrow(contents: pa.Array) -> pa.StructArray:
+    """The fused kernel: raw content strings in, (content, entities, topics,
+    embedding) structs out, pyarrow-native on both sides. The token stream
+    is built ONCE from the cleaned array (C split + dictionary_encode) and
+    shared by extract and embed."""
     arr = clean_arrow_array(contents)
     ts = build_token_stream_arrow(arr)
     (er, ev), (tr, tv) = _extract_winners(ts)
@@ -96,6 +99,16 @@ def enrich_udf(contents: pa.Array) -> pa.Array:
         ],
         names=["content", "entities", "topics", "embedding"],
     )
+
+
+@F.arrow_udf(ENRICH_RESULT)
+def enrich_udf(contents: pa.Array) -> pa.Array:
+    """``enrich_arrow`` as an Arrow-NATIVE UDF (pyspark 4.1 arrow_udf): no
+    pandas materialization on either side of the boundary. The pandas_udf
+    form paid an Arrow→pandas conversion of every content string on input
+    and (before round 4) a per-element from_pandas walk on output; measured
+    23.3 s → 9.0 s per 320k docs at local[1] for the same kernel."""
+    return enrich_arrow(contents)
 
 
 def enrich_content(df: DataFrame, content_col: str = "content") -> DataFrame:

@@ -6,12 +6,14 @@ node/edge graph tables. The reference does this as sequential per-document
 network calls (pr_aws_nlp.py:230-277) plus one Neo4j transaction per
 (topic, doc) pair (knowledge_graph.py:176); here every stage is one declarative
 DataFrame transform, checkpointed per partition through the Catalog so a killed
-run resumes without recomputing completed buckets. Every stage after
-enrichment also has a driver twin: when its inputs pass ``driver_read``'s
-guards (bare parquet relations under ``DRIVER_VOCAB_SCAN_BYTES``), the same
-table is computed in pyarrow/numpy and committed with
+run resumes without recomputing completed buckets. Every stage, enrichment
+included, also has a driver twin: when its inputs pass ``driver_read``'s
+guards (bare parquet relations under ``DRIVER_VOCAB_SCAN_BYTES``; for
+enrichment, a source of at most one Arrow batch of rows), the same table is
+computed in pyarrow/numpy and committed with
 ``Catalog.commit_partitions_local`` — zero Spark jobs, identical rows,
-buckets and recorded schema, so the two branches mix across a resume.
+buckets and recorded schema, so the two branches mix across a resume. A
+driver-sized ``run_pipeline`` submits no Spark job at all.
 
 Stages (each a Catalog table under <out_root>):
   enriched   doc_id, url, title, doc_date, content, summary,
@@ -40,7 +42,7 @@ from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucke
 from ..fixtures.interleave import interleaved_path
 from ..operators.components import connected_components
 from ..operators.embedding import embed_udf
-from ..operators.enrichment import enrich_content
+from ..operators.enrichment import ENRICH_RESULT, enrich_arrow, enrich_content
 from ..operators.extraction import assemble_content, has_usable_text
 from ..operators.linking import candidate_edges
 
@@ -48,7 +50,14 @@ N_BUCKETS = 8
 
 
 def read_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(interleaved_path(sf_dir))
+    """The interleaved source as a bare parquet relation. Its schema comes
+    from the file's footer, read on the driver by pyarrow: Spark's own
+    parquet schema inference submits a job to read the same footer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = interleaved_path(sf_dir)
+    return spark.read.schema(from_arrow_schema(pq.read_schema(path))).parquet(path)
 
 
 # --------------------------------------------------------------------- stage 1
@@ -69,30 +78,200 @@ def enrich_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _enrich_frames(spark: SparkSession, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The Spark branch's (quarantine, enriched) frames over ``docs``, the
+    pending interleaved rows carrying BUCKET_COL. §2.11 quarantine: docs
+    with no usable text span go to the permanent failed_rows table (the
+    pr_aws_nlp.py:296-310 failure-list analog). That frame is a filter and
+    projection of the scan: only the UDF frame is repartitioned, so its
+    commit never re-runs a corpus-wide shuffle."""
+    bad = docs.where(~has_usable_text("spans")).select(
+        BUCKET_COL,
+        "doc_id",
+        F.lit("enrich").alias("stage"),
+        F.lit("no_text_spans").alias("reason"),
+    )
+    # the scan is splittable (small row groups); only force a shuffle when
+    # the source yields fewer splits than cores, or the Arrow-UDF stages
+    # would run under-parallel (at cluster scale: repartitionByRange on
+    # doc_id per the ingest spec)
+    par = spark.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < par:
+        docs = docs.repartition(par, "doc_id")
+    return bad, enrich_docs(docs)
+
+
+# the Spark branch's df.schema: every enriched column is nullable; the
+# quarantine's stage and reason are non-nullable literals
+_ENRICHED_SCHEMA = T.StructType(
+    [
+        T.StructField(BUCKET_COL, T.IntegerType()),
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("title", T.StringType()),
+        T.StructField("doc_date", T.DateType()),
+        T.StructField("content", T.StringType()),
+        T.StructField("summary", T.StringType()),
+        T.StructField("entities", ENRICH_RESULT["entities"].dataType),
+        T.StructField("topics", ENRICH_RESULT["topics"].dataType),
+        T.StructField("embedding", ENRICH_RESULT["embedding"].dataType),
+        T.StructField("media_refs", T.ArrayType(T.StringType())),
+    ]
+)
+_FAILED_ROWS_SCHEMA = T.StructType(
+    [
+        T.StructField(BUCKET_COL, T.IntegerType()),
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("stage", T.StringType(), nullable=False),
+        T.StructField("reason", T.StringType(), nullable=False),
+    ]
+)
+
+
+def _doc_day(doc_id) -> np.ndarray:
+    """``coalesce(try_cast(doc_id AS long) % 9000, 0)``, the day offset of
+    assemble_content's doc_date, for a pyarrow string array. Spark's cast
+    trims the bytes 0x00-0x20 and 0x7F from both ends, then accepts an
+    optional sign and ASCII digits in the long range — no '_', no decimal
+    point, no other script's digits; ``%`` is Java's remainder, signed like
+    the dividend."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    s = pc.replace_substring_regex(
+        doc_id, pattern=r"^[\x00-\x20\x7f]+|[\x00-\x20\x7f]+$", replacement=""
+    )
+    # the magnitude without sign or leading zeros; at most 19 digits fits uint64
+    digits = pc.replace_substring_regex(s, pattern=r"^[+-]?0*([0-9])", replacement=r"\1")
+    ok = pc.and_(
+        pc.match_substring_regex(s, r"^[+-]?[0-9]+$"), pc.less_equal(pc.utf8_length(digits), 19)
+    )
+    ok = pc.fill_null(ok, False)
+    mag = pc.cast(pc.if_else(ok, digits, "0"), pa.uint64()).to_numpy()
+    neg = pc.fill_null(pc.starts_with(s, "-"), False).to_numpy(zero_copy_only=False)
+    limit = np.where(neg, np.uint64(2**63), np.uint64(2**63 - 1))
+    ok = ok.to_numpy(zero_copy_only=False) & (mag <= limit)
+    rem = (mag % 9000).astype(np.int64)
+    return np.where(ok, np.where(neg, -rem, rem), 0)
+
+
+def _assemble_arrow(docs, batch: int):
+    """Driver twin of ``assemble_content(clean=False)`` followed by the fused
+    enrich kernel, over admitted interleaved rows (a pyarrow Table with
+    BUCKET_COL, doc_id, spans), as a Table of the enriched columns. Spans
+    sort as ``array_sort`` sorts struct(offset, kind, text, media_ref):
+    ascending field by field, null fields first. Text spans are the spans of
+    kind 'text' with non-null text (blank text kept); media_refs the refs of
+    spans whose kind is non-null and not 'text' (null refs kept). The kernel
+    runs on batches of ``batch`` rows, as the UDF does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spans = docs["spans"].combine_chunks()
+    x = pc.list_flatten(spans)
+    keys = ["offset", "kind", "text", "media_ref"]
+    flat = pa.table(
+        {"_doc": pc.list_parent_indices(spans), **{k: pc.struct_field(x, k) for k in keys}}
+    )
+    flat = flat.sort_by([(k, "ascending") for k in ["_doc", *keys]], null_placement="at_start")
+    doc = flat["_doc"].to_numpy()
+
+    def per_doc(mask, column):
+        mask = pc.fill_null(mask, False).combine_chunks()
+        counts = np.bincount(doc[mask.to_numpy(zero_copy_only=False)], minlength=docs.num_rows)
+        offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32())
+        return pa.ListArray.from_arrays(offsets, flat[column].filter(mask).combine_chunks())
+
+    text_spans = per_doc(pc.and_(pc.equal(flat["kind"], "text"), pc.is_valid(flat["text"])), "text")
+    content = pc.binary_join(text_spans, " ")
+    # one kernel call per batch, and one on an empty input too
+    en = pa.concat_arrays(
+        [enrich_arrow(content.slice(lo, batch)) for lo in range(0, len(content) or 1, batch)]
+    )
+    return pa.table(
+        {
+            BUCKET_COL: docs[BUCKET_COL],
+            "doc_id": docs["doc_id"],
+            "url": pc.binary_join_element_wise("doc://", docs["doc_id"], ""),
+            "title": pc.utf8_slice_codeunits(pc.list_element(text_spans, 0), 0, 64),
+            "doc_date": pa.array(np.datetime64("2000-01-01", "D") + _doc_day(docs["doc_id"])),
+            "content": en.field("content"),
+            "summary": pc.binary_join(pc.list_slice(text_spans, 0, spec.SUMMARY_SPANS), " "),
+            "entities": en.field("entities"),
+            "topics": en.field("topics"),
+            "embedding": en.field("embedding"),
+            "media_refs": per_doc(pc.not_equal(flat["kind"], "text"), "media_ref"),
+        }
+    )
+
+
+def _enrich_driver(
+    spark: SparkSession, cat: Catalog, source: DataFrame, pending: list[int], n_buckets: int
+) -> bool:
+    """Driver twin of the Spark branch of build_enriched: commits the
+    ``pending`` buckets of ``failed_rows`` and ``enriched`` from pyarrow and
+    returns True, or returns False (committing nothing) when ``source`` fails
+    ``driver_read``'s guards, holds more than one Arrow batch of rows
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``; zero or less means no
+    limit to Spark, so the Spark branch), or has a doc_id that is not a
+    string (Spark hashes a long differently). Same admission as
+    ``has_usable_text``: a doc with a span of kind 'text' whose text is
+    non-empty after trim(' '); every other doc is quarantined."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    tb = driver_read(source, ["doc_id", "spans"], max_rows=batch) if batch > 0 else None
+    if tb is None or not pa.types.is_string(tb.schema.field("doc_id").type):
+        return False
+    bucket = pa.array(arrow_bucket(tb["doc_id"], n_buckets))
+    tb = tb.append_column(BUCKET_COL, bucket).filter(pc.is_in(bucket, pa.array(pending, pa.int32())))
+    spans = tb["spans"].combine_chunks()
+    x = pc.list_flatten(spans)
+    text = pc.utf8_trim(pc.struct_field(x, "text"), characters=" ")
+    usable = pc.and_(pc.equal(pc.struct_field(x, "kind"), "text"), pc.not_equal(text, ""))
+    usable = pc.fill_null(usable, False).to_numpy(zero_copy_only=False)
+    parent = pc.list_parent_indices(spans).to_numpy()
+    admitted = pa.array(np.bincount(parent[usable], minlength=tb.num_rows) > 0)
+    failed = tb.filter(pc.invert(admitted))
+    cat.commit_partitions_local(
+        pa.table(
+            {
+                BUCKET_COL: failed[BUCKET_COL],
+                "doc_id": failed["doc_id"],
+                "stage": pa.repeat("enrich", failed.num_rows),
+                "reason": pa.repeat("no_text_spans", failed.num_rows),
+            }
+        ),
+        _FAILED_ROWS_SCHEMA,
+        "failed_rows",
+        stage="quarantine",
+    )
+    enriched = _assemble_arrow(tb.filter(admitted), batch)
+    cat.commit_partitions_local(enriched, _ENRICHED_SCHEMA, "enriched", stage="enrich")
+    return True
+
+
 def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: int = N_BUCKETS) -> DataFrame:
+    """The enriched table's pending buckets, and the §2.11 quarantine of
+    their unusable docs in ``failed_rows`` — both committed per bucket, so
+    the resume sweep re-checks only pending buckets and never re-quarantines
+    completed ones. When the interleaved source passes ``driver_read``'s
+    guards and holds at most one Arrow batch of rows, both tables are
+    computed in-process — pyarrow admission and span assembly, the fused
+    kernel in one call — and committed from the driver (zero Spark jobs;
+    ``_enrich_driver``). Past that bound the Spark plan runs: there the
+    driver would make the same kernel calls one batch after another while
+    the UDF spreads them over the cores. Both branches write the same rows,
+    buckets and recorded schemas, so a resume may mix them."""
     pending = cat.pending_buckets("enriched", n_buckets)
     if pending:
-        docs = with_bucket(read_interleaved(spark, sf_dir), "doc_id", n_buckets)
-        docs = docs.where(F.col(BUCKET_COL).isin(pending))
-        # the scan is splittable (small row groups); only force a shuffle when
-        # the source yields fewer splits than cores, or the Arrow-UDF stages
-        # would run under-parallel (at cluster scale: repartitionByRange on
-        # doc_id per the ingest spec)
-        par = spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par, "doc_id")
-        # §2.11 quarantine: docs with no usable text span go to the permanent
-        # failed_rows table (the pr_aws_nlp.py:296-310 failure-list analog) —
-        # committed per-bucket like every stage, so the resume sweep re-checks
-        # only pending buckets and never re-quarantines completed ones
-        bad = docs.where(~has_usable_text("spans")).select(
-            BUCKET_COL,
-            "doc_id",
-            F.lit("enrich").alias("stage"),
-            F.lit("no_text_spans").alias("reason"),
-        )
-        cat.commit_partitions(bad, "failed_rows", stage="quarantine")
-        cat.commit_partitions(enrich_docs(docs), "enriched", stage="enrich")
+        source = read_interleaved(spark, sf_dir)
+        if not _enrich_driver(spark, cat, source, pending, n_buckets):
+            docs = with_bucket(source, "doc_id", n_buckets).where(F.col(BUCKET_COL).isin(pending))
+            bad, enriched = _enrich_frames(spark, docs)
+            cat.commit_partitions(bad, "failed_rows", stage="quarantine")
+            cat.commit_partitions(enriched, "enriched", stage="enrich")
     return cat.read(spark, "enriched")
 
 
@@ -168,20 +347,22 @@ DRIVER_VOCAB_LIMIT = 100_000
 DRIVER_VOCAB_SCAN_BYTES = 256 * 1024 * 1024
 
 
-def driver_read(df: DataFrame, columns: list[str], buckets=None):
+def driver_read(df: DataFrame, columns: list[str], buckets=None, max_rows: int | None = None):
     """``columns`` of ``df`` as one pyarrow Table via a column-pruned DRIVER
     read (zero Spark jobs) — only when ``df`` is a BARE parquet relation (no
     filters/projections that a local re-read would silently ignore) whose
-    files all exist and total under ``DRIVER_VOCAB_SCAN_BYTES``. Returns
-    None whenever any guard fails → the caller runs its distributed plan.
-    The one guarded reader behind topic_map, entity_map, triples, the graph
-    tables and the doc-IVF build/append (plans.search.ensure_doc_ivf).
+    files all exist and total under ``DRIVER_VOCAB_SCAN_BYTES``, and, given
+    ``max_rows``, whose parquet footers count at most that many rows.
+    Returns None whenever any guard fails → the caller runs its distributed
+    plan. The one guarded reader behind the enrich source read, topic_map,
+    entity_map, triples, the graph tables and the doc-IVF build/append
+    (plans.search.ensure_doc_ivf).
 
     ``BUCKET_COL`` among ``columns`` is the partition column of a Catalog
     table: its value comes from each file's ``bucket=K`` directory, typed as
     ``df.schema`` types it (None when the files do not sit in such
     directories of one table). ``buckets``: read only those partitions —
-    the byte gate still measures the whole relation."""
+    the byte gate and ``max_rows`` still measure the whole relation."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -199,6 +380,8 @@ def driver_read(df: DataFrame, columns: list[str], buckets=None):
     import pyarrow as pa
     import pyarrow.dataset as pads
 
+    if max_rows is not None and pads.dataset(paths, format="parquet").count_rows() > max_rows:
+        return None
     if BUCKET_COL not in columns and buckets is None:
         return pads.dataset(paths, format="parquet").to_table(columns=columns)
     dirs = {os.path.dirname(p) for p in paths}

@@ -152,9 +152,11 @@ def test_crash_mid_write_recovers(spark, tmp_root, sample):
     assert cat.completed_buckets("t") == {0, 1, 2, 3}
 
 
-def test_zero_partition_table_reads_back_empty(spark, tmp_root):
+@pytest.mark.parametrize("writer", ["spark", "local"])
+def test_zero_partition_table_reads_back_empty(spark, tmp_root, writer):
     """A table committed with zero rows (e.g. failed_rows on a clean corpus)
-    must read back as a typed empty DataFrame, not crash on a dir-less scan."""
+    must read back as a typed empty DataFrame, not crash on a dir-less scan
+    — whether the commit came from Spark or from the driver."""
     from pyspark.sql import functions as F
 
     from semantic_search_system_spark.catalog import Catalog
@@ -168,8 +170,13 @@ def test_zero_partition_table_reads_back_empty(spark, tmp_root):
         )
         .withColumn("bucket", F.lit(0))
     )
-    cat.commit_partitions(empty, "failed_rows", stage="quarantine")
+    if writer == "spark":
+        cat.commit_partitions(empty, "failed_rows", stage="quarantine")
+    else:
+        cat.commit_partitions_local([], empty.schema, "failed_rows", stage="quarantine")
     assert cat.exists("failed_rows")
+    assert cat.manifest("failed_rows")["schema"] == empty.schema.json()
+    assert [s["writer"] for s in cat.manifest("failed_rows")["snapshots"]] == [writer]
     back = cat.read(spark, "failed_rows")
     assert back.count() == 0
     assert set(back.columns) == {"doc_id", "stage", "bucket"}

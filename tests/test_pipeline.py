@@ -83,12 +83,12 @@ def test_crash_between_nodes_and_edges_resumes_edges(built):
     assert cat2.read(spark, "edges").count() == n_edges
 
 
-def test_quarantine_routes_unusable_docs(spark, tmp_path_factory):
+@pytest.mark.parametrize("branch", ["local", "spark"])
+def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, branch):
     """§2.11: docs with no usable text span land in the failed_rows table
     (with per-partition lineage), are EXCLUDED from enrichment, and the resume
-    sweep does not re-quarantine completed buckets."""
-    import pyspark.sql.functions as F
-
+    sweep does not re-quarantine completed buckets — on the driver branch of
+    build_enriched and on the Spark plan (``DRIVER_VOCAB_SCAN_BYTES = 0``)."""
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans.pipeline import build_enriched
 
@@ -107,26 +107,27 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory):
     # fake sf_dir at our corpus by monkeypatching the reader
     import semantic_search_system_spark.plans.pipeline as P
 
-    orig = P.read_interleaved
-    P.read_interleaved = lambda s, _sf: s.read.parquet(f"{src}/documents_interleaved.parquet")
-    try:
-        cat = Catalog(root)
-        enriched = build_enriched(spark, "ignored", cat)
-        failed = {r["doc_id"]: r["reason"] for r in cat.read(spark, "failed_rows").collect()}
-        assert failed == {
-            "broken_media_only": "no_text_spans",
-            "broken_blank_text": "no_text_spans",
-        }
-        enriched_ids = {r["doc_id"] for r in enriched.select("doc_id").collect()}
-        assert "broken_media_only" not in enriched_ids
-        assert "broken_blank_text" not in enriched_ids
-        assert len(enriched_ids) == 500
-        assert all(m["stage"] == "quarantine" for m in cat.metrics("failed_rows"))
-        snaps = len(cat.manifest("failed_rows")["snapshots"])
-        build_enriched(spark, "ignored", cat)  # resume: no re-quarantine
-        assert len(cat.manifest("failed_rows")["snapshots"]) == snaps
-    finally:
-        P.read_interleaved = orig
+    monkeypatch.setattr(
+        P, "read_interleaved", lambda s, _sf: s.read.parquet(f"{src}/documents_interleaved.parquet")
+    )
+    if branch == "spark":
+        monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    cat = Catalog(root)
+    enriched = build_enriched(spark, "ignored", cat)
+    failed = {r["doc_id"]: r["reason"] for r in cat.read(spark, "failed_rows").collect()}
+    assert failed == {
+        "broken_media_only": "no_text_spans",
+        "broken_blank_text": "no_text_spans",
+    }
+    enriched_ids = {r["doc_id"] for r in enriched.select("doc_id").collect()}
+    assert "broken_media_only" not in enriched_ids
+    assert "broken_blank_text" not in enriched_ids
+    assert len(enriched_ids) == 500
+    assert all(m["stage"] == "quarantine" for m in cat.metrics("failed_rows"))
+    assert [s["writer"] for s in cat.manifest("failed_rows")["snapshots"]] == [branch]
+    snaps = len(cat.manifest("failed_rows")["snapshots"])
+    build_enriched(spark, "ignored", cat)  # resume: no re-quarantine
+    assert len(cat.manifest("failed_rows")["snapshots"]) == snaps
 
 
 def test_failed_media_quarantine_shape(spark):
@@ -493,3 +494,191 @@ def test_triples_mixed_branch_resume(spark, tmp_root, monkeypatch, kg_inputs):
             rows, schemas, _, writers = _kg_build(spark, root, *kg_inputs)
         assert writers["triples"] == [first, second]
         assert rows == ref and schemas == ref_schemas
+
+
+# ------------------------------------------------------------------ enrich twin
+_ENRICH_TABLES = ("enriched", "failed_rows")
+
+
+def _edge_case_spans():
+    """(doc_id, spans) rows that stress span assembly, admission and the
+    doc_date cast: out-of-order, tied and null offsets, null kind, null and
+    blank text, null span elements and media refs, media-only and span-less
+    docs, titles past 64 code points in non-ASCII text, and doc ids that
+    Spark's try_cast reads as a long or rejects."""
+
+    def t(text, offset, kind="text", ref=None):
+        return {"kind": kind, "text": text, "media_ref": ref, "offset": offset}
+
+    rows = [
+        ("order", [t("gamma", 2), t("alpha", 0), t(None, 1, "image", "m:1"), t("beta", 0),
+                   t("beta", 0, ref="r")]),
+        ("null_kind", [t("hidden words", 1, None, "m:k"), t("shown words", 3),
+                       t(None, None, None)]),
+        ("null_text", [t(None, 0), t("after a null text", 1), t(None, 2, "audio", None)]),
+        ("blank_kept", [t("   ", 0), t("", 1), t("real words here", 2), t("tail", 3)]),
+        ("null_element", [None, t("spark join", 5), None]),
+        ("null_offset", [t("later words", 0), t("first words", None)]),
+        ("media_ties", [t("some words", 0), t(None, 1, "image", "m:z"), t(None, 1, "image"),
+                        t("cap", 1, "image", "m:c")]),
+        ("media_only", [t(None, 0, "image", "m:a"), t(None, 1, "video", "m:b")]),
+        ("blank_only", [t("  ", 0), t(None, 1)]),
+        ("no_spans", []),
+        ("null_spans", None),
+        ("accents", [t("é" * 70 + " café", 0), t("naïve word", 1)]),
+        ("cjk", [t("中文字符" * 20, 0)]),
+        ("emoji", [t("😀" * 65 + " smile", 0), t("x" * 63 + "😀z", 1)]),
+        (None, [t("no id at all", 0)]),
+    ]
+    ids = [" 7", "+7", "007", "-7", "1.5", "abc", "9223372036854775808", "-9223372036854775808"]
+    rows += [(i, [t(f"document {k} about spark and data", 0)]) for k, i in enumerate(ids)]
+    return rows
+
+
+@pytest.fixture(scope="module", params=["sf_small", "edge_cases"])
+def enrich_source(request, tmp_path_factory):
+    """(name, path) of an interleaved parquet file: SF_SMALL's, or the
+    edge-case corpus of ``_edge_case_spans`` beside 200 plain docs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semantic_search_system_spark.fixtures.interleave import INTERLEAVED_SCHEMA
+
+    if request.param == "sf_small":
+        return request.param, interleaved_path(SF_SMALL)
+    plain = {"kind": "text", "media_ref": None, "offset": 0}
+    rows = _edge_case_spans() + [
+        (f"plain{i}", [{**plain, "text": f"spark table {i} scan data"}]) for i in range(200)
+    ]
+    path = str(tmp_path_factory.mktemp("edge") / "documents_interleaved.parquet")
+    ids, spans = zip(*rows)
+    columns = [pa.array(c, f.type) for c, f in zip((ids, spans), INTERLEAVED_SCHEMA)]
+    pq.write_table(pa.Table.from_arrays(columns, schema=INTERLEAVED_SCHEMA), path)
+    return request.param, path
+
+
+def _enrich_build(spark, root, source, monkeypatch, pending_limit=None):
+    """(rows per table, manifest schema per table, Spark jobs, writer per
+    snapshot) of build_enriched from the interleaved file ``source`` into
+    the Catalog at ``root``; ``pending_limit`` stops the build after the
+    buckets below it, as a run killed mid-stage would."""
+    import semantic_search_system_spark.plans.pipeline as P
+    from semantic_search_system_spark.catalog import Catalog
+
+    cat = Catalog(root)
+    with monkeypatch.context() as m:
+        m.setattr(P, "interleaved_path", lambda _sf: source)
+        if pending_limit is not None:
+            pending = Catalog.pending_buckets
+            m.setattr(
+                Catalog, "pending_buckets",
+                lambda self, t, n: [b for b in pending(self, t, n) if b < pending_limit],
+            )
+        _, jobs = with_job_count(spark, lambda: P.build_enriched(spark, "ignored", cat))
+    rows = {t: sorted(cat.read(spark, t).collect(), key=repr) for t in _ENRICH_TABLES}
+    schemas = {t: cat.manifest(t)["schema"] for t in _ENRICH_TABLES}
+    writers = {t: [s["writer"] for s in cat.manifest(t)["snapshots"]] for t in _ENRICH_TABLES}
+    return rows, schemas, jobs, writers
+
+
+def test_enrich_driver_matches_distributed(spark, tmp_root, monkeypatch, enrich_source):
+    """The driver branch of build_enriched (pyarrow admission and assembly,
+    the fused kernel in-process, local commits) writes the EXACT rows —
+    bucket and embeddings included — and manifest schemas of the Spark plan,
+    which ``DRIVER_VOCAB_SCAN_BYTES = 0`` forces, in zero Spark jobs."""
+    import semantic_search_system_spark.plans.pipeline as P
+
+    corpus, source = enrich_source
+    fast, fast_schemas, fast_jobs, fast_writers = _enrich_build(
+        spark, os.path.join(tmp_root, "a"), source, monkeypatch
+    )
+    monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    slow, slow_schemas, slow_jobs, slow_writers = _enrich_build(
+        spark, os.path.join(tmp_root, "b"), source, monkeypatch
+    )
+    assert fast_jobs == 0 and slow_jobs > 0
+    assert fast_writers == {t: ["local"] for t in _ENRICH_TABLES}
+    assert slow_writers == {t: ["spark"] for t in _ENRICH_TABLES}
+    assert fast_schemas == slow_schemas
+    assert fast_schemas["enriched"] == P._ENRICHED_SCHEMA.json()
+    assert fast_schemas["failed_rows"] == P._FAILED_ROWS_SCHEMA.json()
+    for t in _ENRICH_TABLES:
+        assert fast[t] == slow[t], t
+    assert {r["bucket"] for r in fast["enriched"]} == set(range(P.N_BUCKETS))
+    if corpus == "edge_cases":
+        failed = {r["doc_id"] for r in fast["failed_rows"]}
+        assert failed == {"media_only", "blank_only", "no_spans", "null_spans"}
+        by_id = {r["doc_id"]: r for r in fast["enriched"]}
+        assert by_id["order"]["title"] == "alpha"  # the lowest (offset, text) span
+        assert by_id["order"]["media_refs"] == ["m:1"]
+        assert by_id["null_kind"]["media_refs"] == []  # a null kind is not media
+        assert by_id["null_offset"]["title"] == "first words"  # null fields sort first
+        assert by_id["media_ties"]["media_refs"] == [None, "m:z", "m:c"]
+        assert len(by_id["accents"]["title"]) == 64 and by_id["emoji"]["title"] == "😀" * 64
+        assert [str(by_id[i]["doc_date"]) for i in (" 7", "+7", "007", "-7", "1.5")] == [
+            "2000-01-08", "2000-01-08", "2000-01-08", "1999-12-25", "2000-01-01",
+        ]
+
+
+def test_enrich_driver_bound(spark, tmp_root, monkeypatch):
+    """A source of exactly ``maxRecordsPerBatch`` rows is enriched on the
+    driver; one row more, or a ``maxRecordsPerBatch`` of zero or less (no
+    limit to Spark), runs the Spark plan — the same tables either way."""
+    source = interleaved_path(SF_SMALL)
+    n_rows = pd.read_parquet(source, columns=["doc_id"]).shape[0]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    runs = {}
+    try:
+        for tag, batch in (("at", n_rows), ("under", n_rows - 1), ("zero", 0), ("negative", -1)):
+            spark.conf.set(key, str(batch))
+            runs[tag] = _enrich_build(spark, os.path.join(tmp_root, tag), source, monkeypatch)
+    finally:
+        spark.conf.set(key, saved)
+    assert runs["at"][2] == 0
+    assert runs["at"][3] == {t: ["local"] for t in _ENRICH_TABLES}
+    for tag in ("under", "zero", "negative"):
+        assert runs[tag][2] > 0, tag
+        assert runs[tag][3] == {t: ["spark"] for t in _ENRICH_TABLES}, tag
+        assert runs[tag][:2] == runs["at"][:2], tag
+
+
+def test_enrich_mixed_branch_resume(spark, tmp_root, monkeypatch, enrich_source):
+    """A resume may switch branches: one branch commits enriched (and
+    failed_rows) buckets 0–3, the other completes the rest — no schema-drift
+    error, and the same tables as a one-branch build."""
+    import semantic_search_system_spark.plans.pipeline as P
+
+    _, source = enrich_source
+    ref, ref_schemas, _, _ = _enrich_build(
+        spark, os.path.join(tmp_root, "ref"), source, monkeypatch
+    )
+    gates = {"spark": 0, "local": P.DRIVER_VOCAB_SCAN_BYTES}
+    for first, second in (("spark", "local"), ("local", "spark")):
+        root = os.path.join(tmp_root, first)
+        with monkeypatch.context() as m:
+            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[first])
+            part, _, _, _ = _enrich_build(spark, root, source, monkeypatch, pending_limit=4)
+        assert {r["bucket"] for r in part["enriched"]} == {0, 1, 2, 3}
+        with monkeypatch.context() as m:
+            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[second])
+            rows, schemas, _, writers = _enrich_build(spark, root, source, monkeypatch)
+        assert writers["enriched"] == [first, second]
+        assert rows == ref and schemas == ref_schemas
+
+
+def test_driver_sized_pipeline_submits_no_spark_job(spark, tmp_root):
+    """A driver-sized run_pipeline submits zero Spark jobs: every stage,
+    enrichment included, takes its driver branch, and every snapshot it
+    writes records the local writer."""
+    from semantic_search_system_spark.catalog import Catalog
+
+    interleaved_path(SF_SMALL)  # the source cache, built outside the count
+    cat, jobs = with_job_count(spark, lambda: run_pipeline(spark, SF_SMALL, tmp_root))
+    assert jobs == 0
+    tables = sorted(t for t in os.listdir(tmp_root) if cat.exists(t))
+    assert tables == sorted(
+        ["enriched", "failed_rows", "topic_map", "entity_map", "triples", "nodes", "edges"]
+    )
+    for t in tables:
+        assert {s["writer"] for s in Catalog(tmp_root).manifest(t)["snapshots"]} == {"local"}, t

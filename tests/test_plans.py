@@ -440,3 +440,21 @@ def test_enrich_body_evaluates_udf_once(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
         assert len(nodes) == 1, (name, plan)
+
+
+def test_quarantine_frame_has_no_shuffle(spark):
+    """The Spark branch of build_enriched builds its quarantine frame from
+    the scan before the conditional repartition: committing failed_rows
+    costs a filtered scan, not a corpus-wide shuffle. Only the UDF frame is
+    repartitioned, and only when the source yields fewer splits than cores."""
+    from semantic_search_system_spark.catalog import with_bucket
+    from semantic_search_system_spark.plans import pipeline as P
+
+    docs = with_bucket(P.read_interleaved(spark, SF_SMALL), "doc_id", P.N_BUCKETS)
+    bad, enriched = P._enrich_frames(spark, docs)
+    bad_plan, enriched_plan = (
+        df._jdf.queryExecution().executedPlan().toString() for df in (bad, enriched)
+    )
+    assert "Exchange" not in bad_plan, bad_plan
+    under_split = docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    assert ("Exchange hashpartitioning(doc_id" in enriched_plan) == under_split, enriched_plan
