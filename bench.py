@@ -200,7 +200,6 @@ def cpu_probe(cpus: int) -> float:
 
 
 HEADLINE_QUERIES = [
-    "pricing_summary",
     "top5_entities_per_doc",
     "knn_cosine_top10",
     "ann_ivf_top10",

@@ -1,11 +1,14 @@
-"""Query registry: every SURVEY.md §2 operator as a (Spark DataFrame query,
-DuckDB oracle SQL) pair, keyed by a stable name.
+"""Query registry: the paper's operators over the documents, embeddings,
+interleaved and KG tables (plus four single-table operators over ``orders``),
+each as a (Spark DataFrame query, DuckDB oracle SQL) pair keyed by a stable
+name.
 
 This backs the driver contract in ``__spark_entry__.py``: each Spark callable
 takes ``(spark, sf_dir)`` and returns a DataFrame; the oracle string is ANSI
-SQL DuckDB runs over the same parquet (testdata tables pre-registered as views;
-repo-generated tables — the interleaved corpus, pipeline outputs — addressed
-with ``read_parquet`` absolute paths at sf0.01, the scale the driver checks).
+SQL DuckDB runs over the same parquet (the ``documents``, ``embeddings`` and
+``orders`` testdata tables pre-registered as views; repo-generated tables — the
+interleaved corpus, pipeline outputs — addressed with ``read_parquet``
+absolute paths at sf0.01, the scale the driver checks).
 
 Conventions that make the driver's order-insensitive value-hash comparison
 deterministic across engines:
@@ -83,34 +86,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 # =====================================================================
-# Relational operators (SURVEY.md §2.2-2.7) over the TPC-H-ish tables
+# Single-table relational operators over the TPC-H orders table
 # =====================================================================
-
-
-@query(
-    "pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           count(*) AS n_rows
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/A3/A7: grouped multi-aggregate with filter pushdown (TPC-H Q1 shape)."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
 @query(
@@ -128,66 +105,6 @@ def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 100000))
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     )
-
-
-@query(
-    "date_range_scan",
-    oracle="""
-    SELECT event_id, user_id, event_type
-    FROM events
-    WHERE ts >= TIMESTAMP '2024-01-03' AND ts < TIMESTAMP '2024-01-05'
-    """,
-)
-def date_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3: date-range predicate (build_date_filter, search_pipeline.py:153-166)."""
-    ev = load(spark, sf_dir, "events")
-    return ev.where(
-        (F.col("ts") >= F.lit("2024-01-03").cast("timestamp"))
-        & (F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
-    ).select("event_id", "user_id", "event_type")
-
-
-@query(
-    "join_customer_region",
-    oracle="""
-    SELECT r_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS total_bal
-    FROM customer
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY r_name
-    """,
-)
-def join_customer_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1/J3: star-schema equi-join chain; both dims broadcast (SURVEY §2.3)."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("r_name")
-        .agg(F.count("*").alias("n_customers"), F.round(F.sum("c_acctbal"), 2).alias("total_bal"))
-    )
-
-
-@query(
-    "top_parts_per_supplier",
-    oracle="""
-    SELECT l_suppkey, l_partkey, qty, rn FROM (
-      SELECT l_suppkey, l_partkey, round(sum(l_quantity), 2) AS qty,
-             row_number() OVER (PARTITION BY l_suppkey
-                                ORDER BY round(sum(l_quantity), 2) DESC, l_partkey ASC) AS rn
-      FROM lineitem GROUP BY l_suppkey, l_partkey
-    ) WHERE rn <= 5
-    """,
-)
-def top_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/W3: top-k per group via window (reference top-5 entities pattern,
-    pr_local_nlp_pipeline.py:70-93)."""
-    li = load(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_suppkey", "l_partkey").agg(F.round(F.sum("l_quantity"), 2).alias("qty"))
-    w = Window.partitionBy("l_suppkey").orderBy(F.desc("qty"), F.asc("l_partkey"))
-    return agg.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 5)
 
 
 @query(
@@ -231,155 +148,12 @@ def union_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "semi_anti_customers",
-    oracle="""
-    SELECT 'with_orders' AS cohort, count(*) AS n FROM customer
-      WHERE c_custkey IN (SELECT o_custkey FROM orders)
-    UNION ALL
-    SELECT 'without_orders' AS cohort, count(*) AS n FROM customer
-      WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-    """,
-)
-def semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3/J4/U2: left_semi (EXISTS) + left_anti (NOT EXISTS) cohorts."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").select("o_custkey")
-    semi = c.join(o, c["c_custkey"] == o["o_custkey"], "left_semi").agg(
-        F.count("*").alias("n")
-    ).select(F.lit("with_orders").alias("cohort"), "n")
-    anti = c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti").agg(
-        F.count("*").alias("n")
-    ).select(F.lit("without_orders").alias("cohort"), "n")
-    return semi.unionByName(anti)
-
-
-@query(
-    "suppliers_per_nation",
-    oracle="""
-    SELECT n_name, string_agg(s_name, ',' ORDER BY s_name) AS suppliers, count(*) AS n
-    FROM supplier JOIN nation ON s_nationkey = n_nationkey
-    GROUP BY n_name
-    """,
-)
-def suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/O5: group-to-list with deterministic sort (collect_list + array_sort),
-    flattened to a string so both engines hash identically."""
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    return (
-        s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.array_join(F.array_sort(F.collect_list("s_name")), ",").alias("suppliers"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-@query(
-    "nation_revenue_rank",
-    oracle="""
-    SELECT n_name, revenue, rank() OVER (ORDER BY revenue DESC, n_name ASC) AS rnk FROM (
-      SELECT n_name, round(sum(o_totalprice), 2) AS revenue
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY n_name
-    )
-    """,
-)
-def nation_revenue_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2: rank over aggregated join (result sorting, main_app.py:150-164)."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    rev = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-    )
-    return rev.withColumn(
-        "rnk", F.rank().over(Window.orderBy(F.desc("revenue"), F.asc("n_name")))
-    )
-
-
-@query(
     "max_order_key",
     oracle="SELECT max(o_orderkey) AS max_id FROM orders",
 )
 def max_order_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/O4: max-id scan (the auto-increment scan, pr_meta_store_from_local.py:22-37)."""
     return load(spark, sf_dir, "orders").agg(F.max("o_orderkey").alias("max_id"))
-
-
-@query(
-    "events_monthly_metrics",
-    oracle="""
-    SELECT cast(date_trunc('month', ts) AS DATE) AS month, event_type, count(*) AS n,
-           round(sum(value), 2) AS total_value,
-           CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
-    FROM events GROUP BY 1, 2
-    """,
-)
-def events_monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7/§2.11: per-(month, type) telemetry rollup — the per-partition metrics
-    pattern (pr_aws_nlp.py:226-283 processed/failed counters)."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.to_date(F.date_trunc("month", F.col("ts"))).alias("month"), "event_type"
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("n_errors"),
-    )
-
-
-@query(
-    "sessionize_users",
-    oracle="""
-    SELECT user_id, cast(sum(brk) + 1 AS BIGINT) AS n_sessions FROM (
-      SELECT user_id,
-             CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-                  THEN 1 ELSE 0 END AS brk
-      FROM events
-    ) GROUP BY user_id
-    """,
-)
-def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: lag + gap>30min (guide 'Common OLAP patterns'); window + agg."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    brk = F.when(gap > 1800, 1).otherwise(0)
-    return (
-        ev.withColumn("brk", brk)
-        .groupBy("user_id")
-        .agg((F.sum("brk") + 1).cast("long").alias("n_sessions"))
-    )
-
-
-@query(
-    "fuzzy_nation_pairs",
-    oracle="""
-    SELECT a.n_name AS name_a, b.n_name AS name_b,
-           levenshtein(a.n_name, b.n_name) AS dist
-    FROM nation a JOIN nation b ON a.n_name < b.n_name
-    WHERE levenshtein(a.n_name, b.n_name) <= 2
-    """,
-)
-def fuzzy_nation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C15: fuzzy match via edit distance (fuzziness params, search_service.py:16-124)."""
-    n = load(spark, sf_dir, "nation").select("n_name")
-    a, b = n.alias("a"), n.alias("b")
-    pairs = a.join(b, F.col("a.n_name") < F.col("b.n_name"))
-    return (
-        pairs.select(
-            F.col("a.n_name").alias("name_a"),
-            F.col("b.n_name").alias("name_b"),
-            F.levenshtein(F.col("a.n_name"), F.col("b.n_name")).alias("dist"),
-        )
-        .where(F.col("dist") <= 2)
-    )
 
 
 # =====================================================================
@@ -798,246 +572,6 @@ def media_attrs_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "order_price_quantiles",
-    oracle="""
-    SELECT o_orderpriority,
-           round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
-           round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-           round(quantile_cont(o_totalprice, 0.9), 4) AS p90
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (percentile_approx is the
-    at-scale variant; exact keeps the oracle engine-identical)."""
-    o = load(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.25)), 4).alias("p25"),
-        F.round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("p90"),
-    )
-
-
-@query(
-    "customer_balance_stats",
-    oracle="""
-    SELECT n_name, round(avg(c_acctbal), 4) AS avg_bal,
-           round(stddev_samp(c_acctbal), 4) AS sd_bal,
-           count(*) AS n
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-    GROUP BY n_name
-    """,
-)
-def customer_balance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution statistics per group (avg/stddev) over a broadcast join."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.round(F.avg("c_acctbal"), 4).alias("avg_bal"),
-            F.round(F.stddev_samp("c_acctbal"), 4).alias("sd_bal"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-@query(
-    "bucketed_colocated_join",
-    oracle="""
-    SELECT o_orderpriority, count(*) AS n_lines, round(sum(l_quantity), 2) AS qty
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY o_orderpriority
-    """,
-)
-def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed tables co-locate the join: both sides written bucketBy(8, key)
-    so the SortMergeJoin needs NO Exchange (the at-scale strategy for repeated
-    doc-scale joins; guide 'Partitioning & shuffle'). Result is identical to
-    the plain join — bucketing is purely physical."""
-    sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    t_li, t_o = f"b_lineitem_{sf}", f"b_orders_{sf}"
-    for t, src, key in ((t_li, "lineitem", "l_orderkey"), (t_o, "orders", "o_orderkey")):
-        if not spark.catalog.tableExists(t):
-            # the warehouse dir outlives the in-memory catalog — reclaim a
-            # location left by a previous session before re-creating
-            import shutil
-
-            loc = os.path.join(
-                spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"), t
-            )
-            shutil.rmtree(loc, ignore_errors=True)
-            (
-                load(spark, sf_dir, src)
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .saveAsTable(t)
-            )
-    li, o = spark.table(t_li), spark.table(t_o)
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_lines"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-    )
-
-
-@query(
-    "month_windows",
-    oracle="""
-    SELECT y, m,
-           cast(make_date(y, m, 1) AS DATE) AS month_start,
-           cast(make_date(y, m, 1) + INTERVAL 1 MONTH AS DATE) AS next_month_start
-    FROM (SELECT DISTINCT year(ts) AS y, month(ts) AS m FROM events)
-    """,
-)
-def month_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4/§2.11: year-month batch windows incl. the December rollover the
-    reference hand-computes (pr_aws_nlp.py:177-186 exclusive month end)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.select(F.year("ts").alias("y"), F.month("ts").alias("m"))
-        .distinct()
-        .withColumn("month_start", F.make_date(F.col("y"), F.col("m"), F.lit(1)))
-        .withColumn("next_month_start", F.add_months(F.col("month_start"), 1))
-    )
-
-
-@query(
-    "json_props_extract",
-    oracle="""
-    SELECT event_type, CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS total_k,
-           count(*) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C6/C7: JSON parse of a string column (the reference parses LLM JSON
-    output, pr_aws_nlp.py:54-67) via from_json with an explicit schema."""
-    ev = load(spark, sf_dir, "events")
-    parsed = ev.withColumn("p", F.from_json("props", "k BIGINT"))
-    return parsed.groupBy("event_type").agg(
-        F.sum(F.col("p.k")).alias("total_k"), F.count("*").alias("n")
-    )
-
-
-@query(
-    "events_pivot_manual",
-    oracle="""
-    SELECT user_id,
-           CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-           CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-           CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-           CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-    FROM events GROUP BY user_id
-    """,
-)
-def events_pivot_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (explicit-values form — engine-portable, unlike dialect PIVOT)."""
-    ev = load(spark, sf_dir, "events")
-    aggs = [
-        F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(f"n_{t}")
-        for t in ("click", "view", "purchase", "error")
-    ]
-    return ev.groupBy("user_id").agg(*aggs)
-
-
-@query(
-    "orders_rollup",
-    oracle="""
-    SELECT coalesce(o_orderstatus, 'ALL') AS status,
-           coalesce(o_orderpriority, 'ALL') AS priority,
-           count(*) AS n, round(sum(o_totalprice), 2) AS total
-    FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-)
-def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup totals (guide 'cube/rollup')."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n",
-            "total",
-        )
-    )
-
-
-@query(
-    "distinct_parts_per_supplier",
-    oracle="""
-    SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts,
-           count(*) AS n_lines
-    FROM lineitem GROUP BY l_suppkey
-    """,
-)
-def distinct_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: exact distinct-count per group (approx_count_distinct is the
-    at-scale variant; exact keeps the oracle engine-identical)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.countDistinct("l_partkey").alias("n_parts"), F.count("*").alias("n_lines")
-    )
-
-
-@query(
-    "asof_last_click_before_error",
-    oracle="""
-    SELECT event_id, user_id, ts, last_click_ts FROM (
-      SELECT event_id, user_id, ts, event_type,
-             max(CASE WHEN event_type = 'click' THEN ts END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts
-      FROM events WHERE event_type IN ('click', 'error'))
-    WHERE event_type = 'error'
-    """,
-)
-def asof_last_click_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (Spark lacks a native one — guide 'Common OLAP patterns'):
-    for each error event, the most recent strictly-earlier click by the same
-    user, via a running max over the merged event stream (no per-pair join)."""
-    ev = load(spark, sf_dir, "events").where(F.col("event_type").isin("click", "error"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    click_ts = F.max(F.when(F.col("event_type") == "click", F.col("ts"))).over(w)
-    return (
-        ev.withColumn("last_click_ts", click_ts)
-        .where(F.col("event_type") == "error")
-        .select("event_id", "user_id", "ts", "last_click_ts")
-    )
-
-
-@query(
-    "first_order_per_customer",
-    oracle="""
-    SELECT DISTINCT o_custkey,
-           first_value(o_orderpriority) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS first_priority,
-           first_value(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS first_date
-    FROM orders
-    """,
-)
-def first_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4: first-value per group (entity-label pick, pr_local_nlp_pipeline.py:84-91)."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        o.select(
-            "o_custkey",
-            F.first("o_orderpriority").over(w).alias("first_priority"),
-            F.first("o_orderdate").over(w).alias("first_date"),
-        )
-        .distinct()
-    )
-
-
-@query(
     "keywords_tfidf",
     oracle=f"""
     WITH toks AS (
@@ -1189,43 +723,6 @@ def topic_model_lda(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         F.element_at(vocab_expr, F.col("tw.termIndices") + 1).alias("term"),
         F.round(F.col("tw.termWeights"), 6).alias("weight"),
-    )
-
-
-@query(
-    "sliding_window_metrics",
-    oracle="""
-    WITH g AS (SELECT event_type, value,
-                      -- floor, not ::BIGINT (which ROUNDS): fractional-second
-                      -- events must bucket like Spark's microsecond floor
-                      CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) AS w0
-               FROM events),
-    w AS (SELECT event_type, value, unnest([w0, w0 - 1800]) AS ws FROM g)
-    SELECT CAST(ws AS BIGINT) AS win_start_s,
-           CAST(ws + 3600 AS BIGINT) AS win_end_s,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           round(sum(value), 2) AS total_value
-    FROM w GROUP BY ws, event_type
-    """,
-)
-def sliding_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark-compatible sliding-window metrics (the streaming aggregation
-    run in batch mode; streaming/incremental.py runs the same plan as a
-    stream). HASH-checked (round 3): Spark's F.window(1h, 30m) assigns each
-    event to exactly the two hop-aligned windows the oracle derives with
-    epoch arithmetic; window bounds compare as epoch seconds so both engines
-    agree regardless of timestamp-type timezone conventions."""
-    from .streaming.incremental import windowed_event_metrics
-
-    ev = load(spark, sf_dir, "events")
-    out = windowed_event_metrics(ev)
-    return out.select(
-        F.unix_timestamp(F.col("window.start")).alias("win_start_s"),
-        F.unix_timestamp(F.col("window.end")).alias("win_end_s"),
-        "event_type",
-        "n",
-        "total_value",
     )
 
 
@@ -2371,67 +1868,6 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.groupBy("pack_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("pack_tokens"),
-    )
-
-
-@query(
-    "change_detection_fullouter",
-    oracle="""
-    WITH o AS (
-      SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_old
-      FROM events WHERE ts < TIMESTAMP '2024-01-16' GROUP BY user_id, event_type),
-    n AS (
-      SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_new
-      FROM events WHERE ts >= TIMESTAMP '2024-01-16' GROUP BY user_id, event_type)
-    SELECT coalesce(o.user_id, n.user_id) AS user_id,
-           coalesce(o.event_type, n.event_type) AS event_type,
-           CAST(coalesce(o.n_old, 0) AS BIGINT) AS n_old,
-           CAST(coalesce(n.n_new, 0) AS BIGINT) AS n_new,
-           CASE WHEN o.user_id IS NULL THEN 'added'
-                WHEN n.user_id IS NULL THEN 'removed'
-                WHEN o.n_old <> n.n_new THEN 'changed'
-                ELSE 'unchanged' END AS status
-    FROM o FULL OUTER JOIN n ON o.user_id = n.user_id AND o.event_type = n.event_type
-    """,
-)
-def change_detection_fullouter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: full-outer-join change detection with added/removed/changed/unchanged
-    classification — the taxonomy edit merge (explorer_app.py:498-508
-    pd.merge(how='left'), human_feedback.py:385-395 how='outer') as one
-    shuffle-on-key outer join over two snapshot aggregates."""
-    ev = load(spark, sf_dir, "events")
-    cut = F.lit("2024-01-16").cast("timestamp")
-    old = (
-        ev.where(F.col("ts") < cut)
-        .groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n_old"))
-    )
-    new = (
-        ev.where(F.col("ts") >= cut)
-        .groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n_new"))
-    )
-    o, n = old.alias("o"), new.alias("n")
-    joined = o.join(
-        n,
-        (F.col("o.user_id") == F.col("n.user_id"))
-        & (F.col("o.event_type") == F.col("n.event_type")),
-        "full_outer",
-    )
-    # Counts are coalesced to 0 (the missing-side rows stay identifiable via
-    # `status`): nullable integer outputs are a correctness-gate hazard —
-    # a pandas-path fetch of DuckDB BIGINT-with-NULL promotes the column to
-    # float64 (3.0 / NaN) and can never value-hash-match Spark's LONG / null.
-    return joined.select(
-        F.coalesce(F.col("o.user_id"), F.col("n.user_id")).alias("user_id"),
-        F.coalesce(F.col("o.event_type"), F.col("n.event_type")).alias("event_type"),
-        F.coalesce(F.col("o.n_old"), F.lit(0)).alias("n_old"),
-        F.coalesce(F.col("n.n_new"), F.lit(0)).alias("n_new"),
-        F.when(F.col("o.user_id").isNull(), "added")
-        .when(F.col("n.user_id").isNull(), "removed")
-        .when(F.col("o.n_old") != F.col("n.n_new"), "changed")
-        .otherwise("unchanged")
-        .alias("status"),
     )
 
 

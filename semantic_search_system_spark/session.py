@@ -59,16 +59,15 @@ def get_spark(
         # Deterministic oracle comparison (duckdb timestamps are UTC-naive).
         "spark.sql.session.timeZone": "UTC",
         "spark.ui.enabled": "false",
-        # bucketed-table warehouse (co-located joins); deployment-specific
-        "spark.sql.warehouse.dir": os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE", "/tmp/sss_spark_warehouse"
-        ),
+        # No table is saved to the warehouse, but the in-memory catalog
+        # creates the default database directory on first use, which would
+        # otherwise be spark-warehouse/ in the cwd — the checkout.
+        "spark.sql.warehouse.dir": "/tmp/sss_spark_warehouse",
         # Scan-split sizing: 32 MiB yields enough splits to keep every core
         # busy on this engine's document corpora (span arrays expand ~4-8x in
-        # memory vs parquet bytes); raise via env for wide-row workloads.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"
-        ),
+        # memory vs parquet bytes); wide-row workloads can raise it through
+        # extra_conf.
+        "spark.sql.files.maxPartitionBytes": "33554432",
         "spark.sql.files.openCostInBytes": "1048576",
         # Dynamic-partition parquet writes: with 0 (the default) Spark SORTS
         # every task's rows by partition key before writing; our pipeline
@@ -78,9 +77,7 @@ def get_spark(
         # largest super-proportional term). Tables with more partitions than
         # this (e.g. the √N-bucket IVF assignment) fall back to sort-based
         # writing automatically.
-        "spark.sql.maxConcurrentOutputFileWriters": os.environ.get(
-            "SPARK_GRAFT_MAX_WRITERS", "16"
-        ),
+        "spark.sql.maxConcurrentOutputFileWriters": "16",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         # file:// writes skip the Hadoop checksum layer (every staged parquet
         # file otherwise writes a .crc sibling — measured ~20% of the warm

@@ -3,16 +3,13 @@ to Structured Streaming.
 
 The reference processes documents incrementally with a ``processed`` boolean
 flag flipped after each bulk write (ingest/pr_meta_store.py:55-139) and a
-straggler sweep (:142-194). Two Spark-native equivalents live here:
+straggler sweep (:142-194). The Spark-native equivalent lives here:
 
-1. ``enrich_stream``: a Structured Streaming pipeline — ``readStream`` over the
-   interleaved table directory, the SAME assemble/extract/embed transforms as
-   the batch plan (one logical plan, two execution modes), ``foreachBatch``
-   into the checkpointed Catalog so delivery is idempotent at partition
-   granularity (exactly-once effective semantics).
-2. ``windowed_event_metrics``: watermarked event-time windowed aggregation over
-   the events table — the late-data-tolerant version of the reference's
-   per-month counters (pr_aws_nlp.py:226-283).
+``enrich_stream``: a Structured Streaming pipeline — ``readStream`` over the
+interleaved table directory, the SAME assemble/extract/embed transforms as
+the batch plan (one logical plan, two execution modes), ``foreachBatch``
+into the checkpointed Catalog so delivery is idempotent at partition
+granularity (exactly-once effective semantics).
 """
 
 from __future__ import annotations
@@ -365,71 +362,3 @@ def serving_triples(spark: SparkSession, out_root: str) -> DataFrame:
         t = t.unionByName(cat.read(spark, "triples_relates").select("subj", "pred", "obj"))
     return t
 
-
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def sessionize_stream(spark: SparkSession, input_dir: str, gap_seconds: int = 1800):
-    """Custom STATEFUL streaming operator via ``applyInPandasWithState``: the
-    batch sessionizer (gap > 30 min ⇒ new session, order (ts, event_id) —
-    entrypoints.sessionize_users) as an incremental per-user running count.
-
-    State per user = (last event epoch-seconds, session count so far); each
-    micro-batch folds its (sorted) events into the state and emits the updated
-    cumulative count — the streaming-native form of the reference's
-    work-queue incremental processing (pr_meta_store.py:55-139), here with
-    CROSS-BATCH state rather than a per-batch recompute. Event-time order is
-    the micro-batch arrival order (time-partitioned input files), the standard
-    contract for processing-time sessionization.
-
-    Returns the unstarted streaming DataFrame (caller attaches the sink)."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-
-    def update(key, pdfs, state):
-        import numpy as np  # noqa: PLC0415 — worker-side import
-
-        (user,) = key
-        last_ts, n = state.get if state.exists else (None, 0)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts", "event_id"])
-        # vectorized fold: a session starts wherever the gap to the previous
-        # event (carry-in = state's last_ts) exceeds the threshold — one numpy
-        # diff over the batch, no per-event Python
-        ets = (batch["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64) / 1e9)
-        if len(ets):
-            prev = np.concatenate(([np.nan if last_ts is None else last_ts], ets[:-1]))
-            gaps = ets - prev
-            n += int(np.count_nonzero(np.isnan(gaps) | (gaps > gap_seconds)))
-            last_ts = float(ets[-1])
-        state.update((float(last_ts), int(n)))
-        yield pd.DataFrame({"user_id": [user], "n_sessions": [n]})
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_sessions long",
-        stateStructType="last_ts double, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_event_metrics(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked sliding-window event metrics (works on a stream or a batch DF)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )

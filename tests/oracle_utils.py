@@ -12,9 +12,7 @@ import os
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
+TABLES = "documents embeddings orders".split()
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -7,10 +7,7 @@ from semantic_search_system_spark.operators.multimodal import (
     extract_media_features,
     media_spans,
 )
-from semantic_search_system_spark.streaming.incremental import (
-    enrich_stream,
-    windowed_event_metrics,
-)
+from semantic_search_system_spark.streaming.incremental import enrich_stream
 
 from conftest import SF_SMALL
 
@@ -334,63 +331,6 @@ def test_streaming_batch_reconciliation_end_to_end(spark, tmp_root):
 
     assert node_set(nodes_s) == node_set(nodes_b)
     assert edge_set(edges_s) == edge_set(edges_b)
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_root):
-    """applyInPandasWithState sessionizer: streaming the events table as 4
-    time-ordered files (4 micro-batches, cross-batch state) must converge to
-    the batch sessionizer's exact per-user session counts."""
-    import os
-    import time
-
-    from semantic_search_system_spark import entrypoints as ep
-    from semantic_search_system_spark.streaming.incremental import sessionize_stream
-
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").orderBy("ts", "event_id")
-    pdf = ev.toPandas()
-    src = os.path.join(tmp_root, "events_stream")
-    os.makedirs(src)
-    quarters = np.array_split(pdf, 4)
-    for i, q in enumerate(quarters):  # sequential writes → mtime order = time order
-        q.to_parquet(
-            os.path.join(src, f"part-{i:04d}.parquet"),
-            index=False,
-            coerce_timestamps="us",  # Spark's schema expects timestamp(us), not ns
-        )
-        time.sleep(0.05)
-
-    out_dir = os.path.join(tmp_root, "out")
-
-    def sink(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        sessionize_stream(spark, src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.read.parquet(out_dir).toPandas()
-    # cumulative updates: the final count per user is the max emitted
-    streamed = res.groupby("user_id")["n_sessions"].max().to_dict()
-    batch = {
-        r["user_id"]: r["n_sessions"]
-        for r in ep.registry()["sessionize_users"](spark, SF_SMALL).collect()
-    }
-    assert streamed == batch
-
-
-def test_windowed_event_metrics_batch_semantics(spark):
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    out = windowed_event_metrics(ev)
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r["n"] > 0 for r in rows)
-    # sliding 1h/30m windows: every event lands in exactly 2 windows
-    assert sum(r["n"] for r in rows) == 2 * ev.count()
 
 
 def test_decoder_registry_plugin(spark):

@@ -53,3 +53,10 @@ def test_oracle_sql_needs_no_derived_tables(tmp_path):
     assert res.returncode == 0, res.stderr[-3000:]
     assert json.loads(res.stdout.splitlines()[-1]) == sorted(_ORACLES)
     assert not (data / "out").exists()
+
+
+def test_bench_headline_queries_are_registered():
+    """``python bench.py`` times its headline queries by registry name."""
+    import bench
+
+    assert set(bench.HEADLINE_QUERIES) <= set(_QUERIES)

@@ -16,18 +16,22 @@ def _plan(df) -> str:
 
 
 def test_filter_and_projection_pushdown(spark):
-    df = ep.registry()["filter_project"](spark, SF_MED)
-    plan = _plan(df)
-    assert "PushedFilters:" in plan
-    assert "o_orderstatus" in plan.split("PushedFilters:")[1].splitlines()[0]
-    # column pruning: the scan reads only the needed columns
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "o_orderdate" not in read_schema and "o_custkey" not in read_schema
+    plan = _plan(ep.registry()["graph_topics_list"](spark, SF_MED))
+    pushed = plan.split("PushedFilters:")[1].splitlines()[0]
+    assert "EqualTo(kind,BroadTopic)" in pushed
+    # column pruning: the nodes scan reads only the filter and output columns
+    read_schema = plan.split("ReadSchema:")[1].splitlines()[0].strip()
+    assert read_schema == "struct<kind:string,name:string>"  # no url/title/media_refs
 
 
 def test_star_join_broadcasts_dims(spark):
-    plan = _plan(ep.registry()["join_customer_region"](spark, SF_MED))
-    assert plan.count("BroadcastHashJoin") >= 2  # nation + region
+    """SURVEY J1: RELATES_TO_DOC joins the doc-scale topic stream to the
+    vocabulary-sized topic_map by broadcasting the mapping side."""
+    from semantic_search_system_spark.plans.pipeline import relates_triples, run_pipeline
+
+    cat = run_pipeline(spark, SF_MED, ep.out_root(SF_MED))
+    plan = _plan(relates_triples(cat.read(spark, "enriched"), cat.read(spark, "topic_map")))
+    assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
@@ -125,27 +129,6 @@ def test_cc_pointer_jumping_converges_logarithmically(spark):
     }
     assert set(got.values()) == {"n0000"}
     assert len(got) == n + 1
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Both sides bucketed on the join key → no shuffle feeds the join.
-
-    At sf0.01 Catalyst broadcasts the small side (also shuffle-free); with
-    broadcast disabled the bucketed SortMergeJoin must run WITHOUT exchanges —
-    the property that matters when both sides are doc-scale."""
-    df = ep.registry()["bucketed_colocated_join"](spark, SF_MED)
-    plan = _plan(df)
-    assert "Exchange hashpartitioning(l_orderkey" not in plan
-    assert "Exchange hashpartitioning(o_orderkey" not in plan
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan2 = _plan(ep.registry()["bucketed_colocated_join"](spark, SF_MED))
-        assert "SortMergeJoin" in plan2
-        assert "Exchange hashpartitioning(l_orderkey" not in plan2
-        assert "Exchange hashpartitioning(o_orderkey" not in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_dedup_family_never_cartesian(spark):
