@@ -1,16 +1,14 @@
-"""Score normalization + hybrid fusion as pure column expressions.
+"""Score normalization as a pure column expression.
 
 Reference parity:
 - minmax_normalize_100 ≡ normalize_scores_to_100 (utils/search_pipeline.py:34-64)
   including the constant-score edge case (:53-57 → everyone gets 100.0) and the
   [1, 100] clamp (:58-62).
-- fuse_minmax_mean ≡ the OpenSearch hybrid pipeline 'min_max' normalization +
-  'arithmetic_mean' combination (utils/constants.py:13-23, opensearch.py:31-75).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,21 +29,3 @@ def minmax_normalize_100(df: DataFrame, score_col: str, out_col: str = "norm_sco
     )
     return out.withColumn(out_col, expr).drop("__mn", "__mx")
 
-
-def _minmax01(score: Column, w) -> Column:
-    mn, mx = F.min(score).over(w), F.max(score).over(w)
-    return F.when(mx == mn, F.lit(1.0)).otherwise((score - mn) / (mx - mn))
-
-
-def fuse_minmax_mean(
-    df: DataFrame,
-    lexical_col: str,
-    semantic_col: str,
-    out_col: str = "score",
-    partition_cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-branch min-max to [0,1], then arithmetic mean — the hybrid fusion."""
-    w = Window.partitionBy(*(partition_cols or []))
-    lex = _minmax01(F.col(lexical_col), w)
-    sem = _minmax01(F.col(semantic_col), w)
-    return df.withColumn(out_col, (lex + sem) / F.lit(2.0))

@@ -9,8 +9,8 @@ biggest constant-factor lever.
 
 There is one kernel, ``enrich_arrow`` (a string array in, a struct array
 out), with two callers: ``enrich_udf`` wraps it for the Spark plans (the
-batch stage past the driver bound and both stream sinks), and the driver
-twin of the batch stage (plans/pipeline._assemble_arrow) calls it in-process
+batch stage and both stream sinks past the driver bound), and the driver
+twin of those plans (plans/pipeline._assemble_arrow) calls it in-process
 on batches of the same size the UDF receives
 (``spark.sql.execution.arrow.maxRecordsPerBatch``).
 

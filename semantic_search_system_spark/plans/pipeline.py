@@ -62,11 +62,12 @@ def read_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------- stage 1
 def enrich_docs(docs: DataFrame) -> DataFrame:
-    """The one enrich body behind the batch stage and both streams
-    (streaming/incremental.enrich_stream, triples_stream): admission (docs
-    with a usable text span — the §2.11 rule whose rejects the callers
-    quarantine) → ``assemble_content`` → the fused enrich UDF, projected to
-    the enriched table's columns. ``docs``: interleaved rows carrying
+    """The Spark branch's enrich body, for the batch stage and both stream
+    sinks (streaming/incremental.enrich_stream, triples_stream) alike:
+    admission (docs with a usable text span — the §2.11 rule whose rejects
+    the callers quarantine) → ``assemble_content`` → the fused enrich UDF,
+    projected to the enriched table's columns. Its driver twin is
+    ``enrich_docs_arrow``. ``docs``: interleaved rows carrying
     BUCKET_COL. clean=False: the fused UDF cleans batch-wise via Arrow RE2
     (the JVM regexp pair was the enrich stage's most expensive expression).
     A filter or explode over this frame still evaluates the UDF once
@@ -205,18 +206,48 @@ def _assemble_arrow(docs, batch: int):
     )
 
 
+def enrich_docs_arrow(docs, batch: int):
+    """Driver twin of ``enrich_docs`` with its quarantine: the (failed,
+    enriched) tables of interleaved rows ``docs`` (a pyarrow Table with
+    BUCKET_COL, doc_id, spans; the bucket of any type, passed through).
+    Same admission as ``has_usable_text``: a doc with a span of kind 'text'
+    whose text is non-empty after trim(' ') is assembled and enriched by
+    ``_assemble_arrow`` in kernel calls of ``batch`` rows; every other doc
+    becomes a failed row (stage 'enrich', reason 'no_text_spans'). The one
+    pyarrow enrich body behind ``build_enriched``'s driver branch and both
+    stream sinks (streaming/incremental.py)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spans = docs["spans"].combine_chunks()
+    x = pc.list_flatten(spans)
+    text = pc.utf8_trim(pc.struct_field(x, "text"), characters=" ")
+    usable = pc.and_(pc.equal(pc.struct_field(x, "kind"), "text"), pc.not_equal(text, ""))
+    usable = pc.fill_null(usable, False).to_numpy(zero_copy_only=False)
+    parent = pc.list_parent_indices(spans).to_numpy()
+    admitted = pa.array(np.bincount(parent[usable], minlength=docs.num_rows) > 0)
+    failed = docs.filter(pc.invert(admitted))
+    failed = pa.table(
+        {
+            BUCKET_COL: failed[BUCKET_COL],
+            "doc_id": failed["doc_id"],
+            "stage": pa.repeat("enrich", failed.num_rows),
+            "reason": pa.repeat("no_text_spans", failed.num_rows),
+        }
+    )
+    return failed, _assemble_arrow(docs.filter(admitted), batch)
+
+
 def _enrich_driver(
     spark: SparkSession, cat: Catalog, source: DataFrame, pending: list[int], n_buckets: int
 ) -> bool:
     """Driver twin of the Spark branch of build_enriched: commits the
-    ``pending`` buckets of ``failed_rows`` and ``enriched`` from pyarrow and
-    returns True, or returns False (committing nothing) when ``source`` fails
-    ``driver_read``'s guards, holds more than one Arrow batch of rows
-    (``spark.sql.execution.arrow.maxRecordsPerBatch``; zero or less means no
-    limit to Spark, so the Spark branch), or has a doc_id that is not a
-    string (Spark hashes a long differently). Same admission as
-    ``has_usable_text``: a doc with a span of kind 'text' whose text is
-    non-empty after trim(' '); every other doc is quarantined."""
+    ``pending`` buckets of ``failed_rows`` and ``enriched`` from pyarrow
+    (``enrich_docs_arrow``) and returns True, or returns False (committing
+    nothing) when ``source`` fails ``driver_read``'s guards, holds more than
+    one Arrow batch of rows (``spark.sql.execution.arrow.maxRecordsPerBatch``;
+    zero or less means no limit to Spark, so the Spark branch), or has a
+    doc_id that is not a string (Spark hashes a long differently)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -226,28 +257,8 @@ def _enrich_driver(
         return False
     bucket = pa.array(arrow_bucket(tb["doc_id"], n_buckets))
     tb = tb.append_column(BUCKET_COL, bucket).filter(pc.is_in(bucket, pa.array(pending, pa.int32())))
-    spans = tb["spans"].combine_chunks()
-    x = pc.list_flatten(spans)
-    text = pc.utf8_trim(pc.struct_field(x, "text"), characters=" ")
-    usable = pc.and_(pc.equal(pc.struct_field(x, "kind"), "text"), pc.not_equal(text, ""))
-    usable = pc.fill_null(usable, False).to_numpy(zero_copy_only=False)
-    parent = pc.list_parent_indices(spans).to_numpy()
-    admitted = pa.array(np.bincount(parent[usable], minlength=tb.num_rows) > 0)
-    failed = tb.filter(pc.invert(admitted))
-    cat.commit_partitions_local(
-        pa.table(
-            {
-                BUCKET_COL: failed[BUCKET_COL],
-                "doc_id": failed["doc_id"],
-                "stage": pa.repeat("enrich", failed.num_rows),
-                "reason": pa.repeat("no_text_spans", failed.num_rows),
-            }
-        ),
-        _FAILED_ROWS_SCHEMA,
-        "failed_rows",
-        stage="quarantine",
-    )
-    enriched = _assemble_arrow(tb.filter(admitted), batch)
+    failed, enriched = enrich_docs_arrow(tb, batch)
+    cat.commit_partitions_local(failed, _FAILED_ROWS_SCHEMA, "failed_rows", stage="quarantine")
     cat.commit_partitions_local(enriched, _ENRICHED_SCHEMA, "enriched", stage="enrich")
     return True
 
@@ -492,8 +503,9 @@ def mention_topic_triples(enriched_part: DataFrame) -> DataFrame:
     derives from the element's own label via a native CASE — building
     structs inside a F.transform lambda is CodegenFallback, interpreted
     once per element (measured 2-5x slower per 4.4M triples). This map-only
-    branch is shared by the batch stage and the incremental stream
-    (streaming/incremental.triples_stream)."""
+    branch is shared by the batch stage and the Spark branch of the
+    incremental stream (streaming/incremental.triples_stream); its driver
+    twin is ``mention_topic_arrow``."""
     x = F.col("x")
     return enriched_part.select(
         BUCKET_COL,
@@ -549,35 +561,41 @@ _TRIPLES_SCHEMA = T.StructType(
 )
 
 
-def _triples_driver(enriched: DataFrame, topic_map: DataFrame, pending: list[int]):
-    """Driver twin of ``mention_topic_triples`` ∪ ``relates_triples`` over
-    the ``pending`` partitions of ``enriched``, as a pyarrow Table in
-    ``_TRIPLES_SCHEMA`` order — None when either input fails
-    ``driver_read``'s guards. Same semantics: each triple keeps the bucket
-    of its enriched partition; a doc with a null entity or topic array emits
-    no MENTIONS/HAS_TOPIC rows (Spark's ``concat`` of a null array is null);
-    text is trim(' ') then lower-cased (the case-mapping caveat of
-    ``_vocab_texts_driver``); the RELATES distinct key carries the bucket,
-    which is a function of the doc."""
-    docs = driver_read(enriched, [BUCKET_COL, "doc_id", "entities", "topics"], pending)
-    tmap = driver_read(topic_map, ["phrase_norm", "broad_topic"])
-    if docs is None or tmap is None:
-        return None
+def _explode(tb, column):
+    """(BUCKET_COL and doc_id of each element's row, the elements) of the
+    list column ``column`` of ``tb``: Spark's ``explode``, which drops null
+    and empty lists."""
+    import pyarrow.compute as pc
+
+    lists = tb[column].combine_chunks()
+    ids = tb.select([BUCKET_COL, "doc_id"]).take(pc.list_parent_indices(lists))
+    return ids, pc.list_flatten(lists)
+
+
+def _norm_text(x):
+    """trim(' ') then lower-case of the ``text`` field of struct array ``x``
+    (the case-mapping caveat of ``_vocab_texts_driver``)."""
+    import pyarrow.compute as pc
+
+    return pc.utf8_lower(pc.utf8_trim(pc.struct_field(x, "text"), characters=" "))
+
+
+def mention_topic_arrow(enriched):
+    """Driver twin of ``mention_topic_triples`` over a pyarrow Table with
+    BUCKET_COL, doc_id, entities and topics, as a Table of BUCKET_COL, subj,
+    pred, obj. Each triple keeps its doc's bucket (of any type); a doc with
+    a null entity or topic array emits no row (Spark's ``concat`` of a null
+    array is null). Shared by ``_triples_driver`` and the triples stream
+    sink's driver branch (streaming/incremental.triples_stream)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def explode(tb, column):
-        lists = tb[column].combine_chunks()
-        x = pc.list_flatten(lists)
-        return tb.select([BUCKET_COL, "doc_id"]).take(pc.list_parent_indices(lists)), x
-
-    def norm(x):
-        return pc.utf8_lower(pc.utf8_trim(pc.struct_field(x, "text"), characters=" "))
-
-    both = docs.filter(pc.and_(pc.is_valid(docs["entities"]), pc.is_valid(docs["topics"])))
+    both = enriched.filter(
+        pc.and_(pc.is_valid(enriched["entities"]), pc.is_valid(enriched["topics"]))
+    )
     parts = []
     for column in ("entities", "topics"):
-        ids, x = explode(both, column)
+        ids, x = _explode(both, column)
         is_m = pc.fill_null(pc.equal(pc.struct_field(x, "label"), "ENTITY"), False)
         parts.append(
             pa.table(
@@ -585,28 +603,42 @@ def _triples_driver(enriched: DataFrame, topic_map: DataFrame, pending: list[int
                     BUCKET_COL: ids[BUCKET_COL],
                     "subj": ids["doc_id"],
                     "pred": pc.if_else(is_m, spec.PRED_MENTIONS, spec.PRED_HAS_TOPIC),
-                    "obj": norm(x),
+                    "obj": _norm_text(x),
                 }
             )
         )
-    ids, x = explode(docs, "topics")
+    return pa.concat_tables(parts)
+
+
+def _triples_driver(enriched: DataFrame, topic_map: DataFrame, pending: list[int]):
+    """Driver twin of ``mention_topic_triples`` ∪ ``relates_triples`` over
+    the ``pending`` partitions of ``enriched``, as a pyarrow Table in
+    ``_TRIPLES_SCHEMA`` order — None when either input fails
+    ``driver_read``'s guards. Same semantics: MENTIONS/HAS_TOPIC as
+    ``mention_topic_arrow``; the RELATES distinct key carries the bucket,
+    which is a function of the doc."""
+    docs = driver_read(enriched, [BUCKET_COL, "doc_id", "entities", "topics"], pending)
+    tmap = driver_read(topic_map, ["phrase_norm", "broad_topic"])
+    if docs is None or tmap is None:
+        return None
+    import pyarrow as pa
+
+    ids, x = _explode(docs, "topics")
     relates = (
-        ids.append_column("phrase_norm", norm(x))
+        ids.append_column("phrase_norm", _norm_text(x))
         .join(tmap, "phrase_norm", join_type="inner")
         .group_by(["broad_topic", "doc_id", BUCKET_COL])
         .aggregate([])
     )
-    parts.append(
-        pa.table(
-            {
-                BUCKET_COL: relates[BUCKET_COL],
-                "subj": relates["broad_topic"],
-                "pred": pa.repeat(spec.PRED_RELATES, relates.num_rows),
-                "obj": relates["doc_id"],
-            }
-        )
+    relates = pa.table(
+        {
+            BUCKET_COL: relates[BUCKET_COL],
+            "subj": relates["broad_topic"],
+            "pred": pa.repeat(spec.PRED_RELATES, relates.num_rows),
+            "obj": relates["doc_id"],
+        }
     )
-    return pa.concat_tables(parts)
+    return pa.concat_tables([mention_topic_arrow(docs), relates])
 
 
 def build_triples(

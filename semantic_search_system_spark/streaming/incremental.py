@@ -5,11 +5,19 @@ The reference processes documents incrementally with a ``processed`` boolean
 flag flipped after each bulk write (ingest/pr_meta_store.py:55-139) and a
 straggler sweep (:142-194). The Spark-native equivalent lives here:
 
-``enrich_stream``: a Structured Streaming pipeline — ``readStream`` over the
-interleaved table directory, the SAME assemble/extract/embed transforms as
-the batch plan (one logical plan, two execution modes), ``foreachBatch``
-into the checkpointed Catalog so delivery is idempotent at partition
-granularity (exactly-once effective semantics).
+``enrich_stream`` and ``triples_stream``: Structured Streaming queries —
+``readStream`` over the interleaved table directory, ``foreachBatch`` into
+the checkpointed Catalog under epoch-scoped ``<epoch>_<bucket>`` keys, so
+delivery is idempotent at partition granularity (exactly-once effective
+semantics). Each sink has two branches, like the batch stages. Its gate is
+one collect of at most one Arrow batch of rows (``_driver_epoch``: one
+Spark job, no UDF). A micro-batch of at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows is enriched in
+pyarrow by the batch stage's driver kernels (``enrich_docs_arrow``,
+``mention_topic_arrow``) and committed from the driver; a larger one runs
+the batch stage's Spark body (``enrich_docs``, the fused Arrow UDF) over a
+re-scan of the micro-batch. Both branches commit the same rows, keys and
+declared schemas, so epochs of either branch mix in one table.
 """
 
 from __future__ import annotations
@@ -21,6 +29,20 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..catalog import BUCKET_COL, Catalog, arrow_bucket, with_bucket
+from ..operators.extraction import has_usable_text
+from ..plans.pipeline import (
+    _ENRICHED_SCHEMA,
+    _FAILED_ROWS_SCHEMA,
+    _TRIPLES_SCHEMA,
+    build_topic_map,
+    enrich_docs,
+    enrich_docs_arrow,
+    mention_topic_arrow,
+    mention_topic_triples,
+    relates_triples,
+)
 
 
 def _checkpoint_identity(checkpoint_dir: str) -> str:
@@ -59,6 +81,101 @@ SPANS_SCHEMA = T.StructType(
 )
 
 
+def _epoch_keyed(schema: T.StructType) -> T.StructType:
+    """``schema`` with BUCKET_COL as a stream table's ``<epoch>_<bucket>``
+    key: a string, which ``concat_ws`` never makes null."""
+    return T.StructType(
+        [
+            T.StructField(BUCKET_COL, T.StringType(), nullable=False) if f.name == BUCKET_COL else f
+            for f in schema.fields
+        ]
+    )
+
+
+# the Spark branches' df.schema, which the Catalog records at a table's first
+# commit; the driver branches commit under the same declared schemas
+FAILED_ROWS_STREAM_SCHEMA = _epoch_keyed(_FAILED_ROWS_SCHEMA)
+ENRICHED_STREAM_SCHEMA = _epoch_keyed(_ENRICHED_SCHEMA)
+TRIPLES_STREAM_SCHEMA = _epoch_keyed(_TRIPLES_SCHEMA)
+
+
+def _epoch_key(epoch_id: int):
+    """The ``<epoch>_<bucket>`` partition key of a micro-batch's rows. Each
+    micro-batch owns its own partitions: a replayed epoch (foreachBatch may
+    re-deliver after a failure) hits already-manifested keys and is skipped
+    (exactly-once effective); a NEW epoch always lands in fresh partitions —
+    with plain bucket keys, epoch 1 would claim all n_buckets keys and every
+    later micro-batch would be silently dropped."""
+    return F.concat_ws("_", F.lit(int(epoch_id)), F.col(BUCKET_COL))
+
+
+def _driver_epoch(batch_df: DataFrame, epoch_id: int, n_buckets: int):
+    """The gate of both sinks: (rows, batch) — the micro-batch's doc_id and
+    spans as a pyarrow Table carrying their ``<epoch>_<bucket>`` keys, and
+    the kernel batch size — when it holds at most one Arrow batch of rows
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``, the bound of
+    ``build_enriched``'s driver branch); None when it holds more, or when
+    that bound is zero or less (no limit to Spark). The foreachBatch frame
+    is a LogicalRDD with no input files, so ``driver_read`` cannot read it:
+    the gate collects at most batch + 1 rows instead — one Spark job, with
+    no UDF."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = batch_df.sparkSession
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if batch <= 0:
+        return None
+    tb = batch_df.select("doc_id", "spans").limit(batch + 1).toArrow()
+    if tb.num_rows > batch:
+        return None
+    bucket = pc.cast(pa.array(arrow_bucket(tb["doc_id"], n_buckets)), pa.string())
+    key = pc.binary_join_element_wise(str(int(epoch_id)), bucket, "_")
+    return tb.append_column(BUCKET_COL, key), batch
+
+
+def _enrich_sink_frames(batch_df: DataFrame, epoch_id: int, n_buckets: int):
+    """The enrich sink's Spark branch: the (quarantine, enriched) frames of
+    a micro-batch, keyed by ``_epoch_key``. §2.11 quarantine, SAME rule as
+    the batch stage (build_enriched): docs with no usable text span go to
+    the failed-rows table instead of silently producing empty enrichments —
+    stream and batch must admit the SAME corpus or the reconciled graph
+    diverges. The enriched frame is the batch plan's enrich body."""
+    docs = with_bucket(batch_df, "doc_id", n_buckets)
+    key = _epoch_key(epoch_id)
+    bad = docs.where(~has_usable_text("spans")).select(
+        key.alias(BUCKET_COL), "doc_id",
+        F.lit("enrich").alias("stage"), F.lit("no_text_spans").alias("reason"),
+    )
+    return bad, enrich_docs(docs).withColumn(BUCKET_COL, key)
+
+
+def _triples_sink_frame(batch_df: DataFrame, epoch_id: int, n_buckets: int) -> DataFrame:
+    """The triples sink's Spark branch: the batch plan's enrich body (and
+    admission rule) and its map-only MENTIONS/HAS_TOPIC emission over a
+    micro-batch, keyed by ``_epoch_key``."""
+    enriched = enrich_docs(with_bucket(batch_df, "doc_id", n_buckets))
+    return mention_topic_triples(enriched).withColumn(BUCKET_COL, _epoch_key(epoch_id)).select(
+        BUCKET_COL, "subj", "pred", "obj"
+    )
+
+
+def _start(spark: SparkSession, input_dir: str, checkpoint_dir: str, sink):
+    """Start the query that hands ``sink`` each micro-batch of the
+    interleaved files in ``input_dir`` (at most four files an epoch),
+    checkpointed at ``checkpoint_dir``, until the files there at start are
+    consumed."""
+    return (
+        spark.readStream.schema(SPANS_SCHEMA)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def enrich_stream(
     spark: SparkSession,
     input_dir: str,
@@ -67,51 +184,34 @@ def enrich_stream(
     n_buckets: int = 8,
 ):
     """Stream the interleaved corpus through the enrichment stages into the
-    Catalog. Returns the started StreamingQuery (caller awaits/stops)."""
-    from ..catalog import Catalog, with_bucket
-    from ..operators.extraction import has_usable_text
-    from ..plans.pipeline import enrich_docs
+    Catalog: per micro-batch, ``failed_rows_stream`` (the quarantine) and
+    ``enriched_stream``. Returns the started StreamingQuery (caller
+    awaits/stops).
 
-    stream = (
-        spark.readStream.schema(SPANS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
+    Two branches, chosen per micro-batch by ``_driver_epoch``'s one collect:
+    at most one Arrow batch of rows is admitted, assembled and enriched in
+    pyarrow (``enrich_docs_arrow``) and committed from the driver
+    (``writer: local``) — no further Spark job and no Python worker; more
+    rows run ``_enrich_sink_frames`` (the fused UDF) and two Spark writes."""
     cat = Catalog(out_root)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        batch_df = with_bucket(batch_df, "doc_id", n_buckets)
-        epoch_key = F.concat_ws("_", F.lit(int(epoch_id)), F.col("bucket"))
-        # §2.11 quarantine, SAME rule as the batch stage (build_enriched):
-        # docs with no usable text span go to the failed-rows table instead
-        # of silently producing empty enrichments — stream and batch must
-        # admit the SAME corpus or the reconciled graph diverges
-        cat.commit_partitions(
-            batch_df.where(~has_usable_text("spans")).select(
-                epoch_key.alias("bucket"), "doc_id",
-                F.lit("enrich").alias("stage"), F.lit("no_text_spans").alias("reason"),
-            ),
-            "failed_rows_stream",
-            stage=stage,
-        )
-        # the SAME enrich body as the batch plan (one logical plan, two
-        # execution modes). Epoch-scope the partition key: each micro-batch
-        # owns its own `<epoch>_<bucket>` partitions. A replayed epoch
-        # (foreachBatch may re-deliver after a failure) hits already-
-        # manifested keys and is skipped (exactly-once effective); a NEW
-        # epoch always lands in fresh partitions — without this, epoch 1
-        # claims all n_buckets keys and every later micro-batch would be
-        # silently dropped.
-        enriched = enrich_docs(batch_df).withColumn("bucket", epoch_key)
+        local = _driver_epoch(batch_df, epoch_id, n_buckets)
+        if local is not None:
+            failed, enriched = enrich_docs_arrow(*local)
+            cat.commit_partitions_local(
+                failed, FAILED_ROWS_STREAM_SCHEMA, "failed_rows_stream", stage=stage
+            )
+            cat.commit_partitions_local(
+                enriched, ENRICHED_STREAM_SCHEMA, "enriched_stream", stage=stage
+            )
+            return
+        bad, enriched = _enrich_sink_frames(batch_df, epoch_id, n_buckets)
+        cat.commit_partitions(bad, "failed_rows_stream", stage=stage)
         cat.commit_partitions(enriched, "enriched_stream", stage=stage)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(spark, input_dir, checkpoint_dir, sink)
 
 
 def triples_stream(
@@ -122,12 +222,16 @@ def triples_stream(
     n_buckets: int = 8,
 ):
     """INCREMENTAL KG MAINTENANCE: stream interleaved documents straight to
-    (subj, pred, obj) triples — the same fused enrich UDF and the same
-    map-only MENTIONS/HAS_TOPIC emission as the batch stage
-    (plans.pipeline.mention_topic_triples: one logical plan, two execution
-    modes), committed per epoch into ``triples_stream`` with the
-    epoch-scoped partition keys that make replay idempotent and
-    ``compact_stream_epochs`` applicable.
+    (subj, pred, obj) triples — the batch stage's enrich body and its
+    map-only MENTIONS/HAS_TOPIC emission — committed per epoch into
+    ``triples_stream`` with the epoch-scoped partition keys that make
+    replay idempotent and ``compact_stream_epochs`` applicable.
+
+    Two branches, chosen per micro-batch by ``_driver_epoch``'s one collect,
+    as in ``enrich_stream``: at most one Arrow batch of rows goes through
+    ``enrich_docs_arrow`` and ``mention_topic_arrow`` and is committed from
+    the driver; more rows run ``_triples_sink_frame`` (the fused UDF) and a
+    Spark write.
 
     Scope (documented split, lambda-architecture style): the MENTIONS and
     HAS_TOPIC branches are PER-DOCUMENT (map-only — streamable exactly);
@@ -137,32 +241,22 @@ def triples_stream(
     ``reconcile_relates`` below closes the split: run it (at any cadence)
     over the accumulated ``enriched_stream`` corpus and ``serving_triples``
     exposes the converged three-predicate set."""
-    from ..catalog import Catalog, with_bucket
-    from ..plans.pipeline import enrich_docs, mention_topic_triples
-
-    stream = (
-        spark.readStream.schema(SPANS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
     cat = Catalog(out_root)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        # the SAME enrich body (and admission rule) as the batch stage
-        enriched = enrich_docs(with_bucket(batch_df, "doc_id", n_buckets))
-        triples = mention_topic_triples(enriched)
-        triples = triples.withColumn(
-            "bucket", F.concat_ws("_", F.lit(int(epoch_id)), F.col("bucket"))
-        ).select("bucket", "subj", "pred", "obj")
+        local = _driver_epoch(batch_df, epoch_id, n_buckets)
+        if local is not None:
+            _, enriched = enrich_docs_arrow(*local)
+            triples = mention_topic_arrow(enriched)
+            cat.commit_partitions_local(
+                triples, TRIPLES_STREAM_SCHEMA, "triples_stream", stage=stage
+            )
+            return
+        triples = _triples_sink_frame(batch_df, epoch_id, n_buckets)
         cat.commit_partitions(triples, "triples_stream", stage=stage)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(spark, input_dir, checkpoint_dir, sink)
 
 
 DOCS_SCHEMA = "doc_id string, text string"
@@ -211,7 +305,6 @@ def dedup_stream(
     Reference analog: the processed-flag work queue
     (`ingest/pr_meta_store.py:55-63,107-139`) with the "processed" state
     upgraded to queryable signature + verdict tables."""
-    from ..catalog import Catalog, with_bucket
     from ..operators.dedup import incremental_pairs, with_minhash, with_shingles
 
     stream = (
@@ -333,9 +426,6 @@ def reconcile_relates(spark: SparkSession, out_root: str, n_buckets: int = 8) ->
     halves into the converged set."""
     import shutil
 
-    from ..catalog import BUCKET_COL, Catalog, with_bucket
-    from ..plans.pipeline import build_topic_map, relates_triples
-
     cat = Catalog(out_root)
     enriched = cat.read(spark, "enriched_stream")
     if cat.exists("topic_map"):
@@ -354,8 +444,6 @@ def serving_triples(spark: SparkSession, out_root: str) -> DataFrame:
     ``reconcile_relates`` run — the documented lambda behavior: per-doc
     predicates are exact in real time, the corpus-global predicate converges
     at reconciliation cadence)."""
-    from ..catalog import Catalog
-
     cat = Catalog(out_root)
     t = cat.read(spark, "triples_stream").select("subj", "pred", "obj")
     if cat.exists("triples_relates"):

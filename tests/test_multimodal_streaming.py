@@ -9,7 +9,7 @@ from semantic_search_system_spark.operators.multimodal import (
 )
 from semantic_search_system_spark.streaming.incremental import enrich_stream
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, with_job_count, write_edge_corpus
 
 
 def test_decode_stub_modes():
@@ -499,3 +499,228 @@ def test_dedup_stream_resumes_after_compaction(spark, tmp_root):
     assert len(got) == n_docs_before + len(dups)
     exact_dups = {f"dup_{i}" for i in range(50)} & set(dups.doc_id)
     assert exact_dups and not any(got[d] for d in exact_dups)
+
+
+# ------------------------------------------------- the stream sinks' two branches
+_STREAM_TABLES = ("failed_rows_stream", "enriched_stream", "triples_stream")
+_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _sql_plans(spark):
+    """{execution id: physical plan text} of every SQL execution the session
+    has run, read once the listener bus has drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
+def _run_sinks(spark, inbox, out, batch=None):
+    """Run enrich_stream, then triples_stream, over ``inbox`` into the
+    Catalog at ``out`` (each with its own checkpoint beside it), with
+    maxRecordsPerBatch set to ``batch`` (None: left as it is). Returns, per
+    sink, (Spark jobs the query submitted, whether a plan it ran evaluates
+    a Python UDF, the batch ids it ran)."""
+    import os
+
+    from semantic_search_system_spark.streaming.incremental import triples_stream
+
+    saved = spark.conf.get(_BATCH)
+    tracker = spark.sparkContext.statusTracker()
+    runs = {}
+    try:
+        if batch is not None:
+            spark.conf.set(_BATCH, str(batch))
+        for name, start in (("enrich", enrich_stream), ("triples", triples_stream)):
+            before = set(_sql_plans(spark))
+            q = start(spark, inbox, out, os.path.join(f"{out}_ckpt", name))
+            assert q.awaitTermination(180) and q.exception() is None
+            plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+            runs[name] = (
+                len(tracker.getJobIdsForGroup(str(q.runId))),
+                any("EvalPython" in p for p in plans),
+                {p.batchId for p in q.recentProgress},
+            )
+    finally:
+        spark.conf.set(_BATCH, saved)
+    return runs
+
+
+def _stream_tables(spark, out):
+    """Per stream table: (rows with their partition key, sorted; the
+    recorded schema; the partition keys; the writer of each snapshot)."""
+    from semantic_search_system_spark.catalog import Catalog
+
+    cat = Catalog(out)
+    tables = {}
+    for t in _STREAM_TABLES:
+        man = cat.manifest(t)
+        tables[t] = (
+            sorted(cat.read(spark, t).collect(), key=repr),
+            man["schema"],
+            sorted(man["partitions"]),
+            [s.get("writer") for s in man["snapshots"]],
+        )
+    return tables
+
+
+def _split_corpus(src, dst_dir, parts):
+    """Write the interleaved file ``src`` as ``parts`` files under
+    ``dst_dir``, file k holding rows k, k + parts, ...; returns their
+    paths."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    tb = pq.read_table(src)
+    paths = [os.path.join(dst_dir, f"part{k}.parquet") for k in range(parts)]
+    for k, path in enumerate(paths):
+        pq.write_table(tb.take(list(range(k, tb.num_rows, parts))), path)
+    return paths
+
+
+def test_stream_schemas_match_spark_frames(spark):
+    """The declared stream-table schemas are the Spark sink frames'
+    ``.schema`` — the JSON the Catalog records at a table's first commit and
+    compares on every later one, so an epoch of either branch can follow an
+    epoch of the other. Analysis only: no Spark job."""
+    from semantic_search_system_spark.streaming import incremental as inc
+
+    def frames():
+        empty = spark.createDataFrame([], inc.SPANS_SCHEMA)
+        bad, enriched = inc._enrich_sink_frames(empty, 3, 8)
+        return bad.schema, enriched.schema, inc._triples_sink_frame(empty, 3, 8).schema
+
+    (bad, enriched, triples), jobs = with_job_count(spark, frames)
+    assert jobs == 0
+    assert bad.json() == inc.FAILED_ROWS_STREAM_SCHEMA.json()
+    assert enriched.json() == inc.ENRICHED_STREAM_SCHEMA.json()
+    assert triples.json() == inc.TRIPLES_STREAM_SCHEMA.json()
+
+
+def test_stream_sinks_driver_matches_spark(spark, tmp_root):
+    """Both sinks' driver branch (one collect, pyarrow admission, assembly,
+    kernel and triple emission, local commits) writes the EXACT rows,
+    partition keys and recorded schemas of their Spark branch, which a
+    maxRecordsPerBatch below the epoch's rows forces — over the edge-case
+    corpus of the batch stage's twin test."""
+    import os
+
+    from semantic_search_system_spark.streaming import incremental as inc
+
+    inbox = os.path.join(tmp_root, "in")
+    os.makedirs(inbox)
+    n = write_edge_corpus(os.path.join(inbox, "epoch0.parquet"))
+    a, b = os.path.join(tmp_root, "driver"), os.path.join(tmp_root, "spark")
+    _run_sinks(spark, inbox, a)
+    _run_sinks(spark, inbox, b, batch=n - 1)
+    fast, slow = _stream_tables(spark, a), _stream_tables(spark, b)
+    for t in _STREAM_TABLES:
+        assert fast[t][:3] == slow[t][:3], t
+        assert fast[t][3] == ["local"] and slow[t][3] == ["spark"], t
+    assert fast["failed_rows_stream"][1] == inc.FAILED_ROWS_STREAM_SCHEMA.json()
+    assert fast["enriched_stream"][1] == inc.ENRICHED_STREAM_SCHEMA.json()
+    assert fast["triples_stream"][1] == inc.TRIPLES_STREAM_SCHEMA.json()
+    failed = {r["doc_id"] for r in fast["failed_rows_stream"][0]}
+    assert failed == {"media_only", "blank_only", "no_spans", "null_spans"}
+    assert len(fast["enriched_stream"][0]) == n - len(failed)
+    assert {r["bucket"] for r in fast["enriched_stream"][0]} == {f"0_{k}" for k in range(8)}
+    assert len(fast["triples_stream"][0]) > n
+
+
+def test_stream_sinks_driver_bound(spark, tmp_root):
+    """An epoch of exactly ``maxRecordsPerBatch`` rows takes both sinks'
+    driver branch; one row more than the bound, or a bound of zero or less
+    (no limit to Spark), runs their Spark branch — the same tables either
+    way."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    source = interleaved_path(SF_SMALL)
+    n = pq.read_metadata(source).num_rows
+    inbox = os.path.join(tmp_root, "in")
+    os.makedirs(inbox)
+    shutil.copy(source, os.path.join(inbox, "epoch0.parquet"))
+    runs = {}
+    for tag, batch in (("at", n), ("under", n - 1), ("zero", 0), ("negative", -1)):
+        out = os.path.join(tmp_root, tag)
+        _run_sinks(spark, inbox, out, batch=batch)
+        runs[tag] = _stream_tables(spark, out)
+    for t in _STREAM_TABLES:
+        assert runs["at"][t][3] == ["local"], t
+        for tag in ("under", "zero", "negative"):
+            assert runs[tag][t][3] == ["spark"], (tag, t)
+            assert runs[tag][t][:3] == runs["at"][t][:3], (tag, t)
+
+
+def test_stream_sinks_mixed_branches(spark, tmp_root):
+    """Epochs of the two branches mix in one table: epoch 0 Spark then
+    epoch 1 driver, and the reverse, then ``compact_stream_epochs`` and a
+    crash replay of epoch 1 under the other branch — no schema drift, no
+    duplicate row, and the same reads as a driver-only run."""
+    import os
+
+    from semantic_search_system_spark.catalog import Catalog
+
+    n = write_edge_corpus(os.path.join(tmp_root, "edge.parquet"))
+    parts = _split_corpus(os.path.join(tmp_root, "edge.parquet"), tmp_root, 2)
+    bound = {"driver": None, "spark": 0}
+
+    def run(tag, first, second, replay=None):
+        inbox, out = os.path.join(tmp_root, f"in_{tag}"), os.path.join(tmp_root, tag)
+        os.makedirs(inbox)
+        for k, branch in enumerate((first, second)):
+            os.link(parts[k], os.path.join(inbox, os.path.basename(parts[k])))
+            _run_sinks(spark, inbox, out, batch=bound[branch])
+        cat = Catalog(out)
+        for t in _STREAM_TABLES:
+            cat.compact_stream_epochs(spark, t)
+        tables = _stream_tables(spark, out)
+        if replay is not None:
+            # the checkpoints lose epoch 1's commit, as a crash between the
+            # sink's commits and the checkpoint's would leave them
+            for name in ("enrich", "triples"):
+                for f in ("1", ".1.crc"):
+                    os.remove(os.path.join(f"{out}_ckpt", name, "commits", f))
+            runs = _run_sinks(spark, inbox, out, batch=bound[replay])
+            assert all(1 in ids for _, _, ids in runs.values())
+            assert _stream_tables(spark, out) == tables
+        return tables
+
+    ref = run("ref", "driver", "driver")
+    ids = [r["doc_id"] for t in _STREAM_TABLES[:2] for r in ref[t][0]]
+    assert len(ids) == len(set(ids)) == n
+    assert {r["bucket"][:3] for t in _STREAM_TABLES for r in ref[t][0]} == {"c1_"}
+    writer = {"driver": "local", "spark": "spark"}
+    for first, second in (("spark", "driver"), ("driver", "spark")):
+        got = run(first, first, second, replay=first)
+        for t in _STREAM_TABLES:
+            assert got[t][:3] == ref[t][:3], (first, t)
+            # the two epochs' commits, then the compaction's snapshot
+            assert got[t][3] == [writer[first], writer[second], None], (first, t)
+
+
+def test_stream_driver_epoch_submits_one_job(spark, tmp_root):
+    """A driver-sized epoch costs each sink exactly one Spark job — the
+    gate's collect — and no Python UDF evaluation, and records the local
+    writer; a Spark-branch epoch evaluates the fused UDF."""
+    import os
+
+    write_edge_corpus(os.path.join(tmp_root, "edge.parquet"))
+    parts = _split_corpus(os.path.join(tmp_root, "edge.parquet"), tmp_root, 2)
+    inbox, out = os.path.join(tmp_root, "in"), os.path.join(tmp_root, "out")
+    os.makedirs(inbox)
+    for k, part in enumerate(parts):
+        os.link(part, os.path.join(inbox, os.path.basename(part)))
+        runs = _run_sinks(spark, inbox, out)
+        assert runs == {"enrich": (1, False, {k}), "triples": (1, False, {k})}
+    for t, (_, _, _, writers) in _stream_tables(spark, out).items():
+        assert writers == ["local", "local"], t
+    os.link(parts[0], os.path.join(inbox, "again.parquet"))
+    runs = _run_sinks(spark, inbox, out, batch=0)
+    assert all(udf for _, udf, _ in runs.values()), runs
