@@ -5,8 +5,8 @@ sf0.001 and returns the emitted triple set. ``queries()`` exposes the query
 registry (the paper's operators over the documents, embeddings, interleaved
 and KG tables) plus the full-pipeline outputs; ``oracle_sql()`` the DuckDB
 twins (of the testdata tables the driver registers as views, they read only
-documents, embeddings and orders; repo-generated parquet is addressed via
-read_parquet at sf0.01).
+documents and embeddings; repo-generated parquet is addressed via
+read_parquet at sf0.01). Importing this module writes nothing.
 """
 
 from __future__ import annotations
@@ -21,13 +21,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from semantic_search_system_spark import entrypoints as _ep  # noqa: E402
 from semantic_search_system_spark.fixtures.interleave import build_interleaved  # noqa: E402
-
-# The oracle runs at sf0.01: make sure the interleaved corpus parquet exists
-# before DuckDB reads it (idempotent, ~2s once).
-for _sf in ("sf0.001", "sf0.01"):
-    _d = f"/root/testdata/{_sf}"
-    if os.path.isdir(_d):
-        build_interleaved(_d)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -105,20 +98,13 @@ _PRIORITY = [
     # and 5-iteration PageRank whose DuckDB oracle unrolls the same damped
     # recurrence as CTEs (the doc-IVF k-means pattern)
     "graph_degree_topk", "graph_related_docs", "graph_pagerank",
-    # round-7 freshness rotation (VERDICT r06 #4): the last tail queries
-    # whose driver rows were r01-r03 — rotated in for driver-recorded
-    # evidence on current code; after this round every oracle's driver row
-    # is ≤ 2 rounds old
-    "doc_quality_scores", "media_attrs_per_doc", "decontaminate_vs_holdout",
+    # round-7 freshness rotation (VERDICT r06 #4)
+    "media_attrs_per_doc",
     # NEW round 7 (VERDICT r06 #6): hash-grade projection of the LDA inputs —
     # CountVectorizer vocabulary + doc-term counts re-derived natively and
     # checked against an independent DuckDB explode+groupBy; only the EM
     # labels remain rows-only (topic_model_lda, tail)
     "lda_doc_term_counts",
-    # round-3 training-data additions (quality filter / PII / domain mixing /
-    # BPE-ish token counting)
-    "repetition_3gram_filter", "pii_scrub_audit", "source_mix_sample",
-    "bpe_token_counts",
     # the north rule's NAMED per-row invariant (span-sequence equality vs the
     # source table) keeps a fresh driver row every round
     "span_sequence_invariant",
@@ -145,46 +131,30 @@ _PRIORITY = [
     "entity_cooccurrence",
 ]
 _TAIL = [
-    # round-7 late demotions funding the continuous-dedup debut rows above:
-    # both hash-green in r6 on unchanged code, and their operator evidence
-    # stays in-window redundantly — J7/C11 exact-cosine via ann_ivf_top10
-    # plus six ANN-served search rows; C5/A6 exact-hash dedup via the six
-    # other in-window dedup/similarity rows
-    "knn_cosine_top10", "exact_dup_groups",
-    # round-7 demotions funding the graph-consumer debut rows above: all
-    # three carry hash-green r06 driver rows on code unchanged in round 7
-    # (token_budget_pack/hash_sample_stratified also green r4+r5; the
-    # md5-threshold machinery stays in-window via source_mix_sample, and
-    # J5's back-join evidence keeps its r06 row)
-    "token_budget_pack", "hash_sample_stratified", "entity_position_backjoin",
+    # round-7 demotions: hash-green in r6 on unchanged code; J7/C11
+    # exact-cosine evidence stays in-window via ann_ivf_top10 plus six
+    # ANN-served search rows, and J5's back-join evidence keeps its r06 row
+    "knn_cosine_top10", "entity_position_backjoin",
     # round-7 demotions funding the freshness rotation above: all three got
     # hash-green r06 driver rows (centroid_per_label was itself the round-6
     # freshness rotation; quarantine_failed_rows and lemma_token_counts are
     # multi-round green with in-window siblings exercising the same helpers)
     "centroid_per_label", "quarantine_failed_rows", "lemma_token_counts",
-    # round-6 demotions: both got fresh hash-green driver rows in round 5 on
-    # code unchanged since
-    "doc_fingerprint", "doc_triples_sql",
+    # round-6 demotion: hash-green in round 5 on code unchanged since
+    "doc_triples_sql",
     # r05-green; the dedup family keeps four hash rows in-window
     "ngram_jaccard_pairs",
-    # demoted in round 5 to fund the ANN-variant and clean-freshness
-    # rotations: multi-round green with in-window siblings exercising the
-    # same helpers (clean_tokenize_docs, graph_docs_for_topic)
-    "lang_id_heuristic", "graph_topics_list",
+    # demoted in round 5: multi-round green, with graph_docs_for_topic
+    # in-window exercising the same helpers
+    "graph_topics_list",
     # demoted for search_advanced_ann's window slot: r04-green, and its A1/W3
     # machinery is exercised in-window by top5_entities_per_doc
     "top5_topics_per_doc",
-    # r04-green; C5/rolling-hash evidence stays in-window via
-    # exact_dup_groups and the round-5 doc_fingerprint rotation
-    "rolling_hash_fingerprint",
     # no-oracle rows-only entries and redundant twins of in-window queries;
     # all unchanged since their round-1 driver rows (spans_kind_counts'
     # interleave evidence is superseded in-window by kg_triples_text_preds,
     # which derives from the same spans)
     "spans_kind_counts", "topic_model_lda", "media_ref_integrity",
-    # single-table orders operators, unchanged since their green r02-r06 rows
-    "filter_project", "minmax_normalize_orders", "union_distinct_orders",
-    "max_order_key",
 ]
 
 
@@ -232,4 +202,9 @@ def _partition_metrics_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_sql() -> dict[str, str]:
+    """The DuckDB twins. Some read the sf0.01 interleaved corpus by path rather
+    than through ``interleaved_path``, so it is built here first (idempotent,
+    ~2 s once)."""
+    if os.path.isdir(_ep.ORACLE_SF_DIR):
+        build_interleaved(_ep.ORACLE_SF_DIR)
     return _ep.oracles()

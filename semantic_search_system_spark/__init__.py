@@ -16,7 +16,7 @@ DataFrame transforms designed for a multi-executor cluster at very large scale:
 - ``operators``  — the domain operators: Arrow-vectorized extraction/embedding
                    UDFs, blocked similarity join, connected components,
                    dedup family (exact/minhash/simhash/jaccard), ANN search,
-                   text-quality analytics, multimodal plumbing.
+                   multimodal plumbing.
 - ``plans``      — end-to-end pipelines: ingest → extract → embed → link →
                    canonicalize → graph materialize; the 5 search strategies.
 - ``catalog``    — Iceberg-style partitioned-parquet tables with snapshot

@@ -1,12 +1,11 @@
 """Query registry: the paper's operators over the documents, embeddings,
-interleaved and KG tables (plus four single-table operators over ``orders``),
-each as a (Spark DataFrame query, DuckDB oracle SQL) pair keyed by a stable
-name.
+interleaved and KG tables, each as a (Spark DataFrame query, DuckDB oracle
+SQL) pair keyed by a stable name.
 
 This backs the driver contract in ``__spark_entry__.py``: each Spark callable
 takes ``(spark, sf_dir)`` and returns a DataFrame; the oracle string is ANSI
-SQL DuckDB runs over the same parquet (the ``documents``, ``embeddings`` and
-``orders`` testdata tables pre-registered as views; repo-generated tables — the
+SQL DuckDB runs over the same parquet (the ``documents`` and ``embeddings``
+testdata tables pre-registered as views; repo-generated tables — the
 interleaved corpus, pipeline outputs — addressed with ``read_parquet``
 absolute paths at sf0.01, the scale the driver checks).
 
@@ -86,77 +85,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 # =====================================================================
-# Single-table relational operators over the TPC-H orders table
-# =====================================================================
-
-
-@query(
-    "filter_project",
-    oracle="""
-    SELECT o_orderkey, o_totalprice, o_orderpriority
-    FROM orders
-    WHERE o_orderstatus = 'F' AND o_totalprice > 100000
-    """,
-)
-def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F5/F7: predicate + projection, both pushed to the parquet scan."""
-    return (
-        load(spark, sf_dir, "orders")
-        .where((F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 100000))
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
-    )
-
-
-@query(
-    "minmax_normalize_orders",
-    oracle="""
-    SELECT o_orderkey,
-           round(CASE WHEN mx = mn THEN 100.0
-                 ELSE greatest(1.0, least(100.0, 1.0 + (o_totalprice - mn) / (mx - mn) * 99.0))
-                 END, 6) AS norm_score
-    FROM (SELECT o_orderkey, o_totalprice,
-                 min(o_totalprice) OVER () AS mn, max(o_totalprice) OVER () AS mx
-          FROM orders)
-    """,
-)
-def minmax_normalize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: min-max normalization to [1,100] incl. constant-score edge case
-    (normalize_scores_to_100, search_pipeline.py:34-64)."""
-    from .functions.scoring import minmax_normalize_100
-
-    o = load(spark, sf_dir, "orders")
-    out = minmax_normalize_100(o, "o_totalprice")
-    return out.select("o_orderkey", F.round("norm_score", 6).alias("norm_score"))
-
-
-@query(
-    "union_distinct_orders",
-    oracle="""
-    SELECT o_orderpriority, count(*) AS n FROM (
-      SELECT o_orderkey, o_orderpriority FROM orders WHERE o_totalprice > 150000
-      UNION
-      SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderstatus = 'O'
-    ) GROUP BY o_orderpriority
-    """,
-)
-def union_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1: union + distinct (pr_meta_fetch.py:76-81 link accumulation)."""
-    o = load(spark, sf_dir, "orders")
-    a = o.where(F.col("o_totalprice") > 150000).select("o_orderkey", "o_orderpriority")
-    b = o.where(F.col("o_orderstatus") == "O").select("o_orderkey", "o_orderpriority")
-    return a.union(b).distinct().groupBy("o_orderpriority").agg(F.count("*").alias("n"))
-
-
-@query(
-    "max_order_key",
-    oracle="SELECT max(o_orderkey) AS max_id FROM orders",
-)
-def max_order_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/O4: max-id scan (the auto-increment scan, pr_meta_store_from_local.py:22-37)."""
-    return load(spark, sf_dir, "orders").agg(F.max("o_orderkey").alias("max_id"))
-
-
-# =====================================================================
 # Vector operators (J7/A4/C11) over the embeddings table
 # =====================================================================
 
@@ -233,42 +161,6 @@ def clean_tokenize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# GPT-2-style pre-tokenizer regex, simplified to the subset whose semantics
-# are identical in Java regex (Spark) and RE2 (DuckDB): leftmost-first
-# alternation, no lookahead (RE2 has none). "BPE-ish" per the round brief —
-# contractions, letter runs, digit runs, punctuation runs, whitespace runs.
-# Explicit whitespace class, not \s: Java's \s includes \x0b, RE2's doesn't
-# (see spec.CLEAN_STRIP_RE) — shorthand would diverge Spark from the oracle.
-_BPE_REGEX = (
-    r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+"
-    r"| ?[^A-Za-z0-9 \t\n\x0b\f\r]+|[ \t\n\x0b\f\r]+"
-)
-
-
-@query(
-    "bpe_token_counts",
-    oracle=f"""
-    SELECT doc_id,
-           CAST(len(string_split({_CLEAN_SQL}, ' ')) AS BIGINT) AS n_ws_tokens,
-           CAST(len(regexp_extract_all(text, '{_BPE_REGEX.replace("'", "''")}')) AS BIGINT) AS n_bpe_tokens
-    FROM documents
-    """,
-)
-def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting, both ways the round brief asks for: whitespace tokens
-    over the cleaned text AND a BPE-ish pre-tokenizer regex over the raw text
-    (the budget-estimation pass an LLM data pipeline runs before packing).
-    Native regex expressions — map-only scan, no shuffle."""
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.size(F.split(clean_text_col(F.col("text")), " ")).cast("long").alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_REGEX), 0))
-        .cast("long")
-        .alias("n_bpe_tokens"),
-    )
-
-
 @query(
     "top5_entities_per_doc",
     oracle=f"""
@@ -337,133 +229,6 @@ def doc_triples_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("subj"),
         F.lit(spec.PRED_MENTIONS).alias("pred"),
         F.col("token").alias("obj"),
-    )
-
-
-@query(
-    "doc_quality_scores",
-    oracle=f"""
-    SELECT doc_id, n_tokens, n_stop,
-           round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stopword_ratio,
-           round(CAST(n_chars AS DOUBLE) / n_tokens, 6) AS avg_token_len
-    FROM (
-      SELECT doc_id, max(n_chars) AS n_chars, count(*) AS n_tokens,
-             CAST(sum(CASE WHEN token IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-      FROM (SELECT doc_id, n_chars, unnest(string_split(text, ' ')) AS token FROM documents)
-      GROUP BY doc_id)
-    """,
-)
-def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-quality scoring (training-data pipeline op): token count, stopword
-    ratio, average token length — all native expressions."""
-    d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    stop = F.array(*[F.lit(s) for s in sorted(spec.STOPWORDS)])
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    return d.select(
-        "doc_id",
-        n_tokens.cast("long").alias("n_tokens"),
-        n_stop.cast("long").alias("n_stop"),
-        F.round(n_stop.cast("double") / n_tokens, 6).alias("stopword_ratio"),
-        F.round(F.col("n_chars").cast("double") / n_tokens, 6).alias("avg_token_len"),
-    )
-
-
-@query(
-    "lang_id_heuristic",
-    oracle=f"""
-    SELECT doc_id,
-           CASE WHEN CAST(n_stop AS DOUBLE) / n_tokens >= 0.05 THEN 'en' ELSE 'unknown' END AS lang_pred,
-           lang AS lang_actual
-    FROM (
-      SELECT doc_id, max(lang) AS lang, count(*) AS n_tokens,
-             CAST(sum(CASE WHEN token IN ({_STOP_SQL}) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-      FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token FROM documents)
-      GROUP BY doc_id)
-    """,
-)
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic (stopword-density n-gram stand-in) — training-data op."""
-    d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    stop = F.array(*[F.lit(s) for s in sorted(spec.STOPWORDS)])
-    ratio = F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("double") / F.size(toks)
-    return d.select(
-        "doc_id",
-        F.when(ratio >= 0.05, "en").otherwise("unknown").alias("lang_pred"),
-        F.col("lang").alias("lang_actual"),
-    )
-
-
-@query(
-    "doc_fingerprint",
-    oracle="""
-    SELECT doc_id, md5(substring(text, 1, 100)) AS fp FROM documents
-    """,
-)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C5: md5-of-prefix document fingerprint (app.py:215 md5(text[:100]))."""
-    return load(spark, sf_dir, "documents").select(
-        "doc_id", F.md5(F.substring(F.col("text"), 1, 100)).alias("fp")
-    )
-
-
-# Karp-Rabin parameters shared by both engines: token hash = low 32 md5 bits,
-# base < 2^31 and modulus < 2^31 keep every intermediate under 2^63 (ANSI-safe).
-_RH_BASE = 1_000_003
-_RH_MOD = 2_147_483_647
-
-
-@query(
-    "rolling_hash_fingerprint",
-    oracle=f"""
-    SELECT doc_id,
-           CAST(list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split({_CLEAN_SQL}, ' '),
-                 t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)),
-             (acc, h) -> (acc * {_RH_BASE} + h) % {_RH_MOD}) AS BIGINT) AS rolling_fp
-    FROM documents
-    """,
-)
-def rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprint (round brief: 'document
-    fingerprinting (rolling hash)'): Karp-Rabin polynomial hash over the
-    cleaned token sequence — ORDER-SENSITIVE, unlike the md5-of-prefix C5
-    fingerprint, so reordered-but-equal-set docs fingerprint differently and
-    any token-sequence prefix relation is incrementally extendable (the
-    content-defined-chunking primitive). Identical integer arithmetic in both
-    engines; per-row aggregate evaluated once, map-only scan."""
-    d = load(spark, sf_dir, "documents").withColumn(
-        "_toks", F.split(clean_text_col(F.col("text")), " ")
-    )
-    tok_h = F.transform(
-        F.col("_toks"), lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-    )
-    rolling = F.aggregate(
-        tok_h,
-        F.lit(0).cast("long"),
-        lambda acc, h: (acc * F.lit(_RH_BASE) + h) % F.lit(_RH_MOD),
-    )
-    return d.select("doc_id", rolling.alias("rolling_fp"))
-
-
-@query(
-    "exact_dup_groups",
-    oracle="""
-    SELECT fp, count(*) AS n, min(doc_id) AS keeper FROM
-      (SELECT doc_id, md5(lower(text)) AS fp FROM documents)
-    GROUP BY fp
-    """,
-)
-def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via content-hash groupBy — keeper = min doc_id per group."""
-    return (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.md5(F.lower(F.col("text"))).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("keeper"))
     )
 
 
@@ -967,7 +732,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Dedup family + ANN (training-data pipeline operators)
+# Dedup family + ANN
 # =====================================================================
 
 # Corpus with planted near-duplicates: docs < 50 get a mutated copy. Both
@@ -1107,8 +872,7 @@ def exact_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Deterministic epoch split for the incremental-dedup demonstration: ~20% of
-# the dup corpus is the "new epoch" (md5 keeps the rule engine-agnostic; the
-# same md5-threshold machinery as hash_sample_stratified).
+# the dup corpus is the "new epoch" (md5 keeps the rule engine-agnostic).
 _INCR_NEW_SQL = "('0x' || substr(md5(doc_id), 1, 4))::BIGINT % 5 = 0"
 
 
@@ -1721,157 +1485,6 @@ _ORACLES["kg_graph_nodes"] = f"""
 
 
 @query(
-    "decontaminate_vs_holdout",
-    oracle=f"""
-    WITH t AS (SELECT cast(doc_id AS VARCHAR) AS doc_id, doc_id AS id_num,
-                      string_split({_CLEAN_SQL}, ' ') AS toks FROM documents),
-    sh AS (SELECT doc_id, id_num,
-                  CASE WHEN len(toks) >= 5
-                       THEN list_distinct(list_transform(generate_series(1, len(toks) - 4),
-                              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                                   toks[i+3] || ' ' || toks[i+4]))
-                       ELSE [array_to_string(toks, ' ')] END AS grams
-           FROM t),
-    hold AS (SELECT DISTINCT unnest(grams) AS g FROM sh WHERE id_num < 20),
-    corpus AS (SELECT doc_id, unnest(grams) AS g FROM sh WHERE id_num >= 20)
-    SELECT c.doc_id, CAST(count(DISTINCT c.g) AS BIGINT) AS n_shared
-    FROM corpus c JOIN hold USING (g)
-    GROUP BY c.doc_id
-    """,
-)
-def decontaminate_vs_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (training-data pipeline op): flag corpus docs
-    sharing any distinct word 5-gram with a holdout/benchmark set (docs with
-    id < 20 stand in for the eval set). Scale shape: the holdout gram
-    vocabulary is benchmark-sized → BROADCAST join against the corpus gram
-    stream; the only shuffle is the per-doc count aggregation (map-side
-    combined). The standard contamination sweep an LLM data pipeline runs
-    before training."""
-    from .operators.dedup import with_shingles
-
-    d = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("doc_id").alias("id_num"),
-        "text",
-    )
-    # the 5-gram table feeds BOTH branches (holdout vocabulary + corpus
-    # stream); without the materialization boundary each branch re-ran the
-    # full tokenize+shingle pass and Catalyst re-inlined the tokenization
-    # into the explode lineage — measured 11s for this query at sf0.1,
-    # ~1s checkpointed (round 8; the with_shingles docstring pathology)
-    sh = (
-        with_shingles(d, "text", n=5)
-        .select("doc_id", "id_num", "shingles")
-        .localCheckpoint(eager=True)
-    )
-    hold = (
-        sh.where(F.col("id_num") < 20)
-        .select(F.explode("shingles").alias("g"))
-        .distinct()
-    )
-    corpus = sh.where(F.col("id_num") >= 20).select(
-        "doc_id", F.explode("shingles").alias("g")
-    )
-    return (
-        corpus.join(F.broadcast(hold), "g")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("g").alias("n_shared"))
-    )
-
-
-@query(
-    "hash_sample_stratified",
-    oracle="""
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_total,
-           CAST(sum(CASE WHEN substr(md5(cast(doc_id AS VARCHAR)), 1, 2) < '29'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-    FROM documents GROUP BY source
-    """,
-)
-def hash_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling (training-data pipeline op): a doc is
-    sampled iff the first byte of md5(doc_id) falls under the rate threshold
-    (0x29/0x100 ≈ 16%) — reproducible across engines, runs, and cluster
-    sizes, unlike rand()-based sampling; per-source strata report their
-    population and sample counts. One scan, map-side-combined aggregation."""
-    d = load(spark, sf_dir, "documents")
-    sampled = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < "29"
-    return d.groupBy("source").agg(
-        F.count("*").alias("n_total"),
-        F.sum(F.when(sampled, 1).otherwise(0)).cast("long").alias("n_sampled"),
-    )
-
-
-@query(
-    "token_budget_pack",
-    oracle="""
-    SELECT pack_id, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-    FROM (
-      SELECT doc_id, n_tokens,
-             CAST(floor((cum - n_tokens) / 2048.0) AS BIGINT) AS pack_id
-      FROM (
-        SELECT doc_id, n_tokens,
-               sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        FROM (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-              FROM documents)))
-    GROUP BY pack_id
-    """,
-)
-def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for LLM training (fixed-budget variant): docs in
-    doc_id order are packed into ~2048-token bins, pack_id = floor of the
-    EXCLUSIVE running token total / budget — deterministic, identical in both
-    engines (greedy reset-on-overflow packing needs sequential state; this
-    fixed-budget form is the standard distributed approximation).
-
-    The global cumsum is a DISTRIBUTED two-pass prefix-sum, never a
-    partition-less window (which Spark executes as ONE task sorting the whole
-    corpus): (1) range-shuffle on doc_id, per-partition cumsum via a window
-    PARTITIONED on the physical partition id — parallel across partitions;
-    (2) exclusive per-partition offsets from a window over the
-    partition-count-sized totals frame (32 rows, not data-sized), broadcast
-    back. Output is invariant to the range boundaries, so the sampled split
-    points don't affect determinism."""
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens")
-    )
-    npart = spark.sparkContext.defaultParallelism
-    # pid must be identical in the totals pass and the cumsum pass → pin the
-    # shuffled frame once (range sampling re-runs otherwise)
-    d = (
-        d.repartitionByRange(npart, "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w_local = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        d.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("ptotal"))
-        .select("pid", F.coalesce(F.sum("ptotal").over(w_off), F.lit(0)).alias("offset"))
-    )
-    packed = d.join(F.broadcast(offsets), "pid").withColumn(
-        "pack_id",
-        F.floor(
-            (F.sum("n_tokens").over(w_local) + F.col("offset") - F.col("n_tokens"))
-            / F.lit(2048.0)
-        ),
-    )
-    return packed.groupBy("pack_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("pack_tokens"),
-    )
-
-
-@query(
     "quarantine_failed_rows",
     oracle=f"""
     SELECT doc_id, 'enrich' AS stage, 'no_text_spans' AS reason
@@ -1892,149 +1505,6 @@ def quarantine_failed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(interleaved_path(sf_dir))
     return df.where(~has_usable_text("spans")).select(
         "doc_id", F.lit("enrich").alias("stage"), F.lit("no_text_spans").alias("reason")
-    )
-
-
-@query(
-    "repetition_3gram_filter",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_CLEAN_SQL}, ' ') AS toks FROM documents),
-    g AS (SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                      THEN list_transform(generate_series(1, len(toks) - 2),
-                             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                      ELSE [] END AS grams
-          FROM t)
-    SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-           round(CASE WHEN len(grams) > 0
-                      THEN 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams)
-                      ELSE 0.0 END, 6) AS rep_ratio,
-           round(CASE WHEN len(grams) > 0
-                      THEN 1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams)
-                      ELSE 0.0 END, 6) > 0.2 AS flagged
-    FROM g
-    """,
-)
-def repetition_3gram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition quality filter (training-data pipeline op, the Gopher/C4
-    duplicate-n-gram rule): fraction of a doc's word 3-grams that are repeats;
-    docs above the threshold get flagged for removal. Pure native expressions
-    — one scan, no shuffle; the token array is bound as a real column so the
-    per-index lambda never re-evaluates the split (the round-1 inlining
-    pitfall)."""
-    d = load(spark, sf_dir, "documents").withColumn(
-        "_toks", F.split(clean_text_col(F.col("text")), " ")
-    )
-    toks = F.col("_toks")
-    idx = F.sequence(F.lit(0), F.size(toks) - 3)
-    grams = F.when(
-        F.size(toks) >= 3,
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, 3), " ")),
-    ).otherwise(F.array().cast("array<string>"))
-    d = d.withColumn("_grams", grams)
-    total = F.size(F.col("_grams"))
-    ratio = F.round(
-        F.when(
-            total > 0,
-            1.0 - F.size(F.array_distinct(F.col("_grams"))).cast("double") / total,
-        ).otherwise(0.0),
-        6,
-    )
-    return d.select(
-        "doc_id",
-        total.cast("long").alias("n_grams"),
-        ratio.alias("rep_ratio"),
-        (ratio > 0.2).alias("flagged"),
-    )
-
-
-# PII patterns shared by the Spark query and the DuckDB oracle. Both engines
-# get the identical pattern strings; the syntax used (char classes, \\d,
-# bounded repeats) behaves the same in Java regex and RE2.
-_PII_EMAIL = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
-_PII_PHONE = r"\d{3}-\d{4}"
-
-
-@query(
-    "pii_scrub_audit",
-    oracle=f"""
-    WITH aug AS (
-      SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-             '@mail.example.com or call 555-' ||
-             lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-      FROM documents),
-    scrub AS (
-      SELECT doc_id,
-             CAST(len(regexp_extract_all(t, '{_PII_EMAIL}')) AS BIGINT) AS n_emails,
-             regexp_replace(t, '{_PII_EMAIL}', '<EMAIL>', 'g') AS t1
-      FROM aug)
-    SELECT doc_id, n_emails,
-           CAST(len(regexp_extract_all(t1, '{_PII_PHONE}')) AS BIGINT) AS n_phones,
-           md5(regexp_replace(t1, '{_PII_PHONE}', '<PHONE>', 'g')) AS scrubbed_md5
-    FROM scrub
-    """,
-)
-def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (training-data pipeline op): detect + redact emails and
-    phone numbers, reporting per-doc counts and the md5 of the scrubbed text.
-    The synthetic corpus carries no PII, so the query first APPENDS a
-    deterministic email + phone per doc (identically in both engines) — the
-    redaction path is genuinely exercised, not vacuously green. Native regex
-    expressions end to end; at scale this is a map-only scan."""
-    d = load(spark, sf_dir, "documents")
-    aug = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@mail.example.com or call 555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    d = d.withColumn("_t", aug)
-    d = d.withColumn(
-        "n_emails", F.size(F.regexp_extract_all(F.col("_t"), F.lit(_PII_EMAIL), 0)).cast("long")
-    ).withColumn("_t1", F.regexp_replace(F.col("_t"), _PII_EMAIL, "<EMAIL>"))
-    return d.select(
-        "doc_id",
-        "n_emails",
-        F.size(F.regexp_extract_all(F.col("_t1"), F.lit(_PII_PHONE), 0)).cast("long").alias("n_phones"),
-        F.md5(F.regexp_replace(F.col("_t1"), _PII_PHONE, "<PHONE>")).alias("scrubbed_md5"),
-    )
-
-
-# Deterministic per-source acceptance probabilities for the domain-mixing
-# sampler: upweighted sources keep 75% of docs, the long tail keeps 25%.
-# Thresholds are exact 16-bit integers so both engines compare identically.
-_MIX_UPWEIGHTED = ("src0", "src1", "src2", "src3", "src4")
-_MIX_HI, _MIX_LO = 49152, 16384  # 0.75 * 65536, 0.25 * 65536
-
-
-@query(
-    "source_mix_sample",
-    oracle=f"""
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_total,
-           CAST(sum(CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                              < CASE WHEN source IN {_MIX_UPWEIGHTED!r} THEN {_MIX_HI}
-                                     ELSE {_MIX_LO} END
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-    FROM documents GROUP BY source
-    """,
-)
-def source_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixing sampler (training-data pipeline op): re-weight the corpus
-    toward target per-source proportions with DETERMINISTIC md5-threshold
-    acceptance — reproducible across engines, runs and cluster sizes, unlike
-    rand(); the standard way an LLM data pipeline mixes web/books/code
-    sources to a target distribution. One scan, map-side-combined counts."""
-    d = load(spark, sf_dir, "documents")
-    h16 = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
-    thresh = F.when(F.col("source").isin(*_MIX_UPWEIGHTED), F.lit(_MIX_HI)).otherwise(
-        F.lit(_MIX_LO)
-    )
-    return d.groupBy("source").agg(
-        F.count("*").alias("n_total"),
-        F.sum((h16 < thresh).cast("int")).cast("long").alias("n_sampled"),
     )
 
 

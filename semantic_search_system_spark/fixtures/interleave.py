@@ -13,8 +13,8 @@ span a media span is interleaved (kind cycling image/video/audio,
 tail span to exercise skew handling (FIXTURES.md §1).
 
 The generated parquet is written under ``<REPO_DATA>/interleaved/<sf>/``
-(``SSS_SPARK_DATA_DIR``) so the DuckDB oracle can read the exact same rows via
-``read_parquet``.
+(``SSS_SPARK_DATA_DIR``, by default the checkout's ``data/``) so the DuckDB
+oracle can read the exact same rows via ``read_parquet``.
 """
 
 from __future__ import annotations
@@ -27,7 +27,8 @@ import pyarrow.parquet as pq
 
 from .. import spec
 
-REPO_DATA = os.environ.get("SSS_SPARK_DATA_DIR", "/root/repo/data")
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_DATA = os.environ.get("SSS_SPARK_DATA_DIR", os.path.join(_CHECKOUT, "data"))
 
 SPAN_STRUCT = pa.struct(
     [

@@ -138,8 +138,9 @@ def _assignments(d: DataFrame, cids: np.ndarray, C: np.ndarray, id_col: str) -> 
 
 def fit_sample_pred(id_col: str, sample_hex: str):
     """Deterministic md5-threshold membership predicate for the k-means fit
-    sample (the hash_sample_stratified rule): reproducible across engines,
-    runs, and cluster sizes — the DuckDB oracle replays it verbatim."""
+    sample (the first md5 byte of the id under ``sample_hex``): reproducible
+    across engines, runs, and cluster sizes — the DuckDB oracle replays it
+    verbatim."""
     return F.substring(F.md5(F.col(id_col).cast("string")), 1, 2) < sample_hex
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
+from ..functions.scoring import minmax_normalize_100
 
 # Benchmark defaults — vocabulary of the synthetic corpus.
 QUERY_TEXT = "spark join table"
@@ -1140,17 +1141,9 @@ def _kb(enriched: DataFrame, query_text: str, k: int, fuzziness: int, hits) -> D
     threshold >= 70 (:380-382), top-k."""
     terms, qvec = _params(query_text)
     fused = _hybrid(enriched, terms, fuzziness, hits(qvec, min(max(1, k), 10)))
-    stats = fused.agg(F.min("score").alias("_mn"), F.max("score").alias("_mx"))
-    fused = fused.crossJoin(F.broadcast(stats))
-    mn, mx = F.col("_mn"), F.col("_mx")
-    norm100 = F.round(
-        F.when(mx == mn, F.lit(100.0)).otherwise(
-            F.greatest(F.lit(1.0), F.least(F.lit(100.0), 1.0 + (F.col("score") - mn) / (mx - mn) * 99.0))
-        ),
-        6,
-    )
     return (
-        fused.withColumn("norm_score", norm100)
+        minmax_normalize_100(fused, "score")
+        .withColumn("norm_score", F.round("norm_score", 6))
         .where(F.col("norm_score") >= 70.0)
         .select("doc_id", F.col("norm_score").alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))

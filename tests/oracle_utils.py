@@ -12,7 +12,7 @@ import os
 
 import duckdb
 
-TABLES = "documents embeddings orders".split()
+TABLES = "documents embeddings".split()
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

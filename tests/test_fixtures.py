@@ -1,4 +1,7 @@
 import os
+import shutil
+import subprocess
+import sys
 import tempfile
 
 import pandas as pd
@@ -27,6 +30,25 @@ def test_hot_docs_get_skew_token():
     spans = spans_for_text("0", "a b", hot=True)
     text = " ".join(s["text"] for s in spans if s["kind"] == "text")
     assert "hotterm" in text
+
+
+def test_data_dir_defaults_to_checkout_data(tmp_path):
+    """Without ``SSS_SPARK_DATA_DIR`` the data dir is ``<checkout>/data``,
+    derived from where the package lives: a copy of the package in another
+    directory defaults to that directory's ``data/``."""
+    checkout = tmp_path / "checkout"
+    pkg = "semantic_search_system_spark"
+    src = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), pkg)
+    shutil.copytree(src, checkout / pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    env = {k: v for k, v in os.environ.items() if k != "SSS_SPARK_DATA_DIR"}
+    code = f"from {pkg}.fixtures import interleave; print(interleave.REPO_DATA)"
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=checkout, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.splitlines()[-1] == str(checkout / "data")
+    assert not (checkout / "data").exists()
 
 
 def test_build_deterministic():

@@ -1,5 +1,3 @@
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -147,22 +145,6 @@ def test_minmax_normalize_edge_cases(spark):
     const = spark.createDataFrame([(1, 5.0), (2, 5.0)], "id int, score double")
     outc = {r["id"]: r["norm_score"] for r in minmax_normalize_100(const, "score").collect()}
     assert outc == {1: 100.0, 2: 100.0}
-
-
-def test_token_budget_pack_no_global_window(spark):
-    """The packing cumsum must be the distributed two-pass prefix-sum: every
-    window in the physical plan is partitioned (the offsets window runs over
-    the partition-count-sized totals frame, keyed by pid), and the data is
-    range-shuffled — never one task sorting the whole corpus."""
-    from semantic_search_system_spark.entrypoints import registry
-
-    df = registry()["token_budget_pack"](spark, SF_SMALL)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, "expected window operators in the packing plan"
-    for s in specs:
-        # first arg of every spec must be the pid partition key, not an ORDER BY
-        assert s.split(",")[0].strip().startswith("pid"), f"partition-less window: {s}"
 
 
 def test_fused_enrich_equals_unfused(spark):

@@ -55,8 +55,17 @@ def test_oracle_sql_needs_no_derived_tables(tmp_path):
     assert not (data / "out").exists()
 
 
-def test_bench_headline_queries_are_registered():
-    """``python bench.py`` times its headline queries by registry name."""
-    import bench
-
-    assert set(bench.HEADLINE_QUERIES) <= set(_QUERIES)
+def test_import_writes_nothing(tmp_path):
+    """Importing the driver contract and listing its queries builds no
+    corpus: only ``oracle_sql()`` (and the queries themselves) write."""
+    data = tmp_path / "data"
+    data.mkdir()
+    code = "import __spark_entry__ as e; print(len(e.queries()))"
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO, env=dict(os.environ, SSS_SPARK_DATA_DIR=str(data)),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert int(res.stdout.splitlines()[-1]) == len(_QUERIES)
+    assert list(data.iterdir()) == []
