@@ -13,7 +13,8 @@ span a media span is interleaved (kind cycling image/video/audio,
 tail span to exercise skew handling (FIXTURES.md §1).
 
 The generated parquet is written under ``<REPO_DATA>/interleaved/<sf>/``
-(``SSS_SPARK_DATA_DIR``, by default the checkout's ``data/``) so the DuckDB
+(``SSS_SPARK_DATA_DIR``, by default the checkout's ``data/``, or the working
+directory's when the package is imported from a zip) so the DuckDB
 oracle can read the exact same rows via ``read_parquet``.
 """
 
@@ -27,8 +28,13 @@ import pyarrow.parquet as pq
 
 from .. import spec
 
+# Imported from a --py-files zip, the package has no checkout directory (this
+# path is the zip file): the data dir then defaults to the working directory's.
 _CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-REPO_DATA = os.environ.get("SSS_SPARK_DATA_DIR", os.path.join(_CHECKOUT, "data"))
+REPO_DATA = os.environ.get(
+    "SSS_SPARK_DATA_DIR",
+    os.path.join(_CHECKOUT if os.path.isdir(_CHECKOUT) else os.getcwd(), "data"),
+)
 
 SPAN_STRUCT = pa.struct(
     [

@@ -1141,6 +1141,9 @@ def _kb(enriched: DataFrame, query_text: str, k: int, fuzziness: int, hits) -> D
     threshold >= 70 (:380-382), top-k."""
     terms, qvec = _params(query_text)
     fused = _hybrid(enriched, terms, fuzziness, hits(qvec, min(max(1, k), 10)))
+    # ``score`` is never null (``_candidates`` fills lex_b and sem_b), so
+    # minmax_normalize_100's null branch never runs; the SQL twin's
+    # greatest/least would turn a null score into 100.0 instead.
     return (
         minmax_normalize_100(fused, "score")
         .withColumn("norm_score", F.round("norm_score", 6))

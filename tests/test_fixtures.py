@@ -51,6 +51,24 @@ def test_data_dir_defaults_to_checkout_data(tmp_path):
     assert not (checkout / "data").exists()
 
 
+def test_data_dir_defaults_to_cwd_data_from_zip(tmp_path):
+    """Imported from the --py-files zip (no checkout directory) and without
+    ``SSS_SPARK_DATA_DIR``, the data dir is the working directory's ``data/``."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from scripts.make_pyfiles_zip import build
+
+    zip_path = build(str(tmp_path / "sss_spark.zip"))
+    env = {k: v for k, v in os.environ.items() if k not in ("SSS_SPARK_DATA_DIR", "PYTHONPATH")}
+    env["PYTHONPATH"] = zip_path
+    code = "from semantic_search_system_spark.fixtures import interleave; print(interleave.REPO_DATA)"
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.splitlines()[-1] == str(tmp_path / "data")
+
+
 def test_build_deterministic():
     with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
         p1 = build_interleaved(SF, out_dir=d1)

@@ -24,6 +24,8 @@ def test_spark_submit_pyfiles_pipeline(tmp_path):
     out_root = str(tmp_path / "out")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the only package source
+    # the default data dir of a zip-imported package: the cwd's data/
+    env.pop("SSS_SPARK_DATA_DIR", None)
     cmd = [
         SPARK_SUBMIT,
         "--master", "local[4]",
@@ -41,6 +43,7 @@ def test_spark_submit_pyfiles_pipeline(tmp_path):
     assert out["triples"] > 0
     assert out["rows_written"]["triples"] == out["triples"]
     assert os.path.exists(os.path.join(out_root, "triples", "_manifest.json"))
+    assert os.path.isdir(os.path.join(str(tmp_path), "data", "interleaved"))
 
     # re-submit with the same out_root: checkpoint resume, identical result
     res2 = subprocess.run(
