@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from semantic_search_system_spark import entrypoints as _ep  # noqa: E402
-from semantic_search_system_spark.fixtures.interleave import build_interleaved  # noqa: E402
+from semantic_search_system_spark.fixtures.interleave import SF_SMALL, build_interleaved  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,8 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     repeated invocations resume instead of recomputing."""
     from semantic_search_system_spark.plans.pipeline import run_pipeline
 
-    sf_dir = "/root/testdata/sf0.001"
-    cat = run_pipeline(spark, sf_dir, _ep.out_root(sf_dir))
+    cat = run_pipeline(spark, SF_SMALL, _ep.out_root(SF_SMALL))
     return cat.read(spark, "triples").select("subj", "pred", "obj")
 
 

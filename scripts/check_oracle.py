@@ -16,16 +16,14 @@ sys.path.insert(0, os.path.join(_CHECKOUT, "tests"))
 from oracle_utils import compare, duck_con  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from semantic_search_system_spark.fixtures.interleave import build_interleaved  # noqa: E402
+from semantic_search_system_spark.fixtures.interleave import SF_MED, build_interleaved  # noqa: E402
 from semantic_search_system_spark.session import _DEF_CPUS, get_spark  # noqa: E402
-
-SF = "/root/testdata/sf0.01"
 
 
 def main() -> int:
-    build_interleaved(SF)
+    build_interleaved(SF_MED)
     spark = get_spark("oracle-check", master=f"local[{_DEF_CPUS}]")
-    con = duck_con(SF)
+    con = duck_con(SF_MED)
     registry = entry_mod.queries()
     names = sys.argv[1:] or sorted(registry)
     oracles = entry_mod.oracle_sql()
@@ -34,7 +32,7 @@ def main() -> int:
         fn = registry[name]
         t0 = time.time()
         try:
-            df = fn(spark, SF)
+            df = fn(spark, SF_MED)
             if name not in oracles:
                 n = df.count()
                 print(f"  {name:32s} rows-only: {n} rows  ({time.time()-t0:.1f}s)")

@@ -508,13 +508,17 @@ class Catalog:
         schema_json: str,
         t0: float,
         local_rows: dict[str, int] | None = None,
+        compacted_from: dict[str, str] | None = None,
     ) -> dict:
         """Publish the staged ``bucket=`` dirs. ``local_rows``: the per-
         partition row counts of a driver-side write (one file per dir —
         nothing to compact or count); None for a Spark write, whose dirs are
         compacted and counted here. Each snapshot records its ``writer``
         ('local' | 'spark'), so which branch produced a table is visible
-        after the fact."""
+        after the fact. ``compacted_from``: the partition keys a compaction
+        folds into the staged ones, mapped to their committing stage — the
+        same manifest save drops them and records them on the snapshot
+        (``compacted_from`` / ``compacted_from_stages``)."""
         table_dir = self.path(table)
         man = self.manifest(table)
         # record the read-back schema ONCE (zero-partition tables need it); a
@@ -588,21 +592,25 @@ class Catalog:
             for bucket in committed
         }
         shutil.rmtree(staging, ignore_errors=True)
+        for k in compacted_from or ():
+            man["partitions"].pop(k, None)
         man["partitions"].update(committed)
         # record a snapshot only when something was committed (or on first
         # creation, so exists()/schema work for zero-row tables) — otherwise
         # every resume pass would append an empty snapshot to the lineage
-        if committed or not self.exists(table):
-            man["snapshots"].append(
-                {
-                    "snapshot_id": snapshot_id,
-                    "stage": stage,
-                    "writer": "spark" if local_rows is None else "local",
-                    "partitions": sorted(committed),
-                    "total_rows": sum(e["rows_written"] for e in committed.values()),
-                }
-            )
-        self._save_manifest(table, man)
+        if committed or compacted_from or not self.exists(table):
+            snap = {
+                "snapshot_id": snapshot_id,
+                "stage": stage,
+                "writer": "spark" if local_rows is None else "local",
+                "partitions": sorted(committed),
+                "total_rows": sum(e["rows_written"] for e in committed.values()),
+            }
+            if compacted_from:
+                snap["compacted_from"] = sorted(compacted_from)
+                snap["compacted_from_stages"] = compacted_from
+            man["snapshots"].append(snap)
+        self._save_manifest(table, man)  # the atomic publish
         return committed
 
     def overwrite(self, df: DataFrame, table: str, stage: str) -> None:
@@ -684,45 +692,19 @@ class Catalog:
                 F.element_at(F.split(F.col(BUCKET_COL).cast("string"), "_"), -1),
             ),
         )
-        # capture each source key's committing stage BEFORE the keys are
-        # dropped — the tombstone guard in commit_partitions uses it to tell
-        # a crash REPLAY (same stage) from new data under a reused key
-        source_stages = {k: parts[k]["stage"] for k in sources}
         staging = os.path.join(tdir, f"_compacting_{uuid.uuid4().hex[:12]}")
         df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-        snapshot_id = uuid.uuid4().hex[:16]
-        committed: dict[str, dict] = {}
-        for d in sorted(os.listdir(staging)):
-            if not d.startswith(f"{BUCKET_COL}="):
-                continue
-            key = d.split("=", 1)[1]
-            dst = os.path.join(tdir, d)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            os.replace(os.path.join(staging, d), dst)
-            compact_small_dir(dst)
-            committed[key] = {
-                "stage": f"compact_gen{gen}",
-                "snapshot_id": snapshot_id,
-                "rows_written": pads.dataset(dst, format="parquet").count_rows(),
-                "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "wall_ms": int((time.time() - t0) * 1000),
-            }
-        shutil.rmtree(staging, ignore_errors=True)
-        for k in sources:
-            parts.pop(k, None)
-        parts.update(committed)
-        man["snapshots"].append(
-            {
-                "snapshot_id": snapshot_id,
-                "stage": f"compact_gen{gen}",
-                "partitions": sorted(committed),
-                "compacted_from": sources,
-                "compacted_from_stages": source_stages,
-                "total_rows": sum(e["rows_written"] for e in committed.values()),
-            }
+        # each source key's committing stage goes on the snapshot — the
+        # tombstone guard in commit_partitions uses it to tell a crash
+        # REPLAY (same stage) from new data under a reused key
+        committed = self._publish_staging(
+            staging,
+            table,
+            f"compact_gen{gen}",
+            man["schema"],
+            t0,
+            compacted_from={k: parts[k]["stage"] for k in sources},
         )
-        self._save_manifest(table, man)  # ← the atomic publish
         for k in sources:
             shutil.rmtree(os.path.join(tdir, f"{BUCKET_COL}={k}"), ignore_errors=True)
         return committed

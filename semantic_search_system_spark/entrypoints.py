@@ -28,14 +28,14 @@ from pyspark.sql import functions as F
 
 from . import spec
 from .fixtures import interleave
-from .fixtures.interleave import interleaved_path
+from .fixtures.interleave import SF_MED, interleaved_path
 from .functions.text import clean_text_col
 from .functions.vectors import dot, l2_norm
 from .operators.extraction import entities_native, topics_native
 
 # sf the driver's oracle runs at — repo-generated parquet paths in oracle SQL
 # are pinned to this scale.
-ORACLE_SF_DIR = "/root/testdata/sf0.01"
+ORACLE_SF_DIR = SF_MED
 ORACLE_INTERLEAVED = os.path.join(
     interleave.REPO_DATA, "interleaved", "sf0.01", "documents_interleaved.parquet"
 )

@@ -36,6 +36,13 @@ REPO_DATA = os.environ.get(
     os.path.join(_CHECKOUT if os.path.isdir(_CHECKOUT) else os.getcwd(), "data"),
 )
 
+# The source corpora, one directory per scale factor (documents.parquet,
+# embeddings.parquet); every sf dir the package and its tests use derives
+# from TESTDATA.
+TESTDATA = "/root/testdata"
+SF_SMALL = os.path.join(TESTDATA, "sf0.001")
+SF_MED = os.path.join(TESTDATA, "sf0.01")
+
 SPAN_STRUCT = pa.struct(
     [
         pa.field("kind", pa.string()),

@@ -1,19 +1,20 @@
-"""Embedding stage: deterministic 256-d hashed embeddings as an Arrow-vectorized
-pandas UDF.
+"""Embedding stage: deterministic 256-d hashed embeddings.
 
 Stands in for the reference's network embedding calls (utils/bedrock.py:35-49
 Titan 256-d normalized; nlp/topic_modeling.py:24-28 sentence-transformers) with
 the same contract — ``array<float>`` of fixed dim, unit L2 norm — but fully
-deterministic and local (spec.embed_text). The UDF is batch-vectorized: one
-numpy accumulation per Arrow batch with a token→slot cache, no per-row Python
-in Spark's execution (input_hint: vectorized pandas/Arrow UDFs only).
+deterministic and local (spec.embed_text). ``embed_matrix`` is the one kernel:
+one numpy scatter-add per batch over the factorized token stream of
+``extraction.build_token_stream_arrow``, with a token→slot cache, no per-row
+Python. The fused enrich UDF calls it for document embeddings;
+``embed_batch`` / ``embed_udf`` tokenize a pandas batch through the same
+Arrow front-end for phrase embeddings (topic_map) and search query vectors.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,27 +66,19 @@ def embed_list_array(ts, dim: int = spec.EMBED_DIM):
     return pa.ListArray.from_arrays(offs, pa.array(M.ravel()))
 
 
-def embed_batch(
-    texts: pd.Series,
-    dim: int = spec.EMBED_DIM,
-    toks: pd.Series | None = None,
-    ts=None,
-) -> pd.Series:
-    """``embed_matrix`` with the standalone-operator pandas contract.
-    ``toks``/``ts`` let callers pass the already-computed token lists /
-    TokenStream (identical spec tokenization) instead of re-splitting and
-    re-factorizing."""
-    if ts is None:
-        from .extraction import build_token_stream, tokenize_batch
+def embed_batch(texts: pd.Series, dim: int = spec.EMBED_DIM) -> pd.Series:
+    """``embed_matrix`` with a pandas contract: one vector per text, tokenized
+    by the enrich kernel's front-end."""
+    import pyarrow as pa
 
-        ts = build_token_stream(tokenize_batch(texts) if toks is None else toks)
+    from .enrichment import clean_arrow_array  # enrichment imports this module
+    from .extraction import build_token_stream_arrow
+
+    arr = pa.array(texts, type=pa.string(), from_pandas=True)
+    ts = build_token_stream_arrow(clean_arrow_array(arr))
     return pd.Series(list(embed_matrix(ts, dim)))
 
 
 @F.pandas_udf(T.ArrayType(T.FloatType()))
 def embed_udf(texts: pd.Series) -> pd.Series:
     return embed_batch(texts)
-
-
-def with_embedding(df: DataFrame, text_col: str = "content", out_col: str = "embedding") -> DataFrame:
-    return df.withColumn(out_col, embed_udf(F.col(text_col)))

@@ -1,18 +1,19 @@
 """Fused enrichment kernel: clean + entities + topics + embedding in ONE Arrow pass.
 
-``extract_udf`` and ``embed_udf`` are kept as standalone operators, but the
-pipeline uses this fused form on the hot path: cleaning, both extractors and
-the embedder share one tokenization/factorization of the same content, so the
-batch is cleaned once, tokenized once, and transferred over Arrow once. At
-10^12 docs the enrichment stage is the dominant compute — this is the single
-biggest constant-factor lever.
+Cleaning, both extractors and the embedder share one tokenization of the
+same content, so the batch is cleaned once, tokenized once, and transferred
+over Arrow once. At 10^12 docs the enrichment stage is the dominant compute
+— this is the single biggest constant-factor lever.
 
 There is one kernel, ``enrich_arrow`` (a string array in, a struct array
 out), with two callers: ``enrich_udf`` wraps it for the Spark plans (the
 batch stage and both stream sinks past the driver bound), and the driver
 twin of those plans (plans/pipeline._assemble_arrow) calls it in-process
 on batches of the same size the UDF receives
-(``spark.sql.execution.arrow.maxRecordsPerBatch``).
+(``spark.sql.execution.arrow.maxRecordsPerBatch``). Its front-end,
+``clean_arrow_array`` → ``extraction.build_token_stream_arrow``, is the one
+tokenizer: ``embedding.embed_batch`` (phrase embeddings for topic_map,
+search query vectors) runs it too.
 
 The text cleaning itself runs HERE (pyarrow compute, RE2) rather than as JVM
 ``regexp_replace``: profiling showed the two Java regex passes were the most
@@ -20,16 +21,15 @@ expensive expressions in the whole enrich stage (~11 s per 320k docs at
 local[4]), while RE2 does the same work at memory speed — and RE2 is also
 what the DuckDB oracle uses, so the engines agree on the regex dialect.
 
-Must stay spec-exact: delegates to the same winner/embedding cores the
-standalone operators wrap (operators/extraction._extract_winners,
-operators/embedding.embed_matrix), so the UDF==native==golden cross-checks
-keep holding — pinned by test_fused_enrich_equals_unfused and
-test_arrow_token_stream_matches_pandas.
+Must stay spec-exact: the kernel's content equals the JVM
+``clean_text_col``, its entities equal ``extraction.entities_native``, and
+its entities, topics and embeddings equal ``spec.extract_doc`` /
+``spec.embed_text`` — pinned by test_fused_enrich_equals_unfused,
+test_udf_extraction_equals_native and test_batch_kernels_match_spec.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -70,18 +70,6 @@ def clean_arrow_array(arr: pa.Array) -> pa.Array:
     return pc.utf8_trim(arr, characters=" ")
 
 
-def clean_arrow(contents: pd.Series) -> pa.Array:
-    # type pinned: an empty object Series would otherwise infer a null-typed
-    # array, which the utf8_* kernels reject
-    return clean_arrow_array(
-        pa.Array.from_pandas(contents.fillna("").astype(str), type=pa.string())
-    )
-
-
-def clean_batch(contents: pd.Series) -> pd.Series:
-    return clean_arrow(contents).to_pandas()
-
-
 def enrich_arrow(contents: pa.Array) -> pa.StructArray:
     """The fused kernel: raw content strings in, (content, entities, topics,
     embedding) structs out, pyarrow-native on both sides. The token stream
@@ -113,10 +101,9 @@ def enrich_udf(contents: pa.Array) -> pa.Array:
 
 def enrich_content(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Attach cleaned content + entities/topics (array<struct<text,label>>) +
-    embedding via the fused UDF — output-identical to
-    ``clean_text_col`` ∘ ``extract_entities_topics`` ∘ ``with_embedding``.
-    ``content_col`` may be raw (assemble_content(clean=False)) or already
-    clean — the cleaner is idempotent."""
+    embedding via the fused UDF. ``content_col`` may be raw
+    (assemble_content(clean=False)) or already clean — the cleaner is
+    idempotent."""
     # the UDF already emits (text, label) structs — no JVM-side transform
     # lambda (CodegenFallback, interpreted per element) in the plan
     df = df.withColumn("_en", enrich_udf(F.col(content_col)))

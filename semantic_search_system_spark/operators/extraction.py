@@ -2,50 +2,38 @@
 
 Replaces the reference's per-document, per-network-call extraction loop
 (nlp/pr_aws_nlp.py:230-277 — one Bedrock round-trip per doc, strictly
-sequential) with two Spark surfaces:
+sequential) with two surfaces:
 
 1. ``assemble_content`` — 100% native column expressions (array_sort / filter /
    array_join / slice): span ordering, text concatenation, media_ref carry,
    title/summary/url/date derivation. Whole-stage-codegen'd; zero Python.
-2. ``extract_entities_topics`` — ONE Arrow-vectorized pandas UDF implementing
-   the shared extraction spec (spec.extract_doc): top-5 tokens by frequency as
-   entities (pr_local_nlp_pipeline.py:70-93), top-5 adjacent bigrams as topics
-   (pr_aws_nlp.py:74-76), deterministic tie-breaks. The batch is processed with
-   pandas explode/groupby (C-level), not row-at-a-time Python.
+2. The extraction kernel behind the fused enrich UDF
+   (operators/enrichment.enrich_arrow): ``build_token_stream_arrow`` is the
+   one tokenizer (every extract and embed call goes through it), and
+   ``_extract_winners`` implements the shared extraction spec
+   (spec.extract_doc) over its integer stream: top-5 tokens by frequency as
+   entities (pr_local_nlp_pipeline.py:70-93), top-5 adjacent bigrams as
+   topics (pr_aws_nlp.py:74-76), deterministic tie-breaks. Numpy passes
+   over the whole batch, no per-row Python.
 
 There is also a pure-SQL formulation of the same extraction
 (``entities_native`` / ``topics_native``) used for the DuckDB oracle checks and
-as an in-repo cross-check of the UDF — at cluster scale the UDF path is used
-because it makes one pass per batch instead of exploding every token through a
-shuffle.
+as an independent cross-check of the kernel — at cluster scale the kernel is
+used because it makes one pass per batch instead of exploding every token
+through a shuffle.
 """
 
 from __future__ import annotations
 
-from itertools import chain
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import spec
 from ..functions.text import clean_text_col
-
-ENTITY_STRUCT = T.ArrayType(
-    T.StructType(
-        [T.StructField("text", T.StringType()), T.StructField("label", T.StringType())]
-    )
-)
-
-EXTRACT_RESULT = T.StructType(
-    [
-        T.StructField("entities", T.ArrayType(T.StringType())),
-        T.StructField("topics", T.ArrayType(T.StringType())),
-    ]
-)
 
 
 def ordered_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
@@ -140,19 +128,6 @@ def assemble_content(df: DataFrame, clean: bool = True) -> DataFrame:
     return out
 
 
-def tokenize_batch(contents: pd.Series) -> pd.Series:
-    """The spec's batch tokenization (lower → strip non-alnum → split),
-    row-reindexed — shared by extraction and embedding so the fused enrich
-    UDF tokenizes each content string exactly once."""
-    toks = (
-        contents.fillna("")
-        .str.lower()
-        .str.replace(spec.CLEAN_STRIP_RE, "", regex=True)
-        .str.split()
-    )
-    return toks.reset_index(drop=True)
-
-
 class TokenStream(NamedTuple):
     """The batch's factorized token stream, computed ONCE and shared by
     entity extraction, topic extraction, and embedding (the fused enrich UDF
@@ -173,44 +148,17 @@ class TokenStream(NamedTuple):
     pcnt: np.ndarray
 
 
-def build_token_stream(toks: pd.Series) -> TokenStream:
-    lists = toks.tolist()
-    n = len(lists)
-    lens = np.fromiter(
-        (len(t) if isinstance(t, list) else 0 for t in lists), np.int64, count=n
-    )
-    flat = np.array(
-        list(chain.from_iterable(t if isinstance(t, list) else [] for t in lists)),
-        dtype=object,
-    )
-    rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-    keep = flat != ""  # spec tokens are never empty; guard arbitrary input
-    if not keep.all():
-        flat, rows = flat[keep], rows[keep]
-    if flat.size:
-        codes, uniq = pd.factorize(flat)
-        codes = codes.astype(np.int64)
-        uniq = np.asarray(uniq, dtype=object)
-        key = rows * len(uniq) + codes
-        ukey, pcnt = np.unique(key, return_counts=True)
-        prow, pcode = ukey // len(uniq), ukey % len(uniq)
-    else:
-        codes = prow = pcode = pcnt = np.empty(0, np.int64)
-        uniq = np.empty(0, object)
-    return TokenStream(n, rows, codes, uniq, prow, pcode, pcnt)
-
-
 def build_token_stream_arrow(arr) -> TokenStream:
     """TokenStream straight from a CLEANED Arrow string array (single-space
-    separated, trimmed — clean_batch output): split and vocabulary encoding
-    run as Arrow C kernels (split_pattern + dictionary_encode), so no Python
-    object is created per token — the pandas ``str.split`` + chain-flatten +
-    ``pd.factorize`` path was ~40%% of the fused enrich kernel. Stream order
-    and first-appearance vocabulary order match ``build_token_stream``
-    exactly; the only representational difference is that an empty content
-    row may leave an unused '' entry in the vocabulary (occurrences of '' are
-    dropped from the stream either way, and every consumer keys off
-    occurrence codes, so ranks/counts are unaffected)."""
+    separated, trimmed — ``enrichment.clean_arrow_array`` output): split and
+    vocabulary encoding run as Arrow C kernels (split_pattern +
+    dictionary_encode), so no Python object is created per token — a pandas
+    ``str.split`` + flatten + ``pd.factorize`` front-end was ~40% of the
+    fused enrich kernel. Each row's occurrences are ``spec.clean_tokens`` of
+    its content, in order. An empty content row may leave an unused '' entry
+    in the vocabulary; occurrences of '' are dropped from the stream, and
+    every consumer keys off occurrence codes, so ranks/counts are
+    unaffected."""
     import pyarrow.compute as pc
 
     n = len(arr)
@@ -256,33 +204,9 @@ def _topk_order(prow: np.ndarray, cnt: np.ndarray, lexcode: np.ndarray, n_lex: i
     return np.lexsort((lexcode, -cnt, prow))
 
 
-def _extract_batch(
-    contents: pd.Series, toks: pd.Series | None = None, ts: TokenStream | None = None
-) -> pd.DataFrame:
-    """Batch extraction implementing spec.extract_doc over the factorized
-    token stream: per-(row, token) counts via one integer np.unique, top-k
-    selection via one np.lexsort (count desc, lexicographic asc — the spec
-    tie-break), bigram adjacency via a shifted-codes comparison. Python loops
-    touch only the vocabulary and the ≤ k·n winners."""
-    if ts is None:
-        ts = build_token_stream(tokenize_batch(contents) if toks is None else toks)
-    (er, ev), (tr, tv) = _extract_winners(ts)
-
-    def _per_row(rows_sorted: np.ndarray, values: np.ndarray) -> list:
-        """Sorted (row, value) winners → one list per row, no per-winner
-        Python: bincount → offsets → np.split (the append-per-winner loop was
-        ~20% of the kernel)."""
-        counts = np.bincount(rows_sorted, minlength=ts.n)
-        pieces = np.split(values, np.cumsum(counts)[:-1])
-        return [p.tolist() for p in pieces]
-
-    return pd.DataFrame({"entities": _per_row(er, ev), "topics": _per_row(tr, tv)})
-
-
 def _extract_winners(ts: TokenStream):
     """spec top-k winners over the factorized stream, as SORTED flat arrays:
-    ((ent_rows, ent_tokens), (topic_rows, topic_phrases)) — the shared core
-    of the pandas and Arrow output paths."""
+    ((ent_rows, ent_tokens), (topic_rows, topic_phrases))."""
     empty = np.empty(0, np.int64), np.empty(0, object)
     ent_w, top_w = empty, empty
     if len(ts.rows):
@@ -332,55 +256,26 @@ def _extract_winners(ts: TokenStream):
     return ent_w, top_w
 
 
-def _winners_list_array(rows_sorted: np.ndarray, values: np.ndarray, n: int, label: str | None = None):
-    """Sorted flat winners → pa.ListArray built straight from offsets — the
-    zero-Python output path of the fused enrich UDF (converting an object
-    Series of Python lists through pa.Array.from_pandas was a per-row walk).
-    With ``label``, the list values are (text, label) structs — the constant
-    label column materializes via a C-side dictionary take, so the JVM-side
+def _winners_list_array(rows_sorted: np.ndarray, values: np.ndarray, n: int, label: str):
+    """Sorted flat winners → pa.ListArray of (text, label) structs built
+    straight from offsets — the zero-Python output path of the fused enrich
+    UDF (converting an object Series of Python lists through
+    pa.Array.from_pandas was a per-row walk). The constant label column
+    materializes via a C-side dictionary take, so no JVM-side
     ``F.transform`` struct wrap (CodegenFallback, interpreted per element)
-    disappears from the plan."""
+    sits in the plan."""
     import pyarrow as pa
 
     offs = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(np.bincount(rows_sorted, minlength=n), out=offs[1:])
-    vals = pa.array(values, type=pa.string())
-    if label is not None:
-        lab = pa.array([label]).take(pa.array(np.zeros(len(values), np.int32)))
-        vals = pa.StructArray.from_arrays([vals, lab], names=["text", "label"])
+    lab = pa.array([label]).take(pa.array(np.zeros(len(values), np.int32)))
+    vals = pa.StructArray.from_arrays(
+        [pa.array(values, type=pa.string()), lab], names=["text", "label"]
+    )
     return pa.ListArray.from_arrays(pa.array(offs), vals)
 
 
 _STOP_ARR = np.array(sorted(spec.STOPWORDS), dtype=object)
-
-
-@F.pandas_udf(EXTRACT_RESULT)
-def extract_udf(contents: pd.Series) -> pd.DataFrame:
-    return _extract_batch(contents)
-
-
-def extract_entities_topics(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Attach entities/topics as array<struct<text,label>> (vector-index row shape,
-    create_vector_index.py:29-43; labels 'ENTITY'/'TOPIC' per pr_aws_nlp.py:70-76)."""
-    df = df.withColumn("_ex", extract_udf(F.col(content_col)))
-    df = (
-        df.withColumn(
-            "entities",
-            F.transform(
-                F.col("_ex.entities"),
-                lambda t: F.struct(t.alias("text"), F.lit("ENTITY").alias("label")),
-            ),
-        )
-        .withColumn(
-            "topics",
-            F.transform(
-                F.col("_ex.topics"),
-                lambda t: F.struct(t.alias("text"), F.lit("TOPIC").alias("label")),
-            ),
-        )
-        .drop("_ex")
-    )
-    return df
 
 
 # ----------------------------------------------------------------- SQL-expressible twin
@@ -388,7 +283,7 @@ def entities_native(df: DataFrame, content_col: str = "content", k: int = spec.T
     """Top-k entity tokens per doc as pure DataFrame ops (explode → count → window).
 
     Oracle-matched formulation of the extraction spec (A1/W3 in SURVEY.md §2.4):
-    used by the DuckDB correctness gate and to cross-check extract_udf.
+    used by the DuckDB correctness gate and to cross-check the enrich kernel.
     """
     toks = F.split(clean_text_col(F.col(content_col)), " ")
     exploded = (

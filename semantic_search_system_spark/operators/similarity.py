@@ -25,7 +25,6 @@ index, so:
   under ``plans.pipeline.DRIVER_VOCAB_SCAN_BYTES``). One numpy kernel,
   ``nearest_centroid``, does every assignment, so both branches write the
   same rows.
-- ``ivf_topk``: the index-free inline form (ad-hoc / tests).
 """
 
 from __future__ import annotations
@@ -550,36 +549,3 @@ def ivf_topk_indexed(
         .limit(k)
     )
 
-
-def ivf_topk(
-    vectors: DataFrame,
-    query_vec,
-    k: int = 10,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 2,
-    fit_sample_hex: str | None = None,
-) -> DataFrame:
-    """Index-free inline IVF top-k (ad-hoc / tests); same math as the indexed
-    path, nothing persisted."""
-    from ..session import local_df
-
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    cent_rows = kmeans_centroids(vectors, n_centroids, n_iter, id_col, vec_col, fit_sample_hex)
-    cent = local_df(vectors.sparkSession, cent_rows, "centroid_id long, cvec array<double>")
-    d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-    assignments = _assignments(d, *_centroid_arrays(cent_rows), id_col)
-    probed = (
-        cent.select("centroid_id", F.round(cosine_sim(F.col("cvec"), qv), 6).alias("qsim"))
-        .orderBy(F.desc("qsim"), F.asc("centroid_id"))
-        .limit(n_probe)
-        .select("centroid_id")
-    )
-    return (
-        assignments.join(F.broadcast(probed), "centroid_id")
-        .select(id_col, F.round(cosine_sim(F.col("_v"), qv), 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
-    )

@@ -19,8 +19,9 @@ kNN branch of every strategy is a HIT SOURCE ``(qvec, semantic_k) ->
 (doc_id, sim)`` that the strategy body receives, and scoring is written once
 per strategy. The reference serves every strategy from one kNN index call
 (:92-390); here two sources plug in:
-- ``_exact_hits``   — the recall-1.0 cosine top-k over the corpus (the
-                      plain ``advanced_search``/``pro_search``/... names);
+- ``similarity.brute_force_topk`` — the recall-1.0 cosine top-k over the
+                      corpus (the plain ``advanced_search``/``pro_search``/...
+                      names);
 - ``_doc_ivf_hits`` — the probe of the materialized doc-IVF index (the
                       ``*_ann`` names).
 The SQL twins mirror it: the body takes an ``ann(doc_id, ann_sim)`` CTE from
@@ -43,11 +44,15 @@ import math
 import warnings
 from functools import partial
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
 from ..functions.scoring import minmax_normalize_100
+from ..functions.vectors import cosine_to_const_udf
+from ..operators.embedding import embed_batch
+from ..operators.similarity import brute_force_topk
 
 # Benchmark defaults — vocabulary of the synthetic corpus.
 QUERY_TEXT = "spark join table"
@@ -58,7 +63,7 @@ DATE_LO, DATE_HI = "2000-01-01", "2020-01-01"
 
 def _params(query_text: str) -> tuple[list[str], list[float]]:
     terms = spec.clean_tokens(query_text)
-    qvec = [float(x) for x in spec.embed_text(query_text)]
+    qvec = [float(x) for x in embed_batch(pd.Series([query_text]))[0]]
     return terms, qvec
 
 
@@ -75,20 +80,6 @@ def _terms_arr(terms: list[str]):
 
 
 # --------------------------------------------------------------- shared scoring
-def _cos_to_query(qvec: list[float]):
-    """round(cosine(embedding, query), 6) — Arrow-vectorized (one numpy
-    matmul per batch; the zip_with/aggregate HOF chain is CodegenFallback,
-    interpreted per element, measured ~8× slower at 256 d). Zero-norm
-    embeddings score 0.0 instead of NaN — NaN sorts greatest in BOTH
-    engines, so an empty-content doc would otherwise top every semantic
-    ranking; the oracle SQL applies the identical NaN→0 collapse, and 6-dp
-    rounding makes matmul and the SQL sequential fold agree exactly
-    (tests/test_plans.py::test_cosine_udf_matches_hof)."""
-    from ..functions.vectors import cosine_to_const_udf
-
-    return cosine_to_const_udf(qvec)(F.col("embedding").cast("array<double>"))
-
-
 def _with_scores(enriched: DataFrame, terms: list[str], fuzziness: int) -> DataFrame:
     """Attach the rounded lexical score components used by the strategies
     (the semantic component comes from the hit source)."""
@@ -184,23 +175,10 @@ def simple_search_sql(
 # ---------------------------------------------------------------- hit sources
 # A hit source maps (qvec, semantic_k) to the semantic top-k as (doc_id, sim).
 # The strategy bodies below take one and are otherwise source-agnostic; the
-# exact names pass ``partial(_exact_hits, enriched)``, the ``_ann`` names pass
-# ``partial(_doc_ivf_hits, spark, cat, enriched, ...)``.
-def _exact_hits(enriched: DataFrame, qvec: list[float], semantic_k: int) -> DataFrame:
-    """The recall-1.0 source: rounded cosine top-``semantic_k`` over the
-    whole corpus. ``orderBy().limit()`` compiles to TakeOrderedAndProject
-    (partial top-k on every partition, merge on the driver) instead of a
-    global ``row_number()`` that funnels every row through one task, and the
-    (sim desc, doc_id asc) order is total, so the selected set equals the
-    rank formulation. This is the only per-row cosine a strategy runs over
-    the corpus: the bodies join the tiny hit set back, never a cosine column."""
-    return (
-        enriched.select("doc_id", _cos_to_query(qvec).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("doc_id"))
-        .limit(semantic_k)
-    )
-
-
+# exact names pass ``partial(brute_force_topk, enriched, id_col="doc_id")``
+# (the recall-1.0 scan: the only per-row cosine a strategy runs over the
+# corpus — the bodies join the tiny hit set back, never a cosine column),
+# the ``_ann`` names pass ``partial(_doc_ivf_hits, spark, cat, enriched, ...)``.
 def _with_hits(s: DataFrame, hits: DataFrame) -> DataFrame:
     """Broadcast-join the hit set in as ``_sim`` (NULL for non-hits)."""
     return s.join(
@@ -209,7 +187,7 @@ def _with_hits(s: DataFrame, hits: DataFrame) -> DataFrame:
 
 
 def _exact_ann_sql(enriched_glob: str, qvec: list[float], semantic_k: int) -> str:
-    """``_exact_hits`` as the ``ann(doc_id, ann_sim)`` CTE over ``scored``
+    """The exact hit source as the ``ann(doc_id, ann_sim)`` CTE over ``scored``
     (same signature as ``_doc_ivf_ann_sql``; the query vector is already in
     ``scored.sem_score``). ORDER BY ... LIMIT picks the same set as
     ``row_number() <= semantic_k`` because the order is total."""
@@ -244,7 +222,9 @@ def advanced_search(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    return _advanced(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
+    return _advanced(
+        enriched, query_text, k, fuzziness, partial(brute_force_topk, enriched, id_col="doc_id")
+    )
 
 
 def advanced_search_ann(
@@ -392,7 +372,9 @@ def pro_search(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    return _pro(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
+    return _pro(
+        enriched, query_text, k, fuzziness, partial(brute_force_topk, enriched, id_col="doc_id")
+    )
 
 
 def pro_search_ann(
@@ -1042,7 +1024,7 @@ def _pro_enhanced(
     qn = float(len(terms))
     rerank = F.round(
         0.6 * (F.size(F.array_intersect(F.split(F.col("content"), " "), _terms_arr(terms))) / F.lit(qn))
-        + 0.4 * _cos_to_query(qvec),
+        + 0.4 * cosine_to_const_udf(qvec)(F.col("embedding").cast("array<double>")),
         6,
     )
     return (
@@ -1059,7 +1041,9 @@ def pro_search_enhanced(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    return _pro_enhanced(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
+    return _pro_enhanced(
+        enriched, query_text, k, fuzziness, partial(brute_force_topk, enriched, id_col="doc_id")
+    )
 
 
 def pro_search_enhanced_ann(
@@ -1160,7 +1144,9 @@ def search_kb(
     k: int = K,
     fuzziness: int = FUZZINESS,
 ) -> DataFrame:
-    return _kb(enriched, query_text, k, fuzziness, partial(_exact_hits, enriched))
+    return _kb(
+        enriched, query_text, k, fuzziness, partial(brute_force_topk, enriched, id_col="doc_id")
+    )
 
 
 def search_kb_ann(

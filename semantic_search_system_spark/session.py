@@ -84,10 +84,8 @@ def get_spark(
         # partitioned-commit wall at sf0.1, pure overhead on a local disk
         # whose durability story is the catalog's own atomic manifest +
         # staging protocol). Scheme-scoped: hdfs:///s3a:// tables are
-        # untouched, and the env override restores checksummed local I/O.
-        "spark.hadoop.fs.file.impl": os.environ.get(
-            "SPARK_GRAFT_LOCAL_FS", "org.apache.hadoop.fs.RawLocalFileSystem"
-        ),
+        # untouched, and extra_conf (or --conf) restores checksummed local I/O.
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
     }
     if extra_conf:
         conf.update(extra_conf)

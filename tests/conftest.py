@@ -15,10 +15,8 @@ DATA_ROOT = tempfile.mkdtemp(prefix="sss_data_")
 os.environ["SSS_SPARK_DATA_DIR"] = DATA_ROOT
 atexit.register(shutil.rmtree, DATA_ROOT, True)
 
+from semantic_search_system_spark.fixtures.interleave import SF_MED, SF_SMALL  # noqa: E402,F401
 from semantic_search_system_spark.session import _DEF_CPUS, get_spark  # noqa: E402
-
-SF_SMALL = "/root/testdata/sf0.001"
-SF_MED = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")

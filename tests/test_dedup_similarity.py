@@ -9,7 +9,7 @@ from semantic_search_system_spark.operators.dedup import (
     with_shingles,
 )
 from semantic_search_system_spark import spec
-from semantic_search_system_spark.operators.similarity import brute_force_topk, ivf_topk
+from semantic_search_system_spark.operators.similarity import brute_force_topk
 
 from conftest import SF_MED, SF_SMALL, with_job_count
 
@@ -263,7 +263,7 @@ def test_ivf_centroid_read_memoized(spark, tmp_root, monkeypatch):
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.operators import similarity as sim
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cat = Catalog(tmp_root)
     sim.build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
     q = e.where(F.col("vec_id") == 1).select("embedding").collect()[0][0]
@@ -288,18 +288,6 @@ def test_ivf_centroid_read_memoized(spark, tmp_root, monkeypatch):
     assert reads["n"] >= 2
 
 
-def test_ivf_recall_vs_bruteforce(spark):
-    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    q = e.where(F.col("vec_id") == 1).select("embedding").collect()[0][0]
-    exact = [r["vec_id"] for r in brute_force_topk(e, q, k=10).collect()]
-    # probing every centroid partition must reproduce the exact result
-    full_probe = [r["vec_id"] for r in ivf_topk(e, q, k=10, n_centroids=8, n_probe=8).collect()]
-    assert full_probe == exact
-    # 2-probe ANN: reasonable recall on the top-10
-    approx = [r["vec_id"] for r in ivf_topk(e, q, k=10, n_centroids=8, n_probe=2).collect()]
-    assert len(set(approx) & set(exact)) >= 3
-
-
 def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
     """A changed input (a different lineage) must raise on index reuse, not
     silently serve stale assignments (round-2 ADVICE #1)."""
@@ -308,7 +296,7 @@ def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.operators.similarity import build_ivf_index
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cat = Catalog(tmp_root)
     build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
     build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)  # same input → no-op
@@ -382,7 +370,7 @@ def test_kmeans_driver_fit_matches_distributed(spark, monkeypatch):
     this fixpoint being path-independent."""
     from semantic_search_system_spark.operators import similarity as sim
 
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_MED}/embeddings.parquet")
     for hex_ in (None, "80"):
         driver = sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
         with monkeypatch.context() as m:
@@ -461,9 +449,8 @@ def test_doc_ivf_search_recall(spark):
     from semantic_search_system_spark.plans import search as S
     from semantic_search_system_spark.plans.pipeline import ensure_enriched
 
-    sf = "/root/testdata/sf0.01"
-    enr = ensure_enriched(spark, sf, ep.out_root(sf))
-    cat = Catalog(ep.out_root(sf))
+    enr = ensure_enriched(spark, SF_MED, ep.out_root(SF_MED))
+    cat = Catalog(ep.out_root(SF_MED))
     _, n_probe = S.ensure_doc_ivf(spark, cat, enr)
     _, qvec = S._params(S.QUERY_TEXT)
     vecs = enr.select(F.col("doc_id").cast("long").alias("doc_key"), "embedding")

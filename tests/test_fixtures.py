@@ -12,8 +12,6 @@ from semantic_search_system_spark import spec
 from semantic_search_system_spark.fixtures.golden import golden_canonicalize, golden_triples
 from semantic_search_system_spark.fixtures.interleave import build_interleaved, spans_for_text
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_spans_spec():
     spans = spans_for_text("1", " ".join(f"w{i}" for i in range(40)), hot=False)
@@ -71,8 +69,8 @@ def test_data_dir_defaults_to_cwd_data_from_zip(tmp_path):
 
 def test_build_deterministic():
     with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
-        p1 = build_interleaved(SF, out_dir=d1)
-        p2 = build_interleaved(SF, out_dir=d2)
+        p1 = build_interleaved(SF_SMALL, out_dir=d1)
+        p2 = build_interleaved(SF_SMALL, out_dir=d2)
         df1 = pd.read_parquet(p1)
         df2 = pd.read_parquet(p2)
         assert df1.equals(df2)
@@ -80,14 +78,14 @@ def test_build_deterministic():
 
 
 def test_build_idempotent_cache():
-    p = build_interleaved(SF)
+    p = build_interleaved(SF_SMALL)
     mtime = os.path.getmtime(p)
-    assert build_interleaved(SF) == p
+    assert build_interleaved(SF_SMALL) == p
     assert os.path.getmtime(p) == mtime
 
 
 def test_golden_triples_shape():
-    inter = pd.read_parquet(build_interleaved(SF)).head(50)
+    inter = pd.read_parquet(build_interleaved(SF_SMALL)).head(50)
     gt = golden_triples(inter)
     assert set(gt["pred"]) == {spec.PRED_MENTIONS, spec.PRED_HAS_TOPIC, spec.PRED_RELATES}
     assert not gt.duplicated().any()

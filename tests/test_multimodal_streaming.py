@@ -131,9 +131,24 @@ def test_compact_stream_epochs_preserves_reads_and_resume(spark, tmp_root):
         return {r["doc_id"]: r["summary"] for r in df.select("doc_id", "summary").collect()}
 
     pre = snap(cat.read(spark, "enriched_stream"))
-    assert cat.compact_stream_epochs(spark, "enriched_stream")
+    before = cat.manifest("enriched_stream")["partitions"]
+    committed = cat.compact_stream_epochs(spark, "enriched_stream")
+    assert committed
     man = cat.manifest("enriched_stream")
     assert all(k.startswith("c1_") for k in man["partitions"]), man["partitions"].keys()
+    # the compaction snapshot is published like every other commit: same
+    # fields (writer included) plus the folded keys and their stages
+    last = man["snapshots"][-1]
+    assert set(last) == {
+        "snapshot_id", "stage", "writer", "partitions", "total_rows",
+        "compacted_from", "compacted_from_stages",
+    }
+    assert last["stage"] == "compact_gen1" and last["writer"] == "spark"
+    assert last["partitions"] == sorted(committed) == sorted(man["partitions"])
+    assert last["compacted_from"] == sorted(before)
+    assert last["compacted_from_stages"] == {k: e["stage"] for k, e in before.items()}
+    assert last["total_rows"] == sum(e["rows_written"] for e in before.values()) == len(pre)
+    assert all(e["snapshot_id"] == last["snapshot_id"] for e in man["partitions"].values())
     assert snap(cat.read(spark, "enriched_stream")) == pre
     # idempotent: nothing left to fold
     assert cat.compact_stream_epochs(spark, "enriched_stream") == {}
@@ -701,8 +716,8 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
         got = run(first, first, second, replay=first)
         for t in _STREAM_TABLES:
             assert got[t][:3] == ref[t][:3], (first, t)
-            # the two epochs' commits, then the compaction's snapshot
-            assert got[t][3] == [writer[first], writer[second], None], (first, t)
+            # the two epochs' commits, then the compaction's (a Spark write)
+            assert got[t][3] == [writer[first], writer[second], "spark"], (first, t)
 
 
 def test_stream_driver_epoch_submits_one_job(spark, tmp_root):

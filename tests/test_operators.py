@@ -7,24 +7,22 @@ from semantic_search_system_spark.functions.scoring import minmax_normalize_100
 from semantic_search_system_spark.functions.text import clean_text_col
 from semantic_search_system_spark.operators.components import connected_components
 from semantic_search_system_spark.operators.embedding import embed_batch
-from semantic_search_system_spark.operators.extraction import (
-    _extract_batch,
-    assemble_content,
-    entities_native,
-    extract_entities_topics,
-)
+from semantic_search_system_spark.operators.enrichment import enrich_arrow, enrich_content
+from semantic_search_system_spark.operators.extraction import assemble_content, entities_native
 from semantic_search_system_spark.operators.linking import candidate_edges
 
 from conftest import SF_SMALL
 
 
 def test_extract_batch_matches_spec():
-    texts = pd.Series(["the spark table spark join the table spark", "", "a b a b a"])
-    out = _extract_batch(texts)
-    for text, ents, tops in zip(texts, out["entities"], out["topics"]):
+    import pyarrow as pa
+
+    texts = ["the spark table spark join the table spark", "", "a b a b a"]
+    out = enrich_arrow(pa.array(texts, pa.string())).to_pylist()
+    for text, row in zip(texts, out):
         ref = spec.extract_doc(text)
-        assert list(ents) == ref["entities"]
-        assert list(tops) == ref["topics"]
+        assert [e["text"] for e in row["entities"]] == ref["entities"]
+        assert [t["text"] for t in row["topics"]] == ref["topics"]
 
 
 def test_embed_batch_matches_spec():
@@ -58,7 +56,8 @@ def test_assemble_content_order_invariance(spark):
 
 
 def test_udf_extraction_equals_native(spark):
-    """The pandas-UDF extractor and the SQL-expressible twin agree on real data."""
+    """The fused enrich UDF's entities and the SQL-expressible twin agree on
+    real data."""
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .limit(100)
@@ -66,7 +65,7 @@ def test_udf_extraction_equals_native(spark):
     )
     udf_out = {
         r["doc_id"]: [e["text"] for e in r["entities"]]
-        for r in extract_entities_topics(docs).select("doc_id", "entities").collect()
+        for r in enrich_content(docs).select("doc_id", "entities").collect()
     }
     native = entities_native(docs).orderBy("doc_id", "rn").collect()
     nat_out: dict[str, list[str]] = {}
@@ -149,45 +148,42 @@ def test_minmax_normalize_edge_cases(spark):
 
 def test_fused_enrich_equals_unfused(spark):
     """enrich_content on RAW content (fused UDF: Arrow-RE2 clean + shared
-    token stream) must be output-identical — INCLUDING the cleaned content
-    column — to JVM clean_text_col + extract_entities_topics ∘ with_embedding
-    on the same docs."""
+    token stream) must emit the JVM ``clean_text_col`` content and the spec's
+    entities, topics and embedding for every doc."""
     from semantic_search_system_spark.fixtures.interleave import interleaved_path
-    from semantic_search_system_spark.operators.embedding import with_embedding
-    from semantic_search_system_spark.operators.enrichment import enrich_content
-    from semantic_search_system_spark.operators.extraction import (
-        assemble_content,
-        extract_entities_topics,
-        has_usable_text,
-    )
+    from semantic_search_system_spark.operators.extraction import has_usable_text
 
     base = spark.read.parquet(interleaved_path(SF_SMALL)).where(has_usable_text())
+    raw = assemble_content(base, clean=False)
     cols = ["doc_id", "content", "entities", "topics", "embedding"]
-    fused = {
-        r["doc_id"]: r
-        for r in enrich_content(assemble_content(base, clean=False)).select(cols).collect()
-    }
-    unfused = {
-        r["doc_id"]: r
-        for r in extract_entities_topics(
-            with_embedding(assemble_content(base, clean=True))
-        )
-        .select(cols)
+    fused = {r["doc_id"]: r for r in enrich_content(raw).select(cols).collect()}
+    ref = {
+        r["doc_id"]: (r["content"], r["clean"])
+        for r in raw.select("doc_id", "content", clean_text_col("content").alias("clean"))
         .collect()
     }
-    assert fused.keys() == unfused.keys() and len(fused) > 100
-    for k in fused:
-        assert fused[k] == unfused[k], k
+    assert fused.keys() == ref.keys() and len(fused) > 100
+    for k, r in fused.items():
+        text, clean = ref[k]
+        want = spec.extract_doc(text)
+        assert r["content"] == clean, k
+        assert [(e["text"], e["label"]) for e in r["entities"]] == [
+            (t, "ENTITY") for t in want["entities"]
+        ], k
+        assert [(t["text"], t["label"]) for t in r["topics"]] == [
+            (t, "TOPIC") for t in want["topics"]
+        ], k
+        assert np.array_equal(np.asarray(r["embedding"], np.float32), spec.embed_text(text)), k
 
 
 def test_jvm_clean_matches_arrow_clean_adversarial(spark):
-    """clean_text_col (JVM regex) and clean_batch (Arrow RE2) must agree on
+    """clean_text_col (JVM regex) and clean_arrow_array (Arrow RE2) must agree on
     whitespace edge cases — notably VT (0x0b), which Java's ``\\s`` contains
     and RE2's does not (round-3 ADVICE #1: 'foo<VT>bar baz qux' diverged before the
     explicit spec.CLEAN_*_RE classes)."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from semantic_search_system_spark.operators.enrichment import clean_batch
+    from semantic_search_system_spark.operators.enrichment import clean_arrow_array
     from semantic_search_system_spark.session import local_df
 
     cases = [
@@ -205,7 +201,7 @@ def test_jvm_clean_matches_arrow_clean_adversarial(spark):
         r["i"]: r["c"]
         for r in df.select("i", clean_text_col("text").alias("c")).collect()
     }
-    got_arrow = clean_batch(pd.Series(cases)).tolist()
+    got_arrow = clean_arrow_array(pa.array(cases)).to_pylist()
     for i, s in enumerate(cases):
         assert got_jvm[i] == got_arrow[i], (i, repr(s), got_jvm[i], got_arrow[i])
 

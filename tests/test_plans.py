@@ -292,6 +292,7 @@ def test_ann_search_plan_prunes_cosine_and_buckets(spark):
     from pyspark.sql import functions as F
 
     from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.operators.similarity import brute_force_topk
     from semantic_search_system_spark.plans import search as S
     from semantic_search_system_spark.plans.pipeline import ensure_enriched
 
@@ -302,7 +303,7 @@ def test_ann_search_plan_prunes_cosine_and_buckets(spark):
     n_centroids, n_probe = S.ensure_doc_ivf(spark, cat, enr)
     assert n_probe < n_centroids  # the probe must actually prune buckets
     terms, qvec = S._params(S.QUERY_TEXT)
-    exact = partial(S._exact_hits, enr)
+    exact = partial(brute_force_topk, enr, id_col="doc_id")
     served = partial(S._doc_ivf_hits, spark, cat, enr)
 
     def arrow_nodes(plan):

@@ -3,13 +3,14 @@ the invariants every engine-side implementation is held to."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from semantic_search_system_spark import spec
 from semantic_search_system_spark.fixtures.interleave import spans_for_text
 from semantic_search_system_spark.operators.embedding import embed_batch
-from semantic_search_system_spark.operators.extraction import _extract_batch
+from semantic_search_system_spark.operators.enrichment import clean_arrow_array, enrich_arrow
 
 words = st.lists(
     st.text(alphabet="abcdefghij0123", min_size=1, max_size=8), min_size=0, max_size=120
@@ -64,14 +65,17 @@ def test_top_k_properties(items, k):
 @given(st.lists(texts, min_size=1, max_size=20))
 @settings(max_examples=50, deadline=None)
 def test_batch_kernels_match_spec(batch):
-    s = pd.Series(batch)
-    ex = _extract_batch(s)
-    em = embed_batch(s)
+    """Both callers of the one tokenizer — the fused enrich kernel and the
+    phrase embedder — against the per-document spec."""
+    ex = enrich_arrow(pa.array(batch, pa.string())).to_pylist()
+    em = embed_batch(pd.Series(batch))
     for i, t in enumerate(batch):
         ref = spec.extract_doc(t)
-        assert list(ex["entities"][i]) == ref["entities"]
-        assert list(ex["topics"][i]) == ref["topics"]
-        assert np.array_equal(np.asarray(em[i]), spec.embed_text(t))
+        vec = spec.embed_text(t)
+        assert [e["text"] for e in ex[i]["entities"]] == ref["entities"]
+        assert [p["text"] for p in ex[i]["topics"]] == ref["topics"]
+        assert np.array_equal(np.asarray(ex[i]["embedding"], np.float32), vec)
+        assert np.array_equal(np.asarray(em[i]), vec)
 
 
 @given(texts)
@@ -136,13 +140,11 @@ def _clean_reference(s: str) -> str:
 @given(st.lists(_clean_texts, min_size=0, max_size=12))
 @settings(max_examples=120, deadline=None)
 def test_arrow_clean_matches_reference(batch):
-    """clean_batch (Arrow RE2 hot path) must equal the Java-semantics
+    """clean_arrow_array (Arrow RE2 hot path) must equal the Java-semantics
     reference cleaner on arbitrary input incl. \\x0b / unicode whitespace /
     control chars (round-3 ADVICE #1: RE2 \\s excludes \\x0b, so shorthand
     classes silently diverged the fused path from the JVM operators)."""
-    from semantic_search_system_spark.operators.enrichment import clean_batch
-
-    got = clean_batch(pd.Series(batch, dtype=object)).tolist()
+    got = clean_arrow_array(pa.array(batch, pa.string())).to_pylist()
     assert got == [_clean_reference(s) for s in batch]
 
 
@@ -161,28 +163,18 @@ def test_spec_tokens_match_reference_clean(s):
 @settings(max_examples=80, deadline=None)
 def test_arrow_token_stream_matches_pandas(batch):
     """build_token_stream_arrow (C split + dictionary_encode over the cleaned
-    Arrow array) must produce the same occurrence stream — and therefore the
-    same extraction winners and embeddings — as the pandas path, for
+    Arrow array) must yield, for every row, exactly ``spec.clean_tokens`` of
+    its text in order, and (row, token) counts that match those tokens — for
     arbitrary input incl. empty/whitespace-only/unicode rows."""
-    from semantic_search_system_spark.operators.embedding import embed_matrix
-    from semantic_search_system_spark.operators.enrichment import clean_arrow
-    from semantic_search_system_spark.operators.extraction import (
-        _extract_batch,
-        build_token_stream,
-        build_token_stream_arrow,
-    )
+    from collections import Counter
 
-    s = pd.Series(batch, dtype=object)
-    arr = clean_arrow(s)
-    cleaned = arr.to_pandas()
-    old = build_token_stream(cleaned.str.split())
-    new = build_token_stream_arrow(arr)
-    assert old.n == new.n == len(batch)
-    assert np.array_equal(old.rows, new.rows)
-    # vocabularies may differ by an unused '' entry; per-occurrence tokens
-    # and everything derived from them must be identical
-    assert np.array_equal(old.uniq[old.codes], new.uniq[new.codes])
-    eo, en = _extract_batch(cleaned, ts=old), _extract_batch(cleaned, ts=new)
-    assert eo["entities"].tolist() == en["entities"].tolist()
-    assert eo["topics"].tolist() == en["topics"].tolist()
-    assert np.array_equal(embed_matrix(old), embed_matrix(new))
+    from semantic_search_system_spark.operators.extraction import build_token_stream_arrow
+
+    ts = build_token_stream_arrow(clean_arrow_array(pa.array(batch, pa.string())))
+    assert ts.n == len(batch)
+    assert np.all(np.diff(ts.rows) >= 0)
+    for i, t in enumerate(batch):
+        want = spec.clean_tokens(t)
+        assert ts.uniq[ts.codes[ts.rows == i]].tolist() == want, (i, t)
+        at = ts.prow == i
+        assert dict(zip(ts.uniq[ts.pcode[at]].tolist(), ts.pcnt[at].tolist())) == Counter(want)
