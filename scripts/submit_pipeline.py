@@ -9,7 +9,9 @@ from the repo checkout — exactly as on a real cluster:
         scripts/submit_pipeline.py --sf-dir /root/testdata/sf0.001 \
         --out-root /data/kg_out
 
-Prints one JSON line with triple count and per-stage partition metrics.
+Prints one JSON line with triple count, per-stage partition metrics and the
+driver budget the stages' driver-or-Spark choices used (a share of the heap
+spark-submit gave the driver).
 Re-submitting with the same --out-root resumes from the Catalog checkpoints
 (idempotent; completed partitions are never recomputed).
 """
@@ -29,7 +31,7 @@ def main() -> None:
 
     # imports resolve from --py-files; master/memory come from spark-submit
     from semantic_search_system_spark.plans.pipeline import run_pipeline
-    from semantic_search_system_spark.session import get_spark
+    from semantic_search_system_spark.session import driver_budget, get_spark
 
     spark = get_spark("kg-construct-submit", master=None)
     cat = run_pipeline(spark, args.sf_dir, args.out_root, n_buckets=args.n_buckets)
@@ -39,7 +41,10 @@ def main() -> None:
         t: sum(m["rows_written"] for m in cat.metrics(t))
         for t in ("enriched", "topic_map", "entity_map", "triples", "nodes", "edges")
     }
-    print(json.dumps({"triples": n, "rows_written": stage_rows, "out_root": args.out_root}))
+    print(json.dumps({
+        "triples": n, "rows_written": stage_rows, "out_root": args.out_root,
+        "driver_budget": driver_budget(spark),
+    }))
     spark.stop()
 
 

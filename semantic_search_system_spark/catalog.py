@@ -447,7 +447,7 @@ class Catalog:
     def commit_partitions_local(self, rows, schema, table: str, stage: str) -> dict:
         """Driver-side twin of ``commit_partitions`` for DRIVER-SIZED tables
         (vocabulary / centroid / statistic scale, or a doc-IVF assignment
-        under the driver read's byte gate — data that was computed on the
+        within the driver budget — data that was computed on the
         driver in the first place): identical manifest, tombstone and
         idempotence semantics, but the parquet is written with pyarrow
         in-process, one file per partition, so the commit costs zero Spark
@@ -631,22 +631,6 @@ class Catalog:
     _EPOCH_KEY = re.compile(r"\d+_-?\d+")  # "<epoch>_<bucket>" stream partitions
     _COMPACT_KEY = re.compile(r"c(\d+)_(-?\d+)")  # "c<gen>_<bucket>" outputs
 
-    def _sweep_unreferenced(self, table: str) -> None:
-        """GC partition dirs the manifest doesn't reference and stale
-        compaction staging — the only way such dirs arise is a compaction
-        interrupted after its atomic manifest publish (source dirs not yet
-        deleted) or before it (targets staged but never published)."""
-        parts = self.manifest(table)["partitions"]
-        tdir = self.path(table)
-        if not os.path.isdir(tdir):
-            return
-        for d in os.listdir(tdir):
-            p = os.path.join(tdir, d)
-            if d.startswith("_compacting_"):
-                shutil.rmtree(p, ignore_errors=True)
-            elif d.startswith(f"{BUCKET_COL}=") and d.split("=", 1)[1] not in parts:
-                shutil.rmtree(p, ignore_errors=True)
-
     def compact_stream_epochs(self, spark: SparkSession, table: str) -> dict:
         """Fold completed epoch-scoped stream partitions (``<epoch>_<bucket>``,
         plus any previous compaction outputs ``c<gen>_<bucket>`` for the same
@@ -665,9 +649,13 @@ class Catalog:
         Single-writer: run while the stream is stopped, like any table
         maintenance. Returns the committed target partitions ({} = no-op)."""
         t0 = time.time()
-        self._sweep_unreferenced(table)
         man = self.manifest(table)
         parts = man["partitions"]
+        tdir = self.path(table)
+        # GC partition dirs left unreferenced by a compaction cut after its publish
+        for d in os.listdir(tdir) if os.path.isdir(tdir) else []:
+            if d.startswith(f"{BUCKET_COL}=") and d.split("=", 1)[1] not in parts:
+                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
         epoch_keys = [k for k in parts if self._EPOCH_KEY.fullmatch(k)]
         if not epoch_keys:
             return {}
@@ -682,7 +670,6 @@ class Catalog:
             if (m := self._COMPACT_KEY.fullmatch(k)) and m.group(2) in targets
         ]
         sources = sorted(epoch_keys + prior)
-        tdir = self.path(table)
         src_dirs = [os.path.join(tdir, f"{BUCKET_COL}={k}") for k in sources]
         df = spark.read.option("basePath", tdir).parquet(*src_dirs)
         df = df.withColumn(
@@ -692,7 +679,7 @@ class Catalog:
                 F.element_at(F.split(F.col(BUCKET_COL).cast("string"), "_"), -1),
             ),
         )
-        staging = os.path.join(tdir, f"_compacting_{uuid.uuid4().hex[:12]}")
+        staging = self._fresh_staging(table)  # compaction is single-writer
         df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
         # each source key's committing stage goes on the snapshot — the
         # tombstone guard in commit_partitions uses it to tell a crash

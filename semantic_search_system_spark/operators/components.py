@@ -20,14 +20,12 @@ skew-join splitting is on session-wide, and callers pre-salt hot keys
 
 Small-graph fast path (strategy='auto', the default): the phrase vocabulary
 grows sub-linearly with the corpus (it is a function of the language, not the
-doc count), so when the edge list is under ``DRIVER_EDGE_LIMIT`` the component
-computation runs as a driver-side union-find on the collected edge list — one
-job instead of ~10, with identical (lexicographic-min) component ids. The
-same ``_driver_union_find`` serves the pipeline's driver-side topic and
-entity canonicalization (plans/pipeline.py), which skip this module's Spark
-entry point altogether for driver-sized vocabularies; past their bounds
-(``DRIVER_EDGE_LIMIT`` caps the entity stage's delete-1 candidate pairs) the
-graph comes here and takes the distributed path when it is large.
+doc count), so when the edge list fits ``session.driver_fits`` the component
+computation runs as a driver-side union-find on the collected edge list — a
+count and a collect instead of ~10 jobs, with identical (lexicographic-min)
+component ids. The same ``_driver_union_find`` serves the pipeline's
+driver-side topic and entity canonicalization (plans/pipeline.py); past the
+budget the graph comes here and takes the distributed path when it is large.
 
 Component id = lexicographic min node id on both paths, matching the golden
 union-find (fixtures/golden.py) exactly.
@@ -38,7 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DRIVER_EDGE_LIMIT = 2_000_000
+from ..session import driver_fits, local_df
+
+# the driver path's peak RSS rise per edge: 669 B at 200k random edges
+_EDGE_BYTES = 700
 
 
 def _driver_union_find(pairs: list[tuple[str, str]]) -> dict[str, str]:
@@ -122,12 +123,9 @@ def connected_components(
     )
 
     if strategy == "auto":
-        n_edges = e.limit(DRIVER_EDGE_LIMIT + 1).count()
-        strategy = "driver" if n_edges <= DRIVER_EDGE_LIMIT else "distributed"
+        strategy = "driver" if driver_fits(spark, e.count() * _EDGE_BYTES) else "distributed"
 
     if strategy == "driver":
-        from ..session import local_df
-
         pairs = [(r["a"], r["b"]) for r in e.collect()]
         mapping = _driver_union_find(pairs)
         # local_df (pandas→Arrow local relation), NOT createDataFrame(list):

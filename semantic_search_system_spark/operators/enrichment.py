@@ -7,7 +7,7 @@ over Arrow once. At 10^12 docs the enrichment stage is the dominant compute
 
 There is one kernel, ``enrich_arrow`` (a string array in, a struct array
 out), with two callers: ``enrich_udf`` wraps it for the Spark plans (the
-batch stage and both stream sinks past the driver bound), and the driver
+batch stage and both stream sinks past the driver budget), and the driver
 twin of those plans (plans/pipeline._assemble_arrow) calls it in-process
 on batches of the same size the UDF receives
 (``spark.sql.execution.arrow.maxRecordsPerBatch``). Its front-end,
@@ -101,9 +101,8 @@ def enrich_udf(contents: pa.Array) -> pa.Array:
 
 def enrich_content(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Attach cleaned content + entities/topics (array<struct<text,label>>) +
-    embedding via the fused UDF. ``content_col`` may be raw
-    (assemble_content(clean=False)) or already clean — the cleaner is
-    idempotent."""
+    embedding via the fused UDF. ``content_col`` may be raw (the span join
+    of assemble_content) or already clean — the cleaner is idempotent."""
     # the UDF already emits (text, label) structs — no JVM-side transform
     # lambda (CodegenFallback, interpreted per element) in the plan
     df = df.withColumn("_en", enrich_udf(F.col(content_col)))

@@ -81,7 +81,7 @@ def has_usable_text(spans_col: str = "spans"):
     )
 
 
-def assemble_content(df: DataFrame, clean: bool = True) -> DataFrame:
+def assemble_content(df: DataFrame) -> DataFrame:
     """interleaved(doc_id, spans) → doc_id, text_spans, media_refs, content,
     title, summary, url, doc_date. All native expressions.
 
@@ -90,9 +90,9 @@ def assemble_content(df: DataFrame, clean: bool = True) -> DataFrame:
     (create_vector_index.py:8-46); media spans ride along as attributes
     (BASELINE.json.north_star).
 
-    ``clean=False`` leaves ``content`` as the raw span join for the fused
-    enrich path, which cleans batch-wise via Arrow RE2 inside the UDF — the
-    JVM regexp_replace pair was the single most expensive expression in the
+    ``content`` is the raw span join: the fused enrich UDF cleans it
+    batch-wise via Arrow RE2 — the JVM regexp_replace pair
+    (``clean_text_col``) was the single most expensive expression in the
     enrich stage (~11 s per 320k docs at local[4], profiled round 3).
     """
     df = ordered_spans(df)
@@ -104,11 +104,10 @@ def assemble_content(df: DataFrame, clean: bool = True) -> DataFrame:
         F.filter(F.col("spans"), lambda s: s["kind"] != "text"),
         lambda s: s["media_ref"],
     )
-    joined = F.array_join(F.col("text_spans"), " ")
     out = (
         df.withColumn("text_spans", text_spans)
         .withColumn("media_refs", media_refs)
-        .withColumn("content", clean_text_col(joined) if clean else joined)
+        .withColumn("content", F.array_join(F.col("text_spans"), " "))
         .withColumn("title", F.substring(F.element_at(F.col("text_spans"), 1), 1, 64))
         .withColumn(
             "summary",

@@ -22,7 +22,7 @@ index, so:
   the same fit and assignment in numpy + ``commit_partitions_local``, zero
   Spark jobs) — plans/search.ensure_doc_ivf hands over driver-held vectors
   when the source passes the guarded driver read (a bare parquet relation
-  under ``plans.pipeline.DRIVER_VOCAB_SCAN_BYTES``). One numpy kernel,
+  whose estimated driver memory fits ``session.driver_fits``). One numpy kernel,
   ``nearest_centroid``, does every assignment, so both branches write the
   same rows.
 """
@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import spec
+from .. import session, spec
 from ..functions.vectors import cosine_sim
 from ..spec import round_half_away as _round_half_away
 
@@ -174,8 +174,8 @@ def _kmeans_driver(
     return [(cid, [float(x) for x in v]) for cid, v in cents]
 
 
-# the largest fit set kmeans_centroids collects for the driver Lloyd loop
-MAX_DRIVER_FIT = 200_000
+# peak RSS rise per fit value: 76 B fitting 64 centroids to 40k 256-d vectors
+_FIT_BYTES_PER_VALUE = 8 * 10
 
 
 def kmeans_centroids(
@@ -206,13 +206,13 @@ def kmeans_centroids(
     scan). Sampling is by id hash, so the fit set — and therefore the
     centroids — is identical in Spark and the DuckDB oracle.
 
-    When the fit set is driver-sized (≤ MAX_DRIVER_FIT rows — always true for
-    a properly-sampled fit at any corpus scale), the Lloyd loop runs ON THE
-    DRIVER over the collected sample (_kmeans_driver): identical fixpoint, one
-    collect instead of 2×n_iter Spark jobs. The distributed loop below remains
-    the fallback for an unsampled full-corpus fit. Driver-held ``(keys,
-    vecs)`` (see build_ivf_index) are sampled and fit on the driver, zero
-    Spark jobs."""
+    When the fit set (rows × ``spec.EMBED_DIM`` values) fits
+    ``session.driver_fits`` — true for a properly-sampled fit at any corpus
+    scale — the Lloyd loop runs ON THE DRIVER over the collected sample
+    (_kmeans_driver): identical fixpoint, one collect instead of 2×n_iter
+    Spark jobs. The distributed loop below remains the fallback for an
+    unsampled full-corpus fit. Driver-held ``(keys, vecs)`` (see
+    build_ivf_index) are sampled and fit on the driver, zero Spark jobs."""
     if isinstance(vectors, tuple):  # driver-held (keys, vecs): fit in place
         keys, M = vectors
         if fit_sample_hex is not None:
@@ -222,11 +222,11 @@ def kmeans_centroids(
         d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
         if fit_sample_hex is not None:
             d = d.where(fit_sample_pred(id_col, fit_sample_hex))
-        # ONE limit-collect decides the path AND feeds the driver fit (round
-        # 8): the previous eager-checkpoint → count → collect sequence ran
-        # three Spark jobs before any k-means work
-        head = d.limit(MAX_DRIVER_FIT + 1).collect()
-        if len(head) > MAX_DRIVER_FIT:
+        # ONE limit-collect decides the branch AND feeds the driver fit (a
+        # count → collect runs two jobs); a row is charged at EMBED_DIM values
+        spark, row_bytes = vectors.sparkSession, spec.EMBED_DIM * _FIT_BYTES_PER_VALUE
+        head = d.limit(session.driver_budget(spark) // row_bytes + 1).collect()
+        if not session.driver_fits(spark, len(head) * row_bytes):
             return _kmeans_spark(d, n_centroids, n_iter, id_col)
         keys = np.array([r[id_col] for r in head], dtype=np.int64)
         M = np.array([r["_v"] for r in head], dtype=np.float64)
@@ -279,7 +279,7 @@ def _commit_assignments(
     either may append to an index the other built. The driver feeds the
     kernel the row batches the UDF would get
     (``spark.sql.execution.arrow.maxRecordsPerBatch``), so its similarity
-    matrix stays batch-sized at the byte gate."""
+    matrix stays batch-sized."""
     from pyspark.sql import types as T
 
     if not isinstance(vectors, tuple):

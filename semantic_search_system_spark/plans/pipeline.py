@@ -8,8 +8,8 @@ network calls (pr_aws_nlp.py:230-277) plus one Neo4j transaction per
 DataFrame transform, checkpointed per partition through the Catalog so a killed
 run resumes without recomputing completed buckets. Every stage, enrichment
 included, also has a driver twin: when its inputs pass ``driver_read``'s
-guards (bare parquet relations under ``DRIVER_VOCAB_SCAN_BYTES``; for
-enrichment, a source of at most one Arrow batch of rows), the same table is
+guards (bare parquet relations) and its estimated driver bytes pass
+``session.driver_fits`` (a share of the driver's heap), the same table is
 computed in pyarrow/numpy and committed with
 ``Catalog.commit_partitions_local`` — zero Spark jobs, identical rows,
 buckets and recorded schema, so the two branches mix across a resume. A
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import spec
+from .. import session, spec
 from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucket
 from ..fixtures.interleave import interleaved_path
 from ..operators.components import connected_components
@@ -45,8 +45,10 @@ from ..operators.embedding import embed_udf
 from ..operators.enrichment import ENRICH_RESULT, enrich_arrow, enrich_content
 from ..operators.extraction import assemble_content, has_usable_text
 from ..operators.linking import candidate_edges
+from ..session import driver_fits
 
 N_BUCKETS = 8
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"  # the kernel's batch size
 
 
 def read_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,13 +69,12 @@ def enrich_docs(docs: DataFrame) -> DataFrame:
     admission (docs with a usable text span — the §2.11 rule whose rejects
     the callers quarantine) → ``assemble_content`` → the fused enrich UDF,
     projected to the enriched table's columns. Its driver twin is
-    ``enrich_docs_arrow``. ``docs``: interleaved rows carrying
-    BUCKET_COL. clean=False: the fused UDF cleans batch-wise via Arrow RE2
-    (the JVM regexp pair was the enrich stage's most expensive expression).
-    A filter or explode over this frame still evaluates the UDF once
+    ``enrich_docs_arrow``. ``docs``: interleaved rows carrying BUCKET_COL.
+    The fused UDF cleans the raw content via Arrow RE2. A filter or explode
+    over this frame still evaluates the UDF once
     (tests/test_plans.py::test_enrich_body_evaluates_udf_once)."""
     admitted = docs.where(has_usable_text("spans"))
-    return enrich_content(assemble_content(admitted, clean=False)).select(
+    return enrich_content(assemble_content(admitted)).select(
         BUCKET_COL, "doc_id", "url", "title", "doc_date", "content", "summary",
         "entities", "topics", "embedding", "media_refs",
     )
@@ -157,14 +158,15 @@ def _doc_day(doc_id) -> np.ndarray:
 
 
 def _assemble_arrow(docs, batch: int):
-    """Driver twin of ``assemble_content(clean=False)`` followed by the fused
+    """Driver twin of ``assemble_content`` followed by the fused
     enrich kernel, over admitted interleaved rows (a pyarrow Table with
     BUCKET_COL, doc_id, spans), as a Table of the enriched columns. Spans
     sort as ``array_sort`` sorts struct(offset, kind, text, media_ref):
     ascending field by field, null fields first. Text spans are the spans of
     kind 'text' with non-null text (blank text kept); media_refs the refs of
     spans whose kind is non-null and not 'text' (null refs kept). The kernel
-    runs on batches of ``batch`` rows, as the UDF does."""
+    runs on batches of ``batch`` rows, as the UDF does (zero or less: one
+    batch)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -185,6 +187,7 @@ def _assemble_arrow(docs, batch: int):
 
     text_spans = per_doc(pc.and_(pc.equal(flat["kind"], "text"), pc.is_valid(flat["text"])), "text")
     content = pc.binary_join(text_spans, " ")
+    batch = batch if batch > 0 else max(len(content), 1)
     # one kernel call per batch, and one on an empty input too
     en = pa.concat_arrays(
         [enrich_arrow(content.slice(lo, batch)) for lo in range(0, len(content) or 1, batch)]
@@ -238,26 +241,28 @@ def enrich_docs_arrow(docs, batch: int):
     return failed, _assemble_arrow(docs.filter(admitted), batch)
 
 
+# peak RSS rise per parquet byte: 35x at 160k perfbench docs (1,289 MB), 42x at 40k
+_ENRICH_BYTES_PER_FILE_BYTE = 36
+
+
 def _enrich_driver(
     spark: SparkSession, cat: Catalog, source: DataFrame, pending: list[int], n_buckets: int
 ) -> bool:
     """Driver twin of the Spark branch of build_enriched: commits the
     ``pending`` buckets of ``failed_rows`` and ``enriched`` from pyarrow
     (``enrich_docs_arrow``) and returns True, or returns False (committing
-    nothing) when ``source`` fails ``driver_read``'s guards, holds more than
-    one Arrow batch of rows (``spark.sql.execution.arrow.maxRecordsPerBatch``;
-    zero or less means no limit to Spark, so the Spark branch), or has a
-    doc_id that is not a string (Spark hashes a long differently)."""
+    nothing) when ``source`` fails ``driver_read``'s guards (with the enrich
+    factor) or has a doc_id that is not a string (Spark hashes a long
+    differently)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    tb = driver_read(source, ["doc_id", "spans"], max_rows=batch) if batch > 0 else None
+    tb = driver_read(source, ["doc_id", "spans"], per_byte=_ENRICH_BYTES_PER_FILE_BYTE)
     if tb is None or not pa.types.is_string(tb.schema.field("doc_id").type):
         return False
     bucket = pa.array(arrow_bucket(tb["doc_id"], n_buckets))
     tb = tb.append_column(BUCKET_COL, bucket).filter(pc.is_in(bucket, pa.array(pending, pa.int32())))
-    failed, enriched = enrich_docs_arrow(tb, batch)
+    failed, enriched = enrich_docs_arrow(tb, int(spark.conf.get(ARROW_BATCH)))
     cat.commit_partitions_local(failed, _FAILED_ROWS_SCHEMA, "failed_rows", stage="quarantine")
     cat.commit_partitions_local(enriched, _ENRICHED_SCHEMA, "enriched", stage="enrich")
     return True
@@ -268,12 +273,11 @@ def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: in
     their unusable docs in ``failed_rows`` — both committed per bucket, so
     the resume sweep re-checks only pending buckets and never re-quarantines
     completed ones. When the interleaved source passes ``driver_read``'s
-    guards and holds at most one Arrow batch of rows, both tables are
-    computed in-process — pyarrow admission and span assembly, the fused
-    kernel in one call — and committed from the driver (zero Spark jobs;
-    ``_enrich_driver``). Past that bound the Spark plan runs: there the
-    driver would make the same kernel calls one batch after another while
-    the UDF spreads them over the cores. Both branches write the same rows,
+    guards and its estimated enrich memory fits the driver budget, both
+    tables are computed in-process — pyarrow admission and span assembly,
+    the fused kernel in Arrow-batch-sized calls — and committed from the
+    driver (zero Spark jobs; ``_enrich_driver``). Past the budget the Spark
+    plan runs the same kernel as a UDF. Both branches write the same rows,
     buckets and recorded schemas, so a resume may mix them."""
     pending = cat.pending_buckets("enriched", n_buckets)
     if pending:
@@ -348,22 +352,17 @@ def topic_map_driver(phrase_list: list[str]) -> pd.DataFrame:
     return pd.concat(out, ignore_index=True)
 
 
-DRIVER_VOCAB_LIMIT = 100_000
-# byte gate for the driver-side reads below: a column-pruned local pyarrow
-# read is ~30x faster than a 3-stage Spark explode+distinct at benchmark
-# scale (and removes the per-job overhead of a doc-IVF append or refit), but
-# it reads on ONE machine — so it is allowed only when the MEASURED source
-# bytes are driver-trivial; past the gate the distributed plan (whose cost
-# is what a real cluster would pay) takes over
-DRIVER_VOCAB_SCAN_BYTES = 256 * 1024 * 1024
+# peak RSS rise per parquet byte of the largest caller, on a 40k-doc enriched
+# table (15.2 MB): doc-IVF input 16.2x, graph 8.9x, triples 7.6x
+_READ_BYTES_PER_FILE_BYTE = 17
 
 
-def driver_read(df: DataFrame, columns: list[str], buckets=None, max_rows: int | None = None):
+def driver_read(df: DataFrame, columns: list[str], buckets=None, per_byte=_READ_BYTES_PER_FILE_BYTE):
     """``columns`` of ``df`` as one pyarrow Table via a column-pruned DRIVER
     read (zero Spark jobs) — only when ``df`` is a BARE parquet relation (no
     filters/projections that a local re-read would silently ignore) whose
-    files all exist and total under ``DRIVER_VOCAB_SCAN_BYTES``, and, given
-    ``max_rows``, whose parquet footers count at most that many rows.
+    files all exist and whose bytes times ``per_byte`` (the caller's driver
+    memory per parquet byte) fit ``session.driver_fits``.
     Returns None whenever any guard fails → the caller runs its distributed
     plan. The one guarded reader behind the enrich source read, topic_map,
     entity_map, triples, the graph tables and the doc-IVF build/append
@@ -373,7 +372,7 @@ def driver_read(df: DataFrame, columns: list[str], buckets=None, max_rows: int |
     table: its value comes from each file's ``bucket=K`` directory, typed as
     ``df.schema`` types it (None when the files do not sit in such
     directories of one table). ``buckets``: read only those partitions —
-    the byte gate and ``max_rows`` still measure the whole relation."""
+    the estimate still measures the whole relation."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -386,13 +385,11 @@ def driver_read(df: DataFrame, columns: list[str], buckets=None, max_rows: int |
     paths = [f[5:] if f.startswith("file:") else f for f in files]
     if any(not os.path.exists(p) for p in paths):
         return None
-    if sum(os.path.getsize(p) for p in paths) > DRIVER_VOCAB_SCAN_BYTES:
+    if not driver_fits(df.sparkSession, sum(map(os.path.getsize, paths)) * per_byte):
         return None
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    if max_rows is not None and pads.dataset(paths, format="parquet").count_rows() > max_rows:
-        return None
     if BUCKET_COL not in columns and buckets is None:
         return pads.dataset(paths, format="parquet").to_table(columns=columns)
     dirs = {os.path.dirname(p) for p in paths}
@@ -427,35 +424,36 @@ def _vocab_texts_driver(enriched: DataFrame, column: str):
     return texts.filter(pc.not_equal(texts, ""))
 
 
+# peak RSS rise per phrase: 4.6 of its vectors at 20k random bigrams, 4.4 at 80k
+_PHRASE_BYTES = spec.EMBED_DIM * 8 * 5
+
+
 def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> DataFrame:
     """Canonicalize topic phrases: embed → blocked similarity join → connected
     components → centroid labels. The topic_mapping.json analog.
 
     The phrase vocabulary grows sub-linearly with the corpus (it is a function
     of the language), so the whole stage runs on the DRIVER when the distinct
-    phrase count is under ``DRIVER_VOCAB_LIMIT`` (one distinct-collect + one
-    commit); the distributed plan below remains the fallback for
-    beyond-vocabulary scales."""
+    phrases (read by ``driver_read``, else one capped distinct-collect) fit
+    ``session.driver_fits``; the distributed plan below remains the fallback
+    for beyond-vocabulary scales."""
     if not cat.exists("topic_map"):
         texts = _vocab_texts_driver(enriched, "topics")
         vocab = None if texts is None else texts.unique().to_pylist()
-        if vocab is not None and len(vocab) > DRIVER_VOCAB_LIMIT:
-            vocab = None  # beyond the driver canonicalization bound — distribute
-        if vocab is None:
+        if vocab is None or not driver_fits(spark, len(vocab) * _PHRASE_BYTES):
             distinct_phrases = (
                 enriched.select(F.explode("topics").alias("t"))
                 .select(F.lower(F.trim(F.col("t.text"))).alias("phrase_norm"))
                 .where(F.col("phrase_norm") != "")
                 .distinct()
             )
-            head = distinct_phrases.limit(DRIVER_VOCAB_LIMIT + 1).collect()
-            if len(head) <= DRIVER_VOCAB_LIMIT:
-                vocab = [r["phrase_norm"] for r in head]
+            # ONE limit-collect decides the branch AND fetches the vocabulary
+            cap = session.driver_budget(spark) // _PHRASE_BYTES
+            vocab = [r["phrase_norm"] for r in distinct_phrases.limit(cap + 1).collect()]
+            vocab = vocab if driver_fits(spark, len(vocab) * _PHRASE_BYTES) else None
         if vocab is not None:
             pdf = topic_map_driver(vocab)
-            # the table was computed ON the driver — commit it from the
-            # driver (zero Spark jobs; round 8): one bucket by the same
-            # pmod(xxhash,1)=0 rule with_bucket applies for n_buckets=1
+            # one bucket by the pmod(xxhash,1)=0 rule with_bucket applies
             cat.commit_partitions_local(
                 [(p, b, 0) for p, b in pdf.itertuples(index=False, name=None)],
                 T.StructType(
@@ -469,25 +467,18 @@ def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> D
                 stage="canonicalize",
             )
             return cat.read(spark, "topic_map")
-        else:
-            phrases = distinct_phrases.withColumn(
-                "embedding", embed_udf(F.col("phrase_norm"))
-            )
-            # cache across the edges + labeling + join uses
-            phrases = phrases.localCheckpoint(eager=True)
-            edges = candidate_edges(phrases, "phrase_norm", "embedding")
-            comps = connected_components(edges)  # (node, component) — only non-isolated
-            labeled = (
-                phrases.join(comps, phrases["phrase_norm"] == comps["node"], "left")
-                .withColumn(
-                    "component", F.coalesce(F.col("component"), F.col("phrase_norm"))
-                )
-                .select("phrase_norm", "component", F.col("embedding").alias("vec"))
-                .groupBy("component")
-                .applyInPandas(
-                    _label_components, schema="phrase_norm string, broad_topic string"
-                )
-            )
+        phrases = distinct_phrases.withColumn("embedding", embed_udf(F.col("phrase_norm")))
+        # cache across the edges + labeling + join uses
+        phrases = phrases.localCheckpoint(eager=True)
+        edges = candidate_edges(phrases, "phrase_norm", "embedding")
+        comps = connected_components(edges)  # (node, component) — only non-isolated
+        labeled = (
+            phrases.join(comps, phrases["phrase_norm"] == comps["node"], "left")
+            .withColumn("component", F.coalesce(F.col("component"), F.col("phrase_norm")))
+            .select("phrase_norm", "component", F.col("embedding").alias("vec"))
+            .groupBy("component")
+            .applyInPandas(_label_components, schema="phrase_norm string, broad_topic string")
+        )
         cat.commit_partitions(
             with_bucket(labeled, "phrase_norm", 1), "topic_map", stage="canonicalize"
         )
@@ -648,7 +639,7 @@ def build_triples(
     """The triple set of the ``enriched`` partitions ``triples`` lacks.
     When ``enriched`` and ``topic_map`` pass ``driver_read``'s guards the
     triples are computed in pyarrow and committed from the driver (zero
-    Spark jobs; ``_triples_driver``); otherwise — past the byte gate, or for
+    Spark jobs; ``_triples_driver``); otherwise — past the budget, or for
     a frame that is not a bare relation — the Spark plan below runs. Both
     branches write the same rows, buckets and recorded schema, so a resume
     may mix them."""
@@ -763,7 +754,7 @@ def build_graph(
     When every input the pending tables read (``triples``, plus ``enriched``
     for nodes) passes ``driver_read``'s guards, the tables are computed in
     pyarrow and committed from the driver (zero Spark jobs;
-    ``_graph_driver``). Otherwise — past the byte gate, or for a frame that
+    ``_graph_driver``). Otherwise — past the budget, or for a frame that
     is not a bare relation, such as the streaming ``serving_triples`` union
     — the Spark plans below run, and their two commits run CONCURRENTLY (two
     driver threads submitting to the same scheduler — disjoint tables,
@@ -851,22 +842,29 @@ def _within_one_edit(a: str, b: str) -> bool:
     return a[i + 1 :] == b[i + 1 :] if len(a) == len(b) else a[i:] == b[i + 1 :]
 
 
-def entity_map_driver(names: list[str], n_docs: list[int]) -> list[tuple] | None:
+# entity_map_driver's peak RSS rise per name (its delete-1 keys: 1,756 B at
+# 20k random 4-12 letter names) and per candidate pair (113 B at 325k pairs)
+_NAME_BYTES = 2048
+_PAIR_BYTES = 128
+
+
+def entity_map_driver(spark: SparkSession, names: list[str], n_docs: list[int]) -> list[tuple] | None:
     """Driver twin of the distributed entity canonicalization — the SAME
     delete-1 neighbourhood blocks as linking.fuzzy_candidate_edges (the name
     plus every one-character deletion), the same src < dst, levenshtein <= 1
     verify, and the SAME union-find the distributed CC's own fast path uses
     (lexicographic-min component ids). Returns (name, canonical, n_docs,
-    bucket 0) rows, or None when the candidate-pair count Σ C(block size, 2)
-    exceeds ``components.DRIVER_EDGE_LIMIT`` → the caller distributes."""
-    from ..operators import components
+    bucket 0) rows, or None when the candidate pairs Σ C(block size, 2) do
+    not fit the driver budget → the caller distributes."""
+    from ..operators.components import _driver_union_find
 
     rows = sorted(zip(names, n_docs))
     blocks: dict[str, list[str]] = {}
     for n, _ in rows:  # sorted, so every block's members ascend: a < b below
         for key in {n, *(n[:i] + n[i + 1 :] for i in range(len(n)))}:
             blocks.setdefault(key, []).append(n)
-    if sum(len(b) * (len(b) - 1) // 2 for b in blocks.values()) > components.DRIVER_EDGE_LIMIT:
+    n_pairs = sum(len(b) * (len(b) - 1) // 2 for b in blocks.values())
+    if not driver_fits(spark, n_pairs * _PAIR_BYTES):
         return None
     edges = {
         (a, b)
@@ -875,7 +873,7 @@ def entity_map_driver(names: list[str], n_docs: list[int]) -> list[tuple] | None
         for b in members[i + 1 :]
         if _within_one_edit(a, b)
     }
-    mapping = components._driver_union_find(edges)
+    mapping = _driver_union_find(edges)
     return [(n, mapping.get(n, n), c, 0) for n, c in rows]
 
 
@@ -899,11 +897,11 @@ def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> 
     list').
 
     Like build_topic_map, the entity vocabulary is driver-sized at corpus
-    scale, so when ``enriched`` passes the driver vocabulary read's guards,
-    the distinct names number at most ``DRIVER_VOCAB_LIMIT`` and the
-    candidate pairs at most ``components.DRIVER_EDGE_LIMIT``, the whole
-    stage runs on the DRIVER (entity_map_driver + a local commit, zero Spark
-    jobs); otherwise the distributed blocked join → CC plan below runs.
+    scale, so when ``enriched`` passes the driver vocabulary read's guards
+    and the distinct names and their candidate pairs fit
+    ``session.driver_fits``, the whole stage runs on the DRIVER
+    (entity_map_driver + a local commit, zero Spark jobs); otherwise the
+    distributed blocked join → CC plan below runs.
 
     Kept separate from the triple set: MENTIONS triples carry the surface form
     (matching the reference fixture semantics); the entity_map table provides
@@ -914,9 +912,9 @@ def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> 
         texts = _vocab_texts_driver(enriched, "entities")
         if texts is not None:
             counts = texts.value_counts()
-            if len(counts) <= DRIVER_VOCAB_LIMIT:
+            if driver_fits(spark, len(counts) * _NAME_BYTES):
                 rows = entity_map_driver(
-                    counts.field("values").to_pylist(), counts.field("counts").to_pylist()
+                    spark, counts.field("values").to_pylist(), counts.field("counts").to_pylist()
                 )
         if rows is not None:
             # one bucket by the pmod(xxhash,1)=0 rule with_bucket applies

@@ -535,7 +535,7 @@ def _index_input(df: DataFrame):
     """What the doc-IVF build/append indexes, canonical ids checked: the
     driver-held ``(keys int64[n], vecs float64[n, d])`` when ``df`` passes
     the guarded driver read (plans.pipeline.driver_read — a bare parquet
-    relation under ``DRIVER_VOCAB_SCAN_BYTES``) with string or integer ids
+    relation within the driver budget) with string or integer ids
     and non-null, equal-length embeddings; else the keyed DataFrame for the
     distributed plan. The id check is ``_assert_canonical_ids`` in pyarrow:
     an id is canonical iff it parses as an int64 whose decimal string is the
@@ -646,12 +646,11 @@ def ensure_doc_ivf(
     Where the index work runs: a build or refit reads ``enriched``, an
     append the ``read_buckets`` frame of the new partitions, each through
     ``_index_input`` — when that frame passes the guarded driver read (a
-    bare parquet relation of at most ``plans.pipeline.
-    DRIVER_VOCAB_SCAN_BYTES``, 256 MB), the ids are checked, the k-means
-    fit, the assignment and both commits run ON THE DRIVER (zero Spark
-    jobs, one parquet file per partition, nothing to compact; the snapshots
-    record ``writer: local``). Past the gate, or for a frame that is not a
-    bare relation, the distributed plan runs. Both branches share
+    bare parquet relation within the driver budget), the ids are checked,
+    the k-means fit, the assignment and both commits run ON THE DRIVER (zero
+    Spark jobs, one parquet file per partition, nothing to compact; the
+    snapshots record ``writer: local``). Past the budget, or for a frame
+    that is not a bare relation, the distributed plan runs. Both branches share
     build_ivf_index / append_ivf_assignments (stage string, guards, orphan
     sweep, resume) and one nearest-centroid kernel, so they write the same
     rows.

@@ -1,4 +1,4 @@
-"""SparkSession construction tuned for this engine.
+"""SparkSession construction tuned for this engine, and the driver budget.
 
 Local-mode testing runs on ``local[N]``; the same configuration scales to a
 multi-executor cluster (the confs below are cluster-safe: AQE, skew-join
@@ -7,6 +7,7 @@ handling, Arrow batching). Nothing here is test-only.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -18,6 +19,26 @@ _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
     len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
 )
 
+# the share of the driver JVM's heap that one driver-side stage may hold
+DRIVER_HEAP_SHARE = 0.25
+
+
+@functools.lru_cache(maxsize=None)
+def _max_heap(sc) -> int:  # fixed for the JVM's life; a lookup costs ~1 ms of py4j calls
+    return sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
+
+
+def driver_budget(spark: SparkSession) -> int:
+    """``DRIVER_HEAP_SHARE`` of the heap the driver JVM reports (under
+    spark-submit the ``spark.driver.memory`` conf need not be that heap)."""
+    return int(_max_heap(spark.sparkContext) * DRIVER_HEAP_SHARE)
+
+
+def driver_fits(spark: SparkSession, est_bytes: float) -> bool:
+    """Whether a stage estimated to hold ``est_bytes`` on the driver runs
+    there: the one gate between every driver twin and its Spark plan."""
+    return est_bytes <= driver_budget(spark)
+
 
 def get_spark(
     app_name: str = "semantic_search_system_spark",
@@ -28,12 +49,13 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's standard configuration.
 
     ``master=None`` defers to spark-submit / an existing session; tests pass
-    ``local[_DEF_CPUS]`` explicitly. ``shuffle_partitions`` defaults to the
-    core count in local mode. Under spark-submit the driver host's CPUs say
-    nothing about the executors, so it defaults to SPARK_GRAFT_CPUS or 32 —
-    at cluster scale it should be ~2-3x total executor cores (AQE coalescing,
-    which is enabled, can merge partitions but not add them).
-    """
+    ``local[_DEF_CPUS]`` explicitly. The driver heap: SPARK_GRAFT_DRIVER_MEM,
+    else half the box's RAM given a ``master``, else spark-submit's.
+    ``shuffle_partitions`` defaults to the core count in local mode. Under
+    spark-submit the driver host's CPUs say nothing about the executors, so
+    it defaults to SPARK_GRAFT_CPUS or 32 — at cluster scale it should be
+    ~2-3x total executor cores (AQE coalescing, which is enabled, can merge
+    partitions but not add them)."""
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -78,7 +100,6 @@ def get_spark(
         # this (e.g. the √N-bucket IVF assignment) fall back to sort-based
         # writing automatically.
         "spark.sql.maxConcurrentOutputFileWriters": "16",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         # file:// writes skip the Hadoop checksum layer (every staged parquet
         # file otherwise writes a .crc sibling — measured ~20% of the warm
         # partitioned-commit wall at sf0.1, pure overhead on a local disk
@@ -87,6 +108,9 @@ def get_spark(
         # untouched, and extra_conf (or --conf) restores checksummed local I/O.
         "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
     }
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    if heap := os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (master and f"{phys // 2**21}m"):
+        conf["spark.driver.memory"] = heap
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

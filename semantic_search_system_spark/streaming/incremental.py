@@ -9,15 +9,13 @@ straggler sweep (:142-194). The Spark-native equivalent lives here:
 ``readStream`` over the interleaved table directory, ``foreachBatch`` into
 the checkpointed Catalog under epoch-scoped ``<epoch>_<bucket>`` keys, so
 delivery is idempotent at partition granularity (exactly-once effective
-semantics). Each sink has two branches, like the batch stages. Its gate is
-one collect of at most one Arrow batch of rows (``_driver_epoch``: one
-Spark job, no UDF). A micro-batch of at most
-``spark.sql.execution.arrow.maxRecordsPerBatch`` rows is enriched in
-pyarrow by the batch stage's driver kernels (``enrich_docs_arrow``,
-``mention_topic_arrow``) and committed from the driver; a larger one runs
-the batch stage's Spark body (``enrich_docs``, the fused Arrow UDF) over a
-re-scan of the micro-batch. Both branches commit the same rows, keys and
-declared schemas, so epochs of either branch mix in one table.
+semantics). Each sink has two branches, like the batch stages, chosen per
+micro-batch by its own size (``_driver_epoch``). One that fits the driver
+budget is collected in one Spark job (no UDF), enriched in pyarrow by the
+batch stage's driver kernels (``enrich_docs_arrow``, ``mention_topic_arrow``)
+and committed from the driver; a larger one runs the batch stage's Spark body
+(``enrich_docs``, the fused Arrow UDF). Both branches commit the same rows,
+keys and declared schemas, so epochs of either branch mix in one table.
 """
 
 from __future__ import annotations
@@ -33,6 +31,8 @@ from pyspark.sql import types as T
 from ..catalog import BUCKET_COL, Catalog, arrow_bucket, with_bucket
 from ..operators.extraction import has_usable_text
 from ..plans.pipeline import (
+    ARROW_BATCH,
+    _ENRICH_BYTES_PER_FILE_BYTE,
     _ENRICHED_SCHEMA,
     _FAILED_ROWS_SCHEMA,
     _TRIPLES_SCHEMA,
@@ -43,6 +43,7 @@ from ..plans.pipeline import (
     mention_topic_triples,
     relates_triples,
 )
+from ..session import driver_fits
 
 
 def _checkpoint_identity(checkpoint_dir: str) -> str:
@@ -112,26 +113,21 @@ def _epoch_key(epoch_id: int):
 def _driver_epoch(batch_df: DataFrame, epoch_id: int, n_buckets: int):
     """The gate of both sinks: (rows, batch) — the micro-batch's doc_id and
     spans as a pyarrow Table carrying their ``<epoch>_<bucket>`` keys, and
-    the kernel batch size — when it holds at most one Arrow batch of rows
-    (``spark.sql.execution.arrow.maxRecordsPerBatch``, the bound of
-    ``build_enriched``'s driver branch); None when it holds more, or when
-    that bound is zero or less (no limit to Spark). The foreachBatch frame
-    is a LogicalRDD with no input files, so ``driver_read`` cannot read it:
-    the gate collects at most batch + 1 rows instead — one Spark job, with
-    no UDF."""
+    the kernel batch size — when the epoch's parquet bytes times the batch
+    enrich factor fit ``session.driver_fits``; else None. The foreachBatch
+    frame (a LogicalRDD) has no input files for ``driver_read``, but its plan
+    statistics give its file bytes without a Spark job."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     spark = batch_df.sparkSession
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    if batch <= 0:
+    epoch_bytes = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if not driver_fits(spark, int(epoch_bytes) * _ENRICH_BYTES_PER_FILE_BYTE):
         return None
-    tb = batch_df.select("doc_id", "spans").limit(batch + 1).toArrow()
-    if tb.num_rows > batch:
-        return None
+    tb = batch_df.select("doc_id", "spans").toArrow()
     bucket = pc.cast(pa.array(arrow_bucket(tb["doc_id"], n_buckets)), pa.string())
     key = pc.binary_join_element_wise(str(int(epoch_id)), bucket, "_")
-    return tb.append_column(BUCKET_COL, key), batch
+    return tb.append_column(BUCKET_COL, key), int(spark.conf.get(ARROW_BATCH))
 
 
 def _enrich_sink_frames(batch_df: DataFrame, epoch_id: int, n_buckets: int):
@@ -188,11 +184,11 @@ def enrich_stream(
     ``enriched_stream``. Returns the started StreamingQuery (caller
     awaits/stops).
 
-    Two branches, chosen per micro-batch by ``_driver_epoch``'s one collect:
-    at most one Arrow batch of rows is admitted, assembled and enriched in
-    pyarrow (``enrich_docs_arrow``) and committed from the driver
-    (``writer: local``) — no further Spark job and no Python worker; more
-    rows run ``_enrich_sink_frames`` (the fused UDF) and two Spark writes."""
+    Two branches, chosen per micro-batch by ``_driver_epoch``: an epoch
+    within the driver budget is collected in one job, enriched in pyarrow
+    (``enrich_docs_arrow``) and committed from the driver (``writer:
+    local``), with no Python worker; a larger one runs
+    ``_enrich_sink_frames`` (the fused UDF) and two Spark writes."""
     cat = Catalog(out_root)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -227,11 +223,9 @@ def triples_stream(
     ``triples_stream`` with the epoch-scoped partition keys that make
     replay idempotent and ``compact_stream_epochs`` applicable.
 
-    Two branches, chosen per micro-batch by ``_driver_epoch``'s one collect,
-    as in ``enrich_stream``: at most one Arrow batch of rows goes through
-    ``enrich_docs_arrow`` and ``mention_topic_arrow`` and is committed from
-    the driver; more rows run ``_triples_sink_frame`` (the fused UDF) and a
-    Spark write.
+    Two branches, chosen per micro-batch by ``_driver_epoch`` as in
+    ``enrich_stream``: ``enrich_docs_arrow`` and ``mention_topic_arrow``
+    and a local commit, or ``_triples_sink_frame`` and a Spark write.
 
     Scope (documented split, lambda-architecture style): the MENTIONS and
     HAS_TOPIC branches are PER-DOCUMENT (map-only — streamable exactly);

@@ -32,6 +32,14 @@ def tmp_root():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def set_budget(monkeypatch, n_bytes):
+    """Set the driver budget that every driver-or-Spark choice asks
+    (``session.driver_fits``) to ``n_bytes``: 0 forces every Spark branch."""
+    from semantic_search_system_spark import session
+
+    monkeypatch.setattr(session, "driver_budget", lambda spark: n_bytes)
+
+
 def with_job_count(spark, fn):
     """(fn(), number of Spark jobs fn submitted) — the delta of the
     statusTracker's job ids."""

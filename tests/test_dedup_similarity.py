@@ -11,7 +11,7 @@ from semantic_search_system_spark.operators.dedup import (
 from semantic_search_system_spark import spec
 from semantic_search_system_spark.operators.similarity import brute_force_topk
 
-from conftest import SF_MED, SF_SMALL, with_job_count
+from conftest import SF_MED, SF_SMALL, set_budget, with_job_count
 
 
 def _dup_docs(spark):
@@ -367,15 +367,24 @@ def test_kmeans_driver_fit_matches_distributed(spark, monkeypatch):
     """The driver-side Lloyd over the collected sample must reach bit-for-bit
     the same centroids as the distributed loop (same seeding, rounding, and
     tie-breaks) — the committed IVF artifacts and the DuckDB oracle depend on
-    this fixpoint being path-independent."""
+    this fixpoint being path-independent. The driver fit runs at a budget
+    equal to its estimate (fit rows × EMBED_DIM × the measured bytes per
+    value); one byte less runs the distributed loop."""
     from semantic_search_system_spark.operators import similarity as sim
 
     e = spark.read.parquet(f"{SF_MED}/embeddings.parquet")
     for hex_ in (None, "80"):
-        driver = sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
-        with monkeypatch.context() as m:
-            m.setattr(sim, "MAX_DRIVER_FIT", 0)
-            dist = sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
+        fit = e if hex_ is None else e.where(sim.fit_sample_pred("vec_id", hex_))
+        est = fit.count() * sim.spec.EMBED_DIM * sim._FIT_BYTES_PER_VALUE
+        runs = {}
+        for tag, budget in (("at", est), ("under", est - 1)):
+            with monkeypatch.context() as m:
+                set_budget(m, budget)
+                runs[tag] = with_job_count(
+                    spark, lambda: sim.kmeans_centroids(e, 8, 2, fit_sample_hex=hex_)
+                )
+        (driver, driver_jobs), (dist, dist_jobs) = runs["at"], runs["under"]
+        assert driver_jobs < dist_jobs, (driver_jobs, dist_jobs)
         assert driver == dist
 
 
@@ -797,14 +806,13 @@ def _ivf_index(spark, cat):
 
 def _ensure_on(spark, cat, source_table, monkeypatch, driver, enriched=None):
     """(params, Spark jobs) of one ensure_doc_ivf call; ``driver=False``
-    forces the distributed branch through the driver read's byte gate."""
-    from semantic_search_system_spark.plans import pipeline as P
+    forces the distributed branch through a driver budget of 0."""
     from semantic_search_system_spark.plans import search as S
 
     enr = cat.read(spark, source_table) if enriched is None else enriched
     with monkeypatch.context() as m:
         if not driver:
-            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+            set_budget(m, 0)
         return with_job_count(
             spark, lambda: S.ensure_doc_ivf(spark, cat, enr, source_table=source_table)
         )
@@ -855,8 +863,7 @@ def test_doc_ivf_driver_matches_distributed_on_sf_med(
     4 buckets, an append of a 5th (under the drift bound), a drift refit
     over all 8 — the driver branch (zero Spark jobs, snapshots
     ``writer: local``) writes the same doc_ivf_centroids and doc_ivf_assign
-    rows and schemas as the distributed branch (``DRIVER_VOCAB_SCAN_BYTES =
-    0``)."""
+    rows and schemas as the distributed branch (a driver budget of 0)."""
     import os
 
     from semantic_search_system_spark.plans import search as S
@@ -965,20 +972,21 @@ def test_doc_ivf_branches_mix_on_streamed_epochs(spark, tmp_root, monkeypatch):
 
 
 def test_doc_ivf_driver_bounds(spark, tmp_root, monkeypatch, sf_med_enriched):
-    """The driver branch runs up to the byte gate inclusive; one byte under
-    the source's size, or for a frame that is not a bare relation, the
-    distributed branch runs — and writes the same index."""
+    """The driver branch runs up to a budget equal to the driver read's
+    estimate for the source (its bytes times the measured read factor)
+    inclusive; one byte under it, or for a frame that is not a bare
+    relation, the distributed branch runs — and writes the same index."""
     import os
 
     from semantic_search_system_spark.plans import pipeline as P
     from semantic_search_system_spark.plans import search as S
 
-    def build(tag, gate=None, frame=lambda df: df):
+    def build(tag, budget=None, frame=lambda df: df):
         cat = _enriched_copy(sf_med_enriched, os.path.join(tmp_root, tag))
         enr = frame(cat.read(spark, "enriched"))
         with monkeypatch.context() as m:
-            if gate is not None:
-                m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gate)
+            if budget is not None:
+                set_budget(m, budget)
             _, jobs = _ensure_on(spark, cat, "enriched", monkeypatch, True, enriched=enr)
         idx = _ivf_index(spark, cat)
         return idx[S.DOC_IVF_ASSIGN][:2], idx[S.DOC_IVF_ASSIGN][2], jobs
@@ -989,9 +997,10 @@ def test_doc_ivf_driver_bounds(spark, tmp_root, monkeypatch, sf_med_enriched):
         for f in files
         if f.endswith(".parquet")
     )
-    ref, writers, jobs = build("at_gate", gate=size)
+    est = size * P._READ_BYTES_PER_FILE_BYTE
+    ref, writers, jobs = build("at_budget", budget=est)
     assert jobs == 0 and writers == ["local"]
-    rows, writers, jobs = build("over_gate", gate=size - 1)
+    rows, writers, jobs = build("over_budget", budget=est - 1)
     assert rows == ref and writers == ["spark"] and jobs > 0
     rows, writers, jobs = build("not_bare", frame=lambda df: df.select("*"))
     assert rows == ref and writers == ["spark"] and jobs > 0

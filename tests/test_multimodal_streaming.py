@@ -9,7 +9,7 @@ from semantic_search_system_spark.operators.multimodal import (
 )
 from semantic_search_system_spark.streaming.incremental import enrich_stream
 
-from conftest import SF_SMALL, with_job_count, write_edge_corpus
+from conftest import SF_SMALL, set_budget, with_job_count, write_edge_corpus
 
 
 def test_decode_stub_modes():
@@ -172,12 +172,12 @@ def test_compact_stream_epochs_preserves_reads_and_resume(spark, tmp_root):
 
     # interrupted-compaction debris is swept; gen 2 folds new epochs into gen 1
     os.makedirs(os.path.join(out, "enriched_stream", "bucket=zzz_9"))
-    os.makedirs(os.path.join(out, "enriched_stream", "_compacting_dead"))
+    os.makedirs(os.path.join(out, "enriched_stream", "_staging_dead"))
     assert cat.compact_stream_epochs(spark, "enriched_stream")
     man = cat.manifest("enriched_stream")
     assert all(k.startswith("c2_") for k in man["partitions"]), man["partitions"].keys()
     assert not os.path.exists(os.path.join(out, "enriched_stream", "bucket=zzz_9"))
-    assert not os.path.exists(os.path.join(out, "enriched_stream", "_compacting_dead"))
+    assert not os.path.exists(os.path.join(out, "enriched_stream", "_staging_dead"))
     assert snap(cat.read(spark, "enriched_stream")) == post
 
 
@@ -518,7 +518,6 @@ def test_dedup_stream_resumes_after_compaction(spark, tmp_root):
 
 # ------------------------------------------------- the stream sinks' two branches
 _STREAM_TABLES = ("failed_rows_stream", "enriched_stream", "triples_stream")
-_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _sql_plans(spark):
@@ -533,22 +532,21 @@ def _sql_plans(spark):
     return plans
 
 
-def _run_sinks(spark, inbox, out, batch=None):
+def _run_sinks(spark, inbox, out, budget=None):
     """Run enrich_stream, then triples_stream, over ``inbox`` into the
-    Catalog at ``out`` (each with its own checkpoint beside it), with
-    maxRecordsPerBatch set to ``batch`` (None: left as it is). Returns, per
-    sink, (Spark jobs the query submitted, whether a plan it ran evaluates
-    a Python UDF, the batch ids it ran)."""
+    Catalog at ``out`` (each with its own checkpoint beside it), under a
+    driver budget of ``budget`` bytes (None: the heap's). Returns, per sink,
+    (Spark jobs the query submitted, whether a plan it ran evaluates a
+    Python UDF, the batch ids it ran)."""
     import os
 
     from semantic_search_system_spark.streaming.incremental import triples_stream
 
-    saved = spark.conf.get(_BATCH)
     tracker = spark.sparkContext.statusTracker()
     runs = {}
-    try:
-        if batch is not None:
-            spark.conf.set(_BATCH, str(batch))
+    with pytest.MonkeyPatch.context() as m:
+        if budget is not None:
+            set_budget(m, budget)
         for name, start in (("enrich", enrich_stream), ("triples", triples_stream)):
             before = set(_sql_plans(spark))
             q = start(spark, inbox, out, os.path.join(f"{out}_ckpt", name))
@@ -559,8 +557,6 @@ def _run_sinks(spark, inbox, out, batch=None):
                 any("EvalPython" in p for p in plans),
                 {p.batchId for p in q.recentProgress},
             )
-    finally:
-        spark.conf.set(_BATCH, saved)
     return runs
 
 
@@ -620,8 +616,8 @@ def test_stream_sinks_driver_matches_spark(spark, tmp_root):
     """Both sinks' driver branch (one collect, pyarrow admission, assembly,
     kernel and triple emission, local commits) writes the EXACT rows,
     partition keys and recorded schemas of their Spark branch, which a
-    maxRecordsPerBatch below the epoch's rows forces — over the edge-case
-    corpus of the batch stage's twin test."""
+    driver budget of 0 forces — over the edge-case corpus of the batch
+    stage's twin test."""
     import os
 
     from semantic_search_system_spark.streaming import incremental as inc
@@ -631,7 +627,7 @@ def test_stream_sinks_driver_matches_spark(spark, tmp_root):
     n = write_edge_corpus(os.path.join(inbox, "epoch0.parquet"))
     a, b = os.path.join(tmp_root, "driver"), os.path.join(tmp_root, "spark")
     _run_sinks(spark, inbox, a)
-    _run_sinks(spark, inbox, b, batch=n - 1)
+    _run_sinks(spark, inbox, b, budget=0)
     fast, slow = _stream_tables(spark, a), _stream_tables(spark, b)
     for t in _STREAM_TABLES:
         assert fast[t][:3] == slow[t][:3], t
@@ -647,30 +643,29 @@ def test_stream_sinks_driver_matches_spark(spark, tmp_root):
 
 
 def test_stream_sinks_driver_bound(spark, tmp_root):
-    """An epoch of exactly ``maxRecordsPerBatch`` rows takes both sinks'
-    driver branch; one row more than the bound, or a bound of zero or less
-    (no limit to Spark), runs their Spark branch — the same tables either
+    """At a driver budget equal to an epoch's estimate (its parquet bytes
+    times the batch stage's enrich factor) both sinks take their driver
+    branch; one byte less runs their Spark branch — the same tables either
     way."""
     import os
     import shutil
 
-    import pyarrow.parquet as pq
+    from semantic_search_system_spark.plans import pipeline as P
 
     source = interleaved_path(SF_SMALL)
-    n = pq.read_metadata(source).num_rows
     inbox = os.path.join(tmp_root, "in")
     os.makedirs(inbox)
     shutil.copy(source, os.path.join(inbox, "epoch0.parquet"))
+    est = os.path.getsize(source) * P._ENRICH_BYTES_PER_FILE_BYTE
     runs = {}
-    for tag, batch in (("at", n), ("under", n - 1), ("zero", 0), ("negative", -1)):
+    for tag, budget in (("at", est), ("under", est - 1)):
         out = os.path.join(tmp_root, tag)
-        _run_sinks(spark, inbox, out, batch=batch)
+        _run_sinks(spark, inbox, out, budget=budget)
         runs[tag] = _stream_tables(spark, out)
     for t in _STREAM_TABLES:
         assert runs["at"][t][3] == ["local"], t
-        for tag in ("under", "zero", "negative"):
-            assert runs[tag][t][3] == ["spark"], (tag, t)
-            assert runs[tag][t][:3] == runs["at"][t][:3], (tag, t)
+        assert runs["under"][t][3] == ["spark"], t
+        assert runs["under"][t][:3] == runs["at"][t][:3], t
 
 
 def test_stream_sinks_mixed_branches(spark, tmp_root):
@@ -684,14 +679,14 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
 
     n = write_edge_corpus(os.path.join(tmp_root, "edge.parquet"))
     parts = _split_corpus(os.path.join(tmp_root, "edge.parquet"), tmp_root, 2)
-    bound = {"driver": None, "spark": 0}
+    budget = {"driver": None, "spark": 0}
 
     def run(tag, first, second, replay=None):
         inbox, out = os.path.join(tmp_root, f"in_{tag}"), os.path.join(tmp_root, tag)
         os.makedirs(inbox)
         for k, branch in enumerate((first, second)):
             os.link(parts[k], os.path.join(inbox, os.path.basename(parts[k])))
-            _run_sinks(spark, inbox, out, batch=bound[branch])
+            _run_sinks(spark, inbox, out, budget=budget[branch])
         cat = Catalog(out)
         for t in _STREAM_TABLES:
             cat.compact_stream_epochs(spark, t)
@@ -702,7 +697,7 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
             for name in ("enrich", "triples"):
                 for f in ("1", ".1.crc"):
                     os.remove(os.path.join(f"{out}_ckpt", name, "commits", f))
-            runs = _run_sinks(spark, inbox, out, batch=bound[replay])
+            runs = _run_sinks(spark, inbox, out, budget=budget[replay])
             assert all(1 in ids for _, _, ids in runs.values())
             assert _stream_tables(spark, out) == tables
         return tables
@@ -722,7 +717,7 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
 
 def test_stream_driver_epoch_submits_one_job(spark, tmp_root):
     """A driver-sized epoch costs each sink exactly one Spark job — the
-    gate's collect — and no Python UDF evaluation, and records the local
+    epoch's collect — and no Python UDF evaluation, and records the local
     writer; a Spark-branch epoch evaluates the fused UDF."""
     import os
 
@@ -737,5 +732,5 @@ def test_stream_driver_epoch_submits_one_job(spark, tmp_root):
     for t, (_, _, _, writers) in _stream_tables(spark, out).items():
         assert writers == ["local", "local"], t
     os.link(parts[0], os.path.join(inbox, "again.parquet"))
-    runs = _run_sinks(spark, inbox, out, batch=0)
+    runs = _run_sinks(spark, inbox, out, budget=0)
     assert all(udf for _, udf, _ in runs.values()), runs

@@ -154,7 +154,7 @@ def test_fused_enrich_equals_unfused(spark):
     from semantic_search_system_spark.operators.extraction import has_usable_text
 
     base = spark.read.parquet(interleaved_path(SF_SMALL)).where(has_usable_text())
-    raw = assemble_content(base, clean=False)
+    raw = assemble_content(base)
     cols = ["doc_id", "content", "entities", "topics", "embedding"]
     fused = {r["doc_id"]: r for r in enrich_content(raw).select(cols).collect()}
     ref = {

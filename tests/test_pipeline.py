@@ -1,5 +1,6 @@
 import os
 import shutil
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -9,7 +10,7 @@ from semantic_search_system_spark.fixtures.golden import golden_triples, precisi
 from semantic_search_system_spark.fixtures.interleave import interleaved_path
 from semantic_search_system_spark.plans.pipeline import run_pipeline
 
-from conftest import SF_SMALL, with_job_count, write_edge_corpus
+from conftest import SF_SMALL, set_budget, with_job_count, write_edge_corpus
 
 
 @pytest.fixture(scope="module")
@@ -88,7 +89,7 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, b
     """§2.11: docs with no usable text span land in the failed_rows table
     (with per-partition lineage), are EXCLUDED from enrichment, and the resume
     sweep does not re-quarantine completed buckets — on the driver branch of
-    build_enriched and on the Spark plan (``DRIVER_VOCAB_SCAN_BYTES = 0``)."""
+    build_enriched and on the Spark plan (a driver budget of 0)."""
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans.pipeline import build_enriched
 
@@ -111,7 +112,7 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, b
         P, "read_interleaved", lambda s, _sf: s.read.parquet(f"{src}/documents_interleaved.parquet")
     )
     if branch == "spark":
-        monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+        set_budget(monkeypatch, 0)
     cat = Catalog(root)
     enriched = build_enriched(spark, "ignored", cat)
     failed = {r["doc_id"]: r["reason"] for r in cat.read(spark, "failed_rows").collect()}
@@ -253,8 +254,8 @@ def _component_relation(spark, root):
 @pytest.mark.parametrize("corpus", ["sf_small", "components"])
 def test_entity_map_driver_matches_distributed(spark, tmp_root, monkeypatch, corpus):
     """The driver branch (zero Spark jobs) writes the EXACT rows and manifest
-    schema of the distributed blocked-join → CC plan, which
-    ``DRIVER_VOCAB_LIMIT = 0`` forces."""
+    schema of the distributed blocked-join → CC plan, which a driver budget
+    of 0 forces."""
     import semantic_search_system_spark.plans.pipeline as P
     from semantic_search_system_spark.catalog import Catalog
 
@@ -263,7 +264,7 @@ def test_entity_map_driver_matches_distributed(spark, tmp_root, monkeypatch, cor
     else:
         enriched = _component_relation(spark, tmp_root)
     fast, fast_schema, fast_jobs = _entity_map(spark, os.path.join(tmp_root, "a"), enriched)
-    monkeypatch.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
+    set_budget(monkeypatch, 0)
     slow, slow_schema, slow_jobs = _entity_map(spark, os.path.join(tmp_root, "b"), enriched)
     assert fast_jobs == 0 and slow_jobs > 0
     assert fast == slow and fast_schema == slow_schema
@@ -275,36 +276,67 @@ def test_entity_map_driver_matches_distributed(spark, tmp_root, monkeypatch, cor
 
 
 def test_entity_map_driver_bounds(spark, tmp_root, monkeypatch):
-    """Past any driver bound — distinct names over ``DRIVER_VOCAB_LIMIT``,
-    delete-1 candidate pairs over ``components.DRIVER_EDGE_LIMIT``, source
-    bytes over ``DRIVER_VOCAB_SCAN_BYTES`` — and for a Spark-built frame (not
-    a bare relation the driver can re-read), the distributed plan runs and
-    writes the same table."""
+    """Each of the stage's three driver gates flips between a budget equal
+    to its estimate and one byte less, and every branch writes the same
+    table: the driver read of ``enriched`` (the largest estimate on the
+    component corpus), the distinct names (the largest on a corpus of many
+    unrelated names) and the delete-1 candidate pairs (at
+    ``entity_map_driver`` itself). A Spark-built frame (not a bare relation
+    the driver can re-read) runs the distributed plan."""
+    import random
+
     import semantic_search_system_spark.plans.pipeline as P
-    from semantic_search_system_spark.operators import components
 
+    def n_pairs(names):
+        blocks = Counter(k for n in names for k in {n, *(n[:i] + n[i + 1 :] for i in range(len(n)))})
+        return sum(c * (c - 1) // 2 for c in blocks.values())
+
+    def read_est(df):
+        paths = [f[5:] if f.startswith("file:") else f for f in df.inputFiles()]
+        return sum(map(os.path.getsize, paths)) * P._READ_BYTES_PER_FILE_BYTE
+
+    def flip(tag, enriched, est):
+        runs = []
+        for budget in (est, est - 1):
+            with monkeypatch.context() as m:
+                set_budget(m, budget)
+                runs.append(_entity_map(spark, os.path.join(tmp_root, f"{tag}_{budget}"), enriched))
+        (ref, _, at_jobs), (rows, _, under_jobs) = runs
+        assert at_jobs == 0 and under_jobs > 0 and rows == ref
+        return ref
+
+    # the driver read of enriched
     enriched = _component_relation(spark, tmp_root)
-
-    def run(tag, module=None, bound=None, value=None):
-        with monkeypatch.context() as m:
-            if module is not None:
-                m.setattr(module, bound, value)
-            rows, _, jobs = _entity_map(spark, os.path.join(tmp_root, tag), enriched)
-        return rows, jobs
-
-    # at the vocabulary bound, under the default edge bound: the driver branch
-    n_names = len(_COMPONENT_CANONICAL)
-    ref, jobs = run("at_vocab_limit", P, "DRIVER_VOCAB_LIMIT", n_names)
-    assert jobs == 0
-    rows, jobs = run("over_vocab_limit", P, "DRIVER_VOCAB_LIMIT", n_names - 1)
-    assert rows == ref and jobs > 0
+    names = list(_COMPONENT_CANONICAL)
     # spark/sparks share a delete-1 block, so the corpus has candidate pairs
-    rows, jobs = run("over_edge_limit", components, "DRIVER_EDGE_LIMIT", 0)
-    assert rows == ref and jobs > 0
-    rows, jobs = run("over_scan_bytes", P, "DRIVER_VOCAB_SCAN_BYTES", 0)
-    assert rows == ref and jobs > 0
+    assert n_pairs(names) > 0
+    est = read_est(enriched)
+    assert est > max(len(names) * P._NAME_BYTES, n_pairs(names) * P._PAIR_BYTES)
+    ref = flip("read", enriched, est)
     rows, _, jobs = _entity_map(spark, os.path.join(tmp_root, "built"), _component_frame(spark))
     assert rows == ref and jobs > 0
+
+    # the candidate pairs
+    est = n_pairs(names) * P._PAIR_BYTES
+    names, counts = [n for n, _, _, _ in ref], [d for _, _, d, _ in ref]
+    with monkeypatch.context() as m:
+        set_budget(m, est)
+        assert P.entity_map_driver(spark, names, counts) == ref
+        set_budget(m, est - 1)
+        assert P.entity_map_driver(spark, names, counts) is None
+
+    # the distinct names
+    rng = random.Random(0)
+    many = ["".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=8)) for _ in range(1000)]
+    path = os.path.join(tmp_root, "many.parquet")
+    spark.createDataFrame(
+        [([(t, "ENTITY") for t in many[i : i + 10]],) for i in range(0, len(many), 10)],
+        "entities array<struct<text:string,label:string>>",
+    ).write.parquet(path)
+    enriched = spark.read.parquet(path)
+    est = len(set(many)) * P._NAME_BYTES
+    assert est > max(read_est(enriched), n_pairs(set(many)) * P._PAIR_BYTES)
+    assert len(flip("names", enriched, est)) == len(set(many))
 
 
 def test_topic_map_driver_matches_distributed(spark, tmp_root, monkeypatch):
@@ -312,7 +344,6 @@ def test_topic_map_driver_matches_distributed(spark, tmp_root, monkeypatch):
     table the distributed embed→blocked-join→CC→label plan produces."""
     import os
 
-    import semantic_search_system_spark.plans.pipeline as P
     from semantic_search_system_spark.catalog import Catalog
     from semantic_search_system_spark.plans.pipeline import (
         build_enriched,
@@ -327,7 +358,7 @@ def test_topic_map_driver_matches_distributed(spark, tmp_root, monkeypatch):
     }
     cat2 = Catalog(os.path.join(tmp_root, "b"))
     enriched2 = build_enriched(spark, SF_SMALL, cat2)
-    monkeypatch.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
+    set_budget(monkeypatch, 0)
     slow = {
         (r["phrase_norm"], r["broad_topic"])
         for r in build_topic_map(spark, cat2, enriched2).collect()
@@ -362,14 +393,14 @@ def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
         vocab = [e["text"] for r in enriched.select(col).collect() for e in r[col]]
         assert vocab and all(t.isascii() for t in vocab), vocab
 
-    # the distributed twins: both stages read DRIVER_VOCAB_LIMIT per call
+    # the distributed twins: both stages ask the driver budget per call
     for build in (P.build_topic_map, P.build_entity_map):
         name = build.__name__
         fast, fast_jobs = with_job_count(
             spark, lambda: build(spark, Catalog(os.path.join(tmp_root, f"{name}_a")), enriched)
         )
         with monkeypatch.context() as m:
-            m.setattr(P, "DRIVER_VOCAB_LIMIT", 0)
+            set_budget(m, 0)
             slow = build(spark, Catalog(os.path.join(tmp_root, f"{name}_b")), enriched)
         assert fast_jobs == 0
         fast, slow = (sorted(map(tuple, t.collect())) for t in (fast, slow))
@@ -437,12 +468,11 @@ def _kg_build(spark, root, enriched, topic_map, n_buckets=None):
 def test_triples_graph_driver_matches_distributed(spark, tmp_root, monkeypatch, kg_inputs):
     """The driver branch of build_triples + build_graph (pyarrow, zero Spark
     jobs) writes the EXACT rows — bucket included — and manifest schemas of
-    the distributed plans, which ``DRIVER_VOCAB_SCAN_BYTES = 0`` forces."""
+    the distributed plans, which a driver budget of 0 forces."""
     import semantic_search_system_spark.plans.pipeline as P
 
-    enriched, topic_map = kg_inputs
     fast, fast_schemas, fast_jobs, fast_writers = _kg_build(spark, os.path.join(tmp_root, "a"), *kg_inputs)
-    monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    set_budget(monkeypatch, 0)
     slow, slow_schemas, slow_jobs, slow_writers = _kg_build(spark, os.path.join(tmp_root, "b"), *kg_inputs)
     assert fast_jobs == 0 and slow_jobs > 0
     assert fast_writers == {t: ["local"] for t in _KG_TABLES}
@@ -457,17 +487,17 @@ def test_triples_graph_driver_matches_distributed(spark, tmp_root, monkeypatch, 
 
 
 def test_triples_graph_driver_gate(spark, tmp_root, monkeypatch, kg_inputs):
-    """At ``DRIVER_VOCAB_SCAN_BYTES`` equal to the enriched source's bytes
-    the driver branch runs; one byte less and both stages run distributed —
-    the same tables either way."""
+    """At a driver budget equal to the driver read's estimate for the
+    enriched source (the largest input) the driver branch runs; one byte
+    less and both stages run distributed — the same tables either way."""
     import semantic_search_system_spark.plans.pipeline as P
 
     enriched, _ = kg_inputs
     paths = [f[5:] if f.startswith("file:") else f for f in enriched.inputFiles()]
-    source_bytes = sum(os.path.getsize(p) for p in paths)
+    est = sum(os.path.getsize(p) for p in paths) * P._READ_BYTES_PER_FILE_BYTE
     runs = {}
-    for tag, gate in (("at", source_bytes), ("under", source_bytes - 1)):
-        monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gate)
+    for tag, budget in (("at", est), ("under", est - 1)):
+        set_budget(monkeypatch, budget)
         runs[tag] = _kg_build(spark, os.path.join(tmp_root, tag), *kg_inputs)
     assert runs["at"][2] == 0 and runs["under"][2] > 0
     assert runs["at"][3] == {t: ["local"] for t in _KG_TABLES}
@@ -479,18 +509,17 @@ def test_triples_mixed_branch_resume(spark, tmp_root, monkeypatch, kg_inputs):
     """A resume may switch branches: one branch commits the first four
     triples buckets, the other completes the rest (and the graph) — no
     schema-drift error, and the same tables as a one-branch build."""
-    import semantic_search_system_spark.plans.pipeline as P
-
     ref, ref_schemas, _, _ = _kg_build(spark, os.path.join(tmp_root, "ref"), *kg_inputs)
     for first, second in (("spark", "local"), ("local", "spark")):
         root = os.path.join(tmp_root, first)
-        gates = {"spark": 0, "local": P.DRIVER_VOCAB_SCAN_BYTES}
         with monkeypatch.context() as m:
-            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[first])
+            if first == "spark":
+                set_budget(m, 0)
             part, _, _, _ = _kg_build(spark, root, *kg_inputs, n_buckets=4)
         assert {b for *_, b in part["triples"]} == {0, 1, 2, 3}
         with monkeypatch.context() as m:
-            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[second])
+            if second == "spark":
+                set_budget(m, 0)
             rows, schemas, _, writers = _kg_build(spark, root, *kg_inputs)
         assert writers["triples"] == [first, second]
         assert rows == ref and schemas == ref_schemas
@@ -539,14 +568,14 @@ def test_enrich_driver_matches_distributed(spark, tmp_root, monkeypatch, enrich_
     """The driver branch of build_enriched (pyarrow admission and assembly,
     the fused kernel in-process, local commits) writes the EXACT rows —
     bucket and embeddings included — and manifest schemas of the Spark plan,
-    which ``DRIVER_VOCAB_SCAN_BYTES = 0`` forces, in zero Spark jobs."""
+    which a driver budget of 0 forces, in zero Spark jobs."""
     import semantic_search_system_spark.plans.pipeline as P
 
     corpus, source = enrich_source
     fast, fast_schemas, fast_jobs, fast_writers = _enrich_build(
         spark, os.path.join(tmp_root, "a"), source, monkeypatch
     )
-    monkeypatch.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", 0)
+    set_budget(monkeypatch, 0)
     slow, slow_schemas, slow_jobs, slow_writers = _enrich_build(
         spark, os.path.join(tmp_root, "b"), source, monkeypatch
     )
@@ -575,25 +604,30 @@ def test_enrich_driver_matches_distributed(spark, tmp_root, monkeypatch, enrich_
 
 
 def test_enrich_driver_bound(spark, tmp_root, monkeypatch):
-    """A source of exactly ``maxRecordsPerBatch`` rows is enriched on the
-    driver; one row more, or a ``maxRecordsPerBatch`` of zero or less (no
-    limit to Spark), runs the Spark plan — the same tables either way."""
+    """At a driver budget equal to the source's enrich estimate (its file
+    bytes times the measured enrich factor) the source is enriched on the
+    driver; one byte less runs the Spark plan — the same tables either way.
+    ``maxRecordsPerBatch`` only sizes the kernel's batches: at zero or less
+    (one batch) the driver branch writes the same tables."""
+    import semantic_search_system_spark.plans.pipeline as P
+
     source = interleaved_path(SF_SMALL)
-    n_rows = pd.read_parquet(source, columns=["doc_id"]).shape[0]
+    est = os.path.getsize(source) * P._ENRICH_BYTES_PER_FILE_BYTE
+    runs = {}
+    for tag, budget in (("at", est), ("under", est - 1)):
+        with monkeypatch.context() as m:
+            set_budget(m, budget)
+            runs[tag] = _enrich_build(spark, os.path.join(tmp_root, tag), source, monkeypatch)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
-    runs = {}
     try:
-        for tag, batch in (("at", n_rows), ("under", n_rows - 1), ("zero", 0), ("negative", -1)):
-            spark.conf.set(key, str(batch))
-            runs[tag] = _enrich_build(spark, os.path.join(tmp_root, tag), source, monkeypatch)
+        spark.conf.set(key, "0")
+        runs["one_batch"] = _enrich_build(spark, os.path.join(tmp_root, "b0"), source, monkeypatch)
     finally:
         spark.conf.set(key, saved)
-    assert runs["at"][2] == 0
-    assert runs["at"][3] == {t: ["local"] for t in _ENRICH_TABLES}
-    for tag in ("under", "zero", "negative"):
-        assert runs[tag][2] > 0, tag
-        assert runs[tag][3] == {t: ["spark"] for t in _ENRICH_TABLES}, tag
+    for tag, writer in (("at", "local"), ("under", "spark"), ("one_batch", "local")):
+        assert (runs[tag][2] == 0) == (writer == "local"), tag
+        assert runs[tag][3] == {t: [writer] for t in _ENRICH_TABLES}, tag
         assert runs[tag][:2] == runs["at"][:2], tag
 
 
@@ -607,15 +641,16 @@ def test_enrich_mixed_branch_resume(spark, tmp_root, monkeypatch, enrich_source)
     ref, ref_schemas, _, _ = _enrich_build(
         spark, os.path.join(tmp_root, "ref"), source, monkeypatch
     )
-    gates = {"spark": 0, "local": P.DRIVER_VOCAB_SCAN_BYTES}
     for first, second in (("spark", "local"), ("local", "spark")):
         root = os.path.join(tmp_root, first)
         with monkeypatch.context() as m:
-            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[first])
+            if first == "spark":
+                set_budget(m, 0)
             part, _, _, _ = _enrich_build(spark, root, source, monkeypatch, pending_limit=4)
         assert {r["bucket"] for r in part["enriched"]} == {0, 1, 2, 3}
         with monkeypatch.context() as m:
-            m.setattr(P, "DRIVER_VOCAB_SCAN_BYTES", gates[second])
+            if second == "spark":
+                set_budget(m, 0)
             rows, schemas, _, writers = _enrich_build(spark, root, source, monkeypatch)
         assert writers["enriched"] == [first, second]
         assert rows == ref and schemas == ref_schemas
