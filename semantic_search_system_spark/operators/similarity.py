@@ -461,11 +461,6 @@ def drop_ivf_index(cat, cent_table: str, assign_table: str) -> None:
 
 
 def _centroid_matrix(tb) -> tuple[np.ndarray, np.ndarray]:
-    if tb.num_rows > 1_000_000:
-        raise ValueError(
-            f"{tb.num_rows} centroids is beyond the driver-side ranking bound; "
-            "rank centroids distributively (orderBy(qsim).limit(n_probe)) instead"
-        )
     # ascending ids, as nearest_centroid's tie-break needs
     return _centroid_arrays(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
 
@@ -498,8 +493,8 @@ def ivf_topk_indexed(
     interactive QPS doesn't re-read the parquet per query (the manifest
     JSON re-read per query is the staleness check). Scale bound:
     n_centroids ≈ √N, so even a 10^12-vector corpus ranks only ~10^6
-    centroids (≈ a few hundred MB of 256-d doubles — near the driver's
-    comfort limit, hence the guard in _centroid_matrix). Past that, swap
+    centroids (≈ a few hundred MB of 256-d doubles, a matrix that
+    ``build_ivf_index``'s k-means already held on the driver). Past that, swap
     this step for a TakeOrderedAndProject over the centroid table; the probe
     is unchanged. The 6-dp half-away rounding matches the SQL oracle
     bit-for-bit (the same fixpoint the k-means itself uses).

@@ -30,6 +30,7 @@ Stages (each a Catalog table under <out_root>):
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pandas as pd
@@ -358,53 +359,75 @@ _READ_BYTES_PER_FILE_BYTE = 17
 
 
 def driver_read(df: DataFrame, columns: list[str], buckets=None, per_byte=_READ_BYTES_PER_FILE_BYTE):
-    """``columns`` of ``df`` as one pyarrow Table via a column-pruned DRIVER
-    read (zero Spark jobs) — only when ``df`` is a BARE parquet relation (no
-    filters/projections that a local re-read would silently ignore) whose
-    files all exist and whose bytes times ``per_byte`` (the caller's driver
-    memory per parquet byte) fit ``session.driver_fits``.
-    Returns None whenever any guard fails → the caller runs its distributed
-    plan. The one guarded reader behind the enrich source read, topic_map,
-    entity_map, triples, the graph tables and the doc-IVF build/append
-    (plans.search.ensure_doc_ivf).
+    """``columns`` of ``df`` as one pyarrow Table via ``driver_read_files``
+    — only when ``df`` is a BARE parquet relation (no filters/projections
+    that a local re-read would silently ignore). Returns None whenever any
+    guard fails → the caller runs its distributed plan. The reader behind
+    the enrich source read, topic_map, entity_map, triples, the graph tables
+    and the doc-IVF build/append (plans.search.ensure_doc_ivf).
 
     ``BUCKET_COL`` among ``columns`` is the partition column of a Catalog
-    table: its value comes from each file's ``bucket=K`` directory, typed as
-    ``df.schema`` types it (None when the files do not sit in such
-    directories of one table). ``buckets``: read only those partitions —
-    the estimate still measures the whole relation."""
+    table, typed as ``df.schema`` types it. ``buckets``: read only those
+    partitions — the estimate still measures the whole relation."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
             return None
         files = df.inputFiles()
+        keyed = BUCKET_COL in columns or buckets is not None
+        key_type = _arrow_type(df.schema[BUCKET_COL].dataType) if keyed else None
     except Exception:  # noqa: BLE001 — any introspection failure → fallback
         return None
-    if not files:
+    return driver_read_files(df.sparkSession, files, columns, per_byte, buckets, key_type)
+
+
+def driver_read_files(
+    spark: SparkSession, uris, columns: list[str], per_byte, buckets=None, key_type=None
+):
+    """``columns`` of the parquet files at ``uris`` as one pyarrow Table,
+    read on the driver (zero Spark jobs) — or None, so that the caller runs
+    its Spark plan, when there is no file, a URI is not a local ``file:``
+    one, a file is missing, the files' bytes times ``per_byte`` (the
+    caller's driver memory per parquet byte) fail ``session.driver_fits``,
+    or pyarrow cannot read them. The one guarded reader of the batch stages
+    (``driver_read``) and the stream sinks (streaming/incremental.py).
+
+    ``key_type``: the Arrow type of ``BUCKET_COL``, whose value comes from
+    each file's ``bucket=K`` directory (None when the files do not sit in
+    such directories of one table); needed to read that column or to keep
+    only the partitions ``buckets``."""
+    paths = []
+    for uri in uris:
+        u = urlsplit(uri)
+        if u.scheme != "file" or u.netloc:
+            return None
+        paths.append(unquote(u.path))
+    try:
+        nbytes = sum(map(os.path.getsize, paths))
+    except OSError:
         return None
-    paths = [f[5:] if f.startswith("file:") else f for f in files]
-    if any(not os.path.exists(p) for p in paths):
-        return None
-    if not driver_fits(df.sparkSession, sum(map(os.path.getsize, paths)) * per_byte):
+    if not paths or not driver_fits(spark, nbytes * per_byte):
         return None
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    if BUCKET_COL not in columns and buckets is None:
-        return pads.dataset(paths, format="parquet").to_table(columns=columns)
-    dirs = {os.path.dirname(p) for p in paths}
-    bases = {os.path.dirname(d) for d in dirs}
-    if len(bases) != 1 or not all(os.path.basename(d).startswith(f"{BUCKET_COL}=") for d in dirs):
+    try:
+        if key_type is None:
+            return pads.dataset(paths, format="parquet").to_table(columns=columns)
+        dirs = {os.path.dirname(p) for p in paths}
+        bases = {os.path.dirname(d) for d in dirs}
+        if len(bases) != 1 or not all(os.path.basename(d).startswith(f"{BUCKET_COL}=") for d in dirs):
+            return None
+        ds = pads.dataset(
+            paths,
+            format="parquet",
+            partitioning=pads.partitioning(pa.schema([(BUCKET_COL, key_type)]), flavor="hive"),
+            partition_base_dir=bases.pop(),
+        )
+        keep = None if buckets is None else pads.field(BUCKET_COL).isin(pa.array(buckets, key_type))
+        return ds.to_table(columns=columns, filter=keep)
+    except (OSError, pa.ArrowException):
         return None
-    key_type = _arrow_type(df.schema[BUCKET_COL].dataType)
-    ds = pads.dataset(
-        paths,
-        format="parquet",
-        partitioning=pads.partitioning(pa.schema([(BUCKET_COL, key_type)]), flavor="hive"),
-        partition_base_dir=bases.pop(),
-    )
-    keep = None if buckets is None else pads.field(BUCKET_COL).isin(pa.array(buckets, key_type))
-    return ds.to_table(columns=columns, filter=keep)
 
 
 def _vocab_texts_driver(enriched: DataFrame, column: str):

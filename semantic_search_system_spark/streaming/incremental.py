@@ -11,11 +11,12 @@ the checkpointed Catalog under epoch-scoped ``<epoch>_<bucket>`` keys, so
 delivery is idempotent at partition granularity (exactly-once effective
 semantics). Each sink has two branches, like the batch stages, chosen per
 micro-batch by its own size (``_driver_epoch``). One that fits the driver
-budget is collected in one Spark job (no UDF), enriched in pyarrow by the
-batch stage's driver kernels (``enrich_docs_arrow``, ``mention_topic_arrow``)
-and committed from the driver; a larger one runs the batch stage's Spark body
-(``enrich_docs``, the fused Arrow UDF). Both branches commit the same rows,
-keys and declared schemas, so epochs of either branch mix in one table.
+budget is read by pyarrow from the files the query's checkpoint logs name
+for it (no Spark job), enriched by the batch stage's driver kernels
+(``enrich_docs_arrow``, ``mention_topic_arrow``) and committed from the
+driver; a larger one runs the batch stage's Spark body (``enrich_docs``,
+the fused Arrow UDF). Both branches commit the same rows, keys and declared
+schemas, so epochs of either branch mix in one table.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import BUCKET_COL, Catalog, arrow_bucket, with_bucket
+from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucket
 from ..operators.extraction import has_usable_text
 from ..plans.pipeline import (
     ARROW_BATCH,
@@ -37,13 +38,13 @@ from ..plans.pipeline import (
     _FAILED_ROWS_SCHEMA,
     _TRIPLES_SCHEMA,
     build_topic_map,
+    driver_read_files,
     enrich_docs,
     enrich_docs_arrow,
     mention_topic_arrow,
     mention_topic_triples,
     relates_triples,
 )
-from ..session import driver_fits
 
 
 def _checkpoint_identity(checkpoint_dir: str) -> str:
@@ -110,21 +111,63 @@ def _epoch_key(epoch_id: int):
     return F.concat_ws("_", F.lit(int(epoch_id)), F.col(BUCKET_COL))
 
 
-def _driver_epoch(batch_df: DataFrame, epoch_id: int, n_buckets: int):
+def _epoch_files(checkpoint_dir: str, epoch_id: int):
+    """The input file URIs of micro-batch ``epoch_id``, read from the
+    query's own checkpoint: the file-source log entries (``sources/0/<b>``,
+    or ``<b>.compact`` at a log-compaction batch) whose ``batchId`` b lies in
+    (``logOffset`` of ``offsets/<epoch_id - 1>``, ``logOffset`` of
+    ``offsets/<epoch_id>``] — the files Spark's file source reads for the
+    batch, and the same ones when a crash replays its id. Both logs are
+    Spark's versioned ``v1`` checkpoint format. None when a log is missing
+    or does not parse."""
+
+    def entries(*parts):  # the JSON lines of a v1 log file
+        with open(os.path.join(checkpoint_dir, *parts)) as f:
+            version, *lines = f.read().splitlines()
+        if version != "v1":
+            raise ValueError(f"checkpoint log version {version!r}")
+        return [json.loads(line) for line in lines]
+
+    def log_offset(e: int):
+        if e < 0:
+            return -1
+        _, offset = entries("offsets", str(e))  # the batch metadata, then the one source's
+        return offset["logOffset"]
+
+    try:
+        uris = []
+        for b in range(log_offset(epoch_id - 1) + 1, log_offset(epoch_id) + 1):
+            name = str(b)
+            if not os.path.exists(os.path.join(checkpoint_dir, "sources", "0", name)):
+                name += ".compact"
+            uris += [x["path"] for x in entries("sources", "0", name) if x["batchId"] == b]
+        return uris
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def _driver_epoch(spark: SparkSession, checkpoint_dir: str, epoch_id: int, n_buckets: int):
     """The gate of both sinks: (rows, batch) — the micro-batch's doc_id and
     spans as a pyarrow Table carrying their ``<epoch>_<bucket>`` keys, and
-    the kernel batch size — when the epoch's parquet bytes times the batch
-    enrich factor fit ``session.driver_fits``; else None. The foreachBatch
-    frame (a LogicalRDD) has no input files for ``driver_read``, but its plan
-    statistics give its file bytes without a Spark job."""
+    the kernel batch size — or None, and the sink runs its Spark branch.
+    The rows are the epoch's files (``_epoch_files``) read by
+    ``driver_read_files`` under the batch enrich factor and cast to
+    ``SPANS_SCHEMA``'s Arrow types, the schema the Spark branch reads them
+    with; any failure there (a log, a URI, a missing file, the budget, the
+    read, the cast) gives None. The gate itself submits no Spark job."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    spark = batch_df.sparkSession
-    epoch_bytes = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if not driver_fits(spark, int(epoch_bytes) * _ENRICH_BYTES_PER_FILE_BYTE):
+    uris = _epoch_files(checkpoint_dir, epoch_id)
+    tb = None if uris is None else driver_read_files(
+        spark, uris, ["doc_id", "spans"], _ENRICH_BYTES_PER_FILE_BYTE
+    )
+    if tb is None:
         return None
-    tb = batch_df.select("doc_id", "spans").toArrow()
+    try:
+        tb = tb.cast(pa.schema([(f.name, _arrow_type(f.dataType)) for f in SPANS_SCHEMA.fields]))
+    except pa.ArrowException:
+        return None
     bucket = pc.cast(pa.array(arrow_bucket(tb["doc_id"], n_buckets)), pa.string())
     key = pc.binary_join_element_wise(str(int(epoch_id)), bucket, "_")
     return tb.append_column(BUCKET_COL, key), int(spark.conf.get(ARROW_BATCH))
@@ -185,15 +228,15 @@ def enrich_stream(
     awaits/stops).
 
     Two branches, chosen per micro-batch by ``_driver_epoch``: an epoch
-    within the driver budget is collected in one job, enriched in pyarrow
+    within the driver budget is read from its files by pyarrow, enriched
     (``enrich_docs_arrow``) and committed from the driver (``writer:
-    local``), with no Python worker; a larger one runs
+    local``), with no Spark job and no Python worker; a larger one runs
     ``_enrich_sink_frames`` (the fused UDF) and two Spark writes."""
     cat = Catalog(out_root)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        local = _driver_epoch(batch_df, epoch_id, n_buckets)
+        local = _driver_epoch(batch_df.sparkSession, checkpoint_dir, epoch_id, n_buckets)
         if local is not None:
             failed, enriched = enrich_docs_arrow(*local)
             cat.commit_partitions_local(
@@ -224,8 +267,9 @@ def triples_stream(
     replay idempotent and ``compact_stream_epochs`` applicable.
 
     Two branches, chosen per micro-batch by ``_driver_epoch`` as in
-    ``enrich_stream``: ``enrich_docs_arrow`` and ``mention_topic_arrow``
-    and a local commit, or ``_triples_sink_frame`` and a Spark write.
+    ``enrich_stream``: a pyarrow read of the epoch's files,
+    ``enrich_docs_arrow``, ``mention_topic_arrow`` and a local commit (no
+    Spark job), or ``_triples_sink_frame`` and a Spark write.
 
     Scope (documented split, lambda-architecture style): the MENTIONS and
     HAS_TOPIC branches are PER-DOCUMENT (map-only — streamable exactly);
@@ -239,7 +283,7 @@ def triples_stream(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        local = _driver_epoch(batch_df, epoch_id, n_buckets)
+        local = _driver_epoch(batch_df.sparkSession, checkpoint_dir, epoch_id, n_buckets)
         if local is not None:
             _, enriched = enrich_docs_arrow(*local)
             triples = mention_topic_arrow(enriched)

@@ -322,3 +322,23 @@ def test_local_commit_splits_keys_and_is_never_compacted(tmp_root, monkeypatch):
             d = os.path.join(cat.path(table), f"{BUCKET_COL}={k}")
             assert sorted(pads.dataset(d, format="parquet").to_table()["v"].to_pylist()) == vs
     assert compacted == []
+
+
+def test_wide_table_read_submits_no_job(spark, tmp_root):
+    """``Catalog.read`` passes one directory per manifest partition; past
+    Spark's default partition-discovery threshold (32 paths) Spark would
+    list them in a job, which an uncompacted stream table reaches after its
+    fifth epoch. A 40-partition table is read, all 40 files in its plan,
+    with no Spark job."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from conftest import with_job_count
+
+    cat = Catalog(tmp_root)
+    schema = T.StructType([T.StructField("v", T.LongType()), T.StructField(BUCKET_COL, T.StringType())])
+    keys = [f"{e}_{b}" for e in range(5) for b in range(8)]
+    cat.commit_partitions_local(pa.table({"v": range(40), BUCKET_COL: keys}), schema, "wide", stage="s")
+    df, jobs = with_job_count(spark, lambda: cat.read(spark, "wide"))
+    assert jobs == 0
+    assert len(df.inputFiles()) == 40

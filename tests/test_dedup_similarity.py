@@ -288,6 +288,22 @@ def test_ivf_centroid_read_memoized(spark, tmp_root, monkeypatch):
     assert reads["n"] >= 2
 
 
+def test_centroid_matrix_has_no_count_bound():
+    """The centroid parse holds no count limit of its own: a table of more
+    than 1,000,000 centroids (the bound it once raised at, after the read)
+    parses like any other. Every centroid table was held on the driver by
+    the k-means that fit it, and ranking has no Spark branch to give way to."""
+    import pyarrow as pa
+
+    from semantic_search_system_spark.operators import similarity as sim
+
+    n = 1_000_001
+    tb = pa.table({"centroid_id": pa.array(range(n - 1, -1, -1), pa.int64()),
+                   "cvec": pa.array([[float(i)] for i in range(n - 1, -1, -1)])})
+    cids, C = sim._centroid_matrix(tb)
+    assert C.shape == (n, 1) and (cids == range(n)).all() and (C[:, 0] == cids).all()
+
+
 def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
     """A changed input (a different lineage) must raise on index reuse, not
     silently serve stale assignments (round-2 ADVICE #1)."""

@@ -695,8 +695,7 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
             # the checkpoints lose epoch 1's commit, as a crash between the
             # sink's commits and the checkpoint's would leave them
             for name in ("enrich", "triples"):
-                for f in ("1", ".1.crc"):
-                    os.remove(os.path.join(f"{out}_ckpt", name, "commits", f))
+                _drop_commit(os.path.join(f"{out}_ckpt", name), 1)
             runs = _run_sinks(spark, inbox, out, budget=budget[replay])
             assert all(1 in ids for _, _, ids in runs.values())
             assert _stream_tables(spark, out) == tables
@@ -716,9 +715,10 @@ def test_stream_sinks_mixed_branches(spark, tmp_root):
 
 
 def test_stream_driver_epoch_submits_one_job(spark, tmp_root):
-    """A driver-sized epoch costs each sink exactly one Spark job — the
-    epoch's collect — and no Python UDF evaluation, and records the local
-    writer; a Spark-branch epoch evaluates the fused UDF."""
+    """A driver-sized epoch costs each sink no Spark job — its files come
+    from the query's checkpoint logs and are read by pyarrow — and no Python
+    UDF evaluation, and records the local writer; a Spark-branch epoch
+    evaluates the fused UDF."""
     import os
 
     write_edge_corpus(os.path.join(tmp_root, "edge.parquet"))
@@ -728,9 +728,121 @@ def test_stream_driver_epoch_submits_one_job(spark, tmp_root):
     for k, part in enumerate(parts):
         os.link(part, os.path.join(inbox, os.path.basename(part)))
         runs = _run_sinks(spark, inbox, out)
-        assert runs == {"enrich": (1, False, {k}), "triples": (1, False, {k})}
+        assert runs == {"enrich": (0, False, {k}), "triples": (0, False, {k})}
     for t, (_, _, _, writers) in _stream_tables(spark, out).items():
         assert writers == ["local", "local"], t
     os.link(parts[0], os.path.join(inbox, "again.parquet"))
     runs = _run_sinks(spark, inbox, out, budget=0)
     assert all(udf for _, udf, _ in runs.values()), runs
+
+
+def _drop_commit(checkpoint_dir, epoch_id):
+    """Remove epoch ``epoch_id``'s commit-log entry (and its checksum file,
+    if the checkpoint has one), as a crash between the sink's commits and
+    the checkpoint's leaves it: the next start replays the epoch."""
+    import os
+
+    commits = os.path.join(checkpoint_dir, "commits")
+    os.remove(os.path.join(commits, str(epoch_id)))
+    crc = os.path.join(commits, f".{epoch_id}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _bad_doc_id_file(path, n):
+    """An interleaved file of ``n`` docs whose doc_id column is parquet
+    BINARY, one value of it not UTF-8: Spark reads it as a string, pyarrow
+    cannot cast it to one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semantic_search_system_spark.fixtures.interleave import INTERLEAVED_SCHEMA
+
+    span = {"kind": "text", "text": "spark data scan", "media_ref": None, "offset": 0}
+    ids = [b"\xff\xfebad"] + [f"bin{i}".encode() for i in range(1, n)]
+    spans = pa.array([[span]] * n, INTERLEAVED_SCHEMA.field("spans").type)
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.binary()), "spans": spans}), path)
+
+
+@pytest.mark.parametrize(
+    "case", ["several_files", "compact", "replay", "deleted_source_log", "bad_doc_id"]
+)
+def test_stream_epoch_files(spark, tmp_root, monkeypatch, case):
+    """The driver branch reads each epoch's files from the query's own
+    checkpoint logs, and its tables equal the Spark branch's (a driver
+    budget of 0) in rows, keys and schemas:
+    - several_files: six files, epochs of four and two (maxFilesPerTrigger);
+    - compact: the source log compacts at every second batch, so epoch 1's
+      entries sit in ``sources/0/1.compact``;
+    - replay: epoch 1 replayed, after its commit-log entry is removed, into
+      a Catalog that lacks it, so the replay's file list is what commits;
+    - deleted_source_log: the epoch's source-log entry is gone when the
+      sink reads it, and the sink falls back to its Spark branch;
+    - bad_doc_id: a doc_id that pyarrow cannot cast, the same fallback."""
+    import os
+    import shutil
+
+    from semantic_search_system_spark.streaming import incremental as inc
+
+    write_edge_corpus(os.path.join(tmp_root, "edge.parquet"))
+    parts = _split_corpus(os.path.join(tmp_root, "edge.parquet"), tmp_root, 6)
+    if case == "bad_doc_id":
+        _bad_doc_id_file(parts[1], 5)
+    if case == "compact":
+        key = "spark.sql.streaming.fileSource.log.compactInterval"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, "2")
+    if case == "deleted_source_log":
+        real = inc._epoch_files
+
+        def source_log_gone(checkpoint_dir, epoch_id):
+            os.remove(os.path.join(checkpoint_dir, "sources", "0", str(epoch_id)))
+            return real(checkpoint_dir, epoch_id)
+
+    def run(tag, budget):
+        inbox, out = os.path.join(tmp_root, f"in_{tag}"), os.path.join(tmp_root, tag)
+        os.makedirs(inbox)
+        if case == "replay":  # two epochs of three files each
+            batches = [parts[:3], parts[3:]]
+        elif case == "bad_doc_id":
+            batches = [parts[:2]]
+        else:  # one start, epochs of four and two files
+            batches = [parts]
+        for batch in batches:
+            for p in batch:
+                os.link(p, os.path.join(inbox, os.path.basename(p)))
+            with monkeypatch.context() as m:
+                if case == "deleted_source_log" and budget is None:
+                    m.setattr(inc, "_epoch_files", source_log_gone)
+                _run_sinks(spark, inbox, out, budget=budget)
+            if case == "replay" and batch is batches[0]:
+                shutil.copytree(out, f"{out}_after0")
+        return out
+
+    try:
+        ref = _stream_tables(spark, run("spark", 0))
+        out = run("driver", None)
+    finally:
+        if case == "compact":
+            spark.conf.set(key, prior)
+    if case == "compact":
+        assert os.path.exists(os.path.join(f"{out}_ckpt", "enrich", "sources", "0", "1.compact"))
+    if case == "replay":
+        # the Catalog as epoch 0 left it, beside the checkpoints as epoch 1
+        # left them, less epoch 1's commit-log entry
+        replayed = f"{out}_replay"
+        os.rename(f"{out}_after0", replayed)
+        shutil.copytree(f"{out}_ckpt", f"{replayed}_ckpt")
+        for name in ("enrich", "triples"):
+            _drop_commit(os.path.join(f"{replayed}_ckpt", name), 1)
+        runs = _run_sinks(spark, os.path.join(tmp_root, "in_driver"), replayed)
+        assert all(ids == {1} for _, _, ids in runs.values()), runs
+        out = replayed
+    got = _stream_tables(spark, out)
+    epochs = 1 if case == "bad_doc_id" else 2
+    writer = "spark" if case in ("deleted_source_log", "bad_doc_id") else "local"
+    for t in _STREAM_TABLES:
+        assert got[t][:3] == ref[t][:3], t
+        assert set(got[t][3]) <= {writer}, (t, got[t][3])
+    assert got["enriched_stream"][3] and got["triples_stream"][3]
+    assert len({r["bucket"].split("_")[0] for r in got["enriched_stream"][0]}) == epochs
