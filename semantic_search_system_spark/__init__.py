@@ -15,8 +15,7 @@ DataFrame transforms designed for a multi-executor cluster at very large scale:
                    fusion); no Python on the hot path.
 - ``operators``  — the domain operators: Arrow-vectorized extraction/embedding
                    UDFs, blocked similarity join, connected components,
-                   dedup family (exact/minhash/simhash/jaccard), ANN search,
-                   multimodal plumbing.
+                   dedup family (exact/minhash/simhash/jaccard), ANN search.
 - ``plans``      — end-to-end pipelines: ingest → extract → embed → link →
                    canonicalize → graph materialize; the 5 search strategies.
 - ``catalog``    — Iceberg-style partitioned-parquet tables with snapshot

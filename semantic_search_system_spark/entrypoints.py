@@ -895,9 +895,7 @@ def ensure_minhash_store(
     same epoch-scoped ``commit_partitions`` keys the doc-IVF assign path
     uses, so the store grows without rewrites. ``fingerprint``: the
     corpus's identity by the catalog rule (``catalog.file_lineage`` of the
-    source files, ``Catalog.lineage`` of a source table). ``dedup_stream``
-    (whose corpus DOES change) never consults this fingerprint — its store
-    is epoch-scoped."""
+    source files, ``Catalog.lineage`` of a source table)."""
     from .operators.dedup import with_minhash, with_shingles
 
     stage = f"minhash_store v{spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={fingerprint}"
@@ -1144,72 +1142,37 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_oracle_sql(
-    n_centroids: int = 8,
-    n_iter: int = 2,
-    n_probe: int = 2,
-    k: int = 10,
-    dim: int = 64,
-    sample_hex: str | None = None,
-) -> str:
-    """DuckDB twin of the materialized IVF index: first-m seeding, n_iter
-    unrolled Lloyd iterations (per-component list_avg rounded to 6 dp — the
-    rounding makes the fixpoint invariant to float summation order, so Spark's
-    distributed avg and DuckDB's list_avg converge to identical centroids),
-    then nearest-centroid assignment, n_probe probe, top-k. ``sample_hex``
-    replays the md5-threshold FIT sample (similarity.fit_sample_pred): seeds
-    and Lloyd iterations read only the sampled rows; the final assignment
-    covers every vector."""
-    fit = "s" if sample_hex else "e"
+IVF_FIT_SAMPLE_HEX = "80"  # fit k-means on the ~50% md5-threshold sample
 
-    def assign(cent: str, name: str, src: str) -> str:
-        return (
-            f"{name} AS (\n"
-            f"      SELECT vec_id, min({{'nc': -round(list_cosine_similarity({src}.v, c.cvec), 6), "
-            f"'cid': c.centroid_id}}).cid AS centroid_id\n"
-            f"      FROM {src}, {cent} c GROUP BY vec_id)"
-        )
 
-    def update(a: str, name: str) -> str:
-        return (
-            f"{name} AS (\n"
-            f"      SELECT centroid_id, list_transform(generate_series(1, {dim}), "
-            f"j -> round(list_avg(list_transform(vs, v -> v[j])), 6)) AS cvec\n"
-            f"      FROM (SELECT a.centroid_id, list({fit}.v) AS vs FROM {a} a JOIN {fit} USING (vec_id) "
-            f"GROUP BY a.centroid_id))"
-        )
+def _ivf_oracle_sql() -> str:
+    """DuckDB twin of ``ann_ivf_top10``'s materialized IVF index: the
+    doc-IVF Lloyd replay (``search._lloyd_sql``, 8 centroids) fitted on the
+    md5-threshold sample (similarity.fit_sample_pred) — seeds and Lloyd
+    iterations read only the sampled rows, the final assignment covers every
+    vector — then the 2-centroid probe and the top 10 by rounded cosine to
+    vector 0."""
+    from .plans.search import DOC_IVF_ITER, _lloyd_sql
 
-    ctes = ["e AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings)"]
-    if sample_hex:
-        ctes.append(
-            f"s AS (SELECT * FROM e WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{sample_hex}')"
-        )
-    ctes.append(
-        f"c0 AS (SELECT CAST(vec_id AS BIGINT) AS centroid_id, v AS cvec FROM {fit} "
-        f"ORDER BY vec_id ASC LIMIT {n_centroids})"
-    )
-    for t in range(n_iter):
-        ctes.append(assign(f"c{t}", f"a{t}", fit))
-        ctes.append(update(f"a{t}", f"c{t + 1}"))
-    ctes.append(assign(f"c{n_iter}", "af", "e"))
-    ctes.append("q AS (SELECT v AS qv FROM e WHERE vec_id = 0)")
-    ctes.append(
-        f"probed AS (SELECT centroid_id FROM ("
-        f"SELECT c.centroid_id, round(list_cosine_similarity(c.cvec, q.qv), 6) AS qsim "
-        f"FROM c{n_iter} c, q ORDER BY qsim DESC, centroid_id ASC LIMIT {n_probe}))"
-    )
+    ctes = [
+        "e AS (SELECT CAST(vec_id AS BIGINT) AS vec_id, cast(embedding AS DOUBLE[]) AS v "
+        "FROM embeddings)",
+        f"s AS (SELECT * FROM e WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{IVF_FIT_SAMPLE_HEX}')",
+        *_lloyd_sql("s", "e", "8"),
+        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
+        "probed AS (SELECT centroid_id FROM ("
+        "SELECT c.centroid_id, round(list_cosine_similarity(c.cvec, q.qv), 6) AS qsim "
+        f"FROM c{DOC_IVF_ITER} c, q ORDER BY qsim DESC, centroid_id ASC LIMIT 2))",
+    ]
     return (
         "WITH " + ",\n    ".join(ctes) + "\n"
         "    SELECT a.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS sim\n"
         "    FROM af a JOIN e USING (vec_id) JOIN probed USING (centroid_id), q\n"
-        f"    ORDER BY sim DESC, vec_id ASC LIMIT {k}"
+        "    ORDER BY sim DESC, vec_id ASC LIMIT 10"
     )
 
 
-IVF_FIT_SAMPLE_HEX = "80"  # fit k-means on the ~50% md5-threshold sample
-
-
-@query("ann_ivf_top10", oracle=_ivf_oracle_sql(sample_hex=IVF_FIT_SAMPLE_HEX))
+@query("ann_ivf_top10", oracle=_ivf_oracle_sql())
 def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN over the MATERIALIZED IVF index: deterministic 2-iteration k-means
     fitted on the md5-threshold hash sample (the Lloyd iterations never scan
@@ -1223,6 +1186,7 @@ def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .catalog import Catalog, file_lineage
     from .operators.similarity import build_ivf_index, drop_ivf_index, ivf_topk_indexed
+    from .plans.search import DOC_IVF_ITER
 
     path = os.path.join(sf_dir, "embeddings.parquet")
     lineage = file_lineage(path)
@@ -1231,7 +1195,7 @@ def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_ivf_index(cat, "ivf_centroids", "ivf_assign")
     build_ivf_index(
         spark, load(spark, sf_dir, "embeddings"), cat, lineage,
-        n_centroids=8, n_iter=2, fit_sample_hex=IVF_FIT_SAMPLE_HEX,
+        n_centroids=8, n_iter=DOC_IVF_ITER, fit_sample_hex=IVF_FIT_SAMPLE_HEX,
     )
     # the query vector is ONE row of a driver-local parquet: read it with
     # pyarrow instead of a Spark collect job per call (same value, no job;

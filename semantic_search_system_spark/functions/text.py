@@ -7,8 +7,6 @@ Reference parity:
                         nlp/pr_local_nlp_pipeline.py:25-31): strip non-alnum,
                         collapse whitespace, trim, lowercase.
 - normalize_key_col  ≡ normalize_key (knowledge_graph/knowledge_graph.py:51-55).
-- tokens_col         ≡ NLTK tokenize + stopword removal
-                        (pr_local_nlp_pipeline.py:33-44) as native split+filter.
 """
 
 from __future__ import annotations
@@ -31,17 +29,3 @@ def normalize_key_col(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.trim(c))
 
-
-def tokens_col(col: Column | str, drop_stopwords: bool = True) -> Column:
-    """array<string> of cleaned tokens; optionally stopword-filtered."""
-    toks = F.split(clean_text_col(col), " ")
-    toks = F.filter(toks, lambda t: t != F.lit(""))
-    if drop_stopwords:
-        stop = F.array(*[F.lit(s) for s in sorted(spec.STOPWORDS)])
-        toks = F.filter(toks, lambda t: ~F.array_contains(stop, t))
-    return toks
-
-
-def content_tokens(col: Column | str) -> Column:
-    """All cleaned tokens including stopwords (bigram extraction needs them)."""
-    return tokens_col(col, drop_stopwords=False)

@@ -41,19 +41,6 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(_c(a), F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def l2_normalize(a: Column | str) -> Column:
-    """Unit-normalize (reference: 'normalize': True Titan flag, bedrock.py:41).
-
-    The norm is bound ONCE via a single-element transform: inlining the
-    l2_norm aggregate into the per-element lambda body would re-evaluate it
-    per component (O(d^2) per row — the with_shingles inlining bug class)."""
-    n = l2_norm(a)
-    scaled = F.element_at(
-        F.transform(F.array(n), lambda nn: F.transform(_c(a), lambda v: v / nn)), 1
-    )
-    return F.when(n > 0, scaled).otherwise(_c(a))
-
-
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; safe for non-normalized inputs."""
     denom = l2_norm(a) * l2_norm(b)

@@ -210,53 +210,22 @@ def incremental_minhash_near_dups(
     new-vs-store join is a broadcast (AQE picks it at runtime); the store
     side is scanned once, map-only, no all-pairs anywhere. Result equals
     ``minhash_near_dups(full_corpus)`` filtered to pairs touching a new doc
-    (pinned by test_incremental_minhash_equals_filtered_full).
+    (pinned by test_incremental_minhash_equals_filtered_full). The docs
+    behind ``old_sigs`` must not be ``is_new``.
     """
-    return incremental_pairs(
-        docs.where(is_new), docs, old_sigs, id_col, text_col,
-        n_perm, n_bands, jaccard_threshold, checkpoint,
-    )
-
-
-def incremental_pairs(
-    new_docs: DataFrame,
-    all_docs: DataFrame,
-    old_sigs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perm: int = 16,
-    n_bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    checkpoint: bool = True,
-    new_sigs: DataFrame | None = None,
-) -> DataFrame:
-    """Core of the incremental dedup, shared by the batch operator above and
-    the streaming ``dedup_stream`` epochs: ``new_docs`` is the epoch,
-    ``all_docs`` the accumulated corpus (consulted only for the
-    candidate-sized verify re-shingle), ``old_sigs`` the persisted store.
-    ``new_docs`` must be disjoint from the docs behind ``old_sigs``.
-    ``new_sigs`` short-circuits the epoch's signature computation when the
-    caller already materialized it (the stream computes signatures once and
-    both commits them to the store and joins with them here).
-
-    ``all_docs`` may also be a callable ``touched_ids_df -> DataFrame`` so a
-    catalog-backed caller can return a partition-pruned corpus read for the
-    candidate id set instead of a full scan (dedup_stream does)."""
     ckpt = (lambda d: d.localCheckpoint(eager=True)) if checkpoint else (lambda d: d)
-    if new_sigs is None:
-        par = new_docs.sparkSession.sparkContext.defaultParallelism
-        # the shingle checkpoint is load-bearing even though the signature
-        # aggregation is its only consumer here: without the materialization
-        # boundary Catalyst collapses the projections and re-inlines the
-        # tokenization into the downstream explode lineage (measured 2.7×
-        # slower in round 8 — the same re-evaluation pathology the
-        # with_shingles docstring documents)
-        sh_new = ckpt(
-            with_shingles(new_docs.repartition(par, id_col), text_col)
-            .select(id_col, "shingles")
-        )
-        new_sigs = ckpt(with_minhash(sh_new, id_col, n_perm))
-    sig_new = new_sigs
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    # the shingle checkpoint is load-bearing even though the signature
+    # aggregation is its only consumer here: without the materialization
+    # boundary Catalyst collapses the projections and re-inlines the
+    # tokenization into the downstream explode lineage (measured 2.7×
+    # slower in round 8 — the same re-evaluation pathology the
+    # with_shingles docstring documents)
+    sh_new = ckpt(
+        with_shingles(docs.where(is_new).repartition(par, id_col), text_col)
+        .select(id_col, "shingles")
+    )
+    sig_new = ckpt(with_minhash(sh_new, id_col, n_perm))
     b_new = banded_signature_keys(sig_new, id_col, n_perm, n_bands)
     b_old = banded_signature_keys(old_sigs, id_col, n_perm, n_bands)
     a = b_new.alias("a")
@@ -281,9 +250,8 @@ def incremental_pairs(
         .union(cand.select(F.col("dst").alias(id_col)))
         .distinct()
     )
-    corpus = all_docs(touched) if callable(all_docs) else all_docs
     sh_cand = (
-        with_shingles(corpus.join(touched, id_col, "left_semi"), text_col)
+        with_shingles(docs.join(touched, id_col, "left_semi"), text_col)
         .select(id_col, "shingles")
     )
     va = sh_cand.select(F.col(id_col).alias("src"), F.col("shingles").alias("sh_a"))

@@ -174,8 +174,9 @@ def _kmeans_driver(
     return [(cid, [float(x) for x in v]) for cid, v in cents]
 
 
-# peak RSS rise per fit value: 76 B fitting 64 centroids to 40k 256-d vectors
-_FIT_BYTES_PER_VALUE = 8 * 10
+# peak RSS rise per fit value: 34 B fitting 64 centroids to 40k 256-d vectors
+# (38 B at 20k), the Arrow collect plus the fit's matrix copies
+_FIT_BYTES_PER_VALUE = 8 * 5
 
 
 def kmeans_centroids(
@@ -219,17 +220,21 @@ def kmeans_centroids(
             keep = _fit_sample_mask(keys, fit_sample_hex)
             keys, M = keys[keep], M[keep]
     else:
+        import pyarrow.compute as pc
+
         d = vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
         if fit_sample_hex is not None:
             d = d.where(fit_sample_pred(id_col, fit_sample_hex))
         # ONE limit-collect decides the branch AND feeds the driver fit (a
         # count → collect runs two jobs); a row is charged at EMBED_DIM values
         spark, row_bytes = vectors.sparkSession, spec.EMBED_DIM * _FIT_BYTES_PER_VALUE
-        head = d.limit(session.driver_budget(spark) // row_bytes + 1).collect()
-        if not session.driver_fits(spark, len(head) * row_bytes):
+        head = d.limit(session.driver_budget(spark) // row_bytes + 1).toArrow()
+        if not session.driver_fits(spark, head.num_rows * row_bytes):
             return _kmeans_spark(d, n_centroids, n_iter, id_col)
-        keys = np.array([r[id_col] for r in head], dtype=np.int64)
-        M = np.array([r["_v"] for r in head], dtype=np.float64)
+        keys = head[id_col].to_numpy().astype(np.int64)
+        flat = pc.list_flatten(head["_v"]).to_numpy()
+        M = flat.reshape(len(keys), flat.size // max(len(keys), 1))
+        del head  # to_numpy copied a multi-chunk column: free the chunks before the fit
     if not len(keys):
         raise ValueError(
             "empty k-means fit set — no vectors matched "

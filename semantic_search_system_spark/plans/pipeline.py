@@ -344,13 +344,14 @@ def topic_map_driver(phrase_list: list[str]) -> pd.DataFrame:
     for p in phrases:
         groups.setdefault(mapping.get(p, p), []).append(p)
     vec_of = dict(zip(phrases, vecs))
-    out = [
-        _label_components(
-            pd.DataFrame({"phrase_norm": g, "vec": [vec_of[p] for p in g]})
-        )
-        for g in groups.values()
-    ]
-    return pd.concat(out, ignore_index=True)
+    labels: list[tuple[str, str]] = []
+    for g in groups.values():
+        if len(g) == 1:  # a singleton labels itself: the argmax over one member
+            labels.append((g[0], g[0]))
+            continue
+        pdf = _label_components(pd.DataFrame({"phrase_norm": g, "vec": [vec_of[p] for p in g]}))
+        labels += zip(pdf["phrase_norm"], pdf["broad_topic"])
+    return pd.DataFrame(labels, columns=["phrase_norm", "broad_topic"])
 
 
 # peak RSS rise per parquet byte of the largest caller, on a 40k-doc enriched

@@ -796,6 +796,40 @@ def _cos_nan0_sql(a: str, b: str) -> str:
     return f"round(coalesce(nullif(list_cosine_similarity({a}, {b}), 'NaN'::DOUBLE), 0.0), 6)"
 
 
+def _lloyd_sql(fit: str, assigned: str, n_centroids: str) -> list[str]:
+    """The CTE chain that replays ``similarity.kmeans_centroids`` and the
+    index's assignment pass in DuckDB, over relations of ``(vec_id BIGINT,
+    v DOUBLE[])``: ``c0`` seeds the first ``n_centroids`` (a SQL expression)
+    rows of ``fit`` by vec_id; each of the ``DOC_IVF_ITER`` iterations
+    assigns ``fit`` to its nearest centroid (rounded cosine, ties to the
+    lowest id) and takes per-component ``list_avg`` means rounded to 6 dp,
+    which makes the fixpoint invariant to float summation order; ``af``
+    assigns every row of ``assigned`` to the last centroids,
+    ``c<DOC_IVF_ITER>``."""
+
+    def assign(cent: str, name: str, src: str) -> str:
+        return (
+            f"{name} AS (SELECT vec_id, min({{'nc': -{_cos_nan0_sql(f'{src}.v', 'c.cvec')}, "
+            f"'cid': c.centroid_id}}).cid AS centroid_id "
+            f"FROM {src}, {cent} c GROUP BY vec_id)"
+        )
+
+    ctes = [
+        f"c0 AS (SELECT vec_id AS centroid_id, v AS cvec FROM {fit} ORDER BY vec_id ASC "
+        f"LIMIT {n_centroids})"
+    ]
+    for t in range(DOC_IVF_ITER):
+        ctes.append(assign(f"c{t}", f"fa{t}", fit))
+        ctes.append(
+            f"c{t + 1} AS (SELECT centroid_id, list_transform(generate_series(1, len(vs[1])), "
+            f"j -> round(list_avg(list_transform(vs, v -> v[j])), 6)) AS cvec "
+            f"FROM (SELECT a.centroid_id, list({fit}.v) AS vs FROM fa{t} a "
+            f"JOIN {fit} USING (vec_id) GROUP BY a.centroid_id))"
+        )
+    ctes.append(assign(f"c{DOC_IVF_ITER}", "af", assigned))
+    return ctes
+
+
 def _doc_ivf_ann_sql(
     enriched_glob: str,
     qvec: list[float],
@@ -803,9 +837,8 @@ def _doc_ivf_ann_sql(
     fit_source_sql: str | None = None,
 ) -> str:
     """The served source's SQL twin: a CTE chain replaying the doc-IVF index
-    + probe in DuckDB (the entrypoints._ivf_oracle_sql pattern over the
-    enriched table), ending with ``ann(doc_id, ann_sim)`` = the ANN
-    top-semantic_k. The ``params`` CTE sizes the index by the
+    + probe in DuckDB (``_lloyd_sql`` over the enriched table), ending with
+    ``ann(doc_id, ann_sim)`` = the ANN top-semantic_k. The ``params`` CTE sizes the index by the
     ``doc_ivf_params`` rule over ``count(*)`` of the fit relation — the
     corpus the Spark build counted in its source manifest — so the replay
     is bit-identical at any corpus size and needs no built table to be
@@ -817,25 +850,8 @@ def _doc_ivf_ann_sql(
     final assignment pass covers the full (appended) ``enriched_glob``,
     exactly as the Spark index assigns new epochs to the frozen centroids.
     The default replays the no-append case (fit = full glob)."""
-    dim = len(qvec)
     qs = _qvec_sql(qvec)
     num, den = DOC_IVF_PROBE_FRAC
-
-    def assign(cent: str, name: str, src: str) -> str:
-        return (
-            f"{name} AS (SELECT vec_id, min({{'nc': -{_cos_nan0_sql(f'{src}.v', 'c.cvec')}, "
-            f"'cid': c.centroid_id}}).cid AS centroid_id "
-            f"FROM {src}, {cent} c GROUP BY vec_id)"
-        )
-
-    def update(a: str, name: str) -> str:
-        return (
-            f"{name} AS (SELECT centroid_id, list_transform(generate_series(1, {dim}), "
-            f"j -> round(list_avg(list_transform(vs, v -> v[j])), 6)) AS cvec "
-            f"FROM (SELECT a.centroid_id, list(fs.v) AS vs FROM {a} a "
-            f"JOIN fs USING (vec_id) GROUP BY a.centroid_id))"
-        )
-
     fit_rel = (
         "ev"
         if fit_source_sql is None
@@ -851,13 +867,8 @@ def _doc_ivf_ann_sql(
         f"SELECT greatest({DOC_IVF_MIN_CENTROIDS}, CAST(floor(sqrt(count(*))) AS BIGINT)) "
         f"AS n_centroids FROM {fit_rel})))",
         f"fs AS (SELECT * FROM {fit_rel} WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{DOC_IVF_FIT_HEX}')",
-        f"c0 AS (SELECT vec_id AS centroid_id, v AS cvec FROM fs ORDER BY vec_id ASC "
-        f"LIMIT (SELECT n_centroids FROM params))",
+        *_lloyd_sql("fs", "ev", "(SELECT n_centroids FROM params)"),
     ]
-    for t in range(DOC_IVF_ITER):
-        ctes.append(assign(f"c{t}", f"fa{t}", "fs"))
-        ctes.append(update(f"fa{t}", f"c{t + 1}"))
-    ctes.append(assign(f"c{DOC_IVF_ITER}", "af", "ev"))
     # signal-adaptive probe set (see similarity.ivf_topk_indexed): the top
     # n_probe centroids by rounded query cosine — widened to the TIERED
     # min(n_centroids, ESCALATE_FACTOR×n_probe) when the best cosine is

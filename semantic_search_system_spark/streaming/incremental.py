@@ -297,154 +297,6 @@ def triples_stream(
     return _start(spark, input_dir, checkpoint_dir, sink)
 
 
-DOCS_SCHEMA = "doc_id string, text string"
-
-
-def _prior_epoch_sigs(spark: SparkSession, cat, table: str, epoch_id: int) -> DataFrame:
-    """The signature store as of BEFORE this epoch: every committed
-    ``<epoch>_<bucket>`` partition whose epoch prefix differs from the
-    current one. Excluding the current epoch's keys makes a crash replay
-    (sigs committed, downstream not) read the same store the original
-    attempt saw — otherwise the epoch would pair against itself."""
-    if not cat.exists(table):
-        return spark.createDataFrame([], "doc_id string, minhash array<bigint>")
-    keys = [
-        k for k in cat.manifest(table)["partitions"]
-        if not k.startswith(f"{int(epoch_id)}_")
-    ]
-    if not keys:
-        return spark.createDataFrame([], "doc_id string, minhash array<bigint>")
-    return cat.read_buckets(spark, table, keys).select("doc_id", "minhash")
-
-
-def dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_root: str,
-    checkpoint_dir: str,
-    n_buckets: int = 8,
-    jaccard_threshold: float = 0.5,
-):
-    """Continuous dedup as a streaming operator: each micro-batch epoch is
-    shingled + minhashed ONCE, near-dup-paired against the ACCUMULATED
-    signature store (prior epochs only — doc-proportional work is bounded by
-    the epoch, the batch ``incremental_minhash_dedup`` contract), admission
-    verdicts are emitted (a doc enters iff it duplicates neither history nor
-    an earlier same-epoch doc), and the epoch's signatures are APPENDED to
-    the store under replay-idempotent epoch-scoped keys — the store grows
-    without rewrites, exactly how the doc-IVF assign table grows.
-
-    Tables (all epoch-scoped, compaction-compatible): ``docs_stream`` (the
-    accumulated raw corpus — consulted only for candidate-sized verify
-    re-shingles), ``minhash_sigs_stream`` (the store), ``dedup_pairs_stream``
-    (each near-dup pair lands exactly once, in the epoch of its later
-    member — the union over epochs equals the full-corpus pair set, pinned
-    by test_dedup_stream_matches_batch), ``admission_stream``.
-    Reference analog: the processed-flag work queue
-    (`ingest/pr_meta_store.py:55-63,107-139`) with the "processed" state
-    upgraded to queryable signature + verdict tables."""
-    from ..operators.dedup import incremental_pairs, with_minhash, with_shingles
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    cat = Catalog(out_root)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        stage = f"stream_epoch_{epoch_id} ckpt={_checkpoint_identity(checkpoint_dir)}"
-        epoch = batch_df.localCheckpoint(eager=True)
-
-        def epoched(df: DataFrame, key: str) -> DataFrame:
-            return with_bucket(df, key, n_buckets).withColumn(
-                "bucket", F.concat_ws("_", F.lit(int(epoch_id)), F.col("bucket"))
-            )
-
-        # 1. land the epoch's raw docs — docs_stream IS the accumulated
-        # corpus (committed first so this epoch's own texts are readable for
-        # the verify re-shingle below)
-        cat.commit_partitions(
-            epoched(epoch, "doc_id").select("bucket", "doc_id", "text"),
-            "docs_stream", stage=stage,
-        )
-        # 2. the epoch's signatures, computed ONCE (store append + LSH join)
-        sigs = with_minhash(
-            with_shingles(epoch).select("doc_id", "shingles")
-        ).localCheckpoint(eager=True)
-        # 3. near-dup pairs vs the store as of BEFORE this epoch. The verify
-        # re-shingle must NOT scan the whole accumulated corpus: candidate
-        # ids hash to a known set of doc_id buckets, so only the matching
-        # `<epoch>_<bucket>` partitions of docs_stream are read (the IVF
-        # probe pattern — one tiny driver job to learn the buckets, then a
-        # partition-pruned scan; at production n_buckets the pruning is
-        # proportional to the candidate set, not the corpus)
-        old_sigs = _prior_epoch_sigs(spark, cat, "minhash_sigs_stream", epoch_id)
-
-        def verify_docs(touched: DataFrame) -> DataFrame:
-            hit = {
-                str(r["b"])
-                for r in touched.select(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b")
-                ).distinct().collect()
-            }
-            keys = [
-                k for k in cat.manifest("docs_stream")["partitions"]
-                if k.rsplit("_", 1)[-1] in hit
-            ]
-            return cat.read_buckets(spark, "docs_stream", keys).select("doc_id", "text")
-
-        pairs = incremental_pairs(
-            epoch, verify_docs, old_sigs,
-            jaccard_threshold=jaccard_threshold, new_sigs=sigs,
-        ).localCheckpoint(eager=True)
-        cat.commit_partitions(
-            epoched(pairs, "src").select("bucket", "src", "dst", "jaccard"),
-            "dedup_pairs_stream", stage=stage,
-        )
-        # 4. admission verdicts: blocked by any prior-epoch partner (history
-        # always wins) or an earlier (smaller-id) same-epoch partner; epoch
-        # membership is decided by a broadcast join against the epoch's ids
-        # (the stream cannot assume id-derivable membership like the batch
-        # demo query — epochs are whatever arrived)
-        dirs = pairs.select(F.col("src").alias("d"), F.col("dst").alias("p")).unionByName(
-            pairs.select(F.col("dst").alias("d"), F.col("src").alias("p"))
-        )
-        ep_ids = F.broadcast(epoch.select(F.col("doc_id").alias("d")))
-        ep_partners = F.broadcast(
-            epoch.select(F.col("doc_id").alias("p")).withColumn("_p_epoch", F.lit(True))
-        )
-        blockers = (
-            dirs.join(ep_ids, "d", "left_semi")
-            .join(ep_partners, "p", "left")
-            .where(F.col("_p_epoch").isNull() | (F.col("p") < F.col("d")))
-            .groupBy(F.col("d").alias("doc_id"))
-            .agg(F.min("p").alias("dup_of"))
-        )
-        verdicts = (
-            epoch.select("doc_id")
-            .join(blockers, "doc_id", "left")
-            .select("doc_id", F.col("dup_of").isNull().alias("admitted"), "dup_of")
-        )
-        cat.commit_partitions(
-            epoched(verdicts, "doc_id").select("bucket", "doc_id", "admitted", "dup_of"),
-            "admission_stream", stage=stage,
-        )
-        # 5. append the epoch's signatures — LAST, so a crash replay of this
-        # epoch still reads a store without them (see _prior_epoch_sigs)
-        cat.commit_partitions(
-            epoched(sigs, "doc_id").select("bucket", "doc_id", "minhash"),
-            "minhash_sigs_stream", stage=stage,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def reconcile_relates(spark: SparkSession, out_root: str, n_buckets: int = 8) -> DataFrame:
     """BATCH half of the lambda split (round-6 VERDICT 'What's missing' #1):
     refresh the corpus-global phrase canonicalization over the ACCUMULATED

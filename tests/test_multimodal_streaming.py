@@ -1,46 +1,9 @@
-import numpy as np
 import pytest
 
 from semantic_search_system_spark.fixtures.interleave import interleaved_path
-from semantic_search_system_spark.operators.multimodal import (
-    decode_media,
-    extract_media_features,
-    media_spans,
-)
 from semantic_search_system_spark.streaming.incremental import enrich_stream
 
 from conftest import SF_SMALL, set_budget, with_job_count, write_edge_corpus
-
-
-def test_decode_stub_modes():
-    fake = decode_media("media://abc", "image", fake=True)
-    assert len(fake) == 64 and fake == decode_media("media://abc", "image", fake=True)
-    with pytest.raises(NotImplementedError):
-        decode_media("media://abc", "image", fake=False)
-
-
-def test_media_feature_extraction(spark):
-    inter = spark.read.parquet(interleaved_path(SF_SMALL))
-    media = media_spans(inter)
-    n_media = media.count()
-    assert n_media > 0
-    feats = extract_media_features(media)
-    rows = feats.collect()
-    # videos explode to 3 frames, image/audio to 1
-    by_kind = {}
-    for r in rows:
-        by_kind.setdefault((r["media_ref"], r["kind"]), []).append(r)
-    for (ref, kind), items in by_kind.items():
-        assert len(items) == (3 if kind == "video" else 1)
-        for r in items:
-            assert r["decode_ok"] is True
-            v = np.asarray(r["features"], dtype=np.float32)
-            assert v.shape == (32,)
-            assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-5
-    # deterministic across runs
-    again = {(r["media_ref"], r["frame"]): list(r["features"]) for r in feats.collect()}
-    first = {(r["media_ref"], r["frame"]): list(r["features"]) for r in rows}
-    assert again == first
 
 
 def test_enrich_stream_matches_batch(spark, tmp_root):
@@ -346,174 +309,6 @@ def test_streaming_batch_reconciliation_end_to_end(spark, tmp_root):
 
     assert node_set(nodes_s) == node_set(nodes_b)
     assert edge_set(edges_s) == edge_set(edges_b)
-
-
-def test_decoder_registry_plugin(spark):
-    """A registered decoder activates the real-codec path with no code change:
-    the registry snapshot rides the mapInPandas closure into the workers, so
-    fake=False decodes successfully instead of quarantining."""
-    from semantic_search_system_spark.operators.multimodal import (
-        _fake_features,
-        media_spans,
-        register_decoder,
-        unregister_decoder,
-    )
-
-    def plugin_decoder(media_ref: str) -> bytes:
-        # local def → cloudpickle ships it BY VALUE inside the closure (a real
-        # deployment would instead make its plugin module importable on
-        # executors via --py-files)
-        return b"plugin:" + media_ref.encode()
-
-    media = media_spans(spark.read.parquet(interleaved_path(SF_SMALL))).limit(5)
-    register_decoder("*", plugin_decoder)
-    try:
-        rows = extract_media_features(media, fake=False).collect()
-    finally:
-        unregister_decoder("*")
-    assert rows and all(r["decode_ok"] for r in rows)
-    r0 = rows[0]
-    expect = _fake_features(b"plugin:" + r0["media_ref"].encode(), r0["frame"])
-    assert np.allclose(r0["features"], expect)
-    # without the plugin, fake=False must quarantine (stub boundary intact)
-    bad = extract_media_features(media, fake=False).collect()
-    assert bad and not any(r["decode_ok"] for r in bad)
-
-
-def test_dedup_stream_matches_batch(spark, tmp_root):
-    """Continuous dedup as a stream (round 7): (a) the union of per-epoch
-    pair tables equals the full-corpus MinHash pair set — every near-dup
-    pair lands exactly once, in the epoch of its later member; (b) the
-    admission verdicts equal an independent derivation from the full pair
-    set + the ACTUAL epoch assignment (history wins, then smaller id within
-    an epoch); (c) the signature store accumulates every doc across epochs
-    without rewrites."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from semantic_search_system_spark import entrypoints as E
-    from semantic_search_system_spark.catalog import Catalog
-    from semantic_search_system_spark.operators.dedup import minhash_near_dups
-    from semantic_search_system_spark.streaming.incremental import dedup_stream
-
-    corpus = E._dup_corpus(spark, SF_SMALL).localCheckpoint(eager=True)
-    pdf = corpus.toPandas()
-    base = pdf[~pdf.doc_id.str.startswith("dup_")]
-    dups = pdf[pdf.doc_id.str.startswith("dup_")]
-    src = os.path.join(tmp_root, "docs_in")
-    os.makedirs(src)
-    # three files -> three epochs at maxFilesPerTrigger=1; the planted dups
-    # arrive last so their pairs are guaranteed cross-epoch
-    base.iloc[: len(base) // 2].to_parquet(os.path.join(src, "f0.parquet"), index=False)
-    base.iloc[len(base) // 2 :].to_parquet(os.path.join(src, "f1.parquet"), index=False)
-    dups.to_parquet(os.path.join(src, "f2.parquet"), index=False)
-
-    out = os.path.join(tmp_root, "out")
-    q = dedup_stream(spark, src, out, os.path.join(tmp_root, "ckpt"))
-    q.awaitTermination(300)
-    cat = Catalog(out)
-    epochs = {e["stage"] for e in cat.manifest("minhash_sigs_stream")["snapshots"]}
-    assert len(epochs) >= 2, f"expected multiple epochs, got {epochs}"
-
-    streamed_pairs = {
-        (r["src"], r["dst"], r["jaccard"])
-        for r in cat.read(spark, "dedup_pairs_stream")
-        .select("src", "dst", "jaccard").collect()
-    }
-    full_pairs = {
-        (r["src"], r["dst"], r["jaccard"])
-        for r in minhash_near_dups(corpus, jaccard_threshold=0.5).collect()
-    }
-    assert full_pairs and streamed_pairs == full_pairs
-
-    epoch_of = {
-        r["doc_id"]: int(r["bucket"].split("_")[0])
-        for r in cat.read(spark, "docs_stream").select("doc_id", "bucket").collect()
-    }
-    assert len(epoch_of) == corpus.count()
-    # the premise: at least one pair spans epochs
-    assert any(epoch_of[s] != epoch_of[d] for s, d, _ in full_pairs)
-
-    partners: dict[str, set[str]] = {}
-    for s, d, _ in full_pairs:
-        partners.setdefault(s, set()).add(d)
-        partners.setdefault(d, set()).add(s)
-    expected = {}
-    for doc, e in epoch_of.items():
-        blk = [
-            p for p in partners.get(doc, ())
-            if epoch_of[p] < e or (epoch_of[p] == e and p < doc)
-        ]
-        expected[doc] = (not blk, min(blk) if blk else None)
-    got = {
-        r["doc_id"]: (r["admitted"], r["dup_of"])
-        for r in cat.read(spark, "admission_stream").collect()
-    }
-    assert got == expected
-    assert cat.read(spark, "minhash_sigs_stream").count() == len(epoch_of)
-
-
-def test_dedup_stream_resumes_after_compaction(spark, tmp_root):
-    """The dedup stream's tables are compaction-compatible: after folding
-    the epoch-scoped partitions into canonical c<gen>_<bucket> buckets, a
-    resumed stream (same checkpoint) processes a NEW epoch against the
-    compacted store — prior-epoch signature reads treat compacted keys as
-    history (they carry no current-epoch prefix), pairs against the new
-    docs land, and nothing is doubled or lost."""
-    import os
-
-    import pandas as pd
-
-    from semantic_search_system_spark import entrypoints as E
-    from semantic_search_system_spark.catalog import Catalog
-    from semantic_search_system_spark.operators.dedup import minhash_near_dups
-    from semantic_search_system_spark.streaming.incremental import dedup_stream
-
-    corpus = E._dup_corpus(spark, SF_SMALL).localCheckpoint(eager=True)
-    pdf = corpus.toPandas()
-    base = pdf[~pdf.doc_id.str.startswith("dup_")]
-    dups = pdf[pdf.doc_id.str.startswith("dup_")]
-    src = os.path.join(tmp_root, "docs_in")
-    os.makedirs(src)
-    base.to_parquet(os.path.join(src, "f0.parquet"), index=False)
-    out = os.path.join(tmp_root, "out")
-    ckpt = os.path.join(tmp_root, "ckpt")
-    dedup_stream(spark, src, out, ckpt).awaitTermination(300)
-    cat = Catalog(out)
-    n_docs_before = cat.read(spark, "docs_stream").count()
-    for tbl in ("docs_stream", "minhash_sigs_stream", "admission_stream"):
-        cat.compact_stream_epochs(spark, tbl)
-    assert all(
-        k.startswith("c") for k in cat.manifest("minhash_sigs_stream")["partitions"]
-    )
-    # the dup docs arrive AFTER compaction, on the same checkpoint
-    dups.to_parquet(os.path.join(src, "f1.parquet"), index=False)
-    dedup_stream(spark, src, out, ckpt).awaitTermination(300)
-    assert cat.read(spark, "docs_stream").count() == len(pdf)
-    assert cat.read(spark, "minhash_sigs_stream").count() == len(pdf)
-    assert (
-        cat.read(spark, "minhash_sigs_stream").select("doc_id").distinct().count()
-        == len(pdf)
-    )
-    streamed_pairs = {
-        (r["src"], r["dst"], r["jaccard"])
-        for r in cat.read(spark, "dedup_pairs_stream")
-        .select("src", "dst", "jaccard").collect()
-    }
-    full_pairs = {
-        (r["src"], r["dst"], r["jaccard"])
-        for r in minhash_near_dups(corpus, jaccard_threshold=0.5).collect()
-    }
-    assert full_pairs and streamed_pairs == full_pairs
-    # every planted dup doc is correctly refused against compacted history
-    got = {
-        r["doc_id"]: r["admitted"]
-        for r in cat.read(spark, "admission_stream").collect()
-    }
-    assert len(got) == n_docs_before + len(dups)
-    exact_dups = {f"dup_{i}" for i in range(50)} & set(dups.doc_id)
-    assert exact_dups and not any(got[d] for d in exact_dups)
 
 
 # ------------------------------------------------- the stream sinks' two branches

@@ -131,24 +131,6 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, b
     assert len(cat.manifest("failed_rows")["snapshots"]) == snaps
 
 
-def test_failed_media_quarantine_shape(spark):
-    """decode_ok=false media rows map into the failed_rows shape (real-mode
-    decode raises for every row in this container — all quarantined)."""
-    from semantic_search_system_spark.operators.multimodal import (
-        extract_media_features,
-        failed_media_rows,
-        media_spans,
-    )
-
-    inter = spark.read.parquet(interleaved_path(SF_SMALL))
-    media = media_spans(inter).limit(20)
-    feats = extract_media_features(media, fake=False)  # codec stub: all fail
-    q = failed_media_rows(feats)
-    rows = q.collect()
-    assert len(rows) == 20
-    assert all(r["stage"] == "media_decode" and r["reason"].startswith("decode_failed:") for r in rows)
-
-
 def test_determinism_two_full_runs(spark, tmp_path_factory):
     r1 = str(tmp_path_factory.mktemp("det1"))
     r2 = str(tmp_path_factory.mktemp("det2"))
