@@ -14,10 +14,11 @@ emulates the subset of Iceberg semantics the north rule requires:
   partitions absent from the manifest — re-running a completed pipeline is a
   no-op and produces byte-identical tables (north_star: "resumes mid-run
   without recomputing completed partitions");
-- input identity, the one staleness rule every derived table and driver memo
-  keys on: ``Catalog.lineage`` for a Catalog table (its manifest snapshot
-  ids) and ``file_lineage`` for raw files (name, size and mtime). Neither
-  reads data or submits a Spark job.
+- one staleness rule, ``Catalog.reuse(table, stage)``: a derived table is
+  committed under a stage ending ``fp=<identity of its inputs>`` —
+  ``file_lineage`` of files (a frame's, via ``frame_lineage``) or
+  ``Catalog.lineage`` of a table, neither a scan nor a Spark job — and is
+  rebuilt under any other stage, so its consumers see new files in turn.
 
 Replaces the reference's ad-hoc work-queue protocol — the ``processed``
 boolean flag flipped after bulk writes (ingest/pr_meta_store.py:55-139) and the
@@ -35,7 +36,10 @@ import re
 import shutil
 import time
 import uuid
+import warnings
+import weakref
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pyarrow.dataset as pads
@@ -58,19 +62,42 @@ BUCKET_COL = "bucket"
 COMPACT_COMMIT_BYTES = 64 * 1024 * 1024
 
 
-def file_lineage(path: str) -> str:
-    """Input identity of a raw parquet source — one file, or a directory of
-    ``.parquet`` files — from file metadata alone: the sorted
-    basename:size:mtime_ns of each file. No scan, no Spark job; the mtime
-    catches a rewrite that keeps every size, so a copy of the same bytes
-    with a new mtime (a fresh checkout of the source) reads as changed."""
-    paths = (
-        [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-        if os.path.isdir(path)
-        else [path]
-    )
-    stats = sorted((os.path.basename(f), os.stat(f)) for f in paths)
-    return ";".join(f"{n}:{st.st_size}:{st.st_mtime_ns}" for n, st in stats)
+def file_lineage(paths) -> str:
+    """Input identity of files (a path, or a list of paths or ``file:`` URIs;
+    another scheme counts by name) from their metadata alone: md5 over the
+    sorted full path:size:mtime_ns of each, like ``Catalog.lineage``. The
+    mtime catches a same-size rewrite, or a fresh checkout of the source."""
+    ident = []
+    for p in sorted({paths} if isinstance(paths, str) else set(paths)):
+        path = local_path(p)
+        st = os.stat(path) if path else None
+        ident.append(f"{path}:{st.st_size}:{st.st_mtime_ns}" if st else p)
+    return hashlib.md5(";".join(ident).encode()).hexdigest()[:16]
+
+
+def local_path(uri: str) -> str | None:
+    """The path of a plain path or ``file:`` URI; None for another scheme."""
+    u = urlsplit(uri)
+    if not u.scheme:
+        return uri
+    return unquote(u.path) if u.scheme == "file" and not u.netloc else None
+
+
+# frame -> its inputFiles(), fixed when the frame is created: one JVM call
+# per frame serves both its fingerprint and its driver read
+_INPUT_FILES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def input_files(df: DataFrame) -> list[str]:
+    if df not in _INPUT_FILES:
+        _INPUT_FILES[df] = df.inputFiles()
+    return _INPUT_FILES[df]
+
+
+def frame_lineage(*dfs: DataFrame) -> str:
+    """``file_lineage`` of the files the frames scan: a frame from another
+    root, a filtered frame or a union is keyed on exactly what it reads."""
+    return file_lineage([f for df in dfs for f in input_files(df)])
 
 
 # process-wide memo of parsed driver-side table reads (Catalog.read_arrow_memo):
@@ -291,6 +318,21 @@ class Catalog:
             f"{pid}:{e['snapshot_id']}:{e['rows_written']}" for pid, e in sorted(parts.items())
         )
         return hashlib.md5(ident.encode()).hexdigest()[:16]
+
+    def reuse(self, table: str, stage: str) -> bool:
+        """The staleness rule: True when every committed partition of
+        ``table`` (every snapshot, for a table with no rows) was written
+        under ``stage``. Otherwise a table that exists is deleted with one
+        warning naming both stages, and False returned."""
+        if not self.exists(table):
+            return False
+        man = self.manifest(table)
+        stages = {e["stage"] for e in man["partitions"].values() or man["snapshots"]}
+        if stages == {stage}:
+            return True
+        warnings.warn(f"rebuilding table '{table}': written under {sorted(stages)}, now '{stage}'")
+        shutil.rmtree(self.path(table))
+        return False
 
     # ------------------------------------------------------------- reads
     def exists(self, table: str) -> bool:

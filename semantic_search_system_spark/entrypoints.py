@@ -889,20 +889,15 @@ def ensure_minhash_store(
     """Materialize (idempotently) the MinHash signature store for the
     accumulated (non-new) corpus — ``doc_id, minhash`` (n_perm longs per
     doc, the ONLY state continuous dedup needs; shingle sets are never
-    stored). The stage string carries the corpus fingerprint so a changed
-    corpus triggers an automatic rebuild (the entity_freq_topk pattern);
-    in a streaming deployment new epochs' signatures are APPENDED via the
-    same epoch-scoped ``commit_partitions`` keys the doc-IVF assign path
-    uses, so the store grows without rewrites. ``fingerprint``: the
-    corpus's identity by the catalog rule (``catalog.file_lineage`` of the
-    source files, ``Catalog.lineage`` of a source table)."""
+    stored). The stage string carries ``fingerprint``, the corpus's
+    identity by the catalog rule (``catalog.file_lineage`` of the source
+    files, ``Catalog.lineage`` of a source table), so a changed corpus
+    rebuilds it (``Catalog.reuse``)."""
     from .operators.dedup import with_minhash, with_shingles
 
     stage = f"minhash_store v{spec.SPEC_VERSION} n_perm=16 split=md5p5 fp={fingerprint}"
-    if cat.exists(MINHASH_STORE_TABLE):
-        prior = {m["stage"] for m in cat.metrics(MINHASH_STORE_TABLE)}
-        if not prior or prior == {stage}:
-            return
+    if cat.reuse(MINHASH_STORE_TABLE, stage):
+        return
     old = corpus.where(~_incr_is_new(F.col("doc_id")))
     par = spark.sparkContext.defaultParallelism
     sigs = with_minhash(
@@ -1180,19 +1175,17 @@ def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments persisted through the Catalog partitioned by centroid id
     (built once, reused across queries — the probe reads only the 2 matching
     bucket directories of 8). The index is keyed on the file lineage of
-    ``embeddings.parquet``: when the file moved, it is dropped and refit,
-    as ensure_doc_ivf refits a rewritten corpus."""
+    ``embeddings.parquet``: when the file changed, build_ivf_index refits
+    it."""
     import pyarrow.dataset as pads
 
     from .catalog import Catalog, file_lineage
-    from .operators.similarity import build_ivf_index, drop_ivf_index, ivf_topk_indexed
+    from .operators.similarity import build_ivf_index, ivf_topk_indexed
     from .plans.search import DOC_IVF_ITER
 
     path = os.path.join(sf_dir, "embeddings.parquet")
     lineage = file_lineage(path)
     cat = Catalog(out_root(sf_dir))
-    if any(not m["stage"].endswith(f" fp={lineage}") for m in cat.metrics("ivf_centroids")):
-        drop_ivf_index(cat, "ivf_centroids", "ivf_assign")
     build_ivf_index(
         spark, load(spark, sf_dir, "embeddings"), cat, lineage,
         n_centroids=8, n_iter=DOC_IVF_ITER, fit_sample_hex=IVF_FIT_SAMPLE_HEX,

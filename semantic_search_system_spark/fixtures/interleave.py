@@ -21,6 +21,7 @@ oracle can read the exact same rows via ``read_parquet``.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
@@ -92,17 +93,25 @@ def spans_for_text(doc_id: str, text: str, hot: bool) -> list[dict]:
 def build_interleaved(sf_dir: str, out_dir: str | None = None, force: bool = False) -> str:
     """Materialize the interleaved table for one scale factor; returns parquet path.
 
-    Deterministic pure function of ``documents.parquet`` — safe to regenerate;
-    idempotent (skips when present unless ``force``).
+    Deterministic pure function of ``documents.parquet``, rebuilt when its
+    ``file_lineage`` differs from the one in the ``_documents.lineage``
+    sidecar beside the output (outside the parquet, so its bytes stay a
+    function of the documents alone), or when ``force``.
     """
+    from ..catalog import file_lineage
+
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     out_dir = out_dir or os.path.join(REPO_DATA, "interleaved", sf_name)
     out_path = os.path.join(out_dir, "documents_interleaved.parquet")
-    if os.path.exists(out_path) and not force:
-        return out_path
+    src = os.path.join(sf_dir, "documents.parquet")
+    # '_'-prefixed: Spark and pyarrow skip it when they list the directory
+    lineage, sidecar = file_lineage(src), Path(out_dir, "_documents.lineage")
+    if not force and os.path.exists(out_path) and sidecar.is_file():
+        if sidecar.read_text() == lineage:
+            return out_path
     os.makedirs(out_dir, exist_ok=True)
 
-    docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
+    docs = pd.read_parquet(src, columns=["doc_id", "text"])
     docs = docs.sort_values("doc_id")
     doc_ids = []
     all_spans = []
@@ -120,9 +129,10 @@ def build_interleaved(sf_dir: str, out_dir: str | None = None, force: bool = Fal
     # single-file corpus
     pq.write_table(table, tmp, row_group_size=512)
     os.replace(tmp, out_path)  # atomic publish → idempotent under concurrent builds
+    sidecar.write_text(lineage)  # a torn write reads as stale: the next call rebuilds
     return out_path
 
 
 def interleaved_path(sf_dir: str) -> str:
-    """Path to the interleaved parquet for a testdata sf dir (building if needed)."""
+    """Path to the interleaved parquet for a testdata sf dir (built if missing or stale)."""
     return build_interleaved(sf_dir)

@@ -76,14 +76,15 @@ def _unit_rows(M: np.ndarray) -> np.ndarray:
     return M / np.where(n == 0, 1.0, n)[:, None]
 
 
-def nearest_centroid(M: np.ndarray, cids: np.ndarray, C: np.ndarray) -> np.ndarray:
+def nearest_centroid(U: np.ndarray, cids: np.ndarray, C: np.ndarray) -> np.ndarray:
     """The nearest-centroid kernel behind every assignment (the Arrow UDF,
     each driver Lloyd iteration, the driver-held index build/append): the
     centroid id (``cids``, ascending, rows of ``C``) of the highest cosine
-    for each row of ``M``, cosines rounded half-away to 6 dp so the choice
-    is engine-agnostic; ties break to the LOWEST centroid id (np.argmax
-    takes the first maximum — the SQL oracle's min(-csim, centroid_id))."""
-    sims = _round_half_away(_unit_rows(M) @ _unit_rows(C).T, 6)
+    for each ``_unit_rows`` row of ``U`` (a Lloyd fit scales its rows once),
+    cosines rounded half-away to 6 dp so the choice is engine-agnostic; ties
+    break to the LOWEST centroid id (np.argmax takes the first maximum — the
+    SQL oracle's min(-csim, centroid_id))."""
+    sims = _round_half_away(U @ _unit_rows(C).T, 6)
     return cids[np.argmax(sims, axis=1)]
 
 
@@ -103,7 +104,7 @@ def _nearest_centroid_udf(cids: np.ndarray, C: np.ndarray):
     @F.pandas_udf("long")
     def assign(vs: pd.Series) -> pd.Series:
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(nearest_centroid(M, cids, C))
+        return pd.Series(nearest_centroid(_unit_rows(M), cids, C))
 
     return assign
 
@@ -164,9 +165,10 @@ def _kmeans_driver(
     cents: list[tuple[int, np.ndarray]] = [
         (int(ids[i]), M[i]) for i in range(min(n_centroids, len(ids)))
     ]
+    U = _unit_rows(M)  # the rows never change: scale them once per fit
     for _ in range(n_iter):
         cids = np.array([c for c, _ in cents], dtype=np.int64)  # ascending
-        lab = nearest_centroid(M, cids, np.stack([v for _, v in cents]))
+        lab = nearest_centroid(U, cids, np.stack([v for _, v in cents]))
         cents = [
             (int(cid), _round_half_away(M[lab == cid].mean(axis=0), 6))
             for cid in np.unique(lab)  # sorted; empty clusters drop out
@@ -307,7 +309,7 @@ def _commit_assignments(
     batch = batch if batch > 0 else max(n, 1)  # zero or negative: no limit
     lab = np.zeros(n, dtype=np.int64)
     for lo in range(0, n, batch):
-        lab[lo : lo + batch] = nearest_centroid(M[lo : lo + batch], cids, C)
+        lab[lo : lo + batch] = nearest_centroid(_unit_rows(M[lo : lo + batch]), cids, C)
     vecs = pa.ListArray.from_arrays(
         pa.array(np.arange(n + 1, dtype=np.int32) * dim), pa.array(M.reshape(-1))
     )
@@ -343,64 +345,36 @@ def build_ivf_index(
     """Materialize the IVF index through the Catalog: ``ivf_centroids`` (tiny)
     and ``ivf_assign`` PARTITIONED BY centroid id — probes read only matching
     ``bucket=<centroid>`` directories. Idempotent (checkpoint-resume): an
-    existing index is never rebuilt, and a crash between the two commits
-    resumes by READING BACK the committed centroids (never recomputing them,
-    which could produce assignments inconsistent with the stored table). An
-    existing index built with different parameters OR a different input
-    raises instead of being silently reused.
+    index built under the same stage is never rebuilt, and a crash between
+    the two commits resumes by READING BACK the committed centroids (never
+    recomputing them, which could produce assignments inconsistent with the
+    stored table). An index built with other parameters or from another
+    ``lineage`` (the input's identity: ``Catalog.lineage`` of a source
+    table, ``catalog.file_lineage`` of raw files) is refit, assignments
+    and all (``Catalog.reuse``); reusing one submits no Spark job.
 
     ``vectors``: a DataFrame (distributed branch) or driver-held ``(keys
     int64[n], vecs float64[n, d])`` (driver branch: fit, assignment and
-    both commits on the driver, zero Spark jobs). The stage string, the
-    guards and the resume read-back are the same for both.
-
-    ``lineage``: the input's identity by the catalog rule —
-    ``Catalog.lineage`` of a source table, ``catalog.file_lineage`` of raw
-    files. It lands in the stage string, so the every-call staleness check
-    is a string compare: an existing index reused under the same stage
-    submits no Spark job."""
+    both commits on the driver, zero Spark jobs). The stage string and the
+    resume read-back are the same for both."""
     stage = (
         f"ivf_build k={n_centroids} iter={n_iter} "
         f"sample={fit_sample_hex or 'full'} fp={lineage}"
     )
-
-    def _sweep_orphan_assign() -> None:
-        # An assign table whose ivf_build stage differs from THIS build's is
-        # the surviving half of a deleted/refit index generation (a crash
-        # between the two rmtrees of a drift refit): keeping it would pair
-        # fresh centroids with a stale corpus's assignments — silently wrong
-        # ANN results with no error. The assignments are derived data, so
-        # replace them (the final commit below recomputes them).
-        if not cat.exists(assign_table):
-            return
-        base = {
-            m["stage"] for m in cat.metrics(assign_table)
-            if m["stage"].startswith("ivf_build")
-        }
-        if base != {stage}:
-            import shutil
-
-            shutil.rmtree(cat.path(assign_table))
-
-    if cat.exists(cent_table):
-        prior = {m["stage"] for m in cat.metrics(cent_table)}
-        if prior and prior != {stage}:
-            raise ValueError(
-                f"out_root holds an IVF index built with {sorted(prior)}; requested "
-                f"'{stage}' — use a fresh out_root or delete {cent_table}/{assign_table}"
-            )
-        _sweep_orphan_assign()
+    if cat.reuse(cent_table, stage):
         if cat.exists(assign_table):
             return
         tb = cat.read_arrow(cent_table)
         cent_rows = list(zip(tb["centroid_id"].to_pylist(), tb["cvec"].to_pylist()))
     else:
+        # assignments to centroids that are gone or stale would serve wrong
+        # ANN results with no error: the final commit below recomputes them
+        drop_ivf_index(cat, cent_table, assign_table)
         cent_rows = kmeans_centroids(
             vectors, n_centroids, n_iter, id_col, vec_col, fit_sample_hex
         )
         from pyspark.sql import types as T
 
-        _sweep_orphan_assign()
         # n_centroids rows living on the driver — committed from the driver
         # (catalog.commit_partitions_local): zero Spark jobs for the write
         cat.commit_partitions_local(
@@ -415,11 +389,10 @@ def build_ivf_index(
             cent_table,
             stage=stage,
         )
-    if not cat.exists(assign_table):
-        _commit_assignments(
-            spark, cat, vectors, *_centroid_arrays(cent_rows), "",
-            id_col, vec_col, assign_table, stage,
-        )
+    _commit_assignments(  # the assign table is missing or dropped by now
+        spark, cat, vectors, *_centroid_arrays(cent_rows), "",
+        id_col, vec_col, assign_table, stage,
+    )
 
 
 def append_ivf_assignments(
@@ -435,11 +408,10 @@ def append_ivf_assignments(
 ) -> None:
     """Assign NEW vectors to the FROZEN centroids of an existing index and
     commit them as ``a<append_tag>_<centroid>`` partitions beside the base
-    ``<centroid>`` ones — the streamed-epoch append path (round-6 VERDICT
-    #4): at 10^12 docs a full refit per appended epoch is not a plan, and
-    raising on lineage change bricks every ANN query until a manual rebuild.
-    Centroids are NOT moved (the recall contract is about the probe fraction,
-    not centroid optimality; drift beyond spec.DOC_IVF_DRIFT_REFIT_FRAC
+    ``<centroid>`` ones — the streamed-epoch append path: at 10^12 docs a
+    full refit per appended epoch is not a plan. Centroids are NOT moved
+    (the recall contract is about the probe fraction, not centroid
+    optimality; drift beyond spec.DOC_IVF_DRIFT_REFIT_FRAC
     triggers a refit upstream — plans/search.ensure_doc_ivf). The tag must be
     deterministic in the appended input (e.g. a hash of the appended
     partition keys) so a replayed append hits the same partition keys and is

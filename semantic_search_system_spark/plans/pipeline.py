@@ -30,7 +30,6 @@ Stages (each a Catalog table under <out_root>):
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pandas as pd
@@ -40,6 +39,7 @@ from pyspark.sql import types as T
 
 from .. import session, spec
 from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucket
+from ..catalog import frame_lineage, input_files, local_path
 from ..fixtures.interleave import interleaved_path
 from ..operators.components import connected_components
 from ..operators.embedding import embed_udf
@@ -246,27 +246,21 @@ def enrich_docs_arrow(docs, batch: int):
 _ENRICH_BYTES_PER_FILE_BYTE = 36
 
 
-def _enrich_driver(
-    spark: SparkSession, cat: Catalog, source: DataFrame, pending: list[int], n_buckets: int
-) -> bool:
-    """Driver twin of the Spark branch of build_enriched: commits the
-    ``pending`` buckets of ``failed_rows`` and ``enriched`` from pyarrow
-    (``enrich_docs_arrow``) and returns True, or returns False (committing
-    nothing) when ``source`` fails ``driver_read``'s guards (with the enrich
-    factor) or has a doc_id that is not a string (Spark hashes a long
-    differently)."""
+def _enrich_driver(spark: SparkSession, source: DataFrame, pending: list[int], n_buckets: int):
+    """Driver twin of the Spark branch of build_enriched: the (failed_rows,
+    enriched) pyarrow tables (``enrich_docs_arrow``) of the ``pending``
+    buckets, or None when ``source`` fails ``driver_read``'s guards (with
+    the enrich factor) or has a doc_id that is not a string (Spark hashes a
+    long differently)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     tb = driver_read(source, ["doc_id", "spans"], per_byte=_ENRICH_BYTES_PER_FILE_BYTE)
     if tb is None or not pa.types.is_string(tb.schema.field("doc_id").type):
-        return False
+        return None
     bucket = pa.array(arrow_bucket(tb["doc_id"], n_buckets))
     tb = tb.append_column(BUCKET_COL, bucket).filter(pc.is_in(bucket, pa.array(pending, pa.int32())))
-    failed, enriched = enrich_docs_arrow(tb, int(spark.conf.get(ARROW_BATCH)))
-    cat.commit_partitions_local(failed, _FAILED_ROWS_SCHEMA, "failed_rows", stage="quarantine")
-    cat.commit_partitions_local(enriched, _ENRICHED_SCHEMA, "enriched", stage="enrich")
-    return True
+    return enrich_docs_arrow(tb, int(spark.conf.get(ARROW_BATCH)))
 
 
 def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: int = N_BUCKETS) -> DataFrame:
@@ -279,15 +273,23 @@ def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: in
     the fused kernel in Arrow-batch-sized calls — and committed from the
     driver (zero Spark jobs; ``_enrich_driver``). Past the budget the Spark
     plan runs the same kernel as a UDF. Both branches write the same rows,
-    buckets and recorded schemas, so a resume may mix them."""
+    buckets and recorded schemas, so a resume may mix them. A changed
+    source rebuilds both tables (``Catalog.reuse``)."""
+    source = read_interleaved(spark, sf_dir)
+    fp = frame_lineage(source)
+    quarantine, enrich = f"quarantine fp={fp}", f"enrich fp={fp}"
+    cat.reuse("failed_rows", quarantine)
+    cat.reuse("enriched", enrich)
     pending = cat.pending_buckets("enriched", n_buckets)
-    if pending:
-        source = read_interleaved(spark, sf_dir)
-        if not _enrich_driver(spark, cat, source, pending, n_buckets):
-            docs = with_bucket(source, "doc_id", n_buckets).where(F.col(BUCKET_COL).isin(pending))
-            bad, enriched = _enrich_frames(spark, docs)
-            cat.commit_partitions(bad, "failed_rows", stage="quarantine")
-            cat.commit_partitions(enriched, "enriched", stage="enrich")
+    local = _enrich_driver(spark, source, pending, n_buckets) if pending else None
+    if local is not None:
+        cat.commit_partitions_local(local[0], _FAILED_ROWS_SCHEMA, "failed_rows", stage=quarantine)
+        cat.commit_partitions_local(local[1], _ENRICHED_SCHEMA, "enriched", stage=enrich)
+    elif pending:
+        docs = with_bucket(source, "doc_id", n_buckets).where(F.col(BUCKET_COL).isin(pending))
+        bad, enriched = _enrich_frames(spark, docs)
+        cat.commit_partitions(bad, "failed_rows", stage=quarantine)
+        cat.commit_partitions(enriched, "enriched", stage=enrich)
     return cat.read(spark, "enriched")
 
 
@@ -374,7 +376,7 @@ def driver_read(df: DataFrame, columns: list[str], buckets=None, per_byte=_READ_
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
             return None
-        files = df.inputFiles()
+        files = input_files(df)
         keyed = BUCKET_COL in columns or buckets is not None
         key_type = _arrow_type(df.schema[BUCKET_COL].dataType) if keyed else None
     except Exception:  # noqa: BLE001 — any introspection failure → fallback
@@ -397,12 +399,9 @@ def driver_read_files(
     each file's ``bucket=K`` directory (None when the files do not sit in
     such directories of one table); needed to read that column or to keep
     only the partitions ``buckets``."""
-    paths = []
-    for uri in uris:
-        u = urlsplit(uri)
-        if u.scheme != "file" or u.netloc:
-            return None
-        paths.append(unquote(u.path))
+    paths = [local_path(uri) for uri in uris]
+    if None in paths:
+        return None
     try:
         nbytes = sum(map(os.path.getsize, paths))
     except OSError:
@@ -461,7 +460,8 @@ def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> D
     phrases (read by ``driver_read``, else one capped distinct-collect) fit
     ``session.driver_fits``; the distributed plan below remains the fallback
     for beyond-vocabulary scales."""
-    if not cat.exists("topic_map"):
+    stage = f"canonicalize fp={frame_lineage(enriched)}"
+    if not cat.reuse("topic_map", stage):
         texts = _vocab_texts_driver(enriched, "topics")
         vocab = None if texts is None else texts.unique().to_pylist()
         if vocab is None or not driver_fits(spark, len(vocab) * _PHRASE_BYTES):
@@ -488,7 +488,7 @@ def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> D
                     ]
                 ),
                 "topic_map",
-                stage="canonicalize",
+                stage=stage,
             )
             return cat.read(spark, "topic_map")
         phrases = distinct_phrases.withColumn("embedding", embed_udf(F.col("phrase_norm")))
@@ -504,7 +504,7 @@ def build_topic_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> D
             .applyInPandas(_label_components, schema="phrase_norm string, broad_topic string")
         )
         cat.commit_partitions(
-            with_bucket(labeled, "phrase_norm", 1), "topic_map", stage="canonicalize"
+            with_bucket(labeled, "phrase_norm", 1), "topic_map", stage=stage
         )
     return cat.read(spark, "topic_map")
 
@@ -667,15 +667,17 @@ def build_triples(
     a frame that is not a bare relation — the Spark plan below runs. Both
     branches write the same rows, buckets and recorded schema, so a resume
     may mix them."""
+    stage = f"triples fp={frame_lineage(enriched, topic_map)}"
+    cat.reuse("triples", stage)
     pending = cat.pending_buckets("triples", n_buckets)
     if pending:
         local = _triples_driver(enriched, topic_map, pending)
         if local is not None:
-            cat.commit_partitions_local(local, _TRIPLES_SCHEMA, "triples", stage="triples")
+            cat.commit_partitions_local(local, _TRIPLES_SCHEMA, "triples", stage=stage)
             return cat.read(spark, "triples")
         part = enriched.where(F.col(BUCKET_COL).isin(pending))
         triples = mention_topic_triples(part).unionByName(relates_triples(part, topic_map))
-        cat.commit_partitions(triples, "triples", stage="triples")
+        cat.commit_partitions(triples, "triples", stage=stage)
     return cat.read(spark, "triples")
 
 
@@ -705,20 +707,21 @@ _EDGES_SCHEMA = T.StructType(
 
 
 def _graph_driver(
-    cat: Catalog, enriched: DataFrame, triples: DataFrame, want_nodes: bool, want_edges: bool
+    cat: Catalog, enriched: DataFrame, triples: DataFrame, stages: dict[str, str]
 ) -> bool:
-    """Driver twin of build_graph's two Spark plans: commits the wanted
-    tables from pyarrow and returns True, or returns False (committing
-    nothing) when an input they read fails ``driver_read``'s guards. Same
-    rows and buckets: Document nodes from ``enriched``; Entity (MENTIONS
-    object) and BroadTopic (RELATES subject) nodes as the distinct
-    (node_id, kind) pairs of the triples with null url, title and
-    media_refs; edges a renamed projection of the triples with weight 1.0;
-    nodes bucketed by node_id and edges by src through ``arrow_bucket``."""
+    """Driver twin of build_graph's two Spark plans: commits each table of
+    ``stages`` under its stage from pyarrow and returns True, or returns
+    False (committing nothing) when an input they read fails
+    ``driver_read``'s guards. Same rows and buckets: Document nodes from
+    ``enriched``; Entity (MENTIONS object) and BroadTopic (RELATES subject)
+    nodes as the distinct (node_id, kind) pairs of the triples with null
+    url, title and media_refs; edges a renamed projection of the triples
+    with weight 1.0; nodes by node_id and edges by src (``arrow_bucket``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     tri = driver_read(triples, ["subj", "pred", "obj"])
+    want_nodes = "nodes" in stages
     docs = driver_read(enriched, ["doc_id", "url", "title", "media_refs"]) if want_nodes else None
     if tri is None or (want_nodes and docs is None):
         return False
@@ -750,8 +753,8 @@ def _graph_driver(
             [doc_nodes, refs.append_column("name", refs["node_id"])], promote_options="default"
         )
         nodes = nodes.append_column(BUCKET_COL, pa.array(arrow_bucket(nodes["node_id"], N_BUCKETS)))
-        cat.commit_partitions_local(nodes, _NODES_SCHEMA, "nodes", stage="graph")
-    if want_edges:
+        cat.commit_partitions_local(nodes, _NODES_SCHEMA, "nodes", stage=stages["nodes"])
+    if "edges" in stages:
         edges = pa.table(
             {
                 "src": tri["subj"],
@@ -761,7 +764,7 @@ def _graph_driver(
                 BUCKET_COL: arrow_bucket(tri["subj"], N_BUCKETS),
             }
         )
-        cat.commit_partitions_local(edges, _EDGES_SCHEMA, "edges", stage="graph")
+        cat.commit_partitions_local(edges, _EDGES_SCHEMA, "edges", stage=stages["edges"])
     return True
 
 
@@ -771,9 +774,9 @@ def build_graph(
     """Materialize deduplicated node/edge tables (the Neo4j model of
     knowledge_graph.py:113-126 as two columnar tables; SURVEY.md §1.2).
 
-    Nodes and edges are gated INDEPENDENTLY: a run killed between the two
-    commits must still write edges on resume (a single shared gate would skip
-    the stage forever and leave cat.read('edges') permanently broken).
+    Nodes and edges are gated INDEPENDENTLY (``Catalog.reuse`` on what each
+    reads): a run killed between the two commits must still write edges on
+    resume (a single shared gate would skip the stage forever).
 
     When every input the pending tables read (``triples``, plus ``enriched``
     for nodes) passes ``driver_read``'s guards, the tables are computed in
@@ -787,8 +790,12 @@ def build_graph(
     the two independent writes pays that floor once, not twice. On a real
     cluster the two jobs share executors exactly like any two concurrent
     stages."""
-    want_nodes, want_edges = not cat.exists("nodes"), not cat.exists("edges")
-    if (want_nodes or want_edges) and _graph_driver(cat, enriched, triples, want_nodes, want_edges):
+    stages = {
+        "nodes": f"graph fp={frame_lineage(enriched, triples)}",
+        "edges": f"graph fp={frame_lineage(triples)}",
+    }
+    stages = {t: s for t, s in stages.items() if not cat.reuse(t, s)}  # stale or missing
+    if stages and _graph_driver(cat, enriched, triples, stages):
         return cat.read(spark, "nodes"), cat.read(spark, "edges")
 
     def _commit_nodes() -> None:
@@ -827,7 +834,8 @@ def build_graph(
         # dropDuplicates shuffle — tests/test_pipeline.py asserts it on the
         # written table
         nodes = doc_nodes.unionByName(ref_nodes)
-        cat.commit_partitions(with_bucket(nodes, "node_id", N_BUCKETS), "nodes", stage="graph")
+        nodes = with_bucket(nodes, "node_id", N_BUCKETS)
+        cat.commit_partitions(nodes, "nodes", stage=stages["nodes"])
 
     def _commit_edges() -> None:
         # the triples table is already unique on (subj, pred, obj) — a rename
@@ -838,9 +846,9 @@ def build_graph(
             F.col("pred").alias("rel"),
             F.lit(1.0).alias("weight"),
         )
-        cat.commit_partitions(with_bucket(edges, "src", N_BUCKETS), "edges", stage="graph")
+        cat.commit_partitions(with_bucket(edges, "src", N_BUCKETS), "edges", stage=stages["edges"])
 
-    jobs = [j for j, want in ((_commit_nodes, want_nodes), (_commit_edges, want_edges)) if want]
+    jobs = [j for j, t in ((_commit_nodes, "nodes"), (_commit_edges, "edges")) if t in stages]
     if len(jobs) == 2:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -931,7 +939,8 @@ def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> 
     (matching the reference fixture semantics); the entity_map table provides
     the canonical id per surface form plus its corpus frequency for downstream
     graph consolidation."""
-    if not cat.exists("entity_map"):
+    stage = f"entity_link fp={frame_lineage(enriched)}"
+    if not cat.reuse("entity_map", stage):
         rows = None
         texts = _vocab_texts_driver(enriched, "entities")
         if texts is not None:
@@ -942,7 +951,7 @@ def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> 
                 )
         if rows is not None:
             # one bucket by the pmod(xxhash,1)=0 rule with_bucket applies
-            cat.commit_partitions_local(rows, _ENTITY_MAP_SCHEMA, "entity_map", stage="entity_link")
+            cat.commit_partitions_local(rows, _ENTITY_MAP_SCHEMA, "entity_map", stage=stage)
             return cat.read(spark, "entity_map")
         from ..operators.linking import fuzzy_candidate_edges
 
@@ -964,7 +973,7 @@ def build_entity_map(spark: SparkSession, cat: Catalog, enriched: DataFrame) -> 
                 "n_docs",
             )
         )
-        cat.commit_partitions(with_bucket(mapped, "name", 1), "entity_map", stage="entity_link")
+        cat.commit_partitions(with_bucket(mapped, "name", 1), "entity_map", stage=stage)
     return cat.read(spark, "entity_map")
 
 

@@ -524,13 +524,6 @@ def _assert_canonical_ids(df: DataFrame) -> None:
         raise _non_canonical()
 
 
-def _doc_keyed_vecs(df: DataFrame) -> DataFrame:
-    return df.select(
-        F.col("doc_id").cast("long").alias("doc_key"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-
-
 def _index_input(df: DataFrame):
     """What the doc-IVF build/append indexes, canonical ids checked: the
     driver-held ``(keys int64[n], vecs float64[n, d])`` when ``df`` passes
@@ -568,7 +561,10 @@ def _index_input(df: DataFrame):
             vecs = emb.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
             return keys.to_numpy(), vecs.reshape(len(keys), dims["max"] or 0)
     _assert_canonical_ids(df)
-    return _doc_keyed_vecs(df)
+    return df.select(
+        F.col("doc_id").cast("long").alias("doc_key"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    )
 
 
 def _coverage_state(key: str, covers: dict, snaps: list[dict], _seen: frozenset = frozenset()):
@@ -613,8 +609,8 @@ def ensure_doc_ivf(
     utils/create_vector_index.py:16-21) — built ONCE next to the source
     table and reused by every ANN-assisted query, never rebuilt per query.
 
-    Source-table evolution (round-6 VERDICT #4 — streamed epochs must not
-    brick ANN serving behind a manual rebuild). The index's ``covers``
+    Source-table evolution: streamed epochs must not stop ANN serving
+    behind a manual rebuild. The index's ``covers``
     property records exactly which source partitions/snapshots it includes;
     on each call the live manifest is diffed against it:
     - unchanged → serve (pure JSON compare, microseconds);
@@ -636,34 +632,22 @@ def ensure_doc_ivf(
       refit (the covered rows can't be isolated by partition pruning) — run
       ensure (append) before compacting to keep maintenance at append cost;
     - anything else (recommitted/removed partitions) → REFIT over the
-      current corpus: a rewritten corpus invalidates the stored assignments,
-      and the index is derived data, so it is rebuilt in place (the
-      ensure_entity_freq auto-rebuild policy) instead of bricking every
-      ANN-served query behind a manual delete — round-7's bench died 3/3
-      repeats on exactly that raise after a fresh checkout rebuilt the
-      enriched table under a tracked index.
+      current corpus, with a warning: the stored assignments describe data
+      that no longer exists.
 
-    Where the index work runs: a build or refit reads ``enriched``, an
+    Where the index work runs: a build or refit indexes ``enriched``, an
     append the ``read_buckets`` frame of the new partitions, each through
-    ``_index_input`` — when that frame passes the guarded driver read (a
-    bare parquet relation within the driver budget), the ids are checked,
-    the k-means fit, the assignment and both commits run ON THE DRIVER (zero
-    Spark jobs, one parquet file per partition, nothing to compact; the
-    snapshots record ``writer: local``). Past the budget, or for a frame
-    that is not a bare relation, the distributed plan runs. Both branches share
-    build_ivf_index / append_ivf_assignments (stage string, guards, orphan
-    sweep, resume) and one nearest-centroid kernel, so they write the same
-    rows.
+    ``_index_input`` — ON THE DRIVER when that frame passes the guarded
+    driver read (zero Spark jobs; the snapshots record ``writer: local``),
+    else the distributed plan. Both branches share build_ivf_index /
+    append_ivf_assignments and one nearest-centroid kernel, so they write
+    the same rows.
 
     The source must be a committed, non-empty Catalog table: its manifest
     gives the index its size, its ``covers`` and its lineage
     (``Catalog.lineage``), so an uncommitted or empty one raises.
     """
-    from ..operators.similarity import (
-        append_ivf_assignments,
-        build_ivf_index,
-        drop_ivf_index,
-    )
+    from ..operators.similarity import append_ivf_assignments, build_ivf_index, drop_ivf_index
 
     man = cat.manifest(source_table)
     parts, snaps = man["partitions"], man["snapshots"]
@@ -703,13 +687,8 @@ def ensure_doc_ivf(
             return tuple(params)
         drifted = fit_rows and n_docs - fit_rows > spec.DOC_IVF_DRIFT_REFIT_FRAC * fit_rows
         if not intact or mixed or drifted:
-            # covered partitions recommitted/removed (a rewritten corpus —
-            # the stored assignments describe data that no longer exists;
-            # the index is derived, so REFIT in place instead of bricking
-            # the serving path behind a manual delete), measured drift
-            # beyond the contract, or a compaction that swallowed
-            # never-indexed epochs → full refit over the current corpus
-            # (delete + rebuild below)
+            # full refit over the current corpus (delete + rebuild below),
+            # silent for routine drift and compaction
             if broken:  # a rewrite is an event; drift/compaction refits are routine
                 warnings.warn(
                     f"doc-IVF index refit: covered partitions of "
@@ -734,11 +713,9 @@ def ensure_doc_ivf(
             return tuple(params)
 
     n_centroids, n_probe = doc_ivf_params(n_docs)
-    built = cat.exists(DOC_IVF_CENT) and cat.exists(DOC_IVF_ASSIGN)
     build_ivf_index(
         spark,
-        # built: only the stage is compared, so the frame is never read
-        _doc_keyed_vecs(enriched) if built else _index_input(enriched),
+        _index_input(enriched),
         cat,
         # identity from the source manifest's snapshot ids: the
         # index-freshness check on the SERVING path must not scan the corpus
@@ -942,20 +919,15 @@ def ensure_entity_freq(
     entity tokens — ONE aggregation at build time instead of a full-corpus
     explode + groupBy per pro_search_enhanced_ann query (at 10^12 docs the
     per-query aggregate is a corpus scan; this is a 100-row table). The
-    stage string carries the source's ``Catalog.lineage``; a
-    recommitted corpus triggers an automatic REBUILD (the table is K rows at
-    any corpus scale, so refreshing it is far cheaper than paging an
-    operator — unlike the doc-IVF index, whose rebuild is corpus-sized and
-    therefore gated). NULL entity terms are excluded at build time so the
+    stage string carries the source's ``Catalog.lineage``, so a
+    recommitted corpus rebuilds it (``Catalog.reuse``; the table is K rows
+    at any corpus scale). NULL entity terms are excluded at build time so the
     served lookup stays bit-identical to the in-plan derivation (whose
     ``~isin`` predicate drops NULLs) even under malformed extractions."""
     tbl = _entity_freq_table(source_table)
     stage = f"entity_freq k={ENTITY_FREQ_K} fp={cat.lineage(source_table)}"
-    if cat.exists(tbl):
-        prior = {m["stage"] for m in cat.metrics(tbl)}
-        if not prior or prior == {stage}:
-            return
-        # stale lineage → fall through to the overwrite below
+    if cat.reuse(tbl, stage):
+        return
     top = (
         enriched.select(
             F.explode(F.transform("entities", lambda e: e["text"])).alias("term")

@@ -307,19 +307,15 @@ def reconcile_relates(spark: SparkSession, out_root: str, n_buckets: int = 8) ->
 
     The clustering is corpus-global BY NATURE (a new phrase can merge two
     existing components and re-label history), so this stage overwrites
-    rather than appends: ``topic_map`` is refreshed (vocabulary-sized —
-    sub-linear in the corpus, cheap at any scale) and ``triples_relates`` is
-    replaced atomically via the catalog. The per-doc MENTIONS/HAS_TOPIC
+    rather than appends: ``topic_map`` is rebuilt when the streamed corpus
+    changed (``Catalog.reuse``; vocabulary-sized, cheap at any scale) and
+    ``triples_relates`` is replaced atomically. The per-doc MENTIONS/HAS_TOPIC
     triples are NOT touched — the stream already maintains those exactly.
     Run at any cadence while the stream is stopped (single-writer table
     maintenance, like compaction); ``serving_triples`` unions the two
     halves into the converged set."""
-    import shutil
-
     cat = Catalog(out_root)
     enriched = cat.read(spark, "enriched_stream")
-    if cat.exists("topic_map"):
-        shutil.rmtree(cat.path("topic_map"))
     topic_map = build_topic_map(spark, cat, enriched)
     relates = relates_triples(enriched, topic_map).drop(BUCKET_COL)
     cat.overwrite(

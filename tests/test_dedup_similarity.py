@@ -305,8 +305,9 @@ def test_centroid_matrix_has_no_count_bound():
 
 
 def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
-    """A changed input (a different lineage) must raise on index reuse, not
-    silently serve stale assignments (round-2 ADVICE #1)."""
+    """A changed input (a different lineage) must not silently serve stale
+    assignments (round-2 ADVICE #1): the index is refit over the new input,
+    with a warning naming the stale centroid table."""
     import pytest
 
     from semantic_search_system_spark.catalog import Catalog
@@ -315,9 +316,14 @@ def test_ivf_index_input_fingerprint_guard(spark, tmp_root):
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cat = Catalog(tmp_root)
     build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)
+    snaps = cat.manifest("ivf_centroids")["snapshots"]
     build_ivf_index(spark, e, cat, "emb-v1", n_centroids=4, n_iter=1)  # same input → no-op
-    with pytest.raises(ValueError, match="built with"):
+    assert cat.manifest("ivf_centroids")["snapshots"] == snaps
+    with pytest.warns(UserWarning, match="rebuilding table 'ivf_centroids'"):
         build_ivf_index(spark, e.where("vec_id <> 3"), cat, "emb-v2", n_centroids=4, n_iter=1)
+    assert {m["stage"].rsplit(" ", 1)[1] for m in cat.metrics("ivf_centroids")} == {"fp=emb-v2"}
+    served = {r["vec_id"] for r in cat.read(spark, "ivf_assign").select("vec_id").collect()}
+    assert served == {r["vec_id"] for r in e.where("vec_id <> 3").select("vec_id").collect()}
 
 
 def test_ivf_index_resume_submits_no_spark_job(spark, tmp_root):

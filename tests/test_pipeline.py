@@ -124,7 +124,7 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, b
     assert "broken_media_only" not in enriched_ids
     assert "broken_blank_text" not in enriched_ids
     assert len(enriched_ids) == 500
-    assert all(m["stage"] == "quarantine" for m in cat.metrics("failed_rows"))
+    assert all(m["stage"].startswith("quarantine fp=") for m in cat.metrics("failed_rows"))
     assert [s["writer"] for s in cat.manifest("failed_rows")["snapshots"]] == [branch]
     snaps = len(cat.manifest("failed_rows")["snapshots"])
     build_enriched(spark, "ignored", cat)  # resume: no re-quarantine
