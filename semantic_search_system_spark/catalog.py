@@ -283,23 +283,13 @@ class Catalog:
 
     # ------------------------------------------------------------- properties
     def set_properties(self, table: str, props: dict) -> None:
-        """Iceberg-style table properties: arbitrary JSON metadata persisted
-        in the manifest (e.g. the doc-IVF index's ``covers`` map — which
-        source partitions/snapshots the index includes — that the frozen-
-        centroid append path diffs against). Several keys land in ONE atomic
-        manifest save: a crash can never publish a subset (the doc-IVF
-        covers/params/fit_rows triple must appear together or not at all —
-        a partial triple would disable the serve/append fast path and send
-        the next call down the rebuild path against a live index)."""
+        """Iceberg-style table properties: the table's properties become
+        ``props`` (JSON) in ONE atomic manifest save, so keys that belong
+        together (the doc-IVF index's source watermark and ``fit_rows``)
+        appear together or not at all. Read them from ``manifest(table)``."""
         man = self.manifest(table)
-        man.setdefault("properties", {}).update(props)
+        man["properties"] = props
         self._save_manifest(table, man)
-
-    def set_property(self, table: str, key: str, value) -> None:
-        self.set_properties(table, {key: value})
-
-    def get_property(self, table: str, key: str, default=None):
-        return self.manifest(table).get("properties", {}).get(key, default)
 
     # ------------------------------------------------------------- lineage
     def lineage(self, table: str, keys=None) -> str | None:

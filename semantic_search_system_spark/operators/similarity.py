@@ -66,11 +66,6 @@ def probe_stats() -> dict[str, int]:
         return dict(_PROBE_STATS)
 
 
-def reset_probe_stats() -> None:
-    with _PROBE_STATS_LOCK:
-        _PROBE_STATS.update(queries=0, escalations=0)
-
-
 def _unit_rows(M: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(M, axis=1)
     return M / np.where(n == 0, 1.0, n)[:, None]

@@ -39,7 +39,7 @@ from pyspark.sql import types as T
 
 from .. import session, spec
 from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucket
-from ..catalog import frame_lineage, input_files, local_path
+from ..catalog import file_lineage, frame_lineage, input_files, local_path
 from ..fixtures.interleave import interleaved_path
 from ..operators.components import connected_components
 from ..operators.embedding import embed_udf
@@ -274,18 +274,21 @@ def build_enriched(spark: SparkSession, sf_dir: str, cat: Catalog, n_buckets: in
     driver (zero Spark jobs; ``_enrich_driver``). Past the budget the Spark
     plan runs the same kernel as a UDF. Both branches write the same rows,
     buckets and recorded schemas, so a resume may mix them. A changed
-    source rebuilds both tables (``Catalog.reuse``)."""
-    source = read_interleaved(spark, sf_dir)
-    fp = frame_lineage(source)
+    source rebuilds both tables (``Catalog.reuse``); its fingerprint is a
+    ``stat``, and the source is opened only when a bucket is pending."""
+    fp = file_lineage(os.path.abspath(interleaved_path(sf_dir)))
     quarantine, enrich = f"quarantine fp={fp}", f"enrich fp={fp}"
     cat.reuse("failed_rows", quarantine)
     cat.reuse("enriched", enrich)
     pending = cat.pending_buckets("enriched", n_buckets)
-    local = _enrich_driver(spark, source, pending, n_buckets) if pending else None
+    if not pending:
+        return cat.read(spark, "enriched")
+    source = read_interleaved(spark, sf_dir)
+    local = _enrich_driver(spark, source, pending, n_buckets)
     if local is not None:
         cat.commit_partitions_local(local[0], _FAILED_ROWS_SCHEMA, "failed_rows", stage=quarantine)
         cat.commit_partitions_local(local[1], _ENRICHED_SCHEMA, "enriched", stage=enrich)
-    elif pending:
+    else:
         docs = with_bucket(source, "doc_id", n_buckets).where(F.col(BUCKET_COL).isin(pending))
         bad, enriched = _enrich_frames(spark, docs)
         cat.commit_partitions(bad, "failed_rows", stage=quarantine)

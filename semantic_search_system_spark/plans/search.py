@@ -567,86 +567,46 @@ def _index_input(df: DataFrame):
     )
 
 
-def _coverage_state(key: str, covers: dict, snaps: list[dict], _seen: frozenset = frozenset()):
-    """How much of partition ``key``'s content the index already covers:
-    'all' (skip it), 'none' (appendable as a whole), or 'mixed' (a compaction
-    output folding covered AND uncovered source keys together — the covered
-    rows can't be isolated by partition pruning, so the caller refits).
-    Compaction outputs (``c<gen>_<bucket>``) are resolved through their
-    snapshot's ``compacted_from`` recursively: content moved by compaction
-    is NOT new data."""
-    if key in covers:
-        return "all"
-    if key in _seen:  # defensive: malformed self-referential snapshot chain
-        return "mixed"
-    bucket = key.rsplit("_", 1)[-1]
-    srcs = None
+def _unseen_keys(snaps: list[dict]) -> list[str] | None:
+    """The source partitions an index has not seen, from the source
+    snapshots after its watermark, in log order: a commit's partitions are
+    new; a compaction output (``c<gen>_<bucket>``) is seen when every
+    same-bucket key it folded was seen and new when every one was new. None
+    when a compaction mixed the two: partition pruning can't split it."""
+    new: set[str] = set()
     for s in snaps:
-        if s.get("stage", "").startswith("compact_gen") and key in s.get("partitions", []):
-            srcs = [k for k in s.get("compacted_from", []) if k.rsplit("_", 1)[-1] == bucket]
-            break
-    if srcs is None:
-        return "none"  # a plain partition the index has never seen
-    if not srcs:
-        return "all"  # empty compaction output for this bucket — nothing to index
-    states = {_coverage_state(k, covers, snaps, _seen | {key}) for k in srcs}
-    return states.pop() if len(states) == 1 else "mixed"
+        folded = s.get("compacted_from", [])
+        for key in s["partitions"]:
+            bucket = key.rsplit("_", 1)[-1]
+            fresh = {k in new for k in folded if k.rsplit("_", 1)[-1] == bucket}
+            if len(fresh) > 1:
+                return None
+            if not folded or fresh == {True}:
+                new.add(key)
+        new -= set(folded)
+    return sorted(new)
 
 
 def ensure_doc_ivf(
     spark: SparkSession, cat, enriched: DataFrame, source_table: str = "enriched"
 ) -> tuple[int, int]:
     """Build (idempotently) the IVF index over the source table's OWN
-    document embeddings, keyed by ``doc_key = CAST(doc_id AS LONG)`` — the
-    index machinery buckets partitions by centroid id and seeds k-means by
-    ascending id, so the key must be numeric in both engines
-    (``_assert_canonical_ids``).
+    document embeddings, keyed by ``doc_key = CAST(doc_id AS LONG)``
+    (``_assert_canonical_ids``), and return its ``doc_ivf_params`` — the
+    index the reference builds once and serves every ANN query from
+    (utils/create_vector_index.py:16-21).
 
-    Returns the ``(n_centroids, n_probe)`` the index was FIT with (see
-    ``doc_ivf_params``; the corpus size comes from the source table's
-    manifest — per-partition lineage, no extra scan). This is the index the
-    reference serves interactive search from (HNSW,
-    utils/create_vector_index.py:16-21) — built ONCE next to the source
-    table and reused by every ANN-assisted query, never rebuilt per query.
+    The index follows its source by one watermark: the ``snapshot_id`` of
+    the last source snapshot it has seen, saved with ``fit_rows``. Each call
+    walks the snapshots after it (``_unseen_keys``): none → serve; new
+    partitions → assign them to the FROZEN centroids
+    (``append_ivf_assignments``); a compaction mixing seen and new keys, or
+    growth past ``spec.DOC_IVF_DRIFT_REFIT_FRAC`` of ``fit_rows`` → refit;
+    a watermark missing from the log (the source table was rebuilt) →
+    refit, with a warning. A build or an append runs on the driver when
+    ``_index_input`` passes the guarded driver read, else distributed.
 
-    Source-table evolution: streamed epochs must not stop ANN serving
-    behind a manual rebuild. The index's ``covers``
-    property records exactly which source partitions/snapshots it includes;
-    on each call the live manifest is diffed against it:
-    - unchanged → serve (pure JSON compare, microseconds);
-    - APPEND-ONLY delta (all covered snapshots intact, new partitions
-      beside them — the enrich_stream epoch shape) → assign ONLY the new
-      partitions' vectors to the FROZEN centroids
-      (similarity.append_ivf_assignments; params and recall contract
-      unchanged, the probe reads the append partitions alongside the base
-      ones) — unless cumulative appends exceed
-      ``spec.DOC_IVF_DRIFT_REFIT_FRAC`` of the fitted corpus, in which case
-      the index is REFIT from scratch over the grown corpus (the measured
-      drift threshold: past it the frozen fit sample no longer represents
-      the corpus);
-    - COMPACTION of already-covered partitions (``compact_stream_epochs`` —
-      mandatory maintenance at scale) is content-preserving, so the covers
-      diff resolves ``c<gen>_*`` keys through their snapshots'
-      ``compacted_from`` (``_coverage_state``) and keeps serving; a
-      compaction that folded covered and NEVER-covered epochs together is
-      refit (the covered rows can't be isolated by partition pruning) — run
-      ensure (append) before compacting to keep maintenance at append cost;
-    - anything else (recommitted/removed partitions) → REFIT over the
-      current corpus, with a warning: the stored assignments describe data
-      that no longer exists.
-
-    Where the index work runs: a build or refit indexes ``enriched``, an
-    append the ``read_buckets`` frame of the new partitions, each through
-    ``_index_input`` — ON THE DRIVER when that frame passes the guarded
-    driver read (zero Spark jobs; the snapshots record ``writer: local``),
-    else the distributed plan. Both branches share build_ivf_index /
-    append_ivf_assignments and one nearest-centroid kernel, so they write
-    the same rows.
-
-    The source must be a committed, non-empty Catalog table: its manifest
-    gives the index its size, its ``covers`` and its lineage
-    (``Catalog.lineage``), so an uncommitted or empty one raises.
-    """
+    The source must be a committed, non-empty Catalog table."""
     from ..operators.similarity import append_ivf_assignments, build_ivf_index, drop_ivf_index
 
     man = cat.manifest(source_table)
@@ -656,63 +616,43 @@ def ensure_doc_ivf(
             f"doc-IVF source '{source_table}' has no committed rows under {cat.root} — "
             f"commit it through the Catalog first"
         )
-    cur = {k: e["snapshot_id"] for k, e in parts.items()}
     n_docs = sum(e["rows_written"] for e in parts.values())
+    ids = [s["snapshot_id"] for s in snaps]
 
-    # ONE centroid-manifest read per call (this is every _ann request's
-    # path): the covers/params/fit_rows triple is saved atomically after the
-    # centroids commit, so its presence implies the centroid table exists
+    # ONE centroid-manifest read per call (this is every _ann request's path)
     props = cat.manifest(DOC_IVF_CENT).get("properties", {})
-    covers, params, fit_rows = (props.get(k) for k in ("covers", "params", "fit_rows"))
-    if covers is not None and params is not None and cat.exists(DOC_IVF_ASSIGN):
-        compacted = {k for s in snaps for k in s.get("compacted_from", [])}
-        broken = sorted(
-            k
-            for k, v in covers.items()
-            if not (cur.get(k) == v or (k not in cur and k in compacted))
-        )
-        intact = not broken
-        state = (
-            {k: _coverage_state(k, covers, snaps) for k in cur if k not in covers}
-            if intact
-            else {}
-        )
-        new_keys = sorted(k for k, s in state.items() if s == "none")
-        mixed = sorted(k for k, s in state.items() if s == "mixed")
-        if intact and not new_keys and not mixed:
-            # unchanged, or pure compaction of covered content — refresh
-            # covers so the next diff is against the compacted layout
-            if covers != cur:
-                cat.set_property(DOC_IVF_CENT, "covers", cur)
-            return tuple(params)
-        drifted = fit_rows and n_docs - fit_rows > spec.DOC_IVF_DRIFT_REFIT_FRAC * fit_rows
-        if not intact or mixed or drifted:
-            # full refit over the current corpus (delete + rebuild below),
-            # silent for routine drift and compaction
-            if broken:  # a rewrite is an event; drift/compaction refits are routine
-                warnings.warn(
-                    f"doc-IVF index refit: covered partitions of "
-                    f"'{source_table}' were recommitted or removed: {', '.join(broken)}"
-                )
-            drop_ivf_index(cat, DOC_IVF_CENT, DOC_IVF_ASSIGN)
-        else:
-            # the tag is the new partitions' own lineage: a replayed append
-            # hits the same partition keys and is skipped by the manifest
-            tag = cat.lineage(source_table, new_keys)[:8]
-            append_ivf_assignments(
-                spark,
-                cat,
-                _index_input(cat.read_buckets(spark, source_table, new_keys, partitions=parts)),
-                tag,
-                id_col="doc_key",
-                cent_table=DOC_IVF_CENT,
-                assign_table=DOC_IVF_ASSIGN,
-                stage=f"ivf_append tag={tag} fp={cat.lineage(source_table)}",
+    seen, fit_rows = props.get("watermark"), props.get("fit_rows")
+    if seen is not None and cat.exists(DOC_IVF_ASSIGN):
+        if seen not in ids:
+            warnings.warn(
+                f"doc-IVF index refit: source table '{source_table}' was rebuilt "
+                f"since the index last saw it"
             )
-            cat.set_property(DOC_IVF_CENT, "covers", cur)
-            return tuple(params)
+        else:
+            new_keys = _unseen_keys(snaps[ids.index(seen) + 1 :])
+            drifted = n_docs - fit_rows > spec.DOC_IVF_DRIFT_REFIT_FRAC * fit_rows
+            if new_keys == [] or (new_keys and not drifted):  # serve or append
+                if new_keys:
+                    # the tag is the new partitions' own lineage: a replayed
+                    # append hits the same partition keys and is skipped
+                    tag = cat.lineage(source_table, new_keys)[:8]
+                    new_docs = cat.read_buckets(spark, source_table, new_keys, partitions=parts)
+                    append_ivf_assignments(
+                        spark,
+                        cat,
+                        _index_input(new_docs),
+                        tag,
+                        id_col="doc_key",
+                        cent_table=DOC_IVF_CENT,
+                        assign_table=DOC_IVF_ASSIGN,
+                        stage=f"ivf_append tag={tag} fp={cat.lineage(source_table)}",
+                    )
+                if seen != ids[-1]:
+                    cat.set_properties(DOC_IVF_CENT, {"watermark": ids[-1], "fit_rows": fit_rows})
+                return doc_ivf_params(fit_rows)
+        drop_ivf_index(cat, DOC_IVF_CENT, DOC_IVF_ASSIGN)
 
-    n_centroids, n_probe = doc_ivf_params(n_docs)
+    params = doc_ivf_params(n_docs)
     build_ivf_index(
         spark,
         _index_input(enriched),
@@ -720,20 +660,15 @@ def ensure_doc_ivf(
         # identity from the source manifest's snapshot ids: the
         # index-freshness check on the SERVING path must not scan the corpus
         cat.lineage(source_table),
-        n_centroids=n_centroids,
+        n_centroids=params[0],
         n_iter=DOC_IVF_ITER,
         id_col="doc_key",
         fit_sample_hex=DOC_IVF_FIT_HEX,
         cent_table=DOC_IVF_CENT,
         assign_table=DOC_IVF_ASSIGN,
     )
-    # ONE atomic manifest save: a partial triple would disable the
-    # serve/append fast path on the next call (catalog.set_properties)
-    cat.set_properties(
-        DOC_IVF_CENT,
-        {"covers": cur, "params": [n_centroids, n_probe], "fit_rows": n_docs},
-    )
-    return n_centroids, n_probe
+    cat.set_properties(DOC_IVF_CENT, {"watermark": ids[-1], "fit_rows": n_docs})
+    return params
 
 
 def _doc_ivf_hits(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, with_bucket
+from ..catalog import BUCKET_COL, Catalog, _arrow_type, arrow_bucket, frame_lineage, with_bucket
 from ..operators.extraction import has_usable_text
 from ..plans.pipeline import (
     ARROW_BATCH,
@@ -306,10 +306,10 @@ def reconcile_relates(spark: SparkSession, out_root: str, n_buckets: int = 8) ->
     everything the stream has landed so far.
 
     The clustering is corpus-global BY NATURE (a new phrase can merge two
-    existing components and re-label history), so this stage overwrites
-    rather than appends: ``topic_map`` is rebuilt when the streamed corpus
-    changed (``Catalog.reuse``; vocabulary-sized, cheap at any scale) and
-    ``triples_relates`` is replaced atomically. The per-doc MENTIONS/HAS_TOPIC
+    existing components and re-label history), so this stage rebuilds
+    rather than appends: ``topic_map`` and ``triples_relates`` are rebuilt
+    when the streamed corpus changed, and kept otherwise (``Catalog.reuse``
+    on the files they read). The per-doc MENTIONS/HAS_TOPIC
     triples are NOT touched — the stream already maintains those exactly.
     Run at any cadence while the stream is stopped (single-writer table
     maintenance, like compaction); ``serving_triples`` unions the two
@@ -317,10 +317,10 @@ def reconcile_relates(spark: SparkSession, out_root: str, n_buckets: int = 8) ->
     cat = Catalog(out_root)
     enriched = cat.read(spark, "enriched_stream")
     topic_map = build_topic_map(spark, cat, enriched)
-    relates = relates_triples(enriched, topic_map).drop(BUCKET_COL)
-    cat.overwrite(
-        with_bucket(relates, "obj", n_buckets), "triples_relates", stage="reconcile_relates"
-    )
+    stage = f"reconcile_relates fp={frame_lineage(enriched, topic_map)}"
+    if not cat.reuse("triples_relates", stage):
+        relates = relates_triples(enriched, topic_map).drop(BUCKET_COL)
+        cat.commit_partitions(with_bucket(relates, "obj", n_buckets), "triples_relates", stage)
     return cat.read(spark, "triples_relates")
 
 

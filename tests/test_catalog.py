@@ -88,15 +88,14 @@ def test_tombstone_hit_from_foreign_stage_raises(spark, tmp_root, sample):
     assert cat.read(spark, "es").count() == 100
 
 
-def test_table_properties_roundtrip(tmp_root):
+def test_table_properties_roundtrip(spark, tmp_root, sample):
     cat = Catalog(tmp_root)
-    assert cat.get_property("t", "covers") is None
-    cat.set_property("t", "covers", {"0_1": "snap"})
-    cat.set_property("t", "params", [8, 3])
-    assert cat.get_property("t", "covers") == {"0_1": "snap"}
-    assert cat.get_property("t", "params") == [8, 3]
-    # properties survive a manifest rewrite by an unrelated commit path
-    assert Catalog(tmp_root).get_property("t", "covers") == {"0_1": "snap"}
+    assert "properties" not in cat.manifest("t")
+    cat.set_properties("t", {"watermark": "snap", "fit_rows": 10})
+    # properties survive a manifest rewrite by a commit to the same table
+    cat.commit_partitions(sample, "t", stage="s1")
+    assert Catalog(tmp_root).manifest("t")["properties"] == {"watermark": "snap", "fit_rows": 10}
+    assert cat.read(spark, "t").count() == 100
 
 
 def test_overwrite_replaces_table(spark, tmp_root, sample):
@@ -201,18 +200,23 @@ def test_legacy_tombstone_replay_after_upgrade_skips(spark, tmp_root, sample):
     assert cat.read(spark, "es").count() == 100  # skipped: not doubled, not raised
 
 
-def test_set_properties_single_save(tmp_root):
-    """The doc-IVF covers/params/fit_rows triple must land in ONE manifest
-    save — a crash can never publish a subset (which would disable the
-    serve/append fast path and send the next call down the rebuild path)."""
+def test_set_properties_single_save(tmp_root, monkeypatch):
+    """Keys that belong together (the doc-IVF watermark and fit_rows) land
+    in ONE manifest save, so a crash can never publish a subset; each call
+    replaces the whole property set."""
     cat = Catalog(tmp_root)
-    cat.set_properties(
-        "t", {"covers": {"0_1": "s"}, "params": [8, 3], "fit_rows": 10}
-    )
-    fresh = Catalog(tmp_root)
-    assert fresh.get_property("t", "covers") == {"0_1": "s"}
-    assert fresh.get_property("t", "params") == [8, 3]
-    assert fresh.get_property("t", "fit_rows") == 10
+    saves = []
+    orig = Catalog._save_manifest
+
+    def counting(self, table, man):
+        saves.append(table)
+        orig(self, table, man)
+
+    monkeypatch.setattr(Catalog, "_save_manifest", counting)
+    cat.set_properties("t", {"watermark": "s", "fit_rows": 10, "stale": [8, 3]})
+    cat.set_properties("t", {"watermark": "s2", "fit_rows": 12})
+    assert saves == ["t", "t"]
+    assert Catalog(tmp_root).manifest("t")["properties"] == {"watermark": "s2", "fit_rows": 12}
 
 
 def _hash_inputs() -> list:

@@ -432,7 +432,7 @@ def test_doc_ivf_rejects_non_canonical_doc_ids(spark, tmp_path):
 
 
 def test_doc_ivf_rejects_uncommitted_source(spark, tmp_path):
-    """The doc-IVF index takes its size, covers and lineage from the source
+    """The doc-IVF index takes its size, watermark and lineage from the source
     manifest, so an ad-hoc frame or an empty table raises one clear error
     instead of being counted and fingerprinted by Spark scans."""
     import pytest
@@ -502,12 +502,9 @@ def test_doc_ivf_search_recall(spark):
     # are in-distribution (best cosine 0.16-0.43), never escalate, and hold
     # 0.84-0.92 at the contract fraction. Deterministic: per-query floor and
     # mean are both pinned (round-5 VERDICT #1 / ADVICE #5).
-    from semantic_search_system_spark.operators.similarity import (
-        probe_stats,
-        reset_probe_stats,
-    )
+    from semantic_search_system_spark.operators.similarity import probe_stats
 
-    reset_probe_stats()
+    before = probe_stats()
     recalls = []
     for qt in [
         "spark join table", "filter stream graph", "window aggregate shuffle",
@@ -529,8 +526,8 @@ def test_doc_ivf_search_recall(spark):
     # escalation observability (round-6 VERDICT #3): exactly ONE of the five
     # panel queries is low-signal — the counter an operator would watch for
     # an out-of-distribution burst must show exactly that
-    stats = probe_stats()
-    assert stats["queries"] == 5 and stats["escalations"] == 1, stats
+    stats = {k: v - before[k] for k, v in probe_stats().items()}
+    assert stats == {"queries": 5, "escalations": 1}, stats
 
 
 def _split_corpus_files(spark, tmp_root, n_first):
@@ -622,11 +619,10 @@ def test_doc_ivf_drift_refit_and_rewrite_guard(spark, tmp_root):
     """Past spec.DOC_IVF_DRIFT_REFIT_FRAC of appended rows the index REFITS
     over the grown corpus instead of stretching the frozen fit (new centroid
     snapshot, params follow the grown corpus, no append partitions); a
-    REWRITTEN covered partition (snapshot change) also self-heals with a
-    full refit — round 7's driver bench died 3/3 repeats on the raise this
-    path used to have, after a fresh checkout rebuilt the enriched table
-    (new random snapshot ids) underneath a tracked index."""
-    import json
+    REBUILT source table (new snapshot ids, the index's watermark gone from
+    its log) also self-heals with a full refit — round 7's driver bench died
+    3/3 repeats on the raise this path used to have, after a fresh checkout
+    rebuilt the enriched table underneath a tracked index."""
     import os
     import shutil
     import warnings
@@ -663,26 +659,29 @@ def test_doc_ivf_drift_refit_and_rewrite_guard(spark, tmp_root):
     assert not any(
         k.startswith("a") for k in cat.manifest(S.DOC_IVF_ASSIGN)["partitions"]
     )
-    assert cat.get_property(S.DOC_IVF_CENT, "fit_rows") == n_full
+    assert _ivf_props(cat) == {
+        "watermark": _last_snapshot(cat, "enriched_stream"),
+        "fit_rows": n_full,
+    }
 
-    # a REWRITTEN covered partition self-heals: full refit over the current
-    # corpus, covers refreshed to the live snapshot ids, no append partitions
+    # a REBUILT source self-heals: the stream restarts on a fresh checkpoint
+    # into an empty table, so every snapshot id is new; full refit over the
+    # current corpus, watermark on the new log, no append partitions
     refit_snap = cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"]
-    man_path = os.path.join(cat.path("enriched_stream"), "_manifest.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    k0 = sorted(man["partitions"])[0]
-    man["partitions"][k0]["snapshot_id"] = "deadbeefdeadbeef"
-    with open(man_path, "w") as f:
-        json.dump(man, f)
-    # ... and says so, naming the non-intact partition
-    with pytest.warns(UserWarning, match=f"recommitted or removed: {k0}$"):
+    for t in ("enriched_stream", "failed_rows_stream"):
+        shutil.rmtree(cat.path(t))
+    enrich_stream(spark, src, out, tmp_root + "/ckpt_rebuilt").awaitTermination(180)
+    enr3 = cat.read(spark, "enriched_stream")
+    # ... and says so, naming the source table
+    with pytest.warns(UserWarning, match="source table 'enriched_stream' was rebuilt"):
         assert (
-            S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream") == params
+            S.ensure_doc_ivf(spark, cat, enr3, source_table="enriched_stream") == params
         )
     assert cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"] != refit_snap
-    covers = cat.get_property(S.DOC_IVF_CENT, "covers")
-    assert covers[k0] == "deadbeefdeadbeef"
+    assert _ivf_props(cat) == {
+        "watermark": _last_snapshot(cat, "enriched_stream"),
+        "fit_rows": n_full,
+    }
     assert not any(
         k.startswith("a") for k in cat.manifest(S.DOC_IVF_ASSIGN)["partitions"]
     )
@@ -694,7 +693,7 @@ def test_doc_ivf_survives_compaction_of_covered_epochs(spark, tmp_root):
     ALREADY-COVERED epochs is content-preserving, so ensure_doc_ivf must
     keep serving (no raise, no refit — the round-6 brick this machinery
     exists to remove must not come back through the maintenance door),
-    refresh ``covers`` to the compacted layout, and still take the
+    advance its watermark past the compaction, and still take the
     frozen-centroid append path for epochs streamed AFTER the compaction."""
     import os
     import shutil
@@ -715,9 +714,8 @@ def test_doc_ivf_survives_compaction_of_covered_epochs(spark, tmp_root):
     enr = cat.read(spark, "enriched_stream")
     assert S.ensure_doc_ivf(spark, cat, enr, source_table="enriched_stream") == params
     assert cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"] == cent_snap
-    # covers refreshed to the compacted layout so the NEXT diff is clean
-    covers = cat.get_property(S.DOC_IVF_CENT, "covers")
-    assert set(covers) == set(cat.manifest("enriched_stream")["partitions"])
+    # the watermark moves past the compaction, so the NEXT walk starts there
+    assert _ivf_props(cat)["watermark"] == _last_snapshot(cat, "enriched_stream")
     assert S.pro_search_ann(spark, cat, enr, source_table="enriched_stream").collect()
 
     # epochs streamed AFTER the compaction still append to frozen centroids
@@ -766,7 +764,10 @@ def test_doc_ivf_refits_when_compaction_folds_uncovered_epochs(spark, tmp_root):
     params = S.ensure_doc_ivf(spark, cat, enr2, source_table="enriched_stream")
     assert params == S.doc_ivf_params(n_full)
     assert cat.manifest(S.DOC_IVF_CENT)["snapshots"][-1]["snapshot_id"] != cent_snap
-    assert cat.get_property(S.DOC_IVF_CENT, "fit_rows") == n_full
+    assert _ivf_props(cat) == {
+        "watermark": _last_snapshot(cat, "enriched_stream"),
+        "fit_rows": n_full,
+    }
     # the refit index covers every doc exactly once
     assert cat.read(spark, S.DOC_IVF_ASSIGN).count() == n_full
 
@@ -810,6 +811,17 @@ def test_doc_ivf_orphan_assign_swept_on_rebuild(spark, tmp_root):
         if m["stage"].startswith("ivf_build")
     }
     assert assign_build_stages == cent_stages
+
+
+def _ivf_props(cat):
+    """The doc-IVF centroid manifest's properties."""
+    from semantic_search_system_spark.plans import search as S
+
+    return cat.manifest(S.DOC_IVF_CENT)["properties"]
+
+
+def _last_snapshot(cat, table):
+    return cat.manifest(table)["snapshots"][-1]["snapshot_id"]
 
 
 def _ivf_index(spark, cat):
@@ -863,44 +875,37 @@ def _enriched_copy(src_root, root):
     return cat
 
 
-def _keep_partitions(cat, table, parts):
-    """Rewrite ``table``'s manifest to list only the partitions ``parts`` —
-    a source that grows by whole partitions between calls (the files stay
-    in place)."""
-    import json
-    import os
-
-    path = os.path.join(cat.path(table), "_manifest.json")
-    with open(path) as f:
-        man = json.load(f)
-    man["partitions"] = parts
-    with open(path, "w") as f:
-        json.dump(man, f)
-
-
 def test_doc_ivf_driver_matches_distributed_on_sf_med(
     spark, tmp_root, monkeypatch, sf_med_enriched
 ):
-    """On the sf0.01 enriched table grown by whole partitions — a build over
-    4 buckets, an append of a 5th (under the drift bound), a drift refit
-    over all 8 — the driver branch (zero Spark jobs, snapshots
-    ``writer: local``) writes the same doc_ivf_centroids and doc_ivf_assign
-    rows and schemas as the distributed branch (a driver budget of 0)."""
+    """On the sf0.01 enriched table grown by whole partitions, one Catalog
+    commit each — a build over 4 buckets, an append of a 5th (under the
+    drift bound), a drift refit over all 8 — the driver branch (zero Spark
+    jobs, snapshots ``writer: local``) writes the same doc_ivf_centroids and
+    doc_ivf_assign rows and schemas as the distributed branch (a driver
+    budget of 0)."""
     import os
+    import shutil
 
+    from semantic_search_system_spark.catalog import BUCKET_COL, Catalog
     from semantic_search_system_spark.plans import search as S
 
-    cats = {
-        d: _enriched_copy(sf_med_enriched, os.path.join(tmp_root, str(d))) for d in (True, False)
-    }
-    full = cats[True].manifest("enriched")["partitions"]
-    for n_keys, branch in ((4, "build"), (5, "append"), (8, "refit")):
-        parts = {k: full[k] for k in sorted(full)[:n_keys]}
+    src = Catalog(sf_med_enriched)
+    grown = Catalog(os.path.join(tmp_root, "grown"))
+    cats = {d: Catalog(os.path.join(tmp_root, str(d))) for d in (True, False)}
+    keys = sorted(src.manifest("enriched")["partitions"])
+    for lo, hi, branch in ((0, 4, "build"), (4, 5, "append"), (5, 8, "refit")):
+        grown.commit_partitions(
+            src.read(spark, "enriched").where(F.col(BUCKET_COL).isin(*map(int, keys[lo:hi]))),
+            "enriched",
+            stage="grow",
+        )
         for driver, cat in cats.items():
-            _keep_partitions(cat, "enriched", parts)
+            shutil.rmtree(cat.path("enriched"), ignore_errors=True)
+            shutil.copytree(grown.path("enriched"), cat.path("enriched"))
             params, jobs = _ensure_on(spark, cat, "enriched", monkeypatch, driver)
             assert (jobs == 0) == driver, (branch, driver, jobs)
-        n_docs = sum(e["rows_written"] for e in parts.values())
+        n_docs = sum(e["rows_written"] for e in grown.manifest("enriched")["partitions"].values())
         got = {d: _ivf_index(spark, cat) for d, cat in cats.items()}
         for t in (S.DOC_IVF_CENT, S.DOC_IVF_ASSIGN):
             assert got[True][t][:2] == got[False][t][:2], (branch, t)
@@ -1030,16 +1035,17 @@ def test_doc_ivf_driver_bounds(spark, tmp_root, monkeypatch, sf_med_enriched):
 
 def _tiny_source(spark, cat, docs, bucket):
     """Commit ``docs`` [(doc_id, embedding)] as partition ``bucket`` of a
-    2-d ``enriched`` table."""
+    2-d ``enriched`` table; string partition keys, so an epoch-shaped key
+    (``<epoch>_<bucket>``) is one ``compact_stream_epochs`` folds."""
     from pyspark.sql import types as T
 
     cat.commit_partitions_local(
-        [(d, v, bucket) for d, v in docs],
+        [(d, v, str(bucket)) for d, v in docs],
         T.StructType(
             [
                 T.StructField("doc_id", T.StringType()),
                 T.StructField("embedding", T.ArrayType(T.DoubleType())),
-                T.StructField("bucket", T.IntegerType()),
+                T.StructField("bucket", T.StringType()),
             ]
         ),
         "enriched",
@@ -1047,7 +1053,19 @@ def _tiny_source(spark, cat, docs, bucket):
     )
 
 
-_TINY_BASE = [(str(i), [float(i % 5), float(i % 3) + 1.0]) for i in range(1, 41)]
+def _tiny(lo, hi):
+    return [(str(i), [float(i % 5), float(i % 3) + 1.0]) for i in range(lo, hi)]
+
+
+_TINY_BASE = _tiny(1, 41)
+
+
+def _appended_keys(spark, cat):
+    """The doc keys in the doc-IVF index's frozen-centroid append partitions."""
+    from semantic_search_system_spark.plans import search as S
+
+    appended = cat.read(spark, S.DOC_IVF_ASSIGN).where(F.col("bucket").startswith("a"))
+    return sorted(r["doc_key"] for r in appended.select("doc_key").collect())
 
 
 @pytest.mark.parametrize("driver", [True, False], ids=["driver", "spark"])
@@ -1072,6 +1090,56 @@ def test_doc_ivf_append_rejects_non_canonical_doc_ids(spark, tmp_root, monkeypat
         with pytest.raises(ValueError, match="canonical"):
             _ensure_on(spark, cat, "enriched", monkeypatch, driver)
         assert cat.manifest(S.DOC_IVF_ASSIGN)["snapshots"] == snaps, bad_id
+
+
+def test_doc_ivf_appends_compaction_of_unseen_epochs(spark, tmp_root, monkeypatch):
+    """A compaction that folds only never-indexed epochs is new content as
+    a whole: the next ensure appends its output partition to the frozen
+    centroids — same centroid snapshot, no refit, no Spark job."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans import search as S
+
+    cat = Catalog(tmp_root)
+    _tiny_source(spark, cat, _TINY_BASE, 0)  # a plain key: never compacted
+    params, _ = _ensure_on(spark, cat, "enriched", monkeypatch, True)
+    cent_snap = _last_snapshot(cat, S.DOC_IVF_CENT)
+    _tiny_source(spark, cat, _tiny(41, 46), "1_0")
+    _tiny_source(spark, cat, _tiny(46, 51), "2_0")
+    assert set(cat.compact_stream_epochs(spark, "enriched")) == {"c1_0"}
+
+    assert _ensure_on(spark, cat, "enriched", monkeypatch, True) == (params, 0)
+    assert _last_snapshot(cat, S.DOC_IVF_CENT) == cent_snap
+    assert _appended_keys(spark, cat) == list(range(41, 51))
+    assert cat.read(spark, S.DOC_IVF_ASSIGN).count() == 50
+    assert _ivf_props(cat) == {"watermark": _last_snapshot(cat, "enriched"), "fit_rows": 40}
+
+
+def test_doc_ivf_follows_two_compactions_without_refit(spark, tmp_root, monkeypatch):
+    """Two compactions with no ensure between them: the first folds a seen
+    epoch (bucket 0) and an unseen one (bucket 1), the second folds that
+    unseen output again with a newer epoch. The next ensure resolves the
+    chain — the seen output is served as it stands, the other appended
+    whole — and a call after it serves, with no refit anywhere."""
+    from semantic_search_system_spark.catalog import Catalog
+    from semantic_search_system_spark.plans import search as S
+
+    cat = Catalog(tmp_root)
+    _tiny_source(spark, cat, _TINY_BASE, "1_0")
+    params, _ = _ensure_on(spark, cat, "enriched", monkeypatch, True)
+    cent_snap = _last_snapshot(cat, S.DOC_IVF_CENT)
+    _tiny_source(spark, cat, _tiny(41, 46), "2_1")
+    assert set(cat.compact_stream_epochs(spark, "enriched")) == {"c1_0", "c1_1"}
+    _tiny_source(spark, cat, _tiny(46, 51), "3_1")
+    assert set(cat.compact_stream_epochs(spark, "enriched")) == {"c2_1"}
+    assert set(cat.manifest("enriched")["partitions"]) == {"c1_0", "c2_1"}
+
+    assert _ensure_on(spark, cat, "enriched", monkeypatch, True) == (params, 0)
+    assert _last_snapshot(cat, S.DOC_IVF_CENT) == cent_snap
+    assert _appended_keys(spark, cat) == list(range(41, 51))
+    assert cat.read(spark, S.DOC_IVF_ASSIGN).count() == 50
+    assign_snaps = cat.manifest(S.DOC_IVF_ASSIGN)["snapshots"]
+    assert _ensure_on(spark, cat, "enriched", monkeypatch, True) == (params, 0)
+    assert cat.manifest(S.DOC_IVF_ASSIGN)["snapshots"] == assign_snaps
 
 
 def test_doc_ivf_serve_reads_centroid_manifest_once(spark, tmp_root, monkeypatch):

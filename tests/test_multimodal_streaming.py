@@ -205,7 +205,7 @@ def test_streaming_batch_reconciliation_end_to_end(spark, tmp_root):
     knowledge_graph/knowledge_graph.py:118-189). Exercised TWICE — once
     mid-stream and once after more epochs arrive on the same checkpoint — so
     the reconciliation demonstrably converges as the corpus grows, not just
-    at the end."""
+    at the end; a third run with no new epochs recomputes nothing."""
     import os
     import shutil
 
@@ -288,6 +288,14 @@ def test_streaming_batch_reconciliation_end_to_end(spark, tmp_root):
         (r["subj"], r["pred"], r["obj"]) for r in serving_triples(spark, out).collect()
     }
     assert served2 == batch_full and len(served2) > len(served1)
+
+    # ---- a third reconciliation with no new epochs keeps both tables
+    def snaps():
+        return {t: cat.manifest(t)["snapshots"] for t in ("triples_relates", "topic_map")}
+
+    kept = snaps()
+    _, jobs = with_job_count(spark, lambda: reconcile_relates(spark, out))
+    assert jobs == 0 and snaps() == kept
 
     # ---- the graph tables built from the reconciled view equal the batch ones
     serving = serving_triples(spark, out)

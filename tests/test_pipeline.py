@@ -104,10 +104,11 @@ def test_quarantine_routes_unusable_docs(spark, tmp_path_factory, monkeypatch, b
         "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
     )
     good.unionByName(bad).write.parquet(f"{src}/documents_interleaved.parquet")
-    # build_enriched reads via interleaved_path(sf_dir) convention — point a
-    # fake sf_dir at our corpus by monkeypatching the reader
+    # build_enriched fingerprints interleaved_path(sf_dir) and reads it with
+    # read_interleaved — point a fake sf_dir at our corpus by patching both
     import semantic_search_system_spark.plans.pipeline as P
 
+    monkeypatch.setattr(P, "interleaved_path", lambda _sf: f"{src}/documents_interleaved.parquet")
     monkeypatch.setattr(
         P, "read_interleaved", lambda s, _sf: s.read.parquet(f"{src}/documents_interleaved.parquet")
     )
@@ -369,6 +370,7 @@ def test_driver_vocab_reads_match_spark_lower_on_case_mapping_outliers(
         [(str(i), [("text", t, None, 0)]) for i, t in enumerate(texts)],
         "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
     ).write.parquet(src)
+    monkeypatch.setattr(P, "interleaved_path", lambda _sf: src)
     monkeypatch.setattr(P, "read_interleaved", lambda s, _sf: s.read.parquet(src))
     enriched = P.build_enriched(spark, "ignored", Catalog(os.path.join(tmp_root, "src")))
     for col in ("entities", "topics"):

@@ -60,16 +60,19 @@ def test_rewritten_corpus_rebuilds_the_graph(spark, tmp_root):
         assert precision_recall(emitted, golden) == (1.0, 1.0), seed
 
 
-def test_unchanged_input_recomputes_nothing(spark, tmp_root):
+def test_unchanged_input_recomputes_nothing(spark, tmp_root, monkeypatch):
     """A second run_pipeline over the same source keeps every table's
     snapshot ids and submits zero Spark jobs: the fingerprints are file
-    metadata, not scans."""
+    metadata, not scans, and the source is not even opened."""
     sf_dir, root = os.path.join(tmp_root, "sf"), os.path.join(tmp_root, "out")
     _write_docs(sf_dir, 3)
     cat = P.run_pipeline(spark, sf_dir, root)
     before = {t: cat.manifest(t)["snapshots"] for t in _PIPELINE_TABLES}
+    opened = []
+    read = P.read_interleaved
+    monkeypatch.setattr(P, "read_interleaved", lambda s, sf: opened.append(sf) or read(s, sf))
     _, jobs = with_job_count(spark, lambda: P.run_pipeline(spark, sf_dir, root))
-    assert jobs == 0
+    assert jobs == 0 and opened == []
     assert {t: cat.manifest(t)["snapshots"] for t in _PIPELINE_TABLES} == before
 
 
